@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Write ``golden_job_counts.json``: the COUNT(*) of every JOB query on the
-benchmark's mini-IMDB fixture.
+"""Write ``golden_job_counts.json``: the COUNT(*) of each JOB query the
+benchmark runs (``workloads.JOB_QUERIES``) on its mini-IMDB fixture.
 
     python3 perfbench/make_golden.py [--duckdb-timeout 5]
 
@@ -57,15 +57,17 @@ def main() -> int:
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
     from compass_query_optimizer_spark.session import get_spark
 
-    from perfbench.workloads import GOLDEN_PATH, JOB_SCALE, JOB_SEED
+    from perfbench.run import _stop_spark
+    from perfbench.workloads import GOLDEN_PATH, JOB_QUERIES, JOB_SCALE, JOB_SEED
 
-    corpus = job_corpus.load_corpus()
+    corpus = {q: job_corpus.load_corpus()[q] for q in JOB_QUERIES}
     paths = ensure_job_fixture(seed=JOB_SEED, scale=JOB_SCALE)
     duck = duckdb_counts(paths, corpus, args.duckdb_timeout)
 
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     spark = get_spark(app_name="perfbench-golden",
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+                      extra_conf={"spark.driver.memory": "4g",
+                                  "spark.ui.showConsoleProgress": "false"})
     tables, counts = job_corpus.job_tables(spark, scale=JOB_SCALE)
     opt = CompassOptimizer(spark)
 
@@ -80,7 +82,7 @@ def main() -> int:
         if duck[qid] is not None and duck[qid] != n:
             mismatches.append(f"{qid}: compass {n} duckdb {duck[qid]}")
         out[qid] = {"count": n, "source": "duckdb" if duck[qid] is not None else "engine-pinned"}
-    spark.stop()
+    _stop_spark()
     if mismatches:
         print(f"COMPASS and DuckDB disagree on {mismatches}; nothing written", file=sys.stderr)
         return 1

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload job_online --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload job_online --seed 1 --seconds 30 --trace 0
 
 Run it from the root of a checkout of the repository. It starts one
 Spark session with the package's ``get_spark`` on every core
@@ -17,8 +17,8 @@ wrapped and Spark's REST API scraped, and prints the per-layer metrics,
 with the tracing overhead as traced-minus-untraced figures.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
-``failed`` and ``metrics``. The line before it stamps the run (core
-count, load, versions). Details, and the spans of a traced run, go to
+``failed`` and ``metrics`` (name -> ``{"value", "unit"}``). The line
+before it stamps the run (core count, load, versions). Details, and the spans of a traced run, go to
 ``.perfbench_out/`` in the checkout.
 """
 
@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import random
 import shutil
@@ -38,7 +37,9 @@ import time
 T_START = time.perf_counter()
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "compass_query_optimizer_spark"
-QUERY_TIMEOUT_S = 60.0  # a query still running after this is cancelled
+# a query still running after this is cancelled; one that answers later
+# anyway (the cancel found no job to stop) still counts as a timeout
+QUERY_TIMEOUT_S = 60.0
 
 
 def _rss_peak_mb(pid: int) -> float:
@@ -90,13 +91,16 @@ def run_passes(wl, spark, seed: int, label: str, tracer, passes: int, *,
                clients: int | None = None, on_done=None) -> tuple[list[Record], float]:
     """Closed loop: ``clients`` threads (default ``wl.clients``) each take
     the next query of the seeded stream only after their previous one has
-    finished, until ``passes`` passes have been issued. Returns the
-    records and the wall time from first issue to last answer."""
+    finished, until ``passes`` passes have been issued. Between two
+    queries a client runs the workload's ``after_query``, outside both
+    latencies. Returns the records and the wall time from first issue to
+    last answer, less the clients' mean time in ``after_query``."""
     from perfbench.trace import set_query
 
     lock = threading.Lock()
     records: list[Record] = []
-    state = {"pass": 0, "pos": 0, "order": issue_order(wl.queries, seed, 0)}
+    state = {"pass": 0, "pos": 0, "order": issue_order(wl.queries, seed, 0),
+             "paused": 0.0}
     t0 = time.perf_counter()
 
     def next_item() -> Record | None:
@@ -134,16 +138,23 @@ def run_passes(wl, spark, seed: int, label: str, tracer, passes: int, *,
                 rec.end = time.perf_counter()
                 timer.cancel()
                 set_query(spark, None)
+            if rec.status == "ok" and rec.end - rec.start > QUERY_TIMEOUT_S:
+                rec.status = "timeout"
+                rec.error = f"answered after {rec.end - rec.start:.1f} s"
+            wl.after_query(spark)
+            with lock:
+                state["paused"] += time.perf_counter() - rec.end
             if on_done is not None:
                 on_done(rec)
 
+    n_clients = clients or wl.clients
     threads = [threading.Thread(target=client, name=f"client-{i}")
-               for i in range(clients or wl.clients)]
+               for i in range(n_clients)]
     for t in threads:
         t.start()
     for t in threads:
         t.join()
-    return records, time.perf_counter() - t0
+    return records, time.perf_counter() - t0 - state["paused"] / n_clients
 
 
 def check(wl, records: list[Record]) -> None:
@@ -164,18 +175,6 @@ def end_to_end(records: list[Record], wall: float) -> dict[str, float]:
         # with nothing answered the run is not correct; 0 keeps the line JSON
         "latency_p50_s": percentile(ok, 0.5) if ok else 0.0,
     }
-
-
-def latency_tail(records: list[Record]) -> list[float] | None:
-    """[q, seconds]: the highest whole-percent quantile with at least
-    ``MIN_BEYOND`` answers beyond it, or None below ``2 * MIN_BEYOND``."""
-    from perfbench.stats import MIN_BEYOND, supported_percentile
-
-    ok = [r.end - r.start for r in records if r.status == "ok"]
-    if len(ok) < 2 * MIN_BEYOND:
-        return None
-    q = math.floor(100 * (1 - MIN_BEYOND / len(ok))) / 100
-    return [q, supported_percentile(ok, q)]
 
 
 def run_workload(args) -> tuple[dict, dict]:
@@ -204,7 +203,10 @@ def run_workload(args) -> tuple[dict, dict]:
     meta["spark"] = spark.version
     meta["java"] = spark.sparkContext._jvm.System.getProperty("java.version")
 
-    phases.update(wl.setup(spark, os.path.join(ROOT, ".perfbench_data")))
+    # push-down's per-table pool carries each query's job group into its
+    # threads, so the timeout's cancel reaches the sketch-build jobs too
+    trace.install_pool(spark)
+    phases.update(wl.setup(spark))
     t = time.perf_counter()
     # the warm-up pass only has to compile and load what the measured
     # passes use, so it runs on every core whatever the workload's clients
@@ -239,7 +241,6 @@ def run_workload(args) -> tuple[dict, dict]:
     attempted = len(out_records)
     failed = sum(r.status != "ok" for r in out_records)
     meta.update(passes=passes, passes_wall_s=wall, queries=len(records),
-                latency_tail=latency_tail(records),
                 latencies={r.group: round(r.end - r.start, 4) for r in warm + out_records},
                 failures=[f"{r.group} {r.status} {r.error}" for r in out_records
                           if r.status != "ok"][:20],
@@ -247,11 +248,18 @@ def run_workload(args) -> tuple[dict, dict]:
     result = {"correct": failed == 0, "attempted": attempted, "failed": failed}
     if args.trace:
         layers["failed_frac"] = failed / attempted
-        result["metrics"] = layers
-    else:
-        result["metrics"] = e2e
+    result["metrics"] = with_units(layers if args.trace else e2e)
     meta["loadavg_end"] = list(os.getloadavg())
     return meta, result
+
+
+def with_units(metrics: dict[str, float]) -> dict[str, dict]:
+    """``{name: {"value", "unit"}}`` with the units ``BENCHMARK.json``
+    declares; a metric it does not declare is an error."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        doc = json.load(fh)
+    units = {m["name"]: m["unit"] for m in doc["end_to_end"] + doc["per_layer"]}
+    return {k: {"value": v, "unit": units[k]} for k, v in metrics.items()}
 
 
 def traced_pass(wl, spark, seed: int, tracer, untraced: dict,
@@ -261,7 +269,7 @@ def traced_pass(wl, spark, seed: int, tracer, untraced: dict,
     from perfbench import trace
     from perfbench.stats import geomean
 
-    restore = trace.install(tracer, spark)
+    restore = trace.install(tracer)
     scraper = trace.RestScraper(spark, prefix=f"{wl.name}/t")
 
     def done(rec):

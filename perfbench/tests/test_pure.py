@@ -162,5 +162,98 @@ def test_golden_counts_cover_the_job_slice():
     from perfbench.workloads import JOB_QUERIES, load_golden
 
     golden = load_golden()
-    assert set(JOB_QUERIES) <= set(golden)
+    assert set(JOB_QUERIES) == set(golden)
     assert all(v >= 0 for v in golden.values())
+
+
+# row counts of the repository's sf0.01 test tables, which the copies
+# under perfbench/data must keep
+SF001_ROWS = {
+    "region": 5, "nation": 25, "customer": 1500, "supplier": 100, "part": 2000,
+    "orders": 15000, "lineitem": 60000, "events": 10000, "documents": 500,
+    "embeddings": 500,
+}
+
+
+def test_ops_tables_are_the_sf001_test_tables():
+    import pyarrow.parquet as pq
+
+    from perfbench.workloads import OPS_DATA
+
+    found = {f[:-len(".parquet")] for f in os.listdir(OPS_DATA) if f.endswith(".parquet")}
+    assert found == set(SF001_ROWS)
+    for name, rows in SF001_ROWS.items():
+        assert pq.ParquetFile(os.path.join(OPS_DATA, f"{name}.parquet")).metadata.num_rows == rows
+
+
+def test_metrics_carry_their_declared_units():
+    from perfbench.run import with_units
+
+    out = with_units({"setup_s": 1.5, "exec.jobs": 3})
+    assert out == {"setup_s": {"value": 1.5, "unit": "s"},
+                   "exec.jobs": {"value": 3, "unit": "count"}}
+    with pytest.raises(KeyError):
+        with_units({"undeclared_metric": 1.0})
+
+
+class _FakeSC:
+    def __init__(self):
+        self.groups, self.cancelled = [], []
+
+    def setJobGroup(self, group, desc, interruptOnCancel=False):
+        self.groups.append(group)
+
+    def setLocalProperty(self, key, value):
+        pass
+
+    def cancelJobGroup(self, group):
+        self.cancelled.append(group)
+
+
+class _FakeSpark:
+    def __init__(self):
+        self.sparkContext = _FakeSC()
+
+
+def test_context_pool_carries_the_job_group_into_its_threads():
+    import contextvars
+
+    from perfbench.trace import _QUERY, _ContextPool
+
+    spark = _FakeSpark()
+
+    def in_query():
+        _QUERY.set("wl/p0/q1")
+        with _ContextPool(spark, max_workers=2) as pool:
+            return list(pool.map(lambda x: (x, _QUERY.get()), [1, 2, 3]))
+
+    assert contextvars.copy_context().run(in_query) == [
+        (1, "wl/p0/q1"), (2, "wl/p0/q1"), (3, "wl/p0/q1")]
+    assert spark.sparkContext.groups == ["wl/p0/q1"] * 3
+
+
+def test_a_query_answering_after_the_timeout_counts_as_a_timeout(monkeypatch):
+    import time
+
+    from perfbench import run
+    from perfbench.trace import Tracer
+
+    class Slow:
+        name, clients, queries = "slow", 1, ["fast", "slow"]
+        cleared = 0
+
+        def run(self, qid, tracer):
+            time.sleep(0.3 if qid == "slow" else 0.0)
+            return qid
+
+        def after_query(self, spark):
+            Slow.cleared += 1
+
+    monkeypatch.setattr(run, "QUERY_TIMEOUT_S", 0.15)
+    spark = _FakeSpark()
+    records, wall = run.run_passes(Slow(), spark, 1, "p", Tracer(), 1)
+    status = {r.qid: r.status for r in records}
+    assert status == {"fast": "ok", "slow": "timeout"}
+    assert spark.sparkContext.cancelled == ["slow/p0/slow"]
+    assert Slow.cleared == 2
+    assert wall > 0

@@ -5,9 +5,10 @@ each layer: the layer functions are wrapped under the name their caller
 looks up (``optimizer.run_pushdown``, not ``pushdown.run_pushdown``),
 and unwrapped when the run ends. A span is (name, start, end, parent,
 query id); the parent and the query's Spark job group travel in context
-variables, and push-down's per-table thread pool is swapped for one that
-carries both into its worker threads, so sketch builds nest under their
-push-down span and their Spark jobs land in the query's job group.
+variables. Push-down's per-table thread pool is swapped, in every run,
+for one that carries both into its worker threads, so sketch builds nest
+under their push-down span and their Spark jobs land in the query's job
+group, where a timeout's cancel finds them.
 
 Spark-side numbers come from the local UI REST API. A scraper thread
 pulls each finished query's jobs, stages and SQL executions by id while
@@ -18,6 +19,7 @@ the UI still retains them, because the UI keeps only the most recent
 from __future__ import annotations
 
 import contextvars
+import functools
 import json
 import os
 import queue
@@ -108,26 +110,32 @@ class _ContextPool(ThreadPoolExecutor):
     """ThreadPoolExecutor whose tasks run in the submitter's context and
     Spark job group."""
 
-    spark = None
+    def __init__(self, spark, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self._spark = spark
 
     def submit(self, fn, /, *args, **kwargs):
         ctx = contextvars.copy_context()
         group = ctx.get(_QUERY)
-        spark = self.spark
+        sc = self._spark.sparkContext
 
         def run():
             if group is not None:
-                spark.sparkContext.setJobGroup(group, group, interruptOnCancel=True)
+                sc.setJobGroup(group, group, interruptOnCancel=True)
             return fn(*args, **kwargs)
 
         return super().submit(ctx.run, run)
 
-    def map(self, fn, *iterables, timeout=None, chunksize=1):
-        futures = [self.submit(fn, *args) for args in zip(*iterables)]
-        return (f.result(timeout) for f in futures)
+
+def install_pool(spark) -> None:
+    """Swap push-down's per-table thread pool for the context-carrying
+    one, for the rest of the process."""
+    from compass_query_optimizer_spark.plans import pushdown
+
+    pushdown.ThreadPoolExecutor = functools.partial(_ContextPool, spark)
 
 
-def install(tracer: Tracer, spark) -> callable:
+def install(tracer: Tracer) -> callable:
     """Wrap the layer boundaries; returns the function that unwraps them."""
     from compass_query_optimizer_spark.plans import optimizer, pushdown
 
@@ -175,16 +183,11 @@ def install(tracer: Tracer, spark) -> callable:
         tracer.add("fagms.rows", count)
         return count, sketches
 
-    class Pool(_ContextPool):
-        pass
-
-    Pool.spark = spark
     patch(Opt, "plan", plan)
     patch(Opt, "build_count_join", build_count_join)
     patch(optimizer, "run_pushdown", run_pushdown)
     patch(optimizer, "choose_join_order", choose_join_order)
     patch(pushdown, "build_sketches_arrow", build_sketches_arrow)
-    patch(pushdown, "ThreadPoolExecutor", Pool)
 
     def restore():
         for owner, attr, old in reversed(saved):
@@ -222,7 +225,7 @@ def _epoch_s(stamp: str | None) -> float | None:
 
 EXEC_COUNTERS = (
     "exec.jobs", "exec.stages", "exec.tasks", "exec.failed_tasks",
-    "exec.executor_run_s", "exec.executor_cpu_s", "exec.slot_wait_s",
+    "exec.executor_run_s", "exec.executor_cpu_s", "exec.jvm_gc_s", "exec.slot_wait_s",
     "exec.shuffle_read_bytes", "exec.shuffle_write_bytes", "exec.spill_bytes",
     "exec.broadcast_build_s", "exec.python_worker_s", "exec.python_worker_start_s",
 )
@@ -298,6 +301,7 @@ class RestScraper:
                     c["exec.failed_tasks"] += st.get("numFailedTasks", 0)
                     c["exec.executor_run_s"] += st.get("executorRunTime", 0) / 1e3
                     c["exec.executor_cpu_s"] += st.get("executorCpuTime", 0) / 1e9
+                    c["exec.jvm_gc_s"] += st.get("jvmGcTime", 0) / 1e3
                     c["exec.shuffle_read_bytes"] += st.get("shuffleReadBytes", 0)
                     c["exec.shuffle_write_bytes"] += st.get("shuffleWriteBytes", 0)
                     c["exec.spill_bytes"] += st.get("memoryBytesSpilled", 0) + \
