@@ -182,10 +182,12 @@ def compact_line(out: dict) -> str:
     # diagnostics — the sidecar keeps every dropped field. Only a
     # headline set too fat for the whole 1,900-char budget on its own
     # (not reachable at 54 entries ≈ 1,400 chars) can touch `queries`.
-    if len(line) > STDOUT_TAIL_BUDGET and isinstance(slim.get("job_ab"), dict):
-        for k in ("fallback_sec", "fallback_dnf", "compass_raw_sec",
-                  "compass_raw_dnf"):
-            slim["job_ab"].pop(k, None)
+    if len(line) > STDOUT_TAIL_BUDGET:
+        for blk in ("job_ab", "job_ab40"):
+            if isinstance(slim.get(blk), dict):
+                for k in ("fallback_sec", "fallback_dnf", "compass_raw_sec",
+                          "compass_raw_dnf"):
+                    slim[blk].pop(k, None)
         line = json.dumps(slim, separators=(",", ":"))
     for blk in ("job_ab40", "job_ab", "calibration", "runs_stat"):
         if len(line) <= STDOUT_TAIL_BUDGET:

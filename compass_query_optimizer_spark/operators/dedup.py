@@ -28,8 +28,10 @@ candidates.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +47,8 @@ from compass_query_optimizer_spark.functions.hashing import (
     spark_portable_hash,
 )
 from compass_query_optimizer_spark.registry import query
+
+_log = logging.getLogger(__name__)
 
 MINHASH_K = 12  # number of minhash functions
 MINHASH_R = 3  # rows per band → 4 bands
@@ -799,11 +803,15 @@ def _unpersist_checkpoint(df: DataFrame) -> None:
     round i's frame once round i+1 is materialized — without it a long
     multi-query session (the bench runs 3 × 54 queries in one JVM)
     accumulates dead checkpoint blocks in the block manager.
+
+    Cleanup never fails the query: a JVM-side error (py4j) or a plan whose
+    root is not the checkpoint's LogicalRDD (no ``rdd()`` accessor) is
+    logged at debug level and the blocks are left to Spark's ContextCleaner.
     """
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # hygiene only; never fail the query over cleanup
+    except (Py4JError, AttributeError) as e:
+        _log.debug("checkpoint unpersist skipped: %s", e)
 
 
 def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:

@@ -11,13 +11,10 @@ Sketch/Sketches.h:15-26, XIS.h; SIGMOD 2021 COMPASS paper §3) on Spark:
 - k-way estimates multiply k column planes bucket-wise (Sketches.h:178-204,
   zero counters replaced by 1e-4, absolute values).
 
-The *build* runs distributed: a single Spark aggregation per table pass —
-explode over ROWS row-indices (the same per-tuple work the reference's
-kFAGMS_SKETCH aggregate does in RuntimeFunctions.cpp:318-340), compute
-bucket and sign with JVM bit arithmetic inside whole-stage codegen, and
-groupBy(col, row, bucket) with map-side partial aggregation so the shuffle
-is at most COLS×ROWS×BUCKETS tiny rows regardless of table size. Estimation
-and join-order search happen driver-side in numpy.
+The *build* runs distributed, one shuffle-free scan per table pass
+(:func:`build_sketches_arrow`) doing the same per-tuple work as the
+reference's kFAGMS_SKETCH aggregate (RuntimeFunctions.cpp:318-340).
+Estimation and join-order search happen driver-side in numpy.
 
 EH3 (public scheme, Rusu & Dobra "Pseudo-Random Number Generation for
 Sketch-Based Estimations", TODS 2007): for seed (s0, sv) and 32-bit key x,
@@ -32,7 +29,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Reference defaults: COMPASS_init_variables.txt:1-2 (73 rows × 1021 buckets)
@@ -86,8 +83,8 @@ class Sketch:
 
 
 def numpy_update(sketch: Sketch, keys: np.ndarray) -> None:
-    """Reference-semantics sketch update, vectorized (driver-side twin of
-    the Spark build; also the kernel inside the mapInPandas build).
+    """Reference-semantics sketch update, vectorized: the kernel inside the
+    mapInPandas build, and the driver-side twin the build is tested against.
 
     Kernel shape is dictated by measured numpy behavior on the target
     hardware: 64-bit integer multiply, stride-0 broadcast multiply, and
@@ -157,90 +154,24 @@ def estimate_multi_way(sketches: list[Sketch]) -> float:
 # ---------------------------------------------------------------------------
 
 
-def _lit_arr(vals: np.ndarray) -> Column:
-    return F.array(*[F.lit(int(v)).cast("long") for v in vals])
-
-
-def build_sketches(
-    df: DataFrame, col_seeds: dict[str, SketchSeeds]
-) -> tuple[int, dict[str, Sketch]]:
-    """One distributed pass over ``df``: returns (row_count, sketch per
-    join column). The analog of the reference's kFAGMS_SKETCH pseudo-
-    aggregate that counts survivors AND updates sketches in one kernel
-    (RelAlgExecutor.cpp:1623 getFilteredCountAllAndUpdateSketch).
-
-    Plan shape: project join cols → explode ROWS indices → per-column
-    bucket/sign bit arithmetic (codegen) → partial-agg groupBy. Shuffle
-    volume is bounded by COLS×ROWS×BUCKETS regardless of |df|.
-    """
-    cols = list(col_seeds)
-    proj = df.select(*[F.col(c).cast("long").alias(f"_k{j}") for j, c in enumerate(cols)])
-    exploded = proj.select(
-        "*", F.explode(F.sequence(F.lit(0), F.lit(SKETCH_ROWS - 1))).alias("r")
-    )
-
-    per_col = []
-    for j, c in enumerate(cols):
-        s = col_seeds[c]
-        x = F.col(f"_k{j}").bitwiseAND(F.lit(_MASK32))
-        a = F.element_at(_lit_arr(s.a), F.col("r") + 1)
-        b = F.element_at(_lit_arr(s.b), F.col("r") + 1)
-        sv = F.element_at(_lit_arr(s.sv), F.col("r") + 1)
-        s0 = F.element_at(_lit_arr(s.s0), F.col("r") + 1)
-        bucket = ((a * (x % F.lit(P31)) + b) % F.lit(P31)) % F.lit(SKETCH_BUCKETS)
-        parity = (
-            s0
-            + F.bit_count(sv.bitwiseAND(x))
-            + F.bit_count(
-                F.shiftright(x, 1).bitwiseAND(x).bitwiseAND(F.lit(_PAIR_MASK))
-            )
-        ) % F.lit(2)
-        sign = F.lit(1) - F.lit(2) * parity
-        # null join keys never join (the Arrow build drops them the same
-        # way): route them to sentinel bucket -1 with sign 0 so they still
-        # count as survivors but never touch a counter
-        per_col.append(
-            F.struct(
-                F.lit(j).alias("c"),
-                F.coalesce(bucket, F.lit(-1).cast("long")).alias("bucket"),
-                F.coalesce(sign.cast("long"), F.lit(0).cast("long")).alias("sign"),
-            )
-        )
-
-    updates = exploded.select(
-        "r", F.explode(F.array(*per_col)).alias("u")
-    ).select("r", F.col("u.c").alias("c"), F.col("u.bucket").alias("bucket"), F.col("u.sign").alias("sign"))
-
-    agg = (
-        updates.groupBy("c", "r", "bucket")
-        .agg(F.sum("sign").alias("v"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-
-    sketches = {c: Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), col_seeds[c]) for c in cols}
-    count = 0
-    for row in agg:
-        if row["bucket"] >= 0:  # -1 = null-key sentinel: count-only
-            sketches[cols[row["c"]]].counters[row["r"], row["bucket"]] = row["v"]
-        if row["c"] == 0 and row["r"] == 0:
-            count += row["n"]
-    if not cols:
-        count = df.count()
-    return count, sketches
-
-
 def build_sketches_arrow(
     df: DataFrame,
     col_seeds: dict[str, SketchSeeds],
     nrows_hint: int | None = None,
 ) -> tuple[int, dict[str, Sketch]]:
-    """Arrow-batched sketch build: ``mapInPandas`` computes a per-partition
-    partial counter matrix with the vectorized numpy update, the driver sums
-    partials. One scan, no shuffle at all — each task ships back exactly one
-    ROWS×BUCKETS matrix per join column (≈0.6 MB) regardless of partition
-    size. This is the Spark analog of the reference's per-GPU-block sketch
-    copies merged host-side (cuda_mapd_rt.cu:766-804, Execute.cpp:1820-1835),
-    and beats the JVM groupBy build ~10× at sf0.1 (see bench notes).
+    """One distributed pass over ``df``: returns (row_count, sketch per
+    join column) — the analog of the reference's kFAGMS_SKETCH pseudo-
+    aggregate that counts survivors AND updates sketches in one kernel
+    (RelAlgExecutor.cpp:1623 getFilteredCountAllAndUpdateSketch).
+
+    ``mapInPandas`` computes a per-partition partial counter matrix with
+    the vectorized numpy update, the driver sums partials. One scan, no
+    shuffle at all — each task ships back exactly one ROWS×BUCKETS matrix
+    per join column (≈0.6 MB) regardless of partition size. This is the
+    Spark analog of the reference's per-GPU-block sketch copies merged
+    host-side (cuda_mapd_rt.cu:766-804, Execute.cpp:1820-1835); it beat
+    the JVM groupBy build it replaced ~10× at sf0.1. Null keys count as
+    survivors but never touch a counter (they never join).
     """
     cols = list(col_seeds)
     if not cols:

@@ -134,17 +134,14 @@ def parse_join_query(sql: str) -> JoinQuerySpec:
 
     # bare-column resolution: unqualified identifiers owned by exactly one
     # alias (TPC-H style unique column names) resolve to that alias
-    owners: dict[str, list[str]] = {}
-    try:
-        from compass_query_optimizer_spark.catalog import SCHEMAS
+    from compass_query_optimizer_spark.catalog import SCHEMAS
 
-        for alias, tbl in tables.items():
-            schema = SCHEMAS.get(tbl)
-            if schema is not None:
-                for f in schema.fields:
-                    owners.setdefault(f.name, []).append(alias)
-    except Exception:
-        pass
+    owners: dict[str, list[str]] = {}
+    for alias, tbl in tables.items():
+        schema = SCHEMAS.get(tbl)
+        if schema is not None:
+            for f in schema.fields:
+                owners.setdefault(f.name, []).append(alias)
 
     def owner(col: str) -> str | None:
         lst = owners.get(col)

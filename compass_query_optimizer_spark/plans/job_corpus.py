@@ -125,21 +125,6 @@ def run_corpus(
             return int(spark.sql(corpus[qid]).collect()[0][0])
 
     elif mode in ("compass", "compass_raw", "fallback"):
-        # SPARK_GRAFT_CORPUS_BROADCAST_CAP (bytes; default 0 = session
-        # default) caps AUTO broadcasts for planner modes. Measured both
-        # ways before defaulting OFF: an 8 MB cap is −21-27% on the
-        # scale-160 tail (2a 28.9→21.0 s — the driver's single-threaded
-        # HashedRelation build of 400-720k-row sides serializes the join)
-        # but +92% on the full scale-10 corpus (63.8→122.4 s — the same
-        # cap kills broadcasts that are the right call when the other
-        # side is larger). A static byte threshold cannot be right at
-        # both scales; the targeted fix for the pathological case lives
-        # in build_count_join (raw-alias prefix SHUFFLE_HASH hint).
-        cap = int(os.environ.get("SPARK_GRAFT_CORPUS_BROADCAST_CAP", "0"))
-        if cap > 0:
-            for _k in ("spark.sql.autoBroadcastJoinThreshold",
-                       "spark.sql.adaptive.autoBroadcastJoinThreshold"):
-                spark.conf.set(_k, str(cap))
         opt = CompassOptimizer(spark)
 
         def run_one(qid: str) -> int:
@@ -149,7 +134,7 @@ def run_corpus(
                 counts=counts,
                 use_fallback=(mode == "fallback"),
                 count_cache_tag=cache_tag,
-                eager=False if mode == "compass_raw" else None,
+                eager=(mode != "compass_raw"),
             )
             return int(df.collect()[0]["cnt"])
 
@@ -204,14 +189,11 @@ def warm_corpus_templates(
     fallback_cost) — the Σ-of-estimated-intermediates metric the search
     minimizes, fallback_cost None when the search itself fell back.
 
-    Warming also dispatches the per-catalog collapse-frame artifact
-    builds (optimizer.dispatch_frame_builds) and drains them before
-    returning: the artifacts are per-catalog constants exactly like the
-    sketch templates, so the one-time cost belongs to the warm pass —
-    the corpus then executes in steady state, reading finished bucketed
-    artifacts instead of racing their writes (the scale-160 A/B measured
-    that contention at +11 s on single queries)."""
-    from compass_query_optimizer_spark.plans.frame_store import wait_for_builds
+    Warming also assembles each query's count chain lazily
+    (``build_count_join``, no collect), which runs the per-table key-NDV
+    probes behind the seed collapse skip: their results are per-catalog
+    constants like the sketch templates, so their one-time cost belongs
+    to the warm pass, not to the first corpus query that needs them."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
     corpus = load_corpus()
@@ -224,13 +206,11 @@ def warm_corpus_templates(
         plan = opt.plan(
             corpus[qid], tables=tables, counts=counts, count_cache_tag=cache_tag
         )
-        opt.dispatch_frame_builds(plan)
+        opt.build_count_join(plan)
         return qid, plan.search.cost, plan.fallback_cost
 
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        out = sorted(pool.map(one, ids))
-    wait_for_builds()
-    return out
+        return sorted(pool.map(one, ids))
 
 
 def job_oracle_sql() -> str:

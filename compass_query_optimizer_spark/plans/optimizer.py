@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from compass_query_optimizer_spark.catalog import load_tables
-from compass_query_optimizer_spark.plans.frame_store import get_or_build_frame
 from compass_query_optimizer_spark.plans.graph import JoinGraph, JoinQuerySpec, parse_join_query
 from compass_query_optimizer_spark.plans.pushdown import (
     PushdownConfig,
@@ -67,10 +66,8 @@ def _referenced_cols(
 ) -> tuple[dict[str, set[str]], set[tuple[str, str]]]:
     """Columns each alias must expose when it enters the chain (join-pred
     endpoints, group-by columns, post-filter residual references) and the
-    (alias, col) pairs that must survive every re-aggregation. Shared by
-    chain assembly (build_count_join) and plan-time artifact dispatch
-    (dispatch_frame_builds) so both agree on a frame's key columns — the
-    artifact cache key includes them."""
+    (alias, col) pairs that must survive every re-aggregation, as used by
+    chain assembly (build_count_join)."""
     needed: dict[str, set[str]] = {a: set() for a in spec.tables}
     for a, ca, b, cb in spec.join_preds:
         needed[a].add(ca)
@@ -695,160 +692,6 @@ class CompassOptimizer:
             return info["ndv"]
         return plan.pushdown.stats[alias].rows
 
-    def _chain_join_cols(
-        self, spec: JoinQuerySpec, order: list[str], pos: int, alias: str
-    ) -> list[str]:
-        """Columns of ``alias`` used when it enters the chain: the join
-        predicates connecting it to the aliases already in the chain (for
-        the seed, to its FIRST partner) — the candidate bucket keys for
-        its persisted collapse frame."""
-        if pos == 0:
-            partners = {order[1]} if len(order) > 1 else set()
-        else:
-            partners = set(order[:pos])
-        cols = set()
-        for a, ca, b, cb in spec.join_preds:
-            if a == alias and b in partners:
-                cols.add(ca)
-            elif b == alias and a in partners:
-                cols.add(cb)
-        return sorted(cols)
-
-    def _collapse_artifact(
-        self,
-        plan: CompassPlan,
-        order: list[str],
-        pos: int,
-        alias: str,
-        key_cols: list[str],
-        skip: bool,
-        f: DataFrame,
-    ) -> DataFrame | None:
-        """Serve this alias's chain frame from the per-catalog BUCKETED
-        artifact store when eligible (unfiltered alias in a tagged
-        catalog, collapsed-frame estimate ≥ ``frame_store_min_rows``, and
-        a chain entry key to bucket on); None → assemble inline. The
-        artifact's bucketed scan reports HashPartitioning on the entry
-        key, so the repeated join-side Exchange of the same
-        multi-million-row frame — the measured scale-160 corpus frontier
-        (plans/frame_store.py) — disappears from every query after the
-        first. Correctness is untouched either way: the artifact stores
-        exactly the frame the inline path would build, and the
-        differential gate runs both shapes (test_compass.py)."""
-        min_rows = self.config.frame_store_min_rows
-        tag = plan.extras.get("dataset_tag")
-        if not min_rows or tag is None or plan.spec.filters.get(alias):
-            return None
-        if self._frame_size_estimate(plan, alias) < min_rows:
-            return None
-        jcols = self._chain_join_cols(plan.spec, order, pos, alias)
-        if not jcols:
-            return None
-        bucket_col = jcols[0]
-        table = plan.spec.tables[alias]
-
-        def build() -> DataFrame:
-            g = f.select(*key_cols)
-            if skip:
-                return g
-            return g.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__cnt"))
-
-        got = get_or_build_frame(
-            self.spark,
-            tag,
-            table,
-            key_cols,
-            bucket_col,
-            skip,
-            build,
-            sync=self.config.frame_store_sync,
-        )
-        if got is None:
-            return None
-        art, reused = got
-        plan.extras.setdefault("collapse_artifacts", {})[alias] = {
-            "table": table,
-            "bucket_col": bucket_col,
-            "skip": skip,
-            "reused": reused,
-        }
-        cols = [F.col(c).alias(f"{alias}__{c}") for c in key_cols]
-        if skip:
-            return art.select(*cols).withColumn(
-                "__cnt_new", F.lit(1).cast("long")
-            )
-        return art.select(*cols, F.col("__cnt").alias("__cnt_new"))
-
-    def dispatch_frame_builds(self, plan: CompassPlan) -> int:
-        """Plan-time artifact dispatch (round 11): kick off the background
-        bucketed-frame builds for every store-eligible alias of ``plan``
-        WITHOUT assembling its chain, so that by the time the corpus
-        executes, every query reads finished artifacts instead of racing
-        the builds. The scale-160 A/B that motivates this: artifacts ON
-        made every profiled query faster solo (6a 8.52→2.28 s, 16b
-        11.09→5.41 s, identical counts) yet the corpus total barely moved
-        — the first queries to touch each frame overlapped the 5.76M-row
-        bucketed writes and paid the contention (2a 1.7→12.9 s in-corpus).
-        Called from warm_corpus_templates, which already plans every query
-        one-time; returns the number of store-eligible aliases seen.
-
-        Mirrors build_count_join's eligibility path exactly (same
-        _referenced_cols → same key set → same artifact cache key); the
-        dispatched build is get_or_build_frame's usual one-per-name
-        thread, so a later chain assembly can never double-build."""
-        if not self.config.frame_store_min_rows:
-            return 0
-        if plan.extras.get("dataset_tag") is None:
-            return 0
-        spec = plan.spec
-        order = plan.search.order
-        needed, _ = _referenced_cols(spec, None)
-        n = 0
-        for pos, alias in enumerate(order):
-            if spec.filters.get(alias):
-                continue
-            f = plan.pushdown.frames[alias]
-            key_cols = sorted(c for c in needed[alias] if c in f.columns)
-            if not key_cols:
-                continue
-            skip = self._should_skip_collapse(plan, alias, key_cols)
-            if self._frame_size_estimate(plan, alias) < (
-                self.config.frame_store_min_rows
-            ):
-                continue
-            if not self._chain_join_cols(spec, order, pos, alias):
-                continue
-            self._collapse_artifact(plan, order, pos, alias, key_cols, skip, f)
-            n += 1
-        return n
-
-    def _comparable_sides(
-        self, plan: CompassPlan, order: list[str], pos: int, alias: str
-    ) -> bool:
-        """True when the chain partner at ``order[pos]`` and the prefix it
-        joins into have plan-time size estimates within
-        ``broadcast_relative_factor`` of each other — the band where
-        broadcasting EITHER side is wrong (the build is comparable to the
-        probe, so AQE's byte-based broadcast conversion serializes a
-        driver-side build for no scan savings). Outside the band the guard
-        stays silent: a tiny partner should broadcast (dim table), and a
-        tiny prefix should be broadcast BY AQE against a huge partner."""
-        factor = self.config.broadcast_relative_factor
-        if not factor or pos == 0:
-            return False
-        partner = self._frame_size_estimate(plan, alias)
-        if partner < self.config.broadcast_floor_rows:
-            return False  # both-sides-tiny joins stay on the fast path
-        if pos == 1:
-            prefix_est = self._frame_size_estimate(plan, order[0])
-        else:
-            prefix_est = plan.search.prefix_estimates.get(
-                frozenset(order[:pos])
-            )
-        if not prefix_est or prefix_est <= 0:
-            return False
-        return prefix_est / factor <= partner <= prefix_est * factor
-
     def build_count_join(
         self,
         plan: CompassPlan,
@@ -978,7 +821,7 @@ class CompassOptimizer:
         needed, residual_cols = _referenced_cols(spec, group_by)
 
         frames = {}
-        for pos, alias in enumerate(order):
+        for alias in order:
             f = plan.pushdown.frames[alias]
             keys = [
                 F.col(c).alias(f"{alias}__{c}")
@@ -1028,16 +871,7 @@ class CompassOptimizer:
                 skip = bool(keys) and self._should_skip_collapse(
                     plan, alias, key_cols
                 )
-                art = (
-                    self._collapse_artifact(
-                        plan, order, pos, alias, key_cols, skip, f
-                    )
-                    if keys
-                    else None
-                )
-                if art is not None:
-                    agg = art
-                elif skip:
+                if skip:
                     # near-distinct keys: enter the chain raw at
                     # multiplicity 1 — the collapse would shuffle the
                     # whole table to shrink it by almost nothing
@@ -1073,23 +907,6 @@ class CompassOptimizer:
                 # scale 160) with the scale-10 corpus unregressed — see
                 # PushdownConfig.antibroadcast_rows for both measurements.
                 agg = agg.hint("shuffle_hash")
-            elif self._comparable_sides(plan, order, pos, alias):
-                # Relative anti-broadcast band (round 10): the 2-family
-                # scale-160 tail is AQE broadcast-converting MID-SIZE
-                # collapsed frames (below broadcast_rows, so the absolute
-                # guard is silent) and serializing 400-720k-row
-                # HashedRelation builds on the driver. When the partner's
-                # plan-time size estimate is within
-                # broadcast_relative_factor of the prefix's sketch
-                # estimate, neither side is small enough for broadcast to
-                # be right — pin the parallel per-partition build. The
-                # ratio test is scale-free where the measured static byte
-                # cap was not (−21-27% at 160 but +92% at 10; see
-                # job_corpus.py SPARK_GRAFT_CORPUS_BROADCAST_CAP).
-                agg = agg.hint("shuffle_hash")
-                plan.extras.setdefault("relative_antibroadcast", []).append(
-                    alias
-                )
             frames[alias] = agg
 
         joined = frames[order[0]].withColumnRenamed("__cnt_new", "__cnt")
@@ -1190,14 +1007,13 @@ class CompassOptimizer:
             in_chain.add(alias)
             remaining.discard(alias)
             # project away columns no later join or residual references,
-            # and re-aggregate: the shrink step that keeps the prefix at
-            # key cardinality. Only pay the re-agg shuffle where the
-            # sketch-estimated prefix is big enough for the collapse to
-            # matter — on an already-small prefix the extra exchange is
-            # pure overhead.
-            est = plan.search.prefix_estimates.get(frozenset(in_chain))
-            if est is not None and est < self.config.eager_reagg_min_rows:
-                continue
+            # and re-aggregate after EVERY join: the shrink step that keeps
+            # the prefix at key cardinality. Both ways of skipping it were
+            # measured slower — gating on the sketch prefix estimate (JOB 8c
+            # at scale 80: 92.4 s gated vs 7.8 s always; the zipf tail is
+            # where sketches underestimate) and deferring while a raw
+            # alias's keys survive (6f at scale 160: 171.7 s vs 3.5 s; the
+            # re-agg still combines map-side and gives AQE a stats point).
             keep = set()
             for a, ca, b, cb in spec.join_preds:
                 if a in in_chain and b in remaining:
@@ -1209,37 +1025,6 @@ class CompassOptimizer:
                     keep.add(f"{al}__{col}")
             keep &= set(joined.columns)
             all_chans = {nm for chans in channels for nm in chans}
-            # Structural re-agg deferral (round 9, DEFAULT OFF — measured
-            # net-negative, see PushdownConfig.reagg_defer_raw_keys): when
-            # the JUST-joined alias entered the chain raw (collapse
-            # skipped, keys ≥90% distinct) and ALL of its key columns
-            # survive in `keep`, the groupBy(keep) output cardinality is
-            # at least the alias's matched-row count, so the exchange
-            # cannot shrink the row count. It still pays: map-side
-            # partial_sum combine + an AQE stats point + a bounded SMJ
-            # sort input beat the saved exchange 49× on JOB 6f at scale
-            # 160 (171.7 s deferred vs 3.5 s re-aggregated, same count).
-            skipped_info = plan.extras.get("collapse_skipped", {}).get(alias)
-            if (
-                self.config.reagg_defer_raw_keys
-                and skipped_info
-                and skipped_info.get("skip")
-            ):
-                akeys = {
-                    f"{alias}__{c}" for c in needed[alias]
-                } & set(joined.columns)
-                if akeys and akeys <= keep:
-                    proj = sorted(
-                        keep | {"__cnt"} | (all_chans & set(joined.columns))
-                    )
-                    joined = joined.select(*proj)
-                    plan.extras.setdefault("reagg_deferred", []).append(alias)
-                    # the select(proj) can project out ANOTHER live raw
-                    # alias's key columns; without the refresh, raw_live
-                    # stays stale and later joins keep a shuffle_hash hint
-                    # they no longer need (round-9 advice)
-                    _refresh_raw_live()
-                    continue
             if set(joined.columns) - keep - {"__cnt"} - all_chans:
                 aggs = [F.sum("__cnt").alias("__cnt")]
                 for i, (_, _, mop) in enumerate(measures):
@@ -1283,7 +1068,7 @@ class CompassOptimizer:
         counts: dict[str, int] | None = None,
         use_fallback: bool = False,
         count_cache_tag: str | None = None,
-        eager: bool | None = None,
+        eager: bool = True,
         group_by: list[tuple[str, str]] | None = None,
         measure: tuple[str, str] | None = None,
         measure_op: str = "sum",
@@ -1293,14 +1078,16 @@ class CompassOptimizer:
         """The reference's benchmark form: COUNT(*) of the join.
 
         ``eager`` selects the eager-aggregation count plan
-        (:meth:`build_count_join`, default; SPARK_GRAFT_EAGER_COUNT=0
-        falls back to counting the raw join). ``group_by`` [(alias, col),
-        ...] computes the grouped form (bare column names + ``cnt``).
+        (:meth:`build_count_join`); ``eager=False`` counts the raw join,
+        the reference the eager algebra is checked against. The eager plan
+        is the default because at fixture scale 2 it matches the raw
+        join's wall (65.5 s vs 68.4 s over all 113 queries), and at scale
+        10 it turns every raw-join DNF — counts up to the trillions (31c ≈
+        5.4e12) — into ~1-second answers. ``group_by`` [(alias, col), ...]
+        computes the grouped form (bare column names + ``cnt``).
         ``measure`` (alias, col) adds ``measure_op``(alias.col) — sum,
         min, or max — as ``agg_val`` through the same algebra (see
         :meth:`build_count_join`)."""
-        import os
-
         plan = self.plan(
             spec_or_sql,
             sf_dir,
@@ -1310,17 +1097,6 @@ class CompassOptimizer:
             count_cache_tag=count_cache_tag,
             outer=outer,
         )
-        if eager is None:
-            # always on by default: measured at fixture scale 2 the eager
-            # plan matches the raw-join count's wall clock (65.5s vs 68.4s
-            # over all 113 queries), and at scale 10 it converts every
-            # raw-join DNF — including counts in the TRILLIONS (31c ≈
-            # 5.4e12) that no engine can materialize row-by-row — into
-            # ~1-second answers. An estimate-based gate was tried and
-            # rejected: the zipf tail is exactly where sketch estimates
-            # underestimate, so the gate misses the queries that need the
-            # algebra most.
-            eager = os.environ.get("SPARK_GRAFT_EAGER_COUNT", "1") != "0"
         if eager:
             return self.build_count_join(
                 plan,

@@ -21,7 +21,6 @@ Thresholds mirror COMPASS_init_variables.txt:3-5 (200 rows / 5% / 10,000).
 
 from __future__ import annotations
 
-import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -30,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from compass_query_optimizer_spark.plans.fagms import (
     Sketch,
-    build_sketches,
     build_sketches_arrow,
     seeds_for_class,
 )
@@ -61,84 +59,8 @@ class PushdownConfig:
     # re-agg exchange, so a shuffled-hash join costs one ≤~1M-row partner
     # shuffle (often AQE-reusable) against a serial driver build that
     # scales with rows — past ~300k the trade never favors broadcast.
-    # Env-overridable for A/B (SPARK_GRAFT_ANTIBROADCAST_ROWS).
-    antibroadcast_rows: int = field(
-        default_factory=lambda: int(
-            os.environ.get("SPARK_GRAFT_ANTIBROADCAST_ROWS", "300000")
-        )
-    )
-    # Relative anti-broadcast band (round 10; DEFAULT OFF since round 11):
-    # pin SHUFFLE_HASH on a chain partner whose estimated collapsed size is
-    # COMPARABLE to the prefix's sketch estimate (within this factor either
-    # way) — the theory being that when the two sides are within 4× of each
-    # other, neither broadcast direction is right. Round-10 measurement
-    # showed the guard is a NO-OP on its intended target: the sketch
-    # underestimates the 2-family prefix ~10× (est 53,345 vs 509,508
-    # actual), so the band never fires where it was aimed, and the 2-family
-    # was actually converted by re-keying the ABSOLUTE bar on the collapsed
-    # estimate (above). A guard that trusts prefix estimates just shown to
-    # be 10× off where it matters risks perf-only misfires at unintended
-    # ratios, so it ships disabled — an opt-in A/B knob
-    # (SPARK_GRAFT_BROADCAST_REL_FACTOR), same precedent as
-    # SPARK_GRAFT_CORPUS_BROADCAST_CAP. The absolute collapsed-estimate bar
-    # is the one default mechanism on the hint path.
-    broadcast_relative_factor: float = field(
-        default_factory=lambda: float(
-            os.environ.get("SPARK_GRAFT_BROADCAST_REL_FACTOR", "0")
-        )
-    )
-    broadcast_floor_rows: int = 100_000
-    # Per-catalog collapse-frame artifact store (round 11; plans/
-    # frame_store.py): an UNFILTERED chain partner whose collapsed-frame
-    # estimate meets this bar is materialized ONCE per catalog as a
-    # parquet table bucketed on its chain join key, and every later query
-    # in the session reads the artifact — killing the repeated scan +
-    # multi-million-row join-side Exchange that the round-10 profile
-    # showed to be the entire scale-160 corpus frontier (the same 5.76M-
-    # row cast_info frame re-assembled per query). 0 disables; env knob
-    # for A/B (SPARK_GRAFT_FRAME_STORE_ROWS). Bar measured at scale 160
-    # (round 11, warm-dispatched builds, 6-way corpus, fresh process per
-    # arm): 500k bar = 109.6 s corpus wall — the mid-size (0.5-2M)
-    # artifacts pin their joins to the 32-bucket layout where AQE's
-    # runtime choices (coalesced exchanges, broadcast) were already
-    # winning, costing +3-5 s on the 16/17/19 families and cancelling the
-    # big-frame wins; 2M bar = 84.9 s / 0 DNF vs 105.6 s store-OFF (-20%,
-    # measured from the WORSE box position), keeping exactly the
-    # multi-million-row frames (cast_info 5.76M, movie_info 7.3M) whose
-    # repeated Exchange was the measured frontier (6-family 12.1 -> 3.7 s
-    # in-corpus). The bar is a frame-row threshold, so eligibility scales
-    # with the catalog, not with this box.
-    frame_store_min_rows: int = field(
-        default_factory=lambda: int(
-            os.environ.get("SPARK_GRAFT_FRAME_STORE_ROWS", "2000000")
-        )
-    )
-    # Async-by-default artifact builds (round-11 measurement fix): the
-    # synchronous build put a 5.76M-row bucketed write on the first
-    # query's wall and DNF'd three corpus queries under the 90 s timeout
-    # (12b/18a/19d at scale 160); async dispatches the write to its own
-    # thread, the first query assembles inline, later queries read the
-    # artifact. sync=True blocks on the build (tests; A/B knob).
-    frame_store_sync: bool = field(
-        default_factory=lambda: os.environ.get(
-            "SPARK_GRAFT_FRAME_STORE_SYNC", "0"
-        )
-        == "1"
-    )
-    arrow_build: bool = True  # mapInPandas sketch build (vs JVM groupBy)
+    antibroadcast_rows: int = 300_000
     parallel_tables: int = 8  # concurrent per-table sketch passes
-    # eager COUNT(*) aggregation (optimizer.build_count_join): re-aggregate
-    # the prefix after EVERY join (threshold 0). An estimate-based skip
-    # ("don't pay the exchange on prefixes the sketch says are small") was
-    # the round-5..7 default at 100k and was measured in round 8 to be
-    # worthless at its best and catastrophic at its worst: the full corpus
-    # at fixture scale 10 is 38.9 s vs 39.2 s (identical), while JOB 8c at
-    # scale 80 is 92.4 s gated vs 7.8 s always — the zipf tail is exactly
-    # where sketch estimates UNDERESTIMATE, so the gate skips the shrink
-    # on the prefixes that explode (the same reason the estimate-based
-    # eager on/off gate was rejected in round 6). Raise only with a
-    # measured reason.
-    eager_reagg_min_rows: float = 0.0
     # count_distinct_auto routing — the Spark twin of the reference's
     # plan-time approx↔precise switch (RelAlgExecutor.cpp:1350-1418) and
     # its CountDistinctDescriptor bitmap-vs-set choice. Integral measures
@@ -162,20 +84,6 @@ class PushdownConfig:
     # scheduling).
     collapse_skip_ndv_ratio: float = 0.9
     collapse_skip_min_rows: int = 500_000
-    # Structural re-agg deferral (round 9): skip the post-join re-agg
-    # while ALL of a just-joined collapse-skipped alias's key columns
-    # survive in the keep set — the groupBy provably cannot shrink below
-    # that alias's matched-row count, so the hypothesis was that the
-    # exchange is pure overhead. MEASURED FALSE, decisively: solo JOB at
-    # fixture scale 160, deferral on vs off — 6f 171.7 s vs 3.5 s (49×),
-    # 8c 46.5 s vs 25.8 s, identical counts. Row-count no-shrink is the
-    # wrong cost model: the "useless" re-agg still (a) combines the
-    # multiplicity columns map-side before the exchange, (b) gives AQE a
-    # materialized stats point to re-plan the next join from, and (c)
-    # bounds the sort input of the next sort-merge join. Third skip-the-
-    # shrink idea to die by measurement (round-6 eager on/off gate,
-    # round-8 estimate-gated re-agg, this). Knob stays for re-measurement.
-    reagg_defer_raw_keys: bool = False
 
 
 @dataclass
@@ -249,16 +157,11 @@ def run_pushdown(
             count, sketches = cached
         else:
             # tiny tables skip the filter for sketching (template behavior)
-            if config.arrow_build:
-                count, sketches = build_sketches_arrow(
-                    base if tiny else filtered,
-                    col_seeds,
-                    nrows_hint=base_counts[alias],
-                )
-            else:
-                count, sketches = build_sketches(
-                    base if tiny else filtered, col_seeds
-                )
+            count, sketches = build_sketches_arrow(
+                base if tiny else filtered,
+                col_seeds,
+                nrows_hint=base_counts[alias],
+            )
             if dataset_tag is not None:
                 with _TEMPLATE_LOCK:
                     _TEMPLATE_CACHE[cache_key] = (count, sketches)

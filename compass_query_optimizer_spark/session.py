@@ -115,8 +115,7 @@ def configure(spark: SparkSession) -> SparkSession:
 
 def scratch_dir(spark: SparkSession, kind: str, tag: str) -> str:
     """Deterministic-WITHIN-a-process scratch directory for persisted
-    artifacts (ANN index round-trips, clustered-layout rewrites, collapse
-    frames).
+    artifacts (ANN index round-trips, clustered-layout rewrites).
 
     Three requirements pull in different directions: (1) reruns inside one
     session must REUSE/overwrite a single dir (a fresh uuid per invocation

@@ -23,7 +23,6 @@ from compass_query_optimizer_spark.plans.fagms import (
     SKETCH_BUCKETS,
     SKETCH_ROWS,
     Sketch,
-    build_sketches,
     build_sketches_arrow,
     numpy_update,
     seeds_for_class,
@@ -94,7 +93,7 @@ def test_residual_rewrite_only_known_aliases():
 
 
 # --------------------------------------------- null-key sketch build parity
-def test_jvm_build_null_keys_match_arrow(spark):
+def test_arrow_build_null_keys_match_numpy(spark):
     rng = np.random.default_rng(11)
     keys = rng.integers(0, 500, 4000).astype(float)
     keys[rng.random(4000) < 0.1] = np.nan  # ~10% null FKs (IMDB-style)
@@ -103,16 +102,14 @@ def test_jvm_build_null_keys_match_arrow(spark):
     )
     seeds = {"k": seeds_for_class("eq:nulltest")}
 
-    cnt_jvm, sk_jvm = build_sketches(df, seeds)
-    cnt_arrow, sk_arrow = build_sketches_arrow(df, seeds, nrows_hint=4000)
+    cnt, sk = build_sketches_arrow(df, seeds, nrows_hint=4000)
 
-    # survivor count includes null-key rows on BOTH paths
-    assert cnt_jvm == cnt_arrow == 4000
-    # counters exclude null keys on both paths, and agree with the twin
+    # the survivor count includes null-key rows
+    assert cnt == 4000
+    # the counters exclude null keys and agree with the numpy twin
     twin = Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), seeds["k"])
     numpy_update(twin, keys[~np.isnan(keys)].astype(np.int64))
-    assert np.array_equal(sk_jvm["k"].counters, twin.counters)
-    assert np.array_equal(sk_arrow["k"].counters, twin.counters)
+    assert np.array_equal(sk["k"].counters, twin.counters)
 
 
 # ------------------------------------------------------------- salted_join

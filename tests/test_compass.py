@@ -16,7 +16,7 @@ from compass_query_optimizer_spark.plans.fagms import (
     SKETCH_BUCKETS,
     SKETCH_ROWS,
     Sketch,
-    build_sketches,
+    build_sketches_arrow,
     estimate_two_way,
     numpy_update,
     seeds_for_class,
@@ -99,7 +99,9 @@ def test_distributed_build_matches_numpy(spark):
     keys = rng.integers(-100, 5000, 20000)  # include negatives
     df = spark.createDataFrame(pd.DataFrame({"k": keys}))
     seeds = {"k": seeds_for_class("eq:z")}
-    cnt, sk = build_sketches(df, seeds)
+    # no row hint: the input keeps its several partitions, so the driver
+    # merges several partial counter matrices
+    cnt, sk = build_sketches_arrow(df, seeds)
     twin = Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), seeds["k"])
     numpy_update(twin, keys)
     assert cnt == len(keys)
@@ -609,42 +611,6 @@ def test_collapse_skip_gates_on_ndv_and_size(spark):
     assert forced == base > 0
 
 
-def test_reagg_deferred_while_raw_alias_keys_survive(spark):
-    """The structural re-agg deferral is DEFAULT-OFF (measured 49× worse
-    on JOB 6f at scale 160 — see PushdownConfig.reagg_defer_raw_keys),
-    but the knob must stay correct for re-measurement: forced on, it
-    must (a) record the deferral, (b) leave the answer unchanged vs the
-    default plan."""
-    from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    corpus = load_corpus()
-    tables, counts = job_tables(spark, scale=1)
-    # 17a: ci carries (person_id, movie_id); after ci joins, person_id is
-    # still needed by n and movie_id by t — both keys survive, so the
-    # deferral must fire. Size floor dropped so the skip probe runs at
-    # test scale, and the ndv ratio lowered to 0.85 because the scale-1
-    # fixture's ci pair is 89.2% distinct (at scale 40+ it is 94-99.6%)
-    opt = CompassOptimizer(
-        spark,
-        config=PushdownConfig(
-            collapse_skip_min_rows=1,
-            collapse_skip_ndv_ratio=0.85,
-            reagg_defer_raw_keys=True,
-        ),
-    )
-    plan = opt.plan(corpus["17a"], tables=tables, counts=counts)
-    deferred = opt.build_count_join(plan)
-    assert plan.extras.get("collapse_skipped", {}).get("ci", {}).get("skip")
-    assert "ci" in plan.extras.get("reagg_deferred", []), plan.extras
-    forced = deferred.collect()[0]["cnt"]
-    base = CompassOptimizer(spark).execute_count(
-        corpus["17a"], tables=tables, counts=counts
-    ).collect()[0]["cnt"]
-    assert forced == base > 0
-
-
 def test_raw_alias_prefix_pins_shuffle_hash_joins(spark):
     """While a collapse-skipped alias's full key set still rides the
     prefix, the chain hints SHUFFLE_HASH on the prefix side — AQE's
@@ -679,241 +645,6 @@ def test_raw_alias_prefix_pins_shuffle_hash_joins(spark):
     assert forced == base > 0
 
 
-def test_comparable_sides_band_logic():
-    """The round-10 relative anti-broadcast guard fires ONLY inside the
-    band where the partner's plan-time estimate is within
-    broadcast_relative_factor of the prefix's: a tiny partner must stay
-    broadcastable (dim table), and a partner vastly larger than the prefix
-    must stay silent too (AQE broadcasting the tiny PREFIX is the right
-    call there — the static byte cap that ignored this direction was
-    measured +92% at scale 10). Pure decision-logic test, no JVM."""
-    from types import SimpleNamespace
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    cfg = PushdownConfig(
-        broadcast_relative_factor=4.0, broadcast_floor_rows=100_000
-    )
-    self = SimpleNamespace(
-        config=cfg,
-        _frame_size_estimate=lambda plan, alias: plan.pushdown.stats[
-            alias
-        ].rows,
-    )
-    decide = CompassOptimizer._comparable_sides
-
-    def plan(rows_by_alias, prefix_estimates):
-        return SimpleNamespace(
-            extras={},
-            pushdown=SimpleNamespace(
-                stats={
-                    a: SimpleNamespace(rows=r)
-                    for a, r in rows_by_alias.items()
-                }
-            ),
-            search=SimpleNamespace(prefix_estimates=prefix_estimates),
-        )
-
-    order = ["a", "b", "c"]
-    est_ab = {frozenset(["a", "b"]): 500_000.0}
-    # comparable sides (500k prefix est vs 400k partner): fire
-    p = plan({"a": 10, "b": 10, "c": 400_000}, est_ab)
-    assert decide(self, p, order, 2, "c") is True
-    # tiny partner below the floor: never fire, broadcast is right
-    p = plan({"a": 10, "b": 10, "c": 50_000}, est_ab)
-    assert decide(self, p, order, 2, "c") is False
-    # partner far above the band (tiny prefix should broadcast INTO it)
-    p = plan({"a": 10, "b": 10, "c": 900_000}, {frozenset(["a", "b"]): 1e3})
-    assert decide(self, p, order, 2, "c") is False
-    # partner far below the band relative to a huge prefix: broadcast
-    p = plan({"a": 10, "b": 10, "c": 200_000}, {frozenset(["a", "b"]): 1e8})
-    assert decide(self, p, order, 2, "c") is False
-    # factor 0 disables outright
-    self0 = SimpleNamespace(
-        config=PushdownConfig(broadcast_relative_factor=0.0),
-        _frame_size_estimate=self._frame_size_estimate,
-    )
-    p = plan({"a": 10, "b": 10, "c": 400_000}, est_ab)
-    assert decide(self0, p, order, 2, "c") is False
-    # position 1: the singleton seed frame is the prefix estimate
-    p = plan({"a": 300_000, "b": 400_000, "c": 10}, {})
-    assert decide(self, p, ["a", "b", "c"], 1, "b") is True
-    # missing prefix estimate: stay silent rather than guess
-    p = plan({"a": 10, "b": 10, "c": 400_000}, {})
-    assert decide(self, p, order, 2, "c") is False
-
-
-def test_relative_antibroadcast_count_parity(spark):
-    """With the floor dropped so the band guard fires at test scale, the
-    count must be identical to the default plan — the hint changes the
-    physical join strategy, never the answer — and the plan trace must
-    record which aliases were pinned."""
-    from compass_query_optimizer_spark.plans.job_corpus import (
-        job_tables,
-        load_corpus,
-    )
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    corpus = load_corpus()
-    tables, counts = job_tables(spark, scale=1)
-    opt = CompassOptimizer(
-        spark,
-        config=PushdownConfig(
-            broadcast_relative_factor=4.0, broadcast_floor_rows=1
-        ),
-    )
-    plan = opt.plan(corpus["2a"], tables=tables, counts=counts)
-    df = opt.build_count_join(plan)
-    forced = df.collect()[0]["cnt"]
-    assert plan.extras.get("relative_antibroadcast"), (
-        "floor=1 at scale 1 must put at least one 2a chain partner "
-        "inside the band"
-    )
-    base = CompassOptimizer(spark).execute_count(
-        corpus["2a"], tables=tables, counts=counts
-    ).collect()[0]["cnt"]
-    assert forced == base > 0
-
-
-def test_collapse_frame_artifact_count_parity(spark):
-    """Round-11 frame store: with the bar dropped so every eligible chain
-    partner is served from the per-catalog bucketed artifact, the count
-    must equal the default inline-assembly plan (the artifact stores
-    exactly the frame the chain would build), the plan trace must record
-    which aliases were served, and a SECOND plan through the same session
-    must reuse the registered tables instead of rebuilding — the whole
-    point is amortizing one build across a 113-query corpus."""
-    from compass_query_optimizer_spark.plans.job_corpus import (
-        job_tables,
-        load_corpus,
-    )
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    corpus = load_corpus()
-    tables, counts = job_tables(spark, scale=1)
-    opt = CompassOptimizer(
-        spark,
-        config=PushdownConfig(frame_store_min_rows=1, frame_store_sync=True),
-    )
-    plan = opt.plan(
-        corpus["8c"], tables=tables, counts=counts, count_cache_tag="fs-gate"
-    )
-    forced = opt.build_count_join(plan).collect()[0]["cnt"]
-    arts = plan.extras.get("collapse_artifacts")
-    assert arts, "bar=1 must serve at least one 8c partner from the store"
-    base = (
-        CompassOptimizer(
-            spark, config=PushdownConfig(frame_store_min_rows=0)
-        )
-        .execute_count(
-            corpus["8c"], tables=tables, counts=counts,
-            count_cache_tag="fs-gate-off",
-        )
-        .collect()[0]["cnt"]
-    )
-    assert forced == base > 0
-    plan2 = opt.plan(
-        corpus["8c"], tables=tables, counts=counts, count_cache_tag="fs-gate"
-    )
-    assert opt.build_count_join(plan2).collect()[0]["cnt"] == base
-    arts2 = plan2.extras["collapse_artifacts"]
-    assert arts2 and all(v["reused"] for v in arts2.values())
-    # the artifact scan must expose its bucketed distribution: the frame's
-    # join-side Exchange is the cost the store exists to remove
-    assert all(v["bucket_col"] for v in arts2.values())
-
-
-def test_frame_store_async_build_never_blocks_first_query(spark):
-    """Round-11 async fix: with frame_store_sync=False (the runtime
-    default) the FIRST plan must fall back to inline assembly — the
-    artifact write belongs to the catalog, not to whichever query
-    touches the frame first (three scale-160 corpus queries DNF'd under
-    the synchronous build). After the background build thread drains,
-    a later plan must serve the bucketed artifact with the identical
-    count."""
-    from compass_query_optimizer_spark.plans import frame_store
-    from compass_query_optimizer_spark.plans.job_corpus import (
-        job_tables,
-        load_corpus,
-    )
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    corpus = load_corpus()
-    tables, counts = job_tables(spark, scale=1)
-    opt = CompassOptimizer(
-        spark,
-        config=PushdownConfig(frame_store_min_rows=1, frame_store_sync=False),
-    )
-    known = set(frame_store._BUILDS)
-    plan = opt.plan(
-        corpus["8c"], tables=tables, counts=counts, count_cache_tag="fs-async"
-    )
-    base = opt.build_count_join(plan).collect()[0]["cnt"]
-    # first touch: builds dispatched, nothing served synchronously
-    assert "collapse_artifacts" not in plan.extras
-    new = set(frame_store._BUILDS) - known
-    assert new, "first touch must dispatch at least one background build"
-    for n in new:
-        frame_store._BUILDS[n].join(timeout=120)
-    plan2 = opt.plan(
-        corpus["8c"], tables=tables, counts=counts, count_cache_tag="fs-async"
-    )
-    assert opt.build_count_join(plan2).collect()[0]["cnt"] == base > 0
-    arts = plan2.extras.get("collapse_artifacts")
-    assert arts, "drained build must serve the artifact to later plans"
-
-
-def test_dispatch_frame_builds_reaches_steady_state(spark):
-    """Round-11 warm-dispatch: dispatch_frame_builds on a freshly planned
-    query must kick off the same background builds chain assembly would
-    (same artifact cache keys — _referenced_cols is shared), and after
-    wait_for_builds drains them, the FIRST build_count_join through a new
-    optimizer must already be served from the store with the identical
-    count. This is the steady-state guarantee warm_corpus_templates now
-    provides to the corpus run."""
-    from compass_query_optimizer_spark.plans import frame_store
-    from compass_query_optimizer_spark.plans.job_corpus import (
-        job_tables,
-        load_corpus,
-    )
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    corpus = load_corpus()
-    tables, counts = job_tables(spark, scale=1)
-    cfg = PushdownConfig(frame_store_min_rows=1, frame_store_sync=False)
-    opt = CompassOptimizer(spark, config=cfg)
-    known = set(frame_store._BUILDS)
-    plan = opt.plan(
-        corpus["6a"], tables=tables, counts=counts, count_cache_tag="fs-warm"
-    )
-    n = opt.dispatch_frame_builds(plan)
-    assert n > 0, "bar=1 must find store-eligible aliases in 6a"
-    assert set(frame_store._BUILDS) - known, "dispatch must start builds"
-    frame_store.wait_for_builds(timeout=120)
-    # fresh optimizer, same tag: very first execution reads the artifacts
-    opt2 = CompassOptimizer(spark, config=cfg)
-    plan2 = opt2.plan(
-        corpus["6a"], tables=tables, counts=counts, count_cache_tag="fs-warm"
-    )
-    got = opt2.build_count_join(plan2).collect()[0]["cnt"]
-    arts = plan2.extras.get("collapse_artifacts")
-    assert arts, "first post-warm execution must be served from the store"
-    base = (
-        CompassOptimizer(spark, config=PushdownConfig(frame_store_min_rows=0))
-        .execute_count(
-            corpus["6a"], tables=tables, counts=counts,
-            count_cache_tag="fs-warm-off",
-        )
-        .collect()[0]["cnt"]
-    )
-    assert got == base > 0
-
-
 def test_antibroadcast_bar_keys_on_collapsed_estimate():
     """The absolute anti-broadcast bar must consult the COLLAPSED frame
     estimate: a 2M-row table whose referenced keys collapse to 50k rows
@@ -922,6 +653,7 @@ def test_antibroadcast_bar_keys_on_collapsed_estimate():
     from types import SimpleNamespace
 
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
+    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
 
     est = CompassOptimizer._frame_size_estimate
     self = SimpleNamespace()
@@ -945,25 +677,5 @@ def test_antibroadcast_bar_keys_on_collapsed_estimate():
     # no probe ran: filtered row count is the (upper-bound) estimate
     p = plan(416_136, None)
     assert est(self, p, "x") == 416_136
-
-
-def test_antibroadcast_env_knobs(monkeypatch):
-    """The A/B measurement knobs must reach a freshly-constructed config
-    (they are read at instantiation, not import, so in-process tests and
-    fresh subprocesses both see them)."""
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
-
-    monkeypatch.setenv("SPARK_GRAFT_ANTIBROADCAST_ROWS", "123456")
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_REL_FACTOR", "2.5")
-    cfg = PushdownConfig()
-    assert cfg.antibroadcast_rows == 123456
-    assert cfg.broadcast_relative_factor == 2.5
-    monkeypatch.delenv("SPARK_GRAFT_ANTIBROADCAST_ROWS")
-    monkeypatch.delenv("SPARK_GRAFT_BROADCAST_REL_FACTOR")
-    cfg = PushdownConfig()
-    assert cfg.antibroadcast_rows == 300_000
-    # round 11: the relative band defaults OFF (measured a no-op on its
-    # target — it trusts sketch prefix estimates that are ~10x off exactly
-    # where mid-size frames live; the collapsed-estimate absolute bar is
-    # the one default mechanism). The knob stays for opt-in A/B.
-    assert cfg.broadcast_relative_factor == 0.0
+    # the bar the estimate is compared against (measured default)
+    assert PushdownConfig().antibroadcast_rows == 300_000

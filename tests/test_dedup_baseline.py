@@ -98,6 +98,27 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
+def test_connected_components_frees_superseded_rounds(spark):
+    """Every propagation round local-checkpoints a new label frame and must
+    unpersist the round it supersedes: after a multi-round run only the
+    returned frame's checkpoint may stay registered with the block
+    manager."""
+    from compass_query_optimizer_spark.operators.dedup import connected_components
+
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    # an 8-node chain needs 7 rounds for label 1 to reach node 8
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
+    )
+    got = {(r.id, r.lbl) for r in connected_components(edges).collect()}
+    assert got == {(i, 1) for i in range(1, 9)}
+    left = persistent() - before
+    assert len(left) <= 1, left
+
+
 def test_winnowing_shared_run_guarantee(spark):
     """The winnowing theorem (Schleimer et al. SIGMOD'03): documents
     sharing a run of >= K+W-1 chars MUST share a fingerprint. Two docs

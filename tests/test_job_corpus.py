@@ -69,6 +69,30 @@ def test_job_subset_matches_duckdb(spark, oracle_counts):
     assert not bad, f"COMPASS vs DuckDB mismatches: {bad}"
 
 
+def test_warm_pass_runs_the_key_ndv_probes(spark, monkeypatch):
+    """warm_corpus_templates assembles each count chain lazily, so the
+    collapse-skip key-NDV probe of every unfiltered table above
+    collapse_skip_min_rows runs, and is cached per catalog, during the
+    warm pass rather than on the first corpus query that needs it. The
+    floor is dropped so scale-1 tables count as large."""
+    from compass_query_optimizer_spark.fixtures import FIXTURE_VERSION
+    from compass_query_optimizer_spark.plans import optimizer
+    from compass_query_optimizer_spark.plans.job_corpus import warm_corpus_templates
+    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
+
+    monkeypatch.setattr(
+        optimizer,
+        "PushdownConfig",
+        lambda: PushdownConfig(collapse_skip_min_rows=1),
+    )
+    monkeypatch.setattr(optimizer, "_KEY_NDV_CACHE", {})
+    rows = warm_corpus_templates(spark, scale=1, query_ids=["8c"])
+    assert [r[0] for r in rows] == ["8c"]
+    tag = f"mini_imdb_v{FIXTURE_VERSION}_x1"
+    probed = {key[1] for key in optimizer._KEY_NDV_CACHE if key[0] == tag}
+    assert "cast_info" in probed, optimizer._KEY_NDV_CACHE
+
+
 def test_fallback_mode_same_answers(spark, oracle_counts):
     """Join order must never change semantics: the size-descending
     fallback order returns identical counts on a sample."""
@@ -132,14 +156,13 @@ def test_eager_count_matches_plain_and_oracle(spark):
 
 def test_grouped_eager_count_matches_raw_join(spark):
     """Grouped eager counts must equal the raw-join GROUP BY, including
-    when the re-aggregation step fires mid-chain (forced with
-    eager_reagg_min_rows=0) — group columns must survive every shrink."""
+    where the re-aggregation step fires mid-chain — group columns must
+    survive every shrink."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
     from compass_query_optimizer_spark.plans.queries import GROUPED_COUNT_SQL
 
     sf = "/root/testdata/sf0.001"
-    opt = CompassOptimizer(spark, config=PushdownConfig(eager_reagg_min_rows=0.0))
+    opt = CompassOptimizer(spark)
     eager = {
         r["n_name"]: r["cnt"]
         for r in opt.execute_count(
@@ -166,15 +189,13 @@ def test_compass_raw_mode_same_answers(spark, oracle_counts):
 def test_eager_sum_matches_raw_join(spark):
     """The SUM generalization of the multiplicity algebra: eager
     SUM(measure) must equal the raw-join SUM to double precision, grouped
-    and ungrouped, including when the mid-chain re-aggregation fires
-    (forced with eager_reagg_min_rows=0). The measure column must never
-    appear in any group key."""
+    and ungrouped, including where the mid-chain re-aggregation fires.
+    The measure column must never appear in any group key."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
     from compass_query_optimizer_spark.plans.queries import GROUPED_COUNT_SQL
 
     sf = "/root/testdata/sf0.001"
-    opt = CompassOptimizer(spark, config=PushdownConfig(eager_reagg_min_rows=0.0))
+    opt = CompassOptimizer(spark)
     measure = ("l", "l_extendedprice")
 
     e = opt.execute_count(
@@ -228,11 +249,10 @@ def test_eager_minmax_matches_raw_join(spark):
     the raw-join extremes exactly — multiplicities must NOT scale them,
     including when the mid-chain re-aggregation fires."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
     from compass_query_optimizer_spark.plans.queries import GROUPED_COUNT_SQL
 
     sf = "/root/testdata/sf0.001"
-    opt = CompassOptimizer(spark, config=PushdownConfig(eager_reagg_min_rows=0.0))
+    opt = CompassOptimizer(spark)
     measure = ("l", "l_extendedprice")
     for op in ("min", "max"):
         e = opt.execute_count(

@@ -154,7 +154,6 @@ def test_eager_count_equals_raw_and_duckdb(spark, case):
     import pandas as pd
 
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
 
     tables, edges, filt, residual = case
     n = len(tables)
@@ -174,9 +173,9 @@ def test_eager_count_equals_raw_and_duckdb(spark, case):
         conds.append(f"a0.k1 <= a{n - 1}.k2")
     sql = f"SELECT COUNT(*) AS cnt FROM {froms} WHERE {' AND '.join(conds)}"
 
-    # force the mid-chain re-aggregation to fire on every step so the
-    # shrink path is exercised, not just per-table pre-aggregation
-    opt = CompassOptimizer(spark, config=PushdownConfig(eager_reagg_min_rows=0.0))
+    # the mid-chain re-aggregation fires on every step, so the shrink
+    # path is exercised, not just per-table pre-aggregation
+    opt = CompassOptimizer(spark)
     eager = int(
         opt.execute_count(sql, tables=sdfs, counts=counts, eager=True)
         .collect()[0]["cnt"]
