@@ -16,6 +16,7 @@ so cosine values are bit-identical in Spark and DuckDB.
 from __future__ import annotations
 
 import os
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,119 +152,51 @@ def _plane_dot_codes(n: DataFrame, plane_tables: list) -> DataFrame:
     """(vec_id, t, c): hyperplane sign codes for each hash table.
 
     plane dot = Σ ±qv[j]; bit i of table t's code = 1 iff its dot ≥ 0.
-    Default (round 11, guide §4.2): ONE mapInPandas over (vec_id, qv)
-    scoring each chunk against every table's ±1 plane matrix with one
-    matmul — integer dots are exact in float64 (|dot| ≤ dim·max|qv|,
-    ~4 decades under 2^53; per-batch guard falls back to int64) and the
-    ≥ 0 sign test is identical to the JVM aggregate's. The aggregate
-    form below stays under SPARK_GRAFT_ANN_ASSIGN=jvm, parity-gated by
-    test_plane_codes_paths_agree."""
-    if _ANN_ASSIGN == "arrow":
+    ONE mapInPandas over (vec_id, qv) (round 11, guide §4.2) scores each
+    chunk against every table's ±1 plane matrix with one matmul —
+    integer dots are exact in float64 (|dot| ≤ dim·max|qv|, ~4 decades
+    under 2^53; a per-batch guard falls back to int64 matmul above it),
+    so the ≥ 0 sign test matches the oracle's exactly."""
+    import numpy as np
+
+    mats = [np.asarray(planes, dtype=np.int64) for planes in plane_tables]
+    mats_f = [m.astype(np.float64) for m in mats]
+    weights = [
+        (1 << np.arange(m.shape[0], dtype=np.int64)) for m in mats
+    ]
+    dim = mats[0].shape[1] if mats else 0
+
+    def codes_fn(batches):
         import numpy as np
+        import pandas as pd
 
-        mats = [np.asarray(planes, dtype=np.int64) for planes in plane_tables]
-        mats_f = [m.astype(np.float64) for m in mats]
-        weights = [
-            (1 << np.arange(m.shape[0], dtype=np.int64)) for m in mats
-        ]
-        dim = mats[0].shape[1] if mats else 0
-
-        def codes_fn(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf["vec_id"].to_numpy()
-                x = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-                xmax = float(np.abs(x).max(initial=0.0))
-                out_id, out_t, out_c = [], [], []
-                for l, m in enumerate(mats):
-                    if dim * xmax < 2.0**52:
-                        dots = x.astype(np.float64) @ mats_f[l].T
-                    else:  # exact at any magnitude
-                        dots = x @ m.T
-                    c = ((dots >= 0) * weights[l][None, :]).sum(axis=1)
-                    out_id.append(ids)
-                    out_t.append(np.full(len(ids), l, dtype=np.int32))
-                    out_c.append(c)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.concatenate(out_id),
-                        "t": np.concatenate(out_t),
-                        "c": np.concatenate(out_c),
-                    }
-                )
-
-        return n.select("vec_id", "qv").mapInPandas(
-            codes_fn, schema="vec_id long, t int, c long"
-        )
-    return _plane_dot_codes_jvm(n, plane_tables)
-
-
-def _plane_dot_codes_jvm(n: DataFrame, plane_tables: list) -> DataFrame:
-    """The aggregate form of _plane_dot_codes: ONE posexplode over the
-    vector and per-plane codegen SUM aggregates
-    (`x * element_at(±1-literal-array, j+1)`), with map-side partial
-    aggregation collapsing each partition to one row per vector before
-    the shuffle. The obvious alternative — per-plane
-    `aggregate(zip_with(...))` higher-order functions — is interpreted
-    expression eval (no whole-stage codegen) and benches ~5× slower on
-    32 planes; this formulation mirrors simhash_codes' conditional-sum
-    shape (operators/dedup.py).
-    """
-    xs = n.selectExpr("vec_id", "posexplode(qv) AS (j, x)")
-    aggs = []
-    for l, planes in enumerate(plane_tables):
-        for i, plane in enumerate(planes):
-            # ±1 weights as a sign partition: x·s ≡ (j∈plus ? x : -x); the
-            # InSet predicate stays in codegen, unlike element_at over a
-            # per-row-constructed literal array (2× slower measured)
-            plus = [j for j, s in enumerate(plane) if s == 1]
-            aggs.append(
-                F.sum(
-                    F.when(F.col("j").isin(plus), F.col("x")).otherwise(
-                        -F.col("x")
-                    )
-                ).alias(f"d_{l}_{i}")
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf["vec_id"].to_numpy()
+            x = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
+            xmax = float(np.abs(x).max(initial=0.0))
+            out_id, out_t, out_c = [], [], []
+            for l, m in enumerate(mats):
+                if dim * xmax < 2.0**52:
+                    dots = x.astype(np.float64) @ mats_f[l].T
+                else:
+                    dots = x @ m.T
+                c = ((dots >= 0) * weights[l][None, :]).sum(axis=1)
+                out_id.append(ids)
+                out_t.append(np.full(len(ids), l, dtype=np.int32))
+                out_c.append(c)
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.concatenate(out_id),
+                    "t": np.concatenate(out_t),
+                    "c": np.concatenate(out_c),
+                }
             )
-    dots = xs.groupBy("vec_id").agg(*aggs)
-    tables = []
-    for l, planes in enumerate(plane_tables):
-        c = F.lit(0).cast("long")
-        for i in range(len(planes)):
-            c = c + F.when(
-                F.col(f"d_{l}_{i}") >= 0, F.lit(1 << i).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        tables.append(F.struct(F.lit(l).alias("t"), c.alias("c")))
-    return dots.select(
-        "vec_id", F.explode(F.array(*tables)).alias("tc")
-    ).select("vec_id", F.col("tc.t").alias("t"), F.col("tc.c").alias("c"))
 
-
-def _spark_lsh_code(qv_col, planes=_PLANES):
-    """Random-hyperplane sign code of a quantized vector (expression form;
-    see _plane_dot_codes for the aggregate form used on corpus-wide scans).
-
-    plane dot = Σ ±qv[j]; bit i = 1 if dot ≥ 0. The ±1 plane matrix is a
-    compile-time literal.
-    """
-    code = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                qv_col,
-                F.array(*[F.lit(s).cast("long") for s in plane]),
-                lambda x, s: x * s,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        code = code + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return code
+    return n.select("vec_id", "qv").mapInPandas(
+        codes_fn, schema="vec_id long, t int, c long"
+    )
 
 
 def _duck_lsh_code(qv_expr: str, planes=_PLANES) -> str:
@@ -330,60 +263,75 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# coarse-quantizer cells / cells probed per query. IVF_K is env-tunable
-# (read once at import, so the Spark builders and the generated DuckDB
-# oracles always agree) because the right K grows with corpus size —
-# K ≈ √N keeps cells at √N vectors; the scale sweep exercises a wider K
-# at its 1M-vector point to show nprobe-bounded growth holding.
-IVF_K = int(os.environ.get("SPARK_GRAFT_IVF_K", "16"))
-IVF_NPROBE = int(os.environ.get("SPARK_GRAFT_IVF_NPROBE", "2"))
+# coarse-quantizer cells / cells probed per query. Plain constants: the
+# Spark builders and the generated DuckDB oracles read the same values.
+# The entries whose right K grows with the corpus (the incremental index
+# and IVFADC) auto-size it to ⌈√N⌉ instead — see ivf_incremental_k.
+IVF_K = 16
+IVF_NPROBE = 2
 IVF_INCR_MAX_K = 4096  # coarse-codebook cap (incremental + ivfpq auto-K)
 
-# packed-argmin radix: min(d2 * CAP + cidx) over a PRIMITIVE long is a
-# real HashAggregate with map-side partial combine. The obvious
-# min(struct(d2, cid)) spelling has a non-primitive aggregation buffer,
-# which Spark can only execute as SortAggregate — measured 8× slower at
-# 1M vectors (806.6 s vs 97.7 s) because it SORTS the N×K distance
-# expansion instead of hashing it. CAP must exceed the centroid count
-# (IVF_INCR_MAX_K = 4096); the packing is exact while
-# d2 < 2^63/CAP ≈ 2.25e15, i.e. dim·(2·QUANT)² ≤ 2.25e15 → dim ≤ 5.6M.
-_ARGMIN_CAP = 4096
-
-# sim_ann_ivfpq coarse-codebook size: auto-sizes to ceil(sqrt(N)) like the
-# incremental index (round-10 4M measurement: fixed K=16 grew 9.5× over 4×
-# rows — ~250k-member cells make every probe rerank nprobe·N/K ADC
-# candidates, quadratic in the corpus). SPARK_GRAFT_IVFPQ_K pins a fixed K
-# for the A/B (read once at import so the generated DuckDB oracle and the
-# Spark builder always agree).
-_ENV_IVFPQ_K = os.environ.get("SPARK_GRAFT_IVFPQ_K")
-
-# N×K assignment implementation (round 11, guide §4.2): the JVM packed-
-# argmin crossJoin evaluates the 64-element zip_with/aggregate lambda
-# N·K times through Catalyst's higher-order-function interpreter — with
-# the auto-√N codebook that term became the ANN family's wall (1M-vector
-# ivfpq: 534.7 s, of which the coarse assignment is ~10⁹ lambda evals).
-# The Arrow path hands whole record batches to one BLAS matmul per
-# chunk: argmin_c d2(x,c) = argmin_c(‖c‖² − 2x·c) — ‖x‖² is constant
-# per row — computed in float64, which is EXACT here: |qv| ≤ ~6·QUANT
-# per coordinate, so every product ≤ ~4e9 and every 64-term sum
-# ≤ ~3e11 ≪ 2^53; a per-batch guard checks the bound and falls back to
-# int64 matmul (exact at any magnitude) if data ever violates it.
-# numpy's stable argsort/argmin pick the LOWEST index on ties — the
-# centroid matrix is ordered by cid, so tie-breaking matches the JVM
-# packed form and the oracle's ORDER BY d2, cid exactly.
-#   SPARK_GRAFT_ANN_ASSIGN=jvm   pins the old path (A/B; parity-gated)
-_ANN_ASSIGN = os.environ.get("SPARK_GRAFT_ANN_ASSIGN", "arrow")
 # driver-side centroid collect bound: K·dim·8B ≤ ~32 MB at this cap, and
 # every caller's K is already clamped to IVF_INCR_MAX_K=4096 by auto-K
 _CENT_COLLECT_CAP = 65536
+# float64 represents every integer below 2^53; scores are held under
+# 2^52 so each product, partial sum and the final ‖c‖² − 2x·c are exact
+_F64_EXACT = 2.0**52
 
 
-def _collect_centroids(cents: DataFrame):
-    """cid-sorted (ids, K×dim float64 matrix) of a centroid table — the
-    plan-time artifact both assignment paths key on (the JVM path already
-    collected the id list for its dense-index map)."""
+class _Codebook(NamedTuple):
+    """An id-sorted int64 codebook prepared on the driver for
+    :func:`_sq_l2_scores`. Ids ascend, so numpy's lowest-index argmin
+    tie-break picks the smallest id — the oracles' ORDER BY d2, id."""
+
+    ids: Any  # int64[K], ascending
+    mat: Any  # int64[K, dim]
+    mat_f: Any  # float64 copy of mat
+    norm2: Any  # float64 ‖c‖² per row
+    norm2_max: float
+    span: float  # 2·dim·max|c|: max|x|·span bounds 2|x·c|
+
+
+def _codebook(ids, mat) -> _Codebook:
     import numpy as np
 
+    mat = np.asarray(mat, dtype=np.int64)
+    mat_f = mat.astype(np.float64)
+    norm2 = (mat_f * mat_f).sum(axis=1) if mat.ndim == 2 else np.zeros(0)
+    dim = mat.shape[1] if mat.ndim == 2 else 0
+    return _Codebook(
+        np.asarray(ids, dtype=np.int64),
+        mat,
+        mat_f,
+        norm2,
+        float(norm2.max(initial=0.0)),
+        2.0 * dim * float(np.abs(mat_f).max(initial=0.0)),
+    )
+
+
+def _sq_l2_scores(x, book: _Codebook):
+    """chunk×K scores ‖c‖² − 2·x·c of an int64 chunk ``x`` against
+    ``book``, in float64. argmin over a row equals argmin of the exact
+    squared L2 (‖x‖² is constant per row). Exact while
+    max|x|·2·dim·max|c| + max‖c‖² < 2^52; above that bound this raises
+    ValueError rather than return inexact scores (an int64 matmul is no
+    exact fallback: ‖c‖² − 2x·c wraps silently there)."""
+    import numpy as np
+
+    xmax = float(np.abs(x).max(initial=0.0))
+    bound = xmax * book.span + book.norm2_max
+    if bound >= _F64_EXACT:
+        raise ValueError(
+            f"squared-L2 scores reach {bound:.4g}, above the float64 exact "
+            f"bound 2^52 = {_F64_EXACT:.4g} (max |x| = {xmax:.0f}): "
+            "quantized vectors out of contract"
+        )
+    return book.norm2[None, :] - 2.0 * (x.astype(np.float64) @ book.mat_f.T)
+
+
+def _collect_centroids(cents: DataFrame) -> _Codebook:
+    """The cid-sorted centroid codebook of a (cid, cv) table — the
+    plan-time artifact the assignment kernels score against."""
     rows = cents.select("cid", "cv").collect()
     if len(rows) > _CENT_COLLECT_CAP:
         raise ValueError(
@@ -391,9 +339,7 @@ def _collect_centroids(cents: DataFrame):
             f"{_CENT_COLLECT_CAP}"
         )
     rows.sort(key=lambda r: r["cid"])
-    ids = [r["cid"] for r in rows]
-    mat = np.asarray([list(r["cv"]) for r in rows], dtype=np.int64)
-    return ids, mat
+    return _codebook([r["cid"] for r in rows], [list(r["cv"]) for r in rows])
 
 
 def nearest_cells(
@@ -401,34 +347,28 @@ def nearest_cells(
     cents: DataFrame,
     nprobe: int = 1,
     id_col: str = "vec_id",
-    impl: str | None = None,
 ) -> DataFrame:
     """(id_col, crk, cid): each vector's ``nprobe`` nearest centroids by
     exact quantized squared-L2, crk 1..nprobe, ties broken on smallest
     cid — the one assignment primitive behind the IVF family (standing
     fold, ivfpq coarse cells, arrival probes).
 
-    impl='arrow' (default): one mapInPandas over (id, qv) only (§4.1 —
-    pass just the columns the function needs), scoring each chunk with a
-    single float64 BLAS matmul; exact per the module-comment bound, with
-    an int64-matmul fallback guarded per batch. impl='jvm': the packed
-    argmin HashAggregate (nprobe=1) / row_number window (nprobe>1) —
-    kept for A/B and gated identical by test_ann_assign_paths_agree."""
-    impl = impl or _ANN_ASSIGN
-    if impl != "arrow":
-        return _nearest_cells_jvm(df, cents, nprobe, id_col)
+    One mapInPandas over (id, qv) only (§4.1 — pass just the columns the
+    function needs) hands whole record batches to one BLAS matmul per
+    chunk (round 11, guide §4.2): argmin_c d2(x,c) = argmin_c(‖c‖² −
+    2x·c) — ‖x‖² is constant per row — computed in float64, which is
+    EXACT here: |qv| ≤ ~6·QUANT per coordinate, so every product
+    ≤ ~4e9 and every 64-term sum ≤ ~3e11 ≪ 2^53. :func:`_sq_l2_scores`
+    checks the bound per chunk and raises if data ever violates it.
+    numpy's stable argsort/argmin pick the LOWEST index on ties — the
+    centroid matrix is ordered by cid, so tie-breaking matches the
+    oracle's ORDER BY d2, cid exactly."""
     import numpy as np
 
-    cent_ids, cmat = _collect_centroids(cents)
-    k = len(cent_ids)
-    take = min(nprobe, k)
-    cid_arr = np.asarray(cent_ids, dtype=np.int64)
-    cmat_f = cmat.astype(np.float64)
-    cn_f = (cmat_f * cmat_f).sum(axis=1)
-    cmax = float(np.abs(cmat_f).max(initial=0.0))
-    dim = cmat.shape[1] if k else 0
+    book = _collect_centroids(cents)
+    take = min(nprobe, len(book.ids))
     # chunk rows so the chunk×K score matrix stays ~32 MB per task
-    chunk = max(1, (1 << 22) // max(k, 1))
+    chunk = max(1, (1 << 22) // max(len(book.ids), 1))
 
     def assign(batches):
         import numpy as np
@@ -442,22 +382,12 @@ def nearest_cells(
             out_ids, out_crk, out_cid = [], [], []
             for lo in range(0, len(pdf), chunk):
                 x = x_all[lo : lo + chunk]
-                xmax = float(np.abs(x).max(initial=0.0))
-                # float64 is exact while every product and 64-term sum
-                # stays under 2^53; generated data sits ~4 decades below
-                if dim * xmax * cmax * 2.0 + cn_f.max(initial=0.0) < 2.0**52:
-                    scores = cn_f[None, :] - 2.0 * (
-                        x.astype(np.float64) @ cmat_f.T
-                    )
-                else:  # exact at any magnitude, ~20× slower
-                    scores = (cmat * cmat).sum(axis=1)[None, :] - 2 * (
-                        x @ cmat.T
-                    )
+                scores = _sq_l2_scores(x, book)
                 if take == 1:
                     best = scores.argmin(axis=1)
                     out_ids.append(ids[lo : lo + chunk])
                     out_crk.append(np.ones(len(x), dtype=np.int32))
-                    out_cid.append(cid_arr[best])
+                    out_cid.append(book.ids[best])
                 else:
                     order = np.argsort(scores, axis=1, kind="stable")[
                         :, :take
@@ -470,7 +400,7 @@ def nearest_cells(
                             np.arange(1, take + 1, dtype=np.int32), len(x)
                         )
                     )
-                    out_cid.append(cid_arr[order].ravel())
+                    out_cid.append(book.ids[order].ravel())
             yield pd.DataFrame(
                 {
                     id_col: np.concatenate(out_ids),
@@ -484,56 +414,12 @@ def nearest_cells(
     )
 
 
-def _nearest_cells_jvm(
-    df: DataFrame, cents: DataFrame, nprobe: int, id_col: str
-) -> DataFrame:
-    """The round-9/10 JVM shapes: packed-long combiner argmin for
-    nprobe=1 (see _ARGMIN_CAP), per-vector row_number window for
-    nprobe>1 (batch-sized callers only)."""
-    d2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    if nprobe > 1:
-        dists = df.join(F.broadcast(cents), how="cross").select(
-            id_col, "cid", d2.alias("d2")
-        )
-        w = Window.partitionBy(id_col).orderBy("d2", "cid")
-        return (
-            dists.withColumn("crk", F.row_number().over(w))
-            .filter(F.col("crk") <= nprobe)
-            .select(id_col, F.col("crk").cast("int").alias("crk"), "cid")
-        )
-    spark = df.sparkSession
-    cent_ids = sorted(r["cid"] for r in cents.select("cid").collect())
-    if len(cent_ids) > _ARGMIN_CAP:
-        raise ValueError(
-            f"{len(cent_ids)} centroids exceed the argmin packing cap "
-            f"{_ARGMIN_CAP}; raise _ARGMIN_CAP (and re-audit the "
-            "packed-long overflow headroom)"
-        )
-    idx = spark.createDataFrame(
-        [(cid, i) for i, cid in enumerate(cent_ids)], "cid long, cidx long"
-    )
-    cents_i = cents.select("cid", "cv").join(F.broadcast(idx), "cid")
-    return (
-        df.join(F.broadcast(cents_i), how="cross")
-        .select(id_col, (d2 * F.lit(_ARGMIN_CAP) + F.col("cidx")).alias("pk"))
-        .groupBy(id_col)
-        .agg(F.min("pk").alias("pk"))
-        .select(id_col, F.pmod("pk", F.lit(_ARGMIN_CAP)).alias("cidx"))
-        .join(F.broadcast(idx), "cidx")
-        .select(id_col, F.lit(1).cast("int").alias("crk"), "cid")
-    )
-
-
-def _collect_subcodebooks(cents: DataFrame, id_col: str, vec_col: str):
-    """s-keyed, id-sorted (ids, K_s×subdim matrices) of a per-subspace
-    sub-codebook table — the plan-time artifact the Arrow PQ encoder keys
-    on (M·K rows total, KBs)."""
-    import numpy as np
-
+def _collect_subcodebooks(
+    cents: DataFrame, id_col: str, vec_col: str
+) -> list[_Codebook]:
+    """Per-subspace id-sorted codebooks of an (s, id, vec) sub-codebook
+    table, indexed by s — the plan-time artifact the Arrow PQ encoders
+    score against (M·K rows total, KBs)."""
     rows = cents.select("s", id_col, vec_col).collect()
     if len(rows) > _CENT_COLLECT_CAP:
         raise ValueError(
@@ -543,12 +429,12 @@ def _collect_subcodebooks(cents: DataFrame, id_col: str, vec_col: str):
     by_s: dict[int, list] = {}
     for r in rows:
         by_s.setdefault(int(r["s"]), []).append((r[id_col], list(r[vec_col])))
-    books = {}
-    for s, lst in by_s.items():
-        lst.sort()  # id-sorted: numpy's lowest-index tie-break = smallest id
-        ids = np.asarray([c for c, _ in lst], dtype=np.int64)
-        mat = np.asarray([v for _, v in lst], dtype=np.int64)
-        books[s] = (ids, mat)
+    if sorted(by_s) != list(range(len(by_s))):
+        raise ValueError(f"non-contiguous subspace ids: {sorted(by_s)}")
+    books = []
+    for s in range(len(by_s)):
+        lst = sorted(by_s[s])  # id-sorted: lowest-index tie-break = smallest id
+        books.append(_codebook([c for c, _ in lst], [v for _, v in lst]))
     return books
 
 
@@ -563,33 +449,18 @@ def pq_codes_arrow(
 ) -> DataFrame:
     """(*id_cols, s, code): per-subspace argmin sub-centroid for each
     row's ``vec_col`` (length n_sub·subdim), ties broken on the smallest
-    centroid id — the PQ encode primitive behind sim_ann_pq and
-    sim_ann_ivfpq's residual codes.
+    centroid id — the PQ encode primitive behind sim_ann_pq.
 
     One mapInPandas over (*id_cols, vec_col) only (guide §4.1/§4.2),
     scoring every subspace of a chunk with one small matmul against the
     collected sub-codebooks, instead of the N·M·K broadcast-join row
     expansion whose per-pair distance lambda runs through Catalyst's
     higher-order-function interpreter. Exact by the same bound as
-    nearest_cells: scores = ‖c_s‖² − 2·x_s·c_s (the per-row ‖x_s‖² term
-    cannot change an argmin) and every product/sum of quantized
-    coordinates sits ~4 decades under 2^53, so float64 arithmetic is
-    exact; a per-batch guard falls back to int64 matmul. The JVM
-    packed-argmin spelling stays under SPARK_GRAFT_ANN_ASSIGN=jvm in the
-    callers and test_pq_encode_paths_agree gates both row-identical."""
+    nearest_cells (:func:`_sq_l2_scores` raises above it)."""
     import numpy as np
 
     books = _collect_subcodebooks(cents, cent_id_col, cent_vec_col)
     n_sub = len(books)
-    if sorted(books) != list(range(n_sub)):
-        raise ValueError(f"non-contiguous subspace ids: {sorted(books)}")
-    prepared = []
-    for s in range(n_sub):
-        ids_s, mat_s = books[s]
-        mat_f = mat_s.astype(np.float64)
-        cn_f = (mat_f * mat_f).sum(axis=1)
-        cmax = float(np.abs(mat_f).max(initial=0.0))
-        prepared.append((ids_s, mat_s, mat_f, cn_f, cmax))
     s_tile = np.arange(n_sub, dtype=np.int32)
 
     def encode(batches):
@@ -608,19 +479,9 @@ def pq_codes_arrow(
                 )
             rows = len(pdf)
             codes = np.empty((rows, n_sub), dtype=np.int64)
-            for s in range(n_sub):
-                ids_s, mat_s, mat_f, cn_f, cmax = prepared[s]
+            for s, book in enumerate(books):
                 xs = x_all[:, s * subdim : (s + 1) * subdim]
-                xmax = float(np.abs(xs).max(initial=0.0))
-                if subdim * xmax * cmax * 2.0 + cn_f.max(initial=0.0) < 2.0**52:
-                    scores = cn_f[None, :] - 2.0 * (
-                        xs.astype(np.float64) @ mat_f.T
-                    )
-                else:  # exact at any magnitude, slower
-                    scores = (mat_s * mat_s).sum(axis=1)[None, :] - 2 * (
-                        xs @ mat_s.T
-                    )
-                codes[:, s] = ids_s[scores.argmin(axis=1)]
+                codes[:, s] = book.ids[_sq_l2_scores(xs, book).argmin(axis=1)]
             out = {
                 c: np.repeat(pdf[c].to_numpy(), n_sub) for c in id_cols
             }
@@ -656,35 +517,17 @@ def ivfpq_assign_encode_arrow(
     residual-encode term of ivfpq's 4M wall).
 
     Exactness: identical bounds and tie-breaks as nearest_cells /
-    pq_codes_arrow — float64 scores are exact while every product and
-    64-term sum sits under 2^53 (guard per batch; int64-matmul fallback
-    otherwise), and numpy's argmin lowest-index tie-break over
-    id-sorted codebooks equals the packed-long min(d2·CAP + idx) and
-    the oracle's ORDER BY d2, id. The JVM spelling stays under
-    SPARK_GRAFT_ANN_ASSIGN=jvm and test_ivfpq_fused_paths_agree gates
-    both row-identical."""
+    pq_codes_arrow — both the coarse and the per-subspace scores go
+    through :func:`_sq_l2_scores`, and numpy's argmin lowest-index
+    tie-break over id-sorted codebooks equals the oracle's
+    ORDER BY d2, id."""
     import numpy as np
 
-    cent_ids, cmat = _collect_centroids(cents)
-    cid_arr = np.asarray(cent_ids, dtype=np.int64)
-    cmat_f = cmat.astype(np.float64)
-    cn_f = (cmat_f * cmat_f).sum(axis=1)
-    cmax = float(np.abs(cmat).max(initial=0.0))
-    dim = cmat.shape[1] if len(cent_ids) else 0
+    coarse = _collect_centroids(cents)
     books = _collect_subcodebooks(rcents, "rcid", "rcv")
     n_sub = len(books)
-    if sorted(books) != list(range(n_sub)):
-        raise ValueError(f"non-contiguous subspace ids: {sorted(books)}")
-    prepared = []
-    for s in range(n_sub):
-        ids_s, mat_s = books[s]
-        mat_f = mat_s.astype(np.float64)
-        prepared.append(
-            (ids_s, mat_s, mat_f, (mat_f * mat_f).sum(axis=1),
-             float(np.abs(mat_s).max(initial=0.0)))
-        )
     s_tile = np.arange(n_sub, dtype=np.int32)
-    chunk = max(1, (1 << 22) // max(len(cent_ids), 1))
+    chunk = max(1, (1 << 22) // max(len(coarse.ids), 1))
 
     def assign_encode(batches):
         import numpy as np
@@ -703,41 +546,21 @@ def ivfpq_assign_encode_arrow(
             out = []
             for lo in range(0, len(pdf), chunk):
                 x = x_full[lo : lo + chunk]
-                xmax = float(np.abs(x).max(initial=0.0))
-                if dim * xmax * cmax * 2.0 + cn_f.max(initial=0.0) < 2.0**52:
-                    scores = cn_f[None, :] - 2.0 * (
-                        x.astype(np.float64) @ cmat_f.T
-                    )
-                else:  # exact at any magnitude, slower
-                    scores = (cmat * cmat).sum(axis=1)[None, :] - 2 * (
-                        x @ cmat.T
-                    )
-                best = scores.argmin(axis=1)
-                r = x - cmat[best]  # int64 residuals, |r| <= 2*xmax-ish
+                best = _sq_l2_scores(x, coarse).argmin(axis=1)
+                r = x - coarse.mat[best]  # int64 residuals
                 rows = len(x)
                 codes = np.empty((rows, n_sub), dtype=np.int64)
-                rmax = float(np.abs(r).max(initial=0.0))
-                for s in range(n_sub):
-                    ids_s, mat_s, mat_f, rn_f, bmax = prepared[s]
+                for s, book in enumerate(books):
                     rs = r[:, s * subdim : (s + 1) * subdim]
-                    if (
-                        subdim * rmax * bmax * 2.0 + rn_f.max(initial=0.0)
-                        < 2.0**52
-                    ):
-                        sc = rn_f[None, :] - 2.0 * (
-                            rs.astype(np.float64) @ mat_f.T
-                        )
-                    else:  # exact at any magnitude
-                        sc = (mat_s * mat_s).sum(axis=1)[None, :] - 2 * (
-                            rs @ mat_s.T
-                        )
-                    codes[:, s] = ids_s[sc.argmin(axis=1)]
+                    codes[:, s] = book.ids[
+                        _sq_l2_scores(rs, book).argmin(axis=1)
+                    ]
                 out.append(
                     pd.DataFrame(
                         {
                             "vec_id": np.repeat(ids_all[lo : lo + chunk],
                                                 n_sub),
-                            "cid": np.repeat(cid_arr[best], n_sub),
+                            "cid": np.repeat(coarse.ids[best], n_sub),
                             "s": np.tile(s_tile, rows),
                             "code": codes.ravel(),
                         }
@@ -752,11 +575,11 @@ def ivfpq_assign_encode_arrow(
 
 
 def ivfpq_k(n_rows: int) -> int:
-    """Plan-time coarse K for sim_ann_ivfpq: the env pin wins; otherwise
-    the same ceil(sqrt(N)) clamp as the incremental index
-    (:func:`ivf_incremental_k`), which the oracle mirrors from COUNT(*)."""
-    if _ENV_IVFPQ_K:
-        return int(_ENV_IVFPQ_K)
+    """Plan-time coarse K for sim_ann_ivfpq: the same ceil(sqrt(N)) clamp
+    as the incremental index (:func:`ivf_incremental_k`), which the
+    oracle mirrors from COUNT(*). Round-10 4M measurement: a fixed K=16
+    grew 9.5× over 4× rows — ~250k-member cells make every probe rerank
+    nprobe·N/K ADC candidates, quadratic in the corpus."""
     return ivf_incremental_k(n_rows)
 
 
@@ -949,12 +772,10 @@ DUP_TABLES = 4  # independent hash tables (bands)
 #   c=0.99 → ~0.997,  c=0.95 → ~0.90,  c=0.90 → ~0.67;
 # at 13 bits (250k vectors): c=0.99 → ~0.97, c=0.95 → ~0.68. Wider codes
 # trade recall for the geometric candidate cut — the standard LSH trade
-# (more TABLES buy recall back linearly in shuffle; retune per corpus,
-# SPARK_GRAFT_DUP_LSH_BITS pins the width).
+# (more TABLES buy recall back linearly in shuffle).
 DUP_MIN_BITS = 8
 DUP_MAX_BITS = 24
 DUP_TARGET_BUCKET = 32  # expected vectors per bucket the width aims for
-_ENV_DUP_BITS = os.environ.get("SPARK_GRAFT_DUP_LSH_BITS")
 _DUP_PLANES = [
     plane_signs(DUP_MAX_BITS, EMBED_DIM, salt=f"dup-{l}")
     for l in range(DUP_TABLES)
@@ -1109,8 +930,6 @@ def _bucket_topk_arrow(
 
 def dup_lsh_bits(n_rows: int) -> int:
     """Plan-time per-table code width for the near-dup LSH tables."""
-    if _ENV_DUP_BITS:
-        return int(_ENV_DUP_BITS)
     return auto_bits(n_rows, DUP_TARGET_BUCKET, DUP_MIN_BITS, DUP_MAX_BITS)
 
 from compass_query_optimizer_spark.operators.dedup import (  # noqa: E402
@@ -1143,51 +962,14 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = dup_lsh_bits(t["embeddings"].count())
     # one row per (vector, hash table): an equi-join key of (table, code)
     codes = _plane_dot_codes(n, [p[:bits] for p in _DUP_PLANES])
-    if _ANN_ASSIGN == "arrow":
-        # verify INSIDE each (table, code) bucket with one chunked matmul
-        # (round 11): the payload joins the skinny code table once per
-        # table row, and a pair colliding in several tables yields
-        # bit-identical cos_raw in each (exact integer dots, same IEEE
-        # divide), so the post-scoring distinct() collapses duplicates
-        # exactly as the old pre-verify candidate distinct() did.
-        members = codes.join(n, "vec_id").select(
-            "t", "c", "vec_id", "qv", "nrm2"
-        )
-        verified = _bucket_pairs_arrow(
-            members, COSINE_DUP_THRESHOLD
-        ).distinct()
-        return verified.select(
-            "id_a", "id_b", F.round("cos_raw", 6).alias("cos")
-        ).orderBy("id_a", "id_b")
-    # JVM A/B path (gated row-identical by test_dup_lsh_paths_agree):
-    # pair list materializes, then both payloads join back per pair.
-    # The code table is checkpointed HERE only — it has two self-join
-    # consumers on this path, but exactly one on the Arrow path above
-    # (where a checkpoint would be a pure extra materialization).
-    codes = codes.localCheckpoint(eager=False)
-    ca = codes.select(F.col("vec_id").alias("id_a"), "t", "c")
-    cb = codes.select(F.col("vec_id").alias("id_b"), "t", "c")
-    cands = (
-        ca.join(cb, ["t", "c"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        # a pair can collide in several tables → dedup before verify
-        .distinct()
-    )
-    # exact verification: join the pair list back to the vectors (two
-    # shuffle hash joins on the ids), compute the exact quantized cosine
-    a = n.select(
-        F.col("vec_id").alias("id_a"), F.col("qv").alias("qa"), F.col("nrm2").alias("na")
-    )
-    b = n.select(
-        F.col("vec_id").alias("id_b"), F.col("qv").alias("qb"), F.col("nrm2").alias("nb")
-    )
-    verified = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cos_raw", _cos(F.col("qa"), F.col("qb"), F.col("na"), F.col("nb")))
-        .filter(F.col("cos_raw") >= COSINE_DUP_THRESHOLD)
-    )
+    # verify INSIDE each (table, code) bucket with one chunked matmul
+    # (round 11): the payload joins the skinny code table once per table
+    # row, and a pair colliding in several tables yields bit-identical
+    # cos_raw in each (exact integer dots, same IEEE divide), so the
+    # post-scoring distinct() collapses duplicates exactly as the
+    # oracle's pre-verify candidate DISTINCT does.
+    members = codes.join(n, "vec_id").select("t", "c", "vec_id", "qv", "nrm2")
+    verified = _bucket_pairs_arrow(members, COSINE_DUP_THRESHOLD).distinct()
     return verified.select(
         "id_a", "id_b", F.round("cos_raw", 6).alias("cos")
     ).orderBy("id_a", "id_b")
@@ -1352,39 +1134,15 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", "qv", "nrm2", "cid", "sub")
     )
-    if _ANN_ASSIGN == "arrow":
-        # pairwise verify INSIDE each (cell, sub) bucket with one chunked
-        # matmul (round 11, same primitive as dedup_embedding_lsh): the
-        # self-join spelling shipped BOTH payloads per candidate pair; a
-        # vector is dropped iff it is the id_b (larger id) of a surviving
-        # pair, which is exactly the vb < va ∧ cos ≥ threshold condition.
-        dropped = (
-            _bucket_pairs_arrow(
-                sub_cells, COSINE_DUP_THRESHOLD, keys=("cid", "sub")
-            )
-            .select(F.col("id_b").alias("vec_id"))
-            .distinct()
-        )
-    else:  # JVM A/B path (gated row-identical by test_semantic_paths_agree)
-        a = sub_cells.select(
-            F.col("vec_id").alias("va"), F.col("qv").alias("qa"),
-            F.col("nrm2").alias("na"), "cid", "sub",
-        )
-        b = sub_cells.select(
-            F.col("vec_id").alias("vb"), F.col("qv").alias("qb"),
-            F.col("nrm2").alias("nb"), "cid", "sub",
-        )
-        dropped = (
-            a.join(b, ["cid", "sub"])
-            .filter(F.col("vb") < F.col("va"))
-            .withColumn(
-                "cos_raw",
-                _cos(F.col("qa"), F.col("qb"), F.col("na"), F.col("nb")),
-            )
-            .filter(F.col("cos_raw") >= COSINE_DUP_THRESHOLD)
-            .select(F.col("va").alias("vec_id"))
-            .distinct()
-        )
+    # pairwise verify INSIDE each (cell, sub) bucket with one chunked
+    # matmul (round 11, same primitive as dedup_embedding_lsh): a vector
+    # is dropped iff it is the id_b (larger id) of a surviving pair,
+    # which is exactly the oracle's b.vec_id < a.vec_id ∧ cos ≥ threshold.
+    dropped = (
+        _bucket_pairs_arrow(sub_cells, COSINE_DUP_THRESHOLD, keys=("cid", "sub"))
+        .select(F.col("id_b").alias("vec_id"))
+        .distinct()
+    )
     return (
         cells.join(dropped.withColumn("hit", F.lit(1)), "vec_id", "left")
         .select(
@@ -1471,11 +1229,11 @@ PQ_K = 16  # sub-centroids per subspace (4-bit codes)
     "query precomputes its dot with every (subspace, centroid) — "
     f"{PQ_M}×{PQ_K} rows, broadcast — and a neighbor's approximate dot is "
     "the sum of table lookups selected by its codes. Encode = one "
-    "broadcast centroid join + a combiner-friendly min(struct) argmin "
-    "(map-side partials shrink the shuffle to one row per (vector, "
-    "subspace)); scoring joins codes to the broadcast ADC table, never "
-    "vector-to-vector. All arithmetic exact int64 until the final cosine "
-    "division, so the DuckDB oracle reproduces ranks bit-for-bit",
+    "vectorized mapInPandas argmin against the collected sub-codebooks "
+    "(one row per (vector, subspace) leaves it); scoring joins codes to "
+    "the broadcast ADC table, never vector-to-vector. All arithmetic "
+    "exact int64 until the final cosine division, so the DuckDB oracle "
+    "reproduces ranks bit-for-bit",
     tags=("similarity", "pq"),
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,29 +1268,13 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sv"), F.lit(0).cast("long"), lambda a, x: a + x * x
         ).alias("cn"),
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("cv"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    # encode: argmin centroid per (vector, subspace) — by default ONE
-    # vectorized mapInPandas over (vec_id, qv) scoring all M subspaces of
-    # each chunk against the collected sub-codebooks (round 11: the
-    # N·M·K broadcast-join expansion evaluated an 8-element distance
-    # lambda per row through Catalyst's interpreter, and min(struct)'s
-    # non-primitive buffer degrades to SortAggregate). The JVM spelling
-    # stays under SPARK_GRAFT_ANN_ASSIGN=jvm; tie-break (smallest cid)
-    # is identical on both paths and in the oracle.
-    if _ANN_ASSIGN == "arrow":
-        codes = pq_codes_arrow(n, cents, subdim=PQ_SUBDIM)
-    else:
-        codes = (
-            subs.join(F.broadcast(cents), "s")
-            .select("vec_id", "s", "cid", d2.alias("d2"))
-            .groupBy("vec_id", "s")
-            .agg(F.min(F.struct("d2", "cid")).alias("m"))
-            .select("vec_id", "s", F.col("m.cid").alias("code"))
-        )
+    # encode: argmin centroid per (vector, subspace) — ONE vectorized
+    # mapInPandas over (vec_id, qv) scoring all M subspaces of each chunk
+    # against the collected sub-codebooks (round 11: the N·M·K
+    # broadcast-join expansion evaluated an 8-element distance lambda per
+    # row through Catalyst's interpreter). Tie-break (smallest cid) as in
+    # the oracle.
+    codes = pq_codes_arrow(n, cents, subdim=PQ_SUBDIM)
     # ADC lookup table: query × every (subspace, centroid) partial dot
     pdot = F.aggregate(
         F.zip_with(F.col("sv"), F.col("cv"), lambda x, c: x * c),
@@ -1684,13 +1426,12 @@ _registry._REGISTRY["dedup_semantic"].oracle = _semantic_oracle()
     "themselves and collapse the codebook to zeros). Fixed K=16 was "
     "measured 9.5× over 4× rows at 4M vectors (250k-member cells); "
     "sqrt-K pins per-probe candidates at nprobe·sqrt(N), and the fixed "
-    "PQ_K residual codebook keeps code assignment linear in N. Both "
-    "argmin assignments are packed-long combiner HashAggregates, never "
-    "min(struct) SortAggregates. Scoring joins corpus codes to a "
+    "PQ_K residual codebook keeps code assignment linear in N. Coarse "
+    "argmin and residual encode run fused in one vectorized "
+    "mapInPandas. Scoring joins corpus codes to a "
     "broadcast per-(query, cell) ADC table plus the (cell, subspace, "
     "code) cross-term table the residual algebra needs; exact int64 "
-    "until the final cosine division. SPARK_GRAFT_IVFPQ_K pins a fixed "
-    "K for A/B",
+    "until the final cosine division",
     tags=("similarity", "ivf", "pq"),
 )
 def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1726,127 +1467,50 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
-    if _ANN_ASSIGN == "arrow":
-        # FUSED coarse assign + residual encode (round 12): the residual
-        # sub-codebooks come from the SAMPLED vectors only (the stride
-        # filter commutes with the residual computation — round 11 built
-        # residuals for ALL N rows and then filtered), and one
-        # mapInPandas emits (vec_id, cid, s, code) for the whole corpus.
-        # Round 11's encode-only Arrow conversion was measured slower
-        # and reverted because it added a second Python boundary plus a
-        # (vec_id, cid, rv) payload join; the fusion removes both — see
-        # ivfpq_assign_encode_arrow.
-        sampled = n.filter(F.col("vec_id") % rstride == 1)
-        scells = nearest_cells(
-            sampled, coarse.select("cid", "cv"), nprobe=1
-        ).select("vec_id", "cid")
-        sresid = (
-            sampled.join(scells, "vec_id")
-            .join(F.broadcast(coarse.select("cid", "cv")), "cid")
-            .select(
-                "vec_id",
-                F.zip_with(
-                    F.col("qv"), F.col("cv"), lambda x, c: x - c
-                ).alias("rv"),
-            )
-        )
-        rcents = sresid.select(
-            F.col("vec_id").alias("rcid"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice(F.col("rv"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-                        for s in range(PQ_M)
-                    ]
-                )
-            ).alias("s", "rcv"),
-        ).select(
-            "rcid",
-            "s",
-            "rcv",
-            F.aggregate(
-                F.col("rcv"), F.lit(0).cast("long"), lambda a, x: a + x * x
-            ).alias("rn"),
-        )
-        codes = ivfpq_assign_encode_arrow(
-            n, coarse.select("cid", "cv"), rcents, PQ_SUBDIM
-        )
-    else:
-        # JVM A/B path (SPARK_GRAFT_ANN_ASSIGN=jvm): coarse assignment
-        # through the packed-argmin crossJoin, residual encode as the
-        # packed-long combiner HashAggregate over the N·M·PQ_K
-        # broadcast-join expansion. Kept verbatim for the parity gate.
-        cells = nearest_cells(n, coarse.select("cid", "cv"), nprobe=1).select(
-            "vec_id", "cid"
-        )
-        # residuals against the assigned centroid (K-row broadcast re-join)
-        resid = (
-            n.join(cells, "vec_id")
-            .join(F.broadcast(coarse.select("cid", "cv")), "cid")
-            .select(
-                "vec_id",
-                "cid",
-                F.zip_with(F.col("qv"), F.col("cv"), lambda x, c: x - c).alias("rv"),
-            )
-        )
-        rsubs = resid.select(
+    # FUSED coarse assign + residual encode (round 12): the residual
+    # sub-codebooks come from the SAMPLED vectors only (the stride
+    # filter commutes with the residual computation — round 11 built
+    # residuals for ALL N rows and then filtered), and one
+    # mapInPandas emits (vec_id, cid, s, code) for the whole corpus.
+    # Round 11's encode-only Arrow conversion was measured slower
+    # and reverted because it added a second Python boundary plus a
+    # (vec_id, cid, rv) payload join; the fusion removes both — see
+    # ivfpq_assign_encode_arrow.
+    sampled = n.filter(F.col("vec_id") % rstride == 1)
+    scells = nearest_cells(
+        sampled, coarse.select("cid", "cv"), nprobe=1
+    ).select("vec_id", "cid")
+    sresid = (
+        sampled.join(scells, "vec_id")
+        .join(F.broadcast(coarse.select("cid", "cv")), "cid")
+        .select(
             "vec_id",
-            "cid",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice(F.col("rv"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
-                        for s in range(PQ_M)
-                    ]
-                )
-            ).alias("s", "sv"),
+            F.zip_with(
+                F.col("qv"), F.col("cv"), lambda x, c: x - c
+            ).alias("rv"),
         )
-        rcents = rsubs.filter(F.col("vec_id") % rstride == 1).select(
-            F.col("vec_id").alias("rcid"),
-            "s",
-            F.col("sv").alias("rcv"),
-            F.aggregate(
-                F.col("sv"), F.lit(0).cast("long"), lambda a, x: a + x * x
-            ).alias("rn"),
-        )
-        d2r = F.aggregate(
-            F.zip_with(F.col("sv"), F.col("rcv"), lambda x, c: (x - c) * (x - c)),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        rc_ids = sorted(
-            r["rcid"] for r in rcents.select("rcid").distinct().collect()
-        )
-        if len(rc_ids) > _ARGMIN_CAP:
-            raise ValueError(
-                f"{len(rc_ids)} residual sub-centroids exceed the argmin "
-                f"packing cap {_ARGMIN_CAP}"
+    )
+    rcents = sresid.select(
+        F.col("vec_id").alias("rcid"),
+        F.posexplode(
+            F.array(
+                *[
+                    F.slice(F.col("rv"), s * PQ_SUBDIM + 1, PQ_SUBDIM)
+                    for s in range(PQ_M)
+                ]
             )
-        ridx_map = spark.createDataFrame(
-            [(rc, i) for i, rc in enumerate(rc_ids)], "rcid long, ridx long"
-        )
-        rcents_i = rcents.select("s", "rcid", "rcv").join(
-            F.broadcast(ridx_map), "rcid"
-        )
-        codes = (
-            rsubs.join(F.broadcast(rcents_i), "s")
-            .select(
-                "vec_id",
-                "cid",
-                "s",
-                (d2r * F.lit(_ARGMIN_CAP) + F.col("ridx")).alias("pk"),
-            )
-            .groupBy("vec_id", "cid", "s")
-            .agg(F.min("pk").alias("pk"))
-            .select(
-                "vec_id",
-                "cid",
-                "s",
-                F.pmod("pk", F.lit(_ARGMIN_CAP)).alias("ridx"),
-            )
-            .join(F.broadcast(ridx_map), "ridx")
-            .select("vec_id", "cid", "s", F.col("rcid").alias("code"))
-        )
+        ).alias("s", "rcv"),
+    ).select(
+        "rcid",
+        "s",
+        "rcv",
+        F.aggregate(
+            F.col("rcv"), F.lit(0).cast("long"), lambda a, x: a + x * x
+        ).alias("rn"),
+    )
+    codes = ivfpq_assign_encode_arrow(
+        n, coarse.select("cid", "cv"), rcents, PQ_SUBDIM
+    )
     # query probes: nprobe nearest coarse cells + dot(q, c) per probe
     qcd = F.aggregate(
         F.zip_with(F.col("qv"), F.col("cv"), lambda x, c: x * c),
@@ -1949,16 +1613,12 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_oracle() -> str:
     sub = f"list_transform(range(1, {PQ_SUBDIM} + 1), i -> {{v}}[s * {PQ_SUBDIM} + i])"
-    # K mirrors ivfpq_k exactly: the env pin wins, else the sqrt clamp
-    # from COUNT(*) (IEEE sqrt is correctly rounded, so both engines
-    # compute the identical K — the sim_ann_incremental precedent)
+    # K mirrors ivfpq_k exactly: the sqrt clamp from COUNT(*) (IEEE sqrt
+    # is correctly rounded, so both engines compute the identical K — the
+    # sim_ann_incremental precedent)
     kexpr = (
-        str(int(_ENV_IVFPQ_K))
-        if _ENV_IVFPQ_K
-        else (
-            f"GREATEST({IVF_K}, LEAST({IVF_INCR_MAX_K}, "
-            f"CAST(ceil(sqrt(cnt)) AS BIGINT)))"
-        )
+        f"GREATEST({IVF_K}, LEAST({IVF_INCR_MAX_K}, "
+        f"CAST(ceil(sqrt(cnt)) AS BIGINT)))"
     )
     return f"""
     WITH q AS (
@@ -2335,33 +1995,11 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_id",
     )
-    if _ANN_ASSIGN == "arrow":
-        # per-bucket top-k via one chunked matmul per code bucket (round
-        # 11): the self-join spelling shipped both payloads per
-        # bucket-mate pair and ranked the whole expansion in the window;
-        # each vector lives in exactly one bucket, so the bucket-local
-        # candidates ARE its full candidate set, and the boundary-tie
-        # superset keeps the window's exact (cos DESC, neighbor_id) cut.
-        scored = _bucket_topk_arrow(
-            n.select("code", "vec_id", "qv", "nrm2"), KNN_K
-        )
-    else:  # JVM A/B path (gated row-identical by test_knn_paths_agree)
-        left = n.select(
-            "vec_id", F.col("qv").alias("qa"), F.col("nrm2").alias("na"), "code"
-        )
-        right = n.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("qv").alias("qb"),
-            F.col("nrm2").alias("nb"),
-            "code",
-        )
-        scored = (
-            left.join(right, "code")
-            .filter(F.col("neighbor_id") != F.col("vec_id"))
-            .withColumn(
-                "cos_raw", _cos(F.col("qa"), F.col("qb"), F.col("na"), F.col("nb"))
-            )
-        )
+    # per-bucket top-k via one chunked matmul per code bucket (round 11):
+    # each vector lives in exactly one bucket, so the bucket-local
+    # candidates ARE its full candidate set, and the boundary-tie superset
+    # keeps the window's exact (cos DESC, neighbor_id) cut.
+    scored = _bucket_topk_arrow(n.select("code", "vec_id", "qv", "nrm2"), KNN_K)
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cos_raw").desc(), F.col("neighbor_id")
     )
@@ -2622,13 +2260,13 @@ def incremental_standing_parts(spark: SparkSession, sf_dir: str):
 
     Exposed separately so the plan gate can assert the standing fold's
     shape: the corpus-sized N×K assignment runs through
-    :func:`nearest_cells` — by default ONE vectorized mapInPandas whose
-    chunks score against the collected centroid matrix with a single
-    BLAS matmul (round 11; the JVM packed-argmin evaluated the
-    64-element distance lambda N·K times and was measured as the ANN
-    wall at 1M vectors), never a per-vector `row_number` window (sort
-    exchange of all N×K rows) and never min(struct) (SortAggregate).
-    Tie-breaking matches the oracle's ORDER BY d2, cid on both paths.
+    :func:`nearest_cells` — ONE vectorized mapInPandas whose chunks
+    score against the collected centroid matrix with a single BLAS
+    matmul (round 11; a crossJoin argmin evaluated the 64-element
+    distance lambda N·K times and was measured as the ANN wall at 1M
+    vectors), never a per-vector `row_number` window (sort exchange of
+    all N×K rows) and never min(struct) (SortAggregate). Tie-breaking
+    matches the oracle's ORDER BY d2, cid.
     The member payload (qv, nrm2) re-joins by vec_id AFTER the argmin,
     so only (vec_id, cid) pairs leave the assignment."""
     t = load_tables(spark, sf_dir)
@@ -2662,7 +2300,7 @@ def incremental_standing_parts(spark: SparkSession, sf_dir: str):
     "the plan-time standing count (oracle-mirrored), so per-arrival work "
     "is O(sqrt(N)·nprobe) — the round-8 sweep measured the fixed-K=16 "
     "version quadratic (867 s at 250k) and this is the fix; the standing "
-    "fold assigns cells by combiner argmin (no corpus-wide window "
+    "fold assigns cells by a vectorized argmin (no corpus-wide window "
     "exchange) and the standing side is never rescanned",
     tags=("similarity", "ivf", "incremental"),
 )
@@ -2783,7 +2421,6 @@ def serve_arrivals(
     arrivals: DataFrame,
     cents: DataFrame,
     index_members: DataFrame,
-    impl: str | None = None,
 ) -> DataFrame:
     """Probe a standing incremental-IVF index with an arrival batch.
 
@@ -2795,11 +2432,9 @@ def serve_arrivals(
     :func:`nearest_cells` with nprobe=IVF_NPROBE (top-n per vector) and
     re-join the (qv, nrm2) payload by vec_id, so the batch×K distance
     expansion never carries vectors; the per-cell exact rerank runs
-    through :func:`_rerank_cells_arrow` by default (JVM cosine lambdas
-    under impl='jvm'; test_ann_serve_paths_agree gates both identical)."""
-    impl = impl or _ANN_ASSIGN
+    through :func:`_rerank_cells_arrow`."""
     probes = (
-        nearest_cells(arrivals, cents, nprobe=IVF_NPROBE, impl=impl)
+        nearest_cells(arrivals, cents, nprobe=IVF_NPROBE)
         .join(arrivals.select("vec_id", "qv", "nrm2"), "vec_id")
         .select(
             F.col("vec_id").alias("arrival_id"),
@@ -2808,12 +2443,7 @@ def serve_arrivals(
             "cid",
         )
     )
-    if impl == "arrow":
-        scored = _rerank_cells_arrow(probes, index_members)
-    else:
-        scored = probes.join(index_members, "cid").withColumn(
-            "cos_raw", _cos(F.col("qa"), F.col("qb"), F.col("na"), F.col("nb"))
-        )
+    scored = _rerank_cells_arrow(probes, index_members)
     w = Window.partitionBy("arrival_id").orderBy(
         F.col("cos_raw").desc(), F.col("neighbor_id")
     )

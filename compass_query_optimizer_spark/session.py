@@ -55,12 +55,25 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": "32",
 }
 
+
+def _driver_memory() -> str:
+    """min(16g, half of physical memory): the heap G1 may grow to must
+    leave the rest of the box to the JVM's off-heap memory and the
+    Python workers — a 16g heap on a 16 GB box grew until the kernel
+    OOM-killed the one-process test run."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, (phys // 2) >> 20)}m"
+
+
 # Static confs: only apply when *we* launch the JVM (get_spark); a
 # driver-provided session already has these fixed.
 STATIC_CONF: dict[str, str] = {
     # default 1g driver heap OOMs on wide intermediate joins at sf0.1;
     # in local mode the driver JVM hosts all 32 executor threads
-    "spark.driver.memory": "16g",
+    "spark.driver.memory": _driver_memory(),
     # The engine serves a 206-entry query surface from one session; each
     # query compiles several whole-stage-codegen classes, so the default
     # 100-entry codegen cache thrashes and every query RE-COMPILES its

@@ -15,7 +15,7 @@ from compass_query_optimizer_spark.operators.similarity import (
     incremental_standing_parts,
     serve_arrivals,
 )
-from tests.conftest import SF_DIR, SF_DIR_ORACLE
+from tests.conftest import SF_DIR
 
 
 def test_persisted_incremental_index_roundtrip(spark, tmp_path):
@@ -88,14 +88,37 @@ def test_registered_persisted_entry_matches_in_session_fold(spark):
     assert len(via_entry) > 0
 
 
+def _collect_qv(df, id_col):
+    import numpy as np
+
+    rows = sorted(df.select(id_col, "qv").collect())
+    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    return ids, np.asarray([list(r[1]) for r in rows], dtype=np.int64)
+
+
+def _embeddings_table(vecs):
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(
+                [v.tolist() for v in vecs], pa.list_(pa.float32())
+            ),
+            "label": pa.array([0] * len(vecs), pa.int32()),
+        }
+    )
+
+
 def test_ann_assign_paths_agree(spark):
-    """Round 11: nearest_cells has two implementations — the default
-    Arrow path (vectorized float64 BLAS matmul per chunk; exact because
-    every product and 64-term sum of quantized coordinates sits ~4
-    decades under 2^53) and the round-9/10 JVM path (packed-argmin
-    HashAggregate / row_number window). They must return IDENTICAL
-    (id, crk, cid) rows for both the argmin (nprobe=1) and top-n
-    (nprobe=2) shapes, including d2 ties broken on smallest cid."""
+    """nearest_cells (vectorized float64 BLAS matmul per chunk; exact
+    because every product and 64-term sum of quantized coordinates sits
+    ~4 decades under 2^53) must return the IDENTICAL (id, crk, cid) rows
+    as a NumPy brute force over exact int64 squared L2, for both the
+    argmin (nprobe=1) and top-n (nprobe=2) shapes, including d2 ties
+    broken on smallest cid."""
+    import numpy as np
+
     from compass_query_optimizer_spark.operators.similarity import (
         nearest_cells,
     )
@@ -105,41 +128,45 @@ def test_ann_assign_paths_agree(spark):
     cents = standing.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
+    ids, x = _collect_qv(standing, "vec_id")
+    cids, c = _collect_qv(cents.withColumnRenamed("cv", "qv"), "cid")
+    d2 = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
     for nprobe in (1, 2):
-        arrow = sorted(
+        got = sorted(
             tuple(r)
-            for r in nearest_cells(
-                standing, cents, nprobe=nprobe, impl="arrow"
-            ).collect()
+            for r in nearest_cells(standing, cents, nprobe=nprobe).collect()
         )
-        jvm = sorted(
-            tuple(r)
-            for r in nearest_cells(
-                standing, cents, nprobe=nprobe, impl="jvm"
-            ).collect()
+        want = sorted(
+            (int(ids[i]), rank + 1, int(cids[j]))
+            for i in range(len(ids))
+            for rank, j in enumerate(np.lexsort((cids, d2[i]))[:nprobe])
         )
-        assert arrow == jvm
-        assert len(arrow) == standing.count() * nprobe
+        assert got == want
+        assert len(got) == len(ids) * nprobe
 
 
-def test_ann_serve_paths_agree(spark):
-    """Round 11: serve_arrivals' per-cell cogrouped-matmul rerank must
-    return rows IDENTICAL to the JVM cosine-lambda path — including the
-    float cos values (integer dots are exact in float64 and the final
-    multiply-then-divide is the same IEEE sequence on both sides) and
-    rank ties broken on neighbor_id."""
+def test_nearest_cells_raises_above_the_exact_bound(spark, tmp_path):
+    """Quantized coordinates of 10^7 (embedding components of 1000.0)
+    put ‖c‖² − 2x·c past 2^52 at dim 64, where float64 scores stop being
+    exact and an int64 matmul can wrap: the assignment must fail loudly
+    and name the bound instead of returning a guessed argmin."""
+    import numpy as np
+    import pyarrow.parquet as pq
+    import pytest
+
     from compass_query_optimizer_spark.operators.similarity import (
-        serve_arrivals,
+        nearest_cells,
     )
 
-    n = _quantized_with_norm(load_tables(spark, SF_DIR)["embeddings"])
-    arrivals = n.filter(F.col("vec_id") % 10 == 0)
-    cents, members = incremental_standing_parts(spark, SF_DIR)
-    members = members.localCheckpoint(eager=True)
-    arrow = serve_arrivals(arrivals, cents, members, impl="arrow").collect()
-    jvm = serve_arrivals(arrivals, cents, members, impl="jvm").collect()
-    assert [tuple(r) for r in arrow] == [tuple(r) for r in jvm]
-    assert len(arrow) > 0
+    vecs = np.random.RandomState(3).randn(40, 64).astype(np.float32)
+    vecs[:, 0] = 1000.0
+    pq.write_table(_embeddings_table(vecs), str(tmp_path / "embeddings.parquet"))
+    n = _quantized_with_norm(load_tables(spark, str(tmp_path))["embeddings"])
+    cents = n.filter(F.col("vec_id") % 8 == 0).select(
+        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
+    )
+    with pytest.raises(Exception, match=r"2\^52"):
+        nearest_cells(n, cents).collect()
 
 
 def test_pq_encode_paths_agree(spark):
@@ -192,142 +219,75 @@ def test_pq_encode_paths_agree(spark):
     assert len(arrow) == n.count() * PQ_M
 
 
-def test_dup_lsh_paths_agree(spark, monkeypatch, tmp_path):
-    """Round 11: dedup_embedding_lsh's exact verify has two
-    implementations — the default per-bucket chunked-matmul path
-    (_bucket_pairs_arrow) and the JVM pair-join + cosine-lambda path.
-    They must return IDENTICAL (id_a, id_b, cos) rows: integer dots are
-    exact in float64 and the divide is the same IEEE sequence, so the
-    threshold cut and the rounding agree bit-for-bit. The driver
-    fixtures plant no embedding near-dups (the entry is green at 0 rows
-    there), so this gate generates a corpus with planted ≥0.95-cosine
-    pairs to exercise the verify non-vacuously."""
+def _planted_dups_vs_oracle(spark, tmp_path, name, seed):
+    """(spark rows, DuckDB oracle rows) of registry entry ``name`` over a
+    300-vector corpus with 30 planted near-duplicate pairs: a 1e-3
+    perturbation keeps cosine ~0.9999 and identical hyperplane sign
+    codes, so candidates AND the threshold cut both fire. The driver
+    fixtures plant no embedding near-dups (these entries are green at 0
+    dropped rows there), so this is the entries' only value check."""
+    import duckdb
     import numpy as np
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from compass_query_optimizer_spark.operators import similarity
     from compass_query_optimizer_spark.registry import all_queries
 
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(300, 64).astype(np.float32)
-    # plant near-duplicates: tiny perturbation keeps cosine ~0.9999 and
-    # identical hyperplane sign codes, so candidates AND the threshold
-    # cut both fire
-    for i in range(0, 60, 2):
-        vecs[i + 1] = vecs[i] + rng.randn(64).astype(np.float32) * 1e-3
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(range(len(vecs)), pa.int64()),
-            "embedding": pa.array(
-                [v.tolist() for v in vecs], pa.list_(pa.float32())
-            ),
-            "label": pa.array([0] * len(vecs), pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-
-    build = all_queries()["dedup_embedding_lsh"].build
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "arrow")
-    arrow = [tuple(r) for r in build(spark, str(tmp_path)).collect()]
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "jvm")
-    jvm = [tuple(r) for r in build(spark, str(tmp_path)).collect()]
-    assert arrow == jvm
-    assert len(arrow) >= 30
-
-
-def test_semantic_paths_agree(spark, monkeypatch, tmp_path):
-    """Round 11: dedup_semantic's in-cell pairwise verify has two
-    implementations — the default per-(cell, sub) chunked-matmul path and
-    the JVM self-join + cosine-lambda path. Row-identical on a corpus
-    with planted ≥0.95-cosine near-dups (the driver fixtures plant none,
-    so the entry's oracle gate alone is value-vacuous)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from compass_query_optimizer_spark.operators import similarity
-    from compass_query_optimizer_spark.registry import all_queries
-
-    rng = np.random.RandomState(11)
+    rng = np.random.RandomState(seed)
     vecs = rng.randn(300, 64).astype(np.float32)
     for i in range(0, 60, 2):
         vecs[i + 1] = vecs[i] + rng.randn(64).astype(np.float32) * 1e-3
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(range(len(vecs)), pa.int64()),
-            "embedding": pa.array(
-                [v.tolist() for v in vecs], pa.list_(pa.float32())
-            ),
-            "label": pa.array([0] * len(vecs), pa.int32()),
-        }
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(_embeddings_table(vecs), str(path))
+
+    spec = all_queries()[name]
+    got = sorted(tuple(r) for r in spec.build(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    want = sorted(tuple(r) for r in con.execute(spec.oracle_text()).fetchall())
+    return got, want
+
+
+def test_dup_lsh_matches_oracle_on_planted_dups(spark, tmp_path):
+    """dedup_embedding_lsh's per-bucket chunked-matmul verify must return
+    the oracle's (id_a, id_b, cos) rows exactly: integer dots are exact in
+    float64 and the divide is the same IEEE sequence, so the threshold
+    cut and the rounding agree bit-for-bit."""
+    got, want = _planted_dups_vs_oracle(
+        spark, tmp_path, "dedup_embedding_lsh", seed=7
     )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-
-    build = all_queries()["dedup_semantic"].build
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "arrow")
-    arrow = [tuple(r) for r in build(spark, str(tmp_path)).collect()]
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "jvm")
-    jvm = [tuple(r) for r in build(spark, str(tmp_path)).collect()]
-    assert arrow == jvm
-    assert sum(1 for r in arrow if not r[2]) >= 30  # planted dups dropped
+    assert got == want
+    assert len(got) >= 30
 
 
-def test_plane_codes_paths_agree(spark, monkeypatch):
-    """Round 11: the hyperplane code pass has two implementations — the
-    default mapInPandas ±1-matmul and the JVM posexplode + conditional-sum
-    aggregate. Identical (vec_id, t, c) rows across multiple tables and
-    widths (the ≥ 0 sign test is exact on both sides)."""
-    from compass_query_optimizer_spark.operators import similarity
+def test_semantic_matches_oracle_on_planted_dups(spark, tmp_path):
+    """dedup_semantic's per-(cell, sub) chunked-matmul verify must keep
+    and drop exactly the oracle's vectors on planted near-dups."""
+    got, want = _planted_dups_vs_oracle(
+        spark, tmp_path, "dedup_semantic", seed=11
+    )
+    assert got == want
+    assert sum(1 for r in got if not r[2]) >= 30  # planted dups dropped
+
+
+def test_plane_codes_paths_agree(spark):
+    """The hyperplane code pass (mapInPandas ±1 matmul) must return the
+    IDENTICAL (vec_id, t, c) rows as a NumPy int64 sign-matmul reference
+    across multiple tables and widths."""
+    import numpy as np
+
     from compass_query_optimizer_spark.operators.similarity import (
         _DUP_PLANES,
         _plane_dot_codes,
-        _plane_dot_codes_jvm,
     )
 
     n = _quantized_with_norm(load_tables(spark, SF_DIR)["embeddings"])
     tables = [p[:9] for p in _DUP_PLANES]
-    arrow = sorted(
-        tuple(r) for r in _plane_dot_codes(n, tables).collect()
-    )
-    jvm = sorted(
-        tuple(r) for r in _plane_dot_codes_jvm(n, tables).collect()
-    )
-    assert arrow == jvm
-    assert len(arrow) == n.count() * len(tables)
-
-
-def test_ivfpq_fused_paths_agree(spark, monkeypatch):
-    """Round 12: sim_ann_ivfpq's fused coarse-assign + residual-encode
-    mapInPandas must produce results row-identical to the JVM path
-    (packed-argmin crossJoin assignment + broadcast-join combiner-argmin
-    encode) end to end — same codes, same ADC algebra inputs, same final
-    cos values and rank tie-breaks."""
-    from compass_query_optimizer_spark.operators import similarity
-    from compass_query_optimizer_spark.registry import all_queries
-
-    build = all_queries()["sim_ann_ivfpq"].build
-    sf = SF_DIR_ORACLE  # sf0.001 is below the operator's corpus-size bar
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "arrow")
-    arrow = [tuple(r) for r in build(spark, sf).collect()]
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "jvm")
-    jvm = [tuple(r) for r in build(spark, sf).collect()]
-    assert arrow == jvm
-    assert len(arrow) > 0
-
-
-def test_knn_paths_agree(spark, monkeypatch):
-    """Round 11: emb_knn_graph's per-bucket top-k matmul (boundary ties
-    all emitted, exact window cut downstream) must be row-identical to
-    the JVM bucket self-join + cosine-lambda + window path — including
-    rank ties broken on neighbor_id."""
-    from compass_query_optimizer_spark.operators import similarity
-    from compass_query_optimizer_spark.registry import all_queries
-
-    build = all_queries()["emb_knn_graph"].build
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "arrow")
-    arrow = [tuple(r) for r in build(spark, SF_DIR).collect()]
-    monkeypatch.setattr(similarity, "_ANN_ASSIGN", "jvm")
-    jvm = [tuple(r) for r in build(spark, SF_DIR).collect()]
-    assert arrow == jvm
-    assert len(arrow) > 0
+    got = sorted(tuple(r) for r in _plane_dot_codes(n, tables).collect())
+    ids, x = _collect_qv(n, "vec_id")
+    want = []
+    for t, planes in enumerate(tables):
+        bits = (x @ np.asarray(planes, dtype=np.int64).T) >= 0
+        codes = (bits * (1 << np.arange(len(planes), dtype=np.int64))).sum(axis=1)
+        want += [(int(i), t, int(c)) for i, c in zip(ids, codes)]
+    assert got == sorted(want)
+    assert len(got) == len(ids) * len(tables)

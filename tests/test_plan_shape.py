@@ -174,18 +174,9 @@ def test_semantic_dedup_assignment_is_linear(spark):
 def test_semantic_dedup_code_pass_combines_map_side(spark):
     """The plane-dot code pass must emit one skinny (vec, table, code)
     row per vector per table — round 11: the vectorized mapInPandas
-    matmul (the posexploded aggregate form stays under
-    SPARK_GRAFT_ANN_ASSIGN=jvm, where it must combine map-side)."""
+    matmul."""
     plan = formatted_plan(spark, "dedup_semantic")
-    import os
-
-    if os.environ.get("SPARK_GRAFT_ANN_ASSIGN") == "jvm":
-        # A/B pin: the posexploded aggregate form combines map-side and
-        # no Python map stage appears
-        assert "MapInPandas" not in plan
-        assert "partial_sum" in plan or "partial sum" in plan.lower()
-    else:
-        assert "MapInPandas" in plan  # vectorized code pass
+    assert "MapInPandas" in plan  # vectorized code pass
 
 
 def test_sessionize_windows_are_user_keyed(spark):
@@ -317,15 +308,8 @@ def test_pq_scoring_joins_codes_to_broadcast_tables(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2  # ADC-build + score
-    import os
-
-    if os.environ.get("SPARK_GRAFT_ANN_ASSIGN") == "jvm":
-        # A/B pin: the packed-long combiner argmin, no Python stage
-        assert "partial_min" in plan
-        assert "MapInPandas" not in plan
-    else:
-        assert "MapInPandas" in plan  # vectorized PQ encode
-        assert "SortAggregate" not in plan
+    assert "MapInPandas" in plan  # vectorized PQ encode
+    assert "SortAggregate" not in plan
 
 
 def test_kl_drift_joins_only_observed_pairs(spark):
@@ -369,21 +353,12 @@ def test_ivfpq_assign_and_encode_combine_map_side(spark):
     (round 12: coarse argmin + residual PQ encode in the same batch
     loop — the N-row residual payload never exists as a DataFrame and
     the N·M·PQ_K broadcast-join expansion is gone), and scoring joins
-    codes to broadcast lookup tables — no vector-to-vector join. Under
-    the SPARK_GRAFT_ANN_ASSIGN=jvm A/B pin the round-11 all-JVM shape
-    (packed-argmin crossJoin + combiner-argmin encode) is asserted
-    instead."""
+    codes to broadcast lookup tables — no vector-to-vector join."""
     plan = formatted_plan(spark, "sim_ann_ivfpq")
-    import os
-
-    if os.environ.get("SPARK_GRAFT_ANN_ASSIGN") == "jvm":
-        assert "MapInPandas" not in plan  # A/B pin: all-JVM argmins
-        assert "partial_min" in plan  # packed-argmin residual encode
-    else:
-        assert "MapInPandas" in plan  # fused assign+encode
-        # the N·M posexplode feeds only the PQ_K-row sampled codebook
-        # build now, never a corpus-sized expansion with a sort
-        assert "SortAggregate" not in plan
+    assert "MapInPandas" in plan  # fused assign+encode
+    # the N·M posexplode feeds only the PQ_K-row sampled codebook build
+    # now, never a corpus-sized expansion with a sort
+    assert "SortAggregate" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 3
 
