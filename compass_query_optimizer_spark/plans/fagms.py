@@ -11,10 +11,12 @@ Sketch/Sketches.h:15-26, XIS.h; SIGMOD 2021 COMPASS paper §3) on Spark:
 - k-way estimates multiply k column planes bucket-wise (Sketches.h:178-204,
   zero counters replaced by 1e-4, absolute values).
 
-The *build* runs distributed, one shuffle-free scan per table pass
+The *build* is one shuffle-free scan per table pass
 (:func:`build_sketches_arrow`) doing the same per-tuple work as the
-reference's kFAGMS_SKETCH aggregate (RuntimeFunctions.cpp:318-340).
-Estimation and join-order search happen driver-side in numpy.
+reference's kFAGMS_SKETCH aggregate (RuntimeFunctions.cpp:318-340): a
+distributed ``mapInPandas`` pass when the table's base row count spans
+several tasks, else one Arrow collect sketched on the driver by the same
+kernel. Estimation and join-order search happen driver-side in numpy.
 
 EH3 (public scheme, Rusu & Dobra "Pseudo-Random Number Generation for
 Sketch-Based Estimations", TODS 2007): for seed (s0, sv) and 32-bit key x,
@@ -83,8 +85,8 @@ class Sketch:
 
 
 def numpy_update(sketch: Sketch, keys: np.ndarray) -> None:
-    """Reference-semantics sketch update, vectorized: the kernel inside the
-    mapInPandas build, and the driver-side twin the build is tested against.
+    """Reference-semantics sketch update, vectorized: the kernel of every
+    build, and the twin the builds are tested against.
 
     Kernel shape is dictated by measured numpy behavior on the target
     hardware: 64-bit integer multiply, stride-0 broadcast multiply, and
@@ -150,8 +152,39 @@ def estimate_multi_way(sketches: list[Sketch]) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Distributed build
+# Build: one pass per table visit
 # ---------------------------------------------------------------------------
+
+# Keys per sketch task — enough to amortize a Python worker's fixed start-up
+# cost, few enough tasks that collecting one 0.6 MB counter blob per (task,
+# column) stays small. An input whose base row count fits one task skips the
+# worker and is sketched on the driver, so the driver holds at most this
+# many keys per join column.
+KEYS_PER_TASK = 100_000
+
+
+def _sketch_partition(batches, seeds_list: list[SketchSeeds]) -> tuple[int, list[Sketch]]:
+    """(rows, sketch per column) of one partition's batches of ``_k{j}``
+    key columns. The batches are concatenated first: one kernel pass per
+    column over the whole partition, not 73 rows × per-batch ufunc
+    overhead. Null keys count as rows but never touch a counter (they
+    never join)."""
+    import pandas as pd
+
+    chunks: list[list[np.ndarray]] = [[] for _ in seeds_list]
+    n = 0
+    for pdf in batches:
+        n += len(pdf)
+        for j, chunk in enumerate(chunks):
+            keys = pdf[f"_k{j}"].to_numpy()
+            keys = keys[~pd.isna(keys)]
+            if len(keys):
+                chunk.append(keys.astype(np.int64))
+    sketches = [Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), s) for s in seeds_list]
+    for sk, chunk in zip(sketches, chunks):
+        if chunk:
+            numpy_update(sk, np.concatenate(chunk))
+    return n, sketches
 
 
 def build_sketches_arrow(
@@ -159,19 +192,24 @@ def build_sketches_arrow(
     col_seeds: dict[str, SketchSeeds],
     nrows_hint: int | None = None,
 ) -> tuple[int, dict[str, Sketch]]:
-    """One distributed pass over ``df``: returns (row_count, sketch per
-    join column) — the analog of the reference's kFAGMS_SKETCH pseudo-
-    aggregate that counts survivors AND updates sketches in one kernel
-    (RelAlgExecutor.cpp:1623 getFilteredCountAllAndUpdateSketch).
+    """One pass over ``df``: returns (row_count, sketch per join column) —
+    the analog of the reference's kFAGMS_SKETCH pseudo-aggregate that
+    counts survivors AND updates sketches in one kernel (RelAlgExecutor.cpp
+    :1623 getFilteredCountAllAndUpdateSketch).
 
-    ``mapInPandas`` computes a per-partition partial counter matrix with
-    the vectorized numpy update, the driver sums partials. One scan, no
-    shuffle at all — each task ships back exactly one ROWS×BUCKETS matrix
-    per join column (≈0.6 MB) regardless of partition size. This is the
-    Spark analog of the reference's per-GPU-block sketch copies merged
-    host-side (cuda_mapd_rt.cu:766-804, Execute.cpp:1820-1835); it beat
-    the JVM groupBy build it replaced ~10× at sf0.1. Null keys count as
-    survivors but never touch a counter (they never join).
+    When ``nrows_hint`` (the base row count, an upper bound of the rows
+    ``df`` keeps) fits one task of :data:`KEYS_PER_TASK`, the pass is one
+    Arrow collect of the key columns, sketched on the driver: a Python
+    worker's fixed start-up cost is several times that collect, and it
+    would dominate a task this small. Otherwise ``mapInPandas`` computes a
+    per-partition partial counter matrix and the driver sums the partials.
+    One scan, no shuffle at all — each task ships back exactly one
+    ROWS×BUCKETS matrix per join column (≈0.6 MB) regardless of partition
+    size. This is the Spark analog of the reference's per-GPU-block sketch
+    copies merged host-side (cuda_mapd_rt.cu:766-804, Execute.cpp
+    :1820-1835); it beat the JVM groupBy build it replaced ~10× at sf0.1.
+    Both paths run :func:`_sketch_partition`, so null keys count as
+    survivors but never touch a counter on either.
     """
     cols = list(col_seeds)
     if not cols:
@@ -179,44 +217,28 @@ def build_sketches_arrow(
     proj = df.select(
         *[F.col(c).cast("long").alias(f"_k{j}") for j, c in enumerate(cols)]
     )
-    # Partition goal: ~100k keys per task — enough to amortize the Python
-    # worker round-trip, few enough tasks that collecting one 0.6 MB counter
-    # blob per (task, column) stays small. Small-SF parquet often lands in
-    # one partition (kernel would run single-threaded); cluster-scale inputs
-    # already have plenty, so we only repartition when it pays.
+    seeds_list = [col_seeds[c] for c in cols]
+    if nrows_hint is not None and nrows_hint <= KEYS_PER_TASK:
+        count, sketches = _sketch_partition([proj.toArrow().to_pandas()], seeds_list)
+        return count, dict(zip(cols, sketches))
+    # Small-SF parquet often lands in one partition (kernel would run
+    # single-threaded); cluster-scale inputs already have plenty, so we
+    # only repartition when it pays.
     if nrows_hint is not None:
         target = max(1, min(
             df.sparkSession.sparkContext.defaultParallelism,
-            -(-nrows_hint // 100_000),
+            -(-nrows_hint // KEYS_PER_TASK),
         ))
         cur = proj.rdd.getNumPartitions()
         if cur < target:
             proj = proj.repartition(target)
         elif cur > 4 * target:
             proj = proj.coalesce(target)
-    seeds_list = [col_seeds[c] for c in cols]
 
     def partial_sketches(batches):
         import pandas as pd
 
-        # concatenate the partition's batches first: one kernel pass per
-        # column over the whole partition, not 73 rows × per-10k-batch
-        # ufunc overhead
-        chunks: list[list[np.ndarray]] = [[] for _ in cols]
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-            for j in range(len(cols)):
-                keys = pdf[f"_k{j}"].to_numpy()
-                keys = keys[~pd.isna(keys)]  # null keys never join; skip
-                if len(keys):
-                    chunks[j].append(keys.astype(np.int64))
-        partials = [
-            Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), s) for s in seeds_list
-        ]
-        for j in range(len(cols)):
-            if chunks[j]:
-                numpy_update(partials[j], np.concatenate(chunks[j]))
+        n, partials = _sketch_partition(batches, seeds_list)
         # raw little-endian bytes: ~100× cheaper through Arrow than a
         # 74k-element list column
         yield pd.DataFrame(

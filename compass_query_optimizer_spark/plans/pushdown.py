@@ -4,9 +4,11 @@ For each base table of a join query, ascending by size (FilterPushDownSketch
 .cpp:125-304 evaluateAndPushDown):
 
 1. apply the table's own conjuncts;
-2. run ONE distributed aggregation that both counts survivors and builds a
-   Fast-AGMS sketch per join column (the kFAGMS_SKETCH pseudo-aggregate,
-   RelAlgExecutor.cpp:1623);
+2. run ONE pass that both counts survivors and builds a Fast-AGMS sketch
+   per join column (the kFAGMS_SKETCH pseudo-aggregate, RelAlgExecutor.cpp
+   :1623): a distributed ``mapInPandas`` pass for tables whose base row
+   count spans several sketch tasks, one Arrow collect sketched on the
+   driver for the rest (``fagms.build_sketches_arrow``);
 3. if survivors ≤ min(max_selectivity·|T|, max_size) the filtered table is
    considered selective: it is cached (Spark's analog of the reference
    splicing the materialized filtered table into the DAG) and the final
@@ -60,7 +62,6 @@ class PushdownConfig:
     # shuffle (often AQE-reusable) against a serial driver build that
     # scales with rows — past ~300k the trade never favors broadcast.
     antibroadcast_rows: int = 300_000
-    parallel_tables: int = 8  # concurrent per-table sketch passes
     # count_distinct_auto routing — the Spark twin of the reference's
     # plan-time approx↔precise switch (RelAlgExecutor.cpp:1350-1418) and
     # its CountDistinctDescriptor bitmap-vs-set choice. Integral measures
@@ -173,11 +174,12 @@ def run_pushdown(
         )
         return alias, count, sketches, filtered, selective
 
-    # the per-table passes are independent Spark jobs; run them concurrently
-    # (the reference runs them ascending by size on one device — on a
-    # cluster, concurrent small jobs overlap their scheduling latency)
+    # the per-table passes are independent Spark jobs; run them all
+    # concurrently (the reference runs them ascending by size on one
+    # device — on a cluster, concurrent small jobs overlap their
+    # scheduling latency)
     aliases = sorted(spec.tables, key=lambda a: base_counts[a])
-    with ThreadPoolExecutor(max_workers=max(1, config.parallel_tables)) as pool:
+    with ThreadPoolExecutor(max_workers=len(aliases)) as pool:
         results = list(pool.map(one_table, aliases))
 
     for alias, count, sketches, filtered, selective in results:

@@ -3,7 +3,7 @@
 - short-doc shingle guard (sequence(1,0) = [1,0] crash in Spark)
 - short-text char-gram guard (position-0 substr emits short grams)
 - schema-aware residual rewrite (numeric / string literals untouched)
-- JVM sketch build null-key parity with the Arrow build
+- sketch build null-key parity (in-process and distributed) with numpy
 - salted_join join-type restriction
 """
 
@@ -107,6 +107,27 @@ def test_arrow_build_null_keys_match_numpy(spark):
     # the survivor count includes null-key rows
     assert cnt == 4000
     # the counters exclude null keys and agree with the numpy twin
+    twin = Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), seeds["k"])
+    numpy_update(twin, keys[~np.isnan(keys)].astype(np.int64))
+    assert np.array_equal(sk["k"].counters, twin.counters)
+
+
+def test_distributed_build_null_keys_match_numpy(spark):
+    """The distributed twin of the test above (whose 4000-row hint builds
+    in-process): no hint, several partitions, negative keys."""
+    rng = np.random.default_rng(12)
+    keys = rng.integers(-300, 500, 4000).astype(float)
+    keys[rng.random(4000) < 0.1] = np.nan
+    df = (
+        spark.createDataFrame(pd.DataFrame({"k": keys}))
+        .select(F.col("k").cast("long").alias("k"))
+        .repartition(3)
+    )
+    seeds = {"k": seeds_for_class("eq:nulltest")}
+
+    cnt, sk = build_sketches_arrow(df, seeds)
+
+    assert cnt == 4000
     twin = Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), seeds["k"])
     numpy_update(twin, keys[~np.isnan(keys)].astype(np.int64))
     assert np.array_equal(sk["k"].counters, twin.counters)

@@ -108,6 +108,70 @@ def test_distributed_build_matches_numpy(spark):
     assert np.array_equal(sk["k"].counters, twin.counters)
 
 
+def test_in_process_build_matches_distributed_on_job_visits(spark, monkeypatch):
+    """Every table visit of JOB 1a-8a at fixture scale 1 (planned online,
+    so each visit builds) gets the same count and bit-identical counters
+    from the in-process build (row hint = base count, ≤ one task) as from
+    the distributed mapInPandas build (no hint)."""
+    from compass_query_optimizer_spark.plans import pushdown
+    from compass_query_optimizer_spark.plans.fagms import KEYS_PER_TASK
+    from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
+    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
+
+    visits = []
+
+    def record(df, col_seeds, nrows_hint=None):
+        visits.append((df, col_seeds, nrows_hint))
+        return build_sketches_arrow(df, col_seeds, nrows_hint=nrows_hint)
+
+    monkeypatch.setattr(pushdown, "build_sketches_arrow", record)
+    tables, counts = job_tables(spark, scale=1)
+    corpus = load_corpus()
+    opt = CompassOptimizer(spark)
+    qids = [f"{i}a" for i in range(1, 9)]
+    for qid in qids:
+        opt.plan(corpus[qid], tables=tables, counts=counts, count_cache_tag=None)
+    spark.catalog.clearCache()
+    assert len(visits) == sum(len(parse_join_query(corpus[q]).tables) for q in qids)
+    for df, col_seeds, hint in visits:
+        assert hint <= KEYS_PER_TASK
+        cnt_in, sk_in = build_sketches_arrow(df, col_seeds, nrows_hint=hint)
+        cnt_dist, sk_dist = build_sketches_arrow(df, col_seeds)
+        assert cnt_in == cnt_dist
+        assert sk_in.keys() == sk_dist.keys()
+        for c in sk_in:
+            assert np.array_equal(sk_in[c].counters, sk_dist[c].counters), c
+
+
+def test_build_routes_on_the_one_task_bound(spark, monkeypatch):
+    """A row hint of exactly one task's keys builds in-process (no
+    MapInPandas); one row more keeps the distributed pass."""
+    from compass_query_optimizer_spark.plans.fagms import KEYS_PER_TASK
+
+    df = spark.range(-50, 950).selectExpr("id % 97 AS k")
+    seeds = {"k": seeds_for_class("eq:route")}
+    DataFrame = type(df)
+    map_in_pandas = DataFrame.mapInPandas
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("in-process build ran mapInPandas")
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", refuse)
+    cnt_in, sk_in = build_sketches_arrow(df, seeds, nrows_hint=KEYS_PER_TASK)
+
+    calls = []
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return map_in_pandas(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", spy)
+    cnt_dist, sk_dist = build_sketches_arrow(df, seeds, nrows_hint=KEYS_PER_TASK + 1)
+    assert calls == [1]
+    assert cnt_in == cnt_dist == 1000
+    assert np.array_equal(sk_in["k"].counters, sk_dist["k"].counters)
+
+
 # --------------------------------------------------------------------- search
 def _mini_graph():
     sql = """
