@@ -272,8 +272,14 @@ IVF_NPROBE = 2
 IVF_INCR_MAX_K = 4096  # coarse-codebook cap (incremental + ivfpq auto-K)
 
 # driver-side centroid collect bound: K·dim·8B ≤ ~32 MB at this cap, and
-# every caller's K is already clamped to IVF_INCR_MAX_K=4096 by auto-K
+# every caller's K is already clamped to IVF_INCR_MAX_K=4096 by auto-K.
+# A collect fetches at most cap + 1 rows, so the cap bounds the driver
+# even when a table is far over it.
 _CENT_COLLECT_CAP = 65536
+# bound on the codebook arrays a fused IVFPQ closure carries to every task
+# (coarse plus sub-codebooks, int64 and float64 copies): the clamped
+# coarse K=4096 at dim 64 holds 4 MB of it
+_CLOSURE_BYTES_CAP = 64 << 20
 # float64 represents every integer below 2^53; scores are held under
 # 2^52 so each product, partial sum and the final ‖c‖² − 2x·c are exact
 _F64_EXACT = 2.0**52
@@ -332,11 +338,11 @@ def _sq_l2_scores(x, book: _Codebook):
 def _collect_centroids(cents: DataFrame) -> _Codebook:
     """The cid-sorted centroid codebook of a (cid, cv) table — the
     plan-time artifact the assignment kernels score against."""
-    rows = cents.select("cid", "cv").collect()
+    rows = cents.select("cid", "cv").limit(_CENT_COLLECT_CAP + 1).collect()
     if len(rows) > _CENT_COLLECT_CAP:
         raise ValueError(
-            f"{len(rows)} centroids exceed the driver collect cap "
-            f"{_CENT_COLLECT_CAP}"
+            f"more than {_CENT_COLLECT_CAP} centroids: over the driver "
+            "collect cap"
         )
     rows.sort(key=lambda r: r["cid"])
     return _codebook([r["cid"] for r in rows], [list(r["cv"]) for r in rows])
@@ -420,11 +426,11 @@ def _collect_subcodebooks(
     """Per-subspace id-sorted codebooks of an (s, id, vec) sub-codebook
     table, indexed by s — the plan-time artifact the Arrow PQ encoders
     score against (M·K rows total, KBs)."""
-    rows = cents.select("s", id_col, vec_col).collect()
+    rows = cents.select("s", id_col, vec_col).limit(_CENT_COLLECT_CAP + 1).collect()
     if len(rows) > _CENT_COLLECT_CAP:
         raise ValueError(
-            f"{len(rows)} sub-centroids exceed the driver collect cap "
-            f"{_CENT_COLLECT_CAP}"
+            f"more than {_CENT_COLLECT_CAP} sub-centroids: over the driver "
+            "collect cap"
         )
     by_s: dict[int, list] = {}
     for r in rows:
@@ -495,6 +501,19 @@ def pq_codes_arrow(
     )
 
 
+def _check_closure_bytes(books: list[_Codebook]) -> None:
+    """Raise when the codebook arrays a task closure would carry exceed
+    :data:`_CLOSURE_BYTES_CAP`."""
+    nbytes = sum(
+        a.nbytes for b in books for a in (b.ids, b.mat, b.mat_f, b.norm2)
+    )
+    if nbytes > _CLOSURE_BYTES_CAP:
+        raise ValueError(
+            f"codebooks hold {nbytes} bytes, over the closure bound "
+            f"{_CLOSURE_BYTES_CAP}"
+        )
+
+
 def ivfpq_assign_encode_arrow(
     df: DataFrame,
     cents: DataFrame,
@@ -525,6 +544,7 @@ def ivfpq_assign_encode_arrow(
 
     coarse = _collect_centroids(cents)
     books = _collect_subcodebooks(rcents, "rcid", "rcv")
+    _check_closure_bytes([coarse, *books])
     n_sub = len(books)
     s_tile = np.arange(n_sub, dtype=np.int32)
     chunk = max(1, (1 << 22) // max(len(coarse.ids), 1))

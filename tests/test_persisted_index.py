@@ -291,3 +291,103 @@ def test_plane_codes_paths_agree(spark):
         want += [(int(i), t, int(c)) for i, c in zip(ids, codes)]
     assert got == sorted(want)
     assert len(got) == len(ids) * len(tables)
+
+
+def _fetched_rows(monkeypatch, df):
+    """Spy on ``collect`` of ``df``'s DataFrame class: the row counts every
+    collect returned."""
+    cls = type(df)
+    collect = cls.collect
+    sizes = []
+
+    def spy(self):
+        rows = collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    return sizes
+
+
+def test_centroid_collect_stops_one_row_past_the_cap(spark, monkeypatch):
+    """_collect_centroids accepts exactly _CENT_COLLECT_CAP centroids,
+    raises at one more, and never fetches more than cap + 1 rows to the
+    driver, however far over the cap the table is."""
+    import pytest
+
+    from compass_query_optimizer_spark.operators import similarity as sim
+
+    cap = sim._CENT_COLLECT_CAP
+
+    def cents(n):
+        return spark.range(n).selectExpr("id AS cid", "array(id % 7) AS cv")
+
+    sizes = _fetched_rows(monkeypatch, cents(1))
+    assert len(sim._collect_centroids(cents(cap)).ids) == cap
+    with pytest.raises(ValueError, match="collect cap"):
+        sim._collect_centroids(cents(cap + 1))
+    with pytest.raises(ValueError, match="collect cap"):
+        sim._collect_centroids(cents(4 * cap))
+    assert sizes == [cap, cap + 1, cap + 1]
+
+
+def test_subcodebook_collect_stops_one_row_past_the_cap(spark, monkeypatch):
+    import pytest
+
+    from compass_query_optimizer_spark.operators import similarity as sim
+
+    cap = sim._CENT_COLLECT_CAP
+
+    def rcents(n):
+        return spark.range(n).selectExpr(
+            "id % 4 AS s", "id AS rcid", "array(id % 5, id % 3) AS rcv"
+        )
+
+    sizes = _fetched_rows(monkeypatch, rcents(1))
+    assert len(sim._collect_subcodebooks(rcents(cap), "rcid", "rcv")) == 4
+    with pytest.raises(ValueError, match="collect cap"):
+        sim._collect_subcodebooks(rcents(cap + 1), "rcid", "rcv")
+    with pytest.raises(ValueError, match="collect cap"):
+        sim._collect_subcodebooks(rcents(4 * cap), "rcid", "rcv")
+    assert sizes == [cap, cap + 1, cap + 1]
+
+
+def test_ivfpq_closure_byte_bound():
+    """A codebook of K rows at dim d carries K·(16 + 16·d) bytes (ids and
+    ‖c‖² in 8 B each, the int64 and float64 matrices in 8 B per cell):
+    K = 65,536 at d = 63 is exactly _CLOSURE_BYTES_CAP, one row more is
+    over it."""
+    import numpy as np
+    import pytest
+
+    from compass_query_optimizer_spark.operators import similarity as sim
+
+    def book(k, dim=63):
+        return sim._codebook(np.arange(k), np.zeros((k, dim), dtype=np.int64))
+
+    assert 65_536 * (16 + 16 * 63) == sim._CLOSURE_BYTES_CAP
+    sim._check_closure_bytes([book(65_536)])
+    sim._check_closure_bytes([book(32_768), book(32_768)])
+    with pytest.raises(ValueError, match="closure bound"):
+        sim._check_closure_bytes([book(65_537)])
+    with pytest.raises(ValueError, match="closure bound"):
+        sim._check_closure_bytes([book(32_768), book(32_768), book(1, dim=1)])
+
+
+def test_ivfpq_assign_encode_checks_the_closure_bound(spark, monkeypatch):
+    """ivfpq_assign_encode_arrow runs the byte check on the coarse
+    matrix plus the sub-codebooks before it builds the mapInPandas."""
+    import pytest
+
+    from compass_query_optimizer_spark.operators import similarity as sim
+
+    vecs = spark.range(8).selectExpr("id AS vec_id", "array(id, id) AS qv")
+    cents = spark.range(2).selectExpr("id AS cid", "array(id, 0L) AS cv")
+    rcents = spark.range(4).selectExpr("id % 2 AS s", "id AS rcid", "array(id) AS rcv")
+    # 2 coarse rows at dim 2 + 2×2 sub-rows at dim 1: 2·48 + 2·2·32 bytes
+    nbytes = 2 * 48 + 2 * 2 * 32
+    monkeypatch.setattr(sim, "_CLOSURE_BYTES_CAP", nbytes)
+    assert sim.ivfpq_assign_encode_arrow(vecs, cents, rcents, subdim=1).count() == 16
+    monkeypatch.setattr(sim, "_CLOSURE_BYTES_CAP", nbytes - 1)
+    with pytest.raises(ValueError, match="closure bound"):
+        sim.ivfpq_assign_encode_arrow(vecs, cents, rcents, subdim=1)
