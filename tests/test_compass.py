@@ -158,6 +158,8 @@ def test_build_routes_on_the_one_task_bound(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "mapInPandas", refuse)
     cnt_in, sk_in = build_sketches_arrow(df, seeds, nrows_hint=KEYS_PER_TASK)
+    cnt_empty, sk_empty = build_sketches_arrow(df.filter("k > 1000"), seeds, nrows_hint=10)
+    assert cnt_empty == 0 and not sk_empty["k"].counters.any()
 
     calls = []
 
