@@ -56,74 +56,42 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # registration order — so adding a query without touching this list still
 # works, it just lands in the unsampled tail until promoted.
 _SAMPLE_PRIORITY = [
-    # ================ round-12 prefix =====================================
-    # Order: (1) everything whose execution path changed in round 12
-    # (fused ivfpq assign+encode, expression-string rewrites, the lazy
-    # checkpoint CC loops, the pagerank single-DAG loop, the codegen-
-    # cache conf that text_winnowing's drift traced to), (2) the six
-    # entries whose Arrow conversions landed in round 11 AFTER that
-    # round's prefix froze — the r11 verdict's one evidence gap: the
-    # driver's oracle has never seen their Arrow-path output, (3) the 15
-    # r7-evidence entries queued by round 11, (4) the stalest remaining
-    # evidence (r8) up to the 50-slot prefix; the r8 remainder sits
-    # directly after the prefix as the round-13 queue.
-    # -- (1) changed in round 12 --
-    "sim_ann_ivfpq",                  # fused Arrow assign+encode
-    "emb_random_projection",          # expression-string rewrite
-    "dedup_simhash",                  # expression-string rewrite
-    "events_pagerank",                # single-DAG iteration loop
-    "dedup_clusters",                 # lazy-checkpoint CC loop
-    "dedup_clusters_star",            # lazy-checkpoint star CC
-    "dedup_clusters_twostage",        # lazy-checkpoint CC loop
-    "dedup_clusters_hardened",        # lazy-checkpoint star CC
-    "dedup_semantic",                 # bucket-verify zero-norm guard
-    "text_winnowing",                 # codegen-cache drift fix evidence
-    # -- (2) round-11 Arrow conversions the r11 prefix missed --
-    "sim_ann_ivf",
-    "sim_ann_pq",
-    "sim_ann_lsh",
-    "emb_knn_graph",
-    "dedup_embedding_lsh",
-    "sim_ann_incremental",
-    # -- (3) the r7-evidence queue from round 11 --
-    "q37_listagg",
-    "stream_approx_distinct",
-    "stream_sliding_count",
-    "text_curriculum_stages",
-    "text_epoch_budget",
-    "text_fingerprint",
-    "text_hash_classifier",
-    "text_kl_drift",
-    "text_ngram_novelty",
-    "text_quality",
-    "text_source_lang_entropy",
-    "text_tokens",
-    "text_weighted_sample",
-    # -- (4) stalest remaining evidence (r8), alphabetical --
+    # Order: (1) the COMPASS entries, whose sketch push-down now builds
+    # one-task tables in-process on the driver (every table at sf0.01 and
+    # every JOB table at fixture scale 1), job_corpus first; (2) the four
+    # entries the ROADMAP carries for coverage; (3) every remaining entry whose
+    # latest driver evidence is round 8; (4) round-9 evidence,
+    # alphabetical, up to the 50-slot prefix, whose remainder follows the
+    # prefix as the next queue.
+    # -- (1) sketch build path changed --
+    "job_corpus",
     "compass_avg_left_outer",
+    "compass_avg_multijoin",
     "compass_count_distinct_auto",
     "compass_count_distinct_bitmap",
+    "compass_count_distinct_hll",
+    "compass_count_distinct_multijoin",
     "compass_count_left_outer",
+    "compass_count_multijoin",
     "compass_cross_table_measures",
+    "compass_grouped_count",
+    "compass_grouped_count_distinct",
     "compass_grouped_count_left_outer",
     "compass_grouped_distinct_auto",
+    "compass_grouped_minmax",
+    "compass_grouped_sum",
+    "compass_minmax_multijoin",
     "compass_multi_measure",
+    "compass_residual_filter",
+    "compass_self_join",
     "compass_sum_distinct",
-    "dedup_containment",
-    "dedup_incremental_spans",
-    "dedup_keep_best",
-    "dedup_span_removal",
-    "dedup_substring_spans",
-    "docs_dataset_fingerprint",
-    "emb_davies_bouldin",
-    "emb_pq_distortion",
-    "events_attribution",
-    "events_forecast_baseline",
-    "events_graph_distances",
-    "events_rfm_segments",
-    # ---- the 50-entry driver prefix ends here ----
-    # -- r8 remainder (round-13 queue) --
+    "compass_sum_multijoin",
+    # -- (2) carried --
+    "pipeline_pretrain",
+    "dedup_ngram_jaccard",
     "events_triangle_count",
+    "text_bpe_train",
+    # -- (3) round-8 evidence, alphabetical --
     "mm_audio_energy",
     "mm_phash_dedup",
     "mm_scene_change",
@@ -138,6 +106,34 @@ _SAMPLE_PRIORITY = [
     "q42_recursive_cte",
     "q43_grouping_sets",
     "q44_session_window",
+    "sim_ann_recall",
+    "sim_hybrid_rrf",
+    "stream_late_data_drop",
+    "stream_minhash_dedup",
+    "stream_stream_left_join",
+    "text_bm25_mlt",
+    "text_gopher_rules",
+    "text_tfidf_keywords",
+    # -- (4) round-9 evidence, alphabetical --
+    "dedup_exact",
+    "docs_scd2",
+    # ---- the 50-entry driver prefix ends here ----
+    # -- next queue: round-9 evidence, alphabetical --
+    "emb_kmeans_iter",
+    "emb_quantize_int8",
+    "emb_standardize",
+    "events_ab_test",
+    "events_cohort_matrix",
+    "events_funnel_latency",
+    "events_ohlc",
+    "events_retention",
+    "events_sessionize",
+    "events_transitions",
+    "events_variant_extract",
+    "events_windowed_topk",
+    "mm_bmp_decode",
+    "mm_resize_roundtrip",
+    "pipeline_curate",
 ]
 
 

@@ -3,14 +3,12 @@ entries since round 4), so the registry's ordering is part of the driver
 contract: operators that still lack driver evidence must sit in the prefix,
 and the ordering must stay a clean permutation of the registry.
 
-Round 12 rotation: the prefix leads with everything whose execution path
-changed in round 12 (fused ivfpq assign+encode, expression-string
-rewrites, lazy-checkpoint CC loops, the pagerank single-DAG loop, the
-codegen-cache conf behind text_winnowing's drift), then the six entries
-whose round-11 Arrow conversions landed AFTER that round's prefix froze
-(the r11 verdict's one named evidence gap), then the 15-entry r7 queue
-round 11 left, then the stalest remaining evidence (r8) up to 50 slots.
-The r8 remainder sits directly after the prefix as the round-13 queue.
+Current rotation: the prefix leads with job_corpus and every compass_*
+entry, whose sketch push-down now builds one-task tables in-process on the
+driver (all of them at sf0.01), then the four entries the ROADMAP carries
+for coverage, then every remaining entry whose latest driver evidence is
+round 8, then round-9 evidence up to 50 slots. The round-9 remainder sits
+directly after the prefix as the next queue.
 """
 
 from __future__ import annotations
@@ -21,57 +19,43 @@ import os
 
 from compass_query_optimizer_spark.registry import _SAMPLE_PRIORITY, all_queries
 
-# entries whose execution path changed in round 12 — each needs a fresh
-# driver row over the new path
+# entries whose execution path changed this round — each needs a fresh
+# driver row over the in-process sketch build
 CHANGED_THIS_ROUND = {
-    "sim_ann_ivfpq",                  # fused Arrow assign+encode
-    "emb_random_projection",          # expression-string rewrite
-    "dedup_simhash",                  # expression-string rewrite
-    "events_pagerank",                # single-DAG iteration loop
-    "dedup_clusters",                 # lazy-checkpoint CC loop
-    "dedup_clusters_star",            # lazy-checkpoint star CC
-    "dedup_clusters_twostage",        # lazy-checkpoint CC loop
-    "dedup_clusters_hardened",        # lazy-checkpoint star CC
-    "dedup_semantic",                 # bucket-verify zero-norm guard
-    "text_winnowing",                 # codegen-cache drift fix evidence
+    "job_corpus",
+    "compass_avg_left_outer",
+    "compass_avg_multijoin",
+    "compass_count_distinct_auto",
+    "compass_count_distinct_bitmap",
+    "compass_count_distinct_hll",
+    "compass_count_distinct_multijoin",
+    "compass_count_left_outer",
+    "compass_count_multijoin",
+    "compass_cross_table_measures",
+    "compass_grouped_count",
+    "compass_grouped_count_distinct",
+    "compass_grouped_count_left_outer",
+    "compass_grouped_distinct_auto",
+    "compass_grouped_minmax",
+    "compass_grouped_sum",
+    "compass_minmax_multijoin",
+    "compass_multi_measure",
+    "compass_residual_filter",
+    "compass_self_join",
+    "compass_sum_distinct",
+    "compass_sum_multijoin",
 }
 
-# round-11 Arrow conversions that missed the r11 oracle sample (the r11
-# prefix froze before commits 28c428e..b3b504f landed): the driver's
-# oracle has never seen their Arrow-path output — r11 verdict item #3
-R11_ARROW_GAP = {
-    "sim_ann_ivf",
-    "sim_ann_pq",
-    "sim_ann_lsh",
-    "emb_knn_graph",
-    "dedup_embedding_lsh",
-    "sim_ann_incremental",
-}
-
-# the r7-evidence queue round 11 left (minus sim_ann_ivf/sim_ann_pq,
-# promoted into R11_ARROW_GAP above)
-R7_QUEUE = {
-    "q37_listagg",
-    "stream_approx_distinct",
-    "stream_sliding_count",
-    "text_curriculum_stages",
-    "text_epoch_budget",
-    "text_fingerprint",
-    "text_hash_classifier",
-    "text_kl_drift",
-    "text_ngram_novelty",
-    "text_quality",
-    "text_source_lang_entropy",
-    "text_tokens",
-    "text_weighted_sample",
-}
-
-# r8-evidence entries deferred to round 13 (the 50 slots ran out), all
-# re-proven by the local differential (tests/test_oracle.py) every pytest
-# run. They sit directly after the prefix so the next rotation reaches
-# them first.
-NEXT_ROUND_QUEUE = {
+# the oracle-sample coverage the ROADMAP carries
+CARRIED = {
+    "pipeline_pretrain",
+    "dedup_ngram_jaccard",
     "events_triangle_count",
+    "text_bpe_train",
+}
+
+# every other entry whose latest driver evidence is round 8
+R8_QUEUE = {
     "mm_audio_energy",
     "mm_phash_dedup",
     "mm_scene_change",
@@ -86,6 +70,36 @@ NEXT_ROUND_QUEUE = {
     "q42_recursive_cte",
     "q43_grouping_sets",
     "q44_session_window",
+    "sim_ann_recall",
+    "sim_hybrid_rrf",
+    "stream_late_data_drop",
+    "stream_minhash_dedup",
+    "stream_stream_left_join",
+    "text_bm25_mlt",
+    "text_gopher_rules",
+    "text_tfidf_keywords",
+}
+
+# round-9-evidence entries deferred to the next rotation (the 50 slots ran
+# out), all re-proven by the local differential (tests/test_oracle.py)
+# every pytest run. They sit directly after the prefix so the next
+# rotation reaches them first.
+NEXT_ROUND_QUEUE = {
+    "emb_kmeans_iter",
+    "emb_quantize_int8",
+    "emb_standardize",
+    "events_ab_test",
+    "events_cohort_matrix",
+    "events_funnel_latency",
+    "events_ohlc",
+    "events_retention",
+    "events_sessionize",
+    "events_transitions",
+    "events_variant_extract",
+    "events_windowed_topk",
+    "mm_bmp_decode",
+    "mm_resize_roundtrip",
+    "pipeline_curate",
 }
 
 
@@ -117,19 +131,19 @@ def test_priority_names_all_registered():
 
 
 def test_prefix_serves_the_evidence_gap():
-    """The 50-entry prefix must (a) contain everything changed in round
-    12, (b) contain the six r11 Arrow conversions the r11 sample missed,
-    (c) contain the whole r7 queue, and (d) spend every other slot on the
-    stalest driver evidence — nothing already green in the latest recorded
-    round (r11) may consume a slot unless round 12 changed it."""
+    """The 50-entry prefix must (a) contain everything changed this round,
+    (b) contain the carried entries, (c) contain every other entry on
+    round-8 evidence, and (d) spend every other slot on the stalest driver
+    evidence — nothing already green in the latest recorded round (r12)
+    may consume a slot unless this round changed it."""
     prefix = list(all_queries())[:50]
-    missing = (CHANGED_THIS_ROUND | R11_ARROW_GAP | R7_QUEUE) - set(prefix)
-    assert not missing, f"round-12 must-sample entries outside the prefix: {missing}"
+    missing = (CHANGED_THIS_ROUND | CARRIED | R8_QUEUE) - set(prefix)
+    assert not missing, f"must-sample entries outside the prefix: {missing}"
 
     # pinned to the round this rotation was designed against (re-pin when
     # re-rotating the priority list next round)
     root = os.path.join(os.path.dirname(__file__), "..")
-    latest = set(json.load(open(os.path.join(root, "CORRECTNESS_r11.json"))))
+    latest = set(json.load(open(os.path.join(root, "CORRECTNESS_r12.json"))))
     rotated = [n for n in prefix if n not in CHANGED_THIS_ROUND]
     stale = [n for n in rotated if n in latest]
     assert not stale, (
@@ -160,12 +174,12 @@ def test_every_registered_query_has_driver_evidence_or_prefix_slot():
 
 
 def test_deferred_queue_sits_directly_after_the_prefix():
-    """The round-13 queue (15 deferred r8 entries) must occupy slots 51-65
+    """The next queue (15 deferred r9 entries) must occupy slots 51-65
     so the next rotation reaches it before anything with fresher
     evidence."""
     names = list(all_queries())
     assert set(names[50:65]) == NEXT_ROUND_QUEUE, (
-        "round-13 queue not immediately after the prefix: "
+        "next queue not immediately after the prefix: "
         f"{names[50:65]}"
     )
 
@@ -175,8 +189,10 @@ def test_changed_entries_lead_the_prefix():
     highest correctness risk — they must head the prefix so a truncated
     sample still covers them."""
     names = list(all_queries())
-    assert set(names[:10]) == CHANGED_THIS_ROUND, names[:10]
-    assert set(names[10:16]) == R11_ARROW_GAP, names[10:16]
+    assert names[0] == "job_corpus", names[0]
+    assert set(names[:22]) == CHANGED_THIS_ROUND, names[:22]
+    assert set(names[22:26]) == CARRIED, names[22:26]
+    assert set(names[26:48]) == R8_QUEUE, names[26:48]
 
 
 def test_order_is_a_permutation_of_the_registry():
