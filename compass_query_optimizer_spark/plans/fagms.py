@@ -14,7 +14,7 @@ Sketch/Sketches.h:15-26, XIS.h; SIGMOD 2021 COMPASS paper §3) on Spark:
 The *build* is one shuffle-free scan per table pass
 (:func:`build_sketches_arrow`) doing the same per-tuple work as the
 reference's kFAGMS_SKETCH aggregate (RuntimeFunctions.cpp:318-340): a
-distributed ``mapInPandas`` pass when the table's base row count spans
+distributed ``mapInArrow`` pass when the table's base row count spans
 several tasks, else one Arrow collect sketched on the driver by the same
 kernel. Estimation and join-order search happen driver-side in numpy.
 
@@ -164,22 +164,21 @@ KEYS_PER_TASK = 100_000
 
 
 def _sketch_partition(batches, seeds_list: list[SketchSeeds]) -> tuple[int, list[Sketch]]:
-    """(rows, sketch per column) of one partition's batches of ``_k{j}``
-    key columns. The batches are concatenated first: one kernel pass per
-    column over the whole partition, not 73 rows × per-batch ufunc
-    overhead. Null keys count as rows but never touch a counter (they
-    never join)."""
-    import pandas as pd
-
+    """(rows, sketch per column) of one partition's Arrow batches (record
+    batches or tables) of int64 ``_k{j}`` key columns. The batches are
+    concatenated first: one kernel pass per column over the whole
+    partition, not 73 rows × per-batch ufunc overhead. Null keys count as
+    rows but never touch a counter (they never join). The keys stay int64
+    from Arrow to the kernel: through pandas, a column holding a null
+    turns float64 and rounds keys above 2^53."""
     chunks: list[list[np.ndarray]] = [[] for _ in seeds_list]
     n = 0
-    for pdf in batches:
-        n += len(pdf)
+    for batch in batches:
+        n += batch.num_rows
         for j, chunk in enumerate(chunks):
-            keys = pdf[f"_k{j}"].to_numpy()
-            keys = keys[~pd.isna(keys)]
+            keys = batch.column(f"_k{j}").drop_null().to_numpy()
             if len(keys):
-                chunk.append(keys.astype(np.int64))
+                chunk.append(keys)
     sketches = [Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), s) for s in seeds_list]
     for sk, chunk in zip(sketches, chunks):
         if chunk:
@@ -201,7 +200,7 @@ def build_sketches_arrow(
     ``df`` keeps) fits one task of :data:`KEYS_PER_TASK`, the pass is one
     Arrow collect of the key columns, sketched on the driver: a Python
     worker's fixed start-up cost is several times that collect, and it
-    would dominate a task this small. Otherwise ``mapInPandas`` computes a
+    would dominate a task this small. Otherwise ``mapInArrow`` computes a
     per-partition partial counter matrix and the driver sums the partials.
     One scan, no shuffle at all — each task ships back exactly one
     ROWS×BUCKETS matrix per join column (≈0.6 MB) regardless of partition
@@ -219,7 +218,7 @@ def build_sketches_arrow(
     )
     seeds_list = [col_seeds[c] for c in cols]
     if nrows_hint is not None and nrows_hint <= KEYS_PER_TASK:
-        count, sketches = _sketch_partition([proj.toArrow().to_pandas()], seeds_list)
+        count, sketches = _sketch_partition([proj.toArrow()], seeds_list)
         return count, dict(zip(cols, sketches))
     # Small-SF parquet often lands in one partition (kernel would run
     # single-threaded); cluster-scale inputs already have plenty, so we
@@ -236,22 +235,23 @@ def build_sketches_arrow(
             proj = proj.coalesce(target)
 
     def partial_sketches(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         n, partials = _sketch_partition(batches, seeds_list)
         # raw little-endian bytes: ~100× cheaper through Arrow than a
         # 74k-element list column
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
-                "c": list(range(len(cols))),
-                "n": [n] * len(cols),
-                "counters": [
-                    p.counters.astype("<i8").tobytes() for p in partials
-                ],
+                "c": pa.array(range(len(cols)), pa.int32()),
+                "n": pa.array([n] * len(cols), pa.int64()),
+                "counters": pa.array(
+                    [p.counters.astype("<i8").tobytes() for p in partials],
+                    pa.binary(),
+                ),
             }
         )
 
-    out = proj.mapInPandas(
+    out = proj.mapInArrow(
         partial_sketches, schema="c int, n long, counters binary"
     ).collect()
 

@@ -21,6 +21,7 @@ materializes).
 from __future__ import annotations
 
 import re as _re
+from collections import namedtuple
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +30,8 @@ from pyspark.sql import functions as F
 from compass_query_optimizer_spark.catalog import load_tables
 from compass_query_optimizer_spark.plans.graph import JoinGraph, JoinQuerySpec, parse_join_query
 from compass_query_optimizer_spark.plans.pushdown import (
-    PushdownConfig,
     PushdownResult,
+    cached,
     run_pushdown,
 )
 from compass_query_optimizer_spark.plans.search import (
@@ -41,24 +42,155 @@ from compass_query_optimizer_spark.plans.search import (
 )
 
 
-# measure_op -> aggregate fn for the eager measure algebra (sum = class-1
-# multiplicity-scaled; min/max = class-2 duplicate-insensitive;
-# count_distinct = class-3 set-valued, handled by the helpers below)
-_MEASURE_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
-_MEASURE_OPS = (
-    "sum",
-    "count",
-    "min",
-    "max",
-    "count_distinct",
-    "count_distinct_hll",
-    "count_distinct_bitmap",
-    "count_distinct_auto",
-    "sum_distinct",
-)
-# class-1 ops: multiplicity-scaled riders (COUNT(col) is SUM of per-key
-# non-null counts — Yan & Larson treat it exactly like SUM)
-_SCALED_OPS = ("sum", "count")
+# Selective (materialized) chain partners at or below this many filtered
+# rows get an explicit F.broadcast hint.
+BROADCAST_ROWS = 1_000_000
+# Absolute anti-broadcast bar (round 9 at 1M raw rows; round 10
+# re-keyed on the COLLAPSED frame estimate — the cached key-NDV when
+# the collapse probe measured one, else the filtered row count — and
+# lowered to 300k by interleaved A/B): chain partners whose collapsed
+# estimate exceeds this carry a SHUFFLE_HASH pin, because AQE's
+# shuffle-bytes heuristic otherwise broadcast-converts the narrow
+# frame and the driver single-threadedly hash-builds it (~16.5 µs/row
+# measured: 5.76M rows = 95 s on JOB 17a at fixture scale 160; the
+# 400-720k frames of the 2-family = 20-30 s/query). Measured at 300k:
+# 2-family solo at scale 160 falls 76.9 → 22.5 s (2a 29.7→7.7) with
+# identical counts, and the full scale-10 corpus is unregressed
+# (79.2 s default vs 80.6 s, interleaved fresh-process pairs; the
+# contended pair favored 300k outright, 127.5 vs 103.8 s). In the
+# eager chain the prefix is already hash-partitioned by the previous
+# re-agg exchange, so a shuffled-hash join costs one ≤~1M-row partner
+# shuffle (often AQE-reusable) against a serial driver build that
+# scales with rows — past ~300k the trade never favors broadcast.
+ANTIBROADCAST_ROWS = 300_000
+# count_distinct_auto routing — the Spark twin of the reference's
+# plan-time approx↔precise switch (RelAlgExecutor.cpp:1350-1418) and
+# its CountDistinctDescriptor bitmap-vs-set choice. Integral measures
+# whose plan-time value range fits DISTINCT_BITMAP_MAX_RANGE bits take
+# the exact packed-bitmap route (fixed 8·range/64 bytes per key);
+# otherwise NDV estimates up to DISTINCT_EXACT_MAX_NDV take the exact
+# collect_set route (the final union row stays bounded); anything
+# bigger carries a constant-size HLL sketch instead — approximate,
+# but immune to the one-row set flatten that OOMs at 100 TB.
+DISTINCT_BITMAP_MAX_RANGE = 4_096  # bits (64 words max per key)
+DISTINCT_EXACT_MAX_NDV = 4_096  # plan-time NDV estimate cap
+# Eager-chain seed collapse skip: a fact table whose referenced-key
+# combinations are nearly distinct (cast_info's (movie, person, role)
+# is 99.6% unique at JOB scale 40) pays a full shuffle for a ~no-op
+# groupBy. When a cached plan-time NDV estimate of the key struct says
+# ndv ≥ ratio × rows, the seed skips the collapse and enters the chain
+# raw with multiplicity 1 — semantically identical (collapse is
+# idempotent; the first post-join re-aggregation shrinks anyway), one
+# big exchange cheaper. Tables at or below COLLAPSE_SKIP_MIN_ROWS
+# always collapse (the exchange is cheap and the NDV job isn't worth
+# scheduling).
+COLLAPSE_SKIP_NDV_RATIO = 0.9
+COLLAPSE_SKIP_MIN_ROWS = 500_000
+
+
+def _union_sets(col):
+    return F.array_distinct(F.flatten(F.collect_list(col)))
+
+
+def _sum_of_union(col):
+    # SUM over the union of surviving per-key sets; NULL over the empty
+    # join (SQL's SUM semantics, unlike COUNT's 0)
+    u = _union_sets(col)
+    s = F.aggregate(u, F.lit(0.0), lambda a, x: a + x.cast("double"))
+    return F.when(F.size(u) > 0, s)
+
+
+def _exact_distinct(col):
+    # the raw join computes exact COUNT(DISTINCT) directly — carrier
+    # routing only exists inside the eager chain
+    return F.count_distinct(col).cast("long")
+
+
+# One row per measure_op of the eager measure algebra:
+#   seed   per-table collapse aggregate of the measure column
+#   reagg  chain re-aggregation of the riding channel (the shrink step)
+#   final  final aggregate -> agg_val (SQL semantics: NULL over the empty
+#          join for sum/min/max/sum_distinct, 0 for the counts)
+#   raw    the same aggregate over the raw join (execute_count(eager=False))
+#   scaled class-1 rider: multiplied by the partner multiplicity at each
+#          join (COUNT(col) is SUM of per-key non-null counts — Yan &
+#          Larson treat it exactly like SUM); min/max (class-2) and the
+#          set/sketch carriers (class-3) pass through joins untouched
+# count_distinct carries the SET of distinct values per key combination
+# (collect_set drops NULLs — exactly COUNT(DISTINCT)'s NULL rule), exact
+# while per-key distinct cardinality is bounded; count_distinct_hll
+# carries a CONSTANT-SIZE Datasketches HLL sketch instead (~KB per key at
+# any cardinality), approximate within HLL's published rsd. The packed
+# bitmap's seed and final need its plan-time value range
+# (_bitmap_seed_aggs / _bitmap_final), and count_distinct_auto resolves to
+# a concrete carrier before the chain (_resolve_distinct_route): those two
+# are the only ops whose chain steps live outside this table.
+_MeasureOp = namedtuple("_MeasureOp", "seed reagg final raw scaled")
+_MEASURES = {
+    "sum": _MeasureOp(F.sum, F.sum, F.sum, F.sum, True),
+    "count": _MeasureOp(
+        F.count,
+        F.sum,
+        lambda c: F.coalesce(F.sum(c), F.lit(0)).cast("long"),
+        lambda c: F.count(c).cast("long"),
+        True,
+    ),
+    "min": _MeasureOp(F.min, F.min, F.min, F.min, False),
+    "max": _MeasureOp(F.max, F.max, F.max, F.max, False),
+    "count_distinct": _MeasureOp(
+        F.collect_set,
+        _union_sets,
+        lambda c: F.size(_union_sets(c)).cast("long"),
+        _exact_distinct,
+        False,
+    ),
+    "count_distinct_hll": _MeasureOp(
+        F.hll_sketch_agg,
+        F.hll_union_agg,
+        lambda c: F.hll_sketch_estimate(F.hll_union_agg(c)).cast("long"),
+        lambda c: F.hll_sketch_estimate(F.hll_sketch_agg(c)).cast("long"),
+        False,
+    ),
+    "count_distinct_bitmap": _MeasureOp(None, F.bit_or, None, _exact_distinct, False),
+    "count_distinct_auto": _MeasureOp(None, None, None, _exact_distinct, False),
+    "sum_distinct": _MeasureOp(
+        F.collect_set,
+        _union_sets,
+        _sum_of_union,
+        lambda c: F.sum_distinct(c).cast("double"),
+        False,
+    ),
+}
+_ROUTED = ("count_distinct_auto", "count_distinct_bitmap")
+
+
+def _measure_op(op: str) -> _MeasureOp:
+    if op not in _MEASURES:
+        raise ValueError(f"unsupported measure_op {op!r}")
+    return _MEASURES[op]
+
+
+def _rewrite_residual(
+    residual: str, spec: JoinQuerySpec, refs: set | None = None
+) -> str:
+    """Rewrite ``alias.col`` → ``alias__col`` in a post-join residual,
+    adding each referenced (alias, col) to ``refs`` when given.
+
+    Only known aliases are rewritten (the naive ``\\b(\\w+)\\.(\\w+)\\b``
+    would mangle numeric literals like ``0.5`` into ``0__5``), and string
+    literals are left untouched by splitting on quoted segments first."""
+    aliases = "|".join(_re.escape(a) for a in sorted(spec.tables, key=len, reverse=True))
+    pat = _re.compile(rf"\b({aliases})\.([A-Za-z_]\w*)\b")
+
+    def sub(m: _re.Match) -> str:
+        if refs is not None:
+            refs.add((m[1], m[2]))
+        return f"{m[1]}__{m[2]}"
+
+    out = []
+    for i, seg in enumerate(_re.split(r"('(?:[^']|'')*')", residual)):
+        out.append(seg if i % 2 else pat.sub(sub, seg))
+    return "".join(out)
 
 
 def _referenced_cols(
@@ -68,87 +200,57 @@ def _referenced_cols(
     endpoints, group-by columns, post-filter residual references) and the
     (alias, col) pairs that must survive every re-aggregation, as used by
     chain assembly (build_count_join)."""
+    residual_cols: set[tuple[str, str]] = set(group_by or ())
+    for residual in spec.post_filters:
+        _rewrite_residual(residual, spec, residual_cols)
     needed: dict[str, set[str]] = {a: set() for a in spec.tables}
     for a, ca, b, cb in spec.join_preds:
         needed[a].add(ca)
         needed[b].add(cb)
-    residual_cols: set[tuple[str, str]] = set()
-    for al, col in group_by or ():
-        residual_cols.add((al, col))
+    for al, col in residual_cols:
         needed[al].add(col)
-    if spec.post_filters:
-        aliases = "|".join(
-            _re.escape(a) for a in sorted(spec.tables, key=len, reverse=True)
-        )
-        pat = _re.compile(rf"\b({aliases})\.([A-Za-z_]\w*)\b")
-        for residual in spec.post_filters:
-            for i, seg in enumerate(_re.split(r"('(?:[^']|'')*')", residual)):
-                if i % 2:
-                    continue
-                for al, col in pat.findall(seg):
-                    residual_cols.add((al, col))
-                    needed[al].add(col)
     return needed, residual_cols
 
 
-def _measure_seed(measure_op: str, col: str):
-    """Per-table collapse aggregate for the measure column.
-
-    count_distinct carries the SET of distinct values per key combination
-    (collect_set drops NULLs — exactly COUNT(DISTINCT)'s NULL rule); the
-    set is multiplicity-insensitive, so like min/max it rides joins
-    untouched. Exact under the assumption that per-key distinct
-    cardinality is bounded (group-scoped sets, not corpus-scoped).
-    count_distinct_hll carries a CONSTANT-SIZE Datasketches HLL sketch
-    instead (~KB per key at any cardinality) — the scale path for
-    unbounded measures, approximate within HLL's published rsd."""
-    if measure_op in ("count_distinct", "sum_distinct"):
-        return F.collect_set(col)
-    if measure_op == "count_distinct_hll":
-        return F.hll_sketch_agg(col)
-    if measure_op == "count":
-        # COUNT(col): per-key NON-NULL count — rides the chain as a
-        # class-1 sum (multiplicity-scaled, summed at re-aggregations)
-        return F.count(col)
-    return _MEASURE_FNS[measure_op](col)
+def _broadcasts(plan: CompassPlan, alias: str) -> bool:
+    """Selective filtered tables are exactly the small inputs COMPASS
+    materializes: they ship to every task."""
+    return (
+        alias in plan.pushdown.materialized
+        and plan.pushdown.stats[alias].rows <= BROADCAST_ROWS
+    )
 
 
-def _measure_reagg(measure_op: str, col: str):
-    """Chain re-aggregation of the riding measure (the shrink step)."""
-    if measure_op in ("count_distinct", "sum_distinct"):
-        return F.array_distinct(F.flatten(F.collect_list(col)))
-    if measure_op == "count_distinct_hll":
-        return F.hll_union_agg(col)
-    if measure_op == "count_distinct_bitmap":
-        return F.bit_or(col)
-    if measure_op == "count":
-        return F.sum(col)
-    return _MEASURE_FNS[measure_op](col)
+def _join_step(
+    spec: JoinQuerySpec,
+    prefix: DataFrame,
+    frame: DataFrame,
+    alias: str,
+    in_chain: set[str],
+) -> DataFrame:
+    """Join ``alias`` onto the chain prefix: every edge between it and the
+    prefix becomes part of that join's condition (composite keys coalesce
+    exactly like EquiJoinCondition.cpp:97); outer aliases join LEFT."""
+    conds = []
+    for a, ca, b, cb in spec.join_preds:
+        if a == alias and b in in_chain:
+            conds.append(F.col(f"{alias}__{ca}") == F.col(f"{b}__{cb}"))
+        elif b == alias and a in in_chain:
+            conds.append(F.col(f"{a}__{ca}") == F.col(f"{alias}__{cb}"))
+    if not conds:  # disconnected fallback only
+        if alias in spec.outer:
+            raise ValueError(f"outer alias {alias} has no join edge")
+        return prefix.crossJoin(frame)
+    cond = conds[0]
+    for c in conds[1:]:
+        cond = cond & c
+    return prefix.join(frame, cond, "left" if alias in spec.outer else "inner")
 
 
-def _measure_final(measure_op: str, col: str):
-    """Final aggregate -> ``agg_val``. count_distinct yields the size of
-    the union of surviving sets — 0 over the empty join (SQL's
-    COUNT(DISTINCT) semantics), where sum/min/max yield NULL;
-    count_distinct_hll estimates the merged sketch."""
-    if measure_op == "count_distinct":
-        return F.size(
-            F.array_distinct(F.flatten(F.collect_list(col)))
-        ).cast("long")
-    if measure_op == "sum_distinct":
-        # SUM over the union of surviving per-key sets; NULL over the
-        # empty join (SQL's SUM semantics, unlike COUNT's 0)
-        u = F.array_distinct(F.flatten(F.collect_list(col)))
-        s = F.aggregate(
-            u, F.lit(0.0), lambda a, x: a + x.cast("double")
-        )
-        return F.when(F.size(u) > 0, s)
-    if measure_op == "count_distinct_hll":
-        return F.hll_sketch_estimate(F.hll_union_agg(col)).cast("long")
-    if measure_op == "count":
-        # COUNT(col) is 0 over the empty join, like COUNT(*)
-        return F.coalesce(F.sum(col), F.lit(0)).cast("long")
-    return _MEASURE_FNS[measure_op](col)
+def _post_filter(joined: DataFrame, spec: JoinQuerySpec) -> DataFrame:
+    for residual in spec.post_filters:
+        joined = joined.filter(_rewrite_residual(residual, spec))
+    return joined
 
 
 def _bitmap_seed_aggs(
@@ -186,20 +288,6 @@ def _bitmap_final(agg_names: list[str]):
     return F.coalesce(total, F.lit(0).cast("long"))
 
 
-def _rewrite_residual(residual: str, spec: JoinQuerySpec) -> str:
-    """Rewrite ``alias.col`` → ``alias__col`` in a post-join residual.
-
-    Only known aliases are rewritten (the naive ``\\b(\\w+)\\.(\\w+)\\b``
-    would mangle numeric literals like ``0.5`` into ``0__5``), and string
-    literals are left untouched by splitting on quoted segments first."""
-    aliases = "|".join(_re.escape(a) for a in sorted(spec.tables, key=len, reverse=True))
-    pat = _re.compile(rf"\b({aliases})\.([A-Za-z_]\w*)\b")
-    out = []
-    for i, seg in enumerate(_re.split(r"('(?:[^']|'')*')", residual)):
-        out.append(seg if i % 2 else pat.sub(r"\1__\2", seg))
-    return "".join(out)
-
-
 @dataclass
 class CompassPlan:
     spec: JoinQuerySpec
@@ -210,23 +298,19 @@ class CompassPlan:
     extras: dict = field(default_factory=dict)
 
 
+# Planner caches, all keyed on the dataset tag first and all read through
+# pushdown.cached() (no tag -> bypassed).
+#
 # (sf_dir | table-set tag, table name) -> base row count. Parquet metadata
 # makes .count() cheap but it is still a Spark job per table per plan —
 # repeated planning over the same catalog (the 113-query JOB corpus, or the
 # reference's repeated-benchmark loop) must not re-run it.
 _COUNT_CACHE: dict[tuple[str, str], int] = {}
 
-
-def clear_count_cache() -> None:
-    _COUNT_CACHE.clear()
-    _NDV_CACHE.clear()
-    _KEY_NDV_CACHE.clear()
-
-
 # (dataset_tag, table, filter_sql, col) -> (ndv_estimate, lo, hi). The
 # plan-time measure-column stats job behind count_distinct_auto — one
 # narrow-column combiner aggregate, same order of cost as the push-down
-# sketch pass, cached across plans per catalog like _COUNT_CACHE.
+# sketch pass.
 _NDV_CACHE: dict[tuple, tuple[int, object, object]] = {}
 
 # (dataset_tag, table, filter_sql, key-col tuple) -> key-combination NDV.
@@ -238,30 +322,13 @@ _KEY_NDV_CACHE: dict[tuple, int] = {}
 
 
 class CompassOptimizer:
-    def __init__(
-        self,
-        spark: SparkSession,
-        config: PushdownConfig | None = None,
-        budget: int = 100,
-        template_path: str | None = None,
-    ):
-        """``template_path``: persisted sketch-template store. Loaded into
-        the in-memory cache at construction and re-saved after planning —
-        the lifecycle of the reference's catalog-level uploadSketches /
-        saveSketches (Catalog/Catalog.h:579, sketch-templates/README.md)."""
+    """The COMPASS planner. Its thresholds are the module constants above
+    and pushdown.py's (the reference fixes them in COMPASS_init_variables
+    .txt); persisted sketch templates go through
+    templates.save_templates / load_templates."""
+
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.config = config or PushdownConfig()
-        self.budget = budget
-        self.template_path = template_path
-        self._loaded_templates = 0
-        if template_path is not None:
-            import os
-
-            from compass_query_optimizer_spark.plans.templates import load_templates
-
-            p = template_path if template_path.endswith(".npz") else template_path + ".npz"
-            if os.path.exists(p):
-                self._loaded_templates = load_templates(p)
 
     # -- planning ----------------------------------------------------------
 
@@ -310,18 +377,11 @@ class CompassOptimizer:
         for alias, tbl in spec.tables.items():
             if counts is not None and tbl in counts:
                 alias_counts[alias] = counts[tbl]
-                continue
-            key = (tag, tbl)
-            if tag is not None and key in _COUNT_CACHE:
-                alias_counts[alias] = _COUNT_CACHE[key]
-                continue
-            c = base[alias].count()
-            alias_counts[alias] = c
-            if tag is not None:
-                _COUNT_CACHE[key] = c
-        pd = run_pushdown(
-            self.spark, graph, base, alias_counts, self.config, dataset_tag=tag
-        )
+            else:
+                alias_counts[alias] = cached(
+                    _COUNT_CACHE, tag, (tbl,), base[alias].count
+                )
+        pd = run_pushdown(graph, base, alias_counts, dataset_tag=tag)
         if use_fallback:
             fb = fallback_order(pd.stats)
             search = SearchResult(
@@ -329,7 +389,7 @@ class CompassOptimizer:
             )
             fb_cost = search.cost
         else:
-            search = choose_join_order(graph, pd.stats, budget=self.budget)
+            search = choose_join_order(graph, pd.stats)
             fb = fallback_order(pd.stats)
             fb_cost = (
                 order_cost(graph, pd.stats, fb) if not search.fallback else None
@@ -355,28 +415,12 @@ class CompassOptimizer:
             ]
         plan = CompassPlan(spec, graph, pd, search, fallback_cost=fb_cost)
         plan.extras["dataset_tag"] = tag
-        if self.template_path is not None:
-            self._maybe_save_templates()
         return plan
-
-    def _maybe_save_templates(self) -> None:
-        """Auto-save the template store when new sketches were built since
-        the last save (debounced on cache size)."""
-        from compass_query_optimizer_spark.plans import pushdown as _pd
-        from compass_query_optimizer_spark.plans.templates import save_templates
-
-        with _pd._template_lock():
-            size = len(_pd._TEMPLATE_CACHE)
-        if size != self._loaded_templates:
-            save_templates(self.template_path)
-            self._loaded_templates = size
 
     # -- execution ---------------------------------------------------------
 
     def build_join(self, plan: CompassPlan) -> DataFrame:
-        """Left-deep chain in the chosen order; every edge between the next
-        table and the current prefix becomes part of that join's condition
-        (composite keys coalesce exactly like EquiJoinCondition.cpp:97)."""
+        """Left-deep chain of the filtered rows in the chosen order."""
         order = plan.search.order
         frames = {}
         for alias in order:
@@ -386,36 +430,15 @@ class CompassOptimizer:
             frames[alias] = f.select(
                 *[F.col(c).alias(f"{alias}__{c}") for c in f.columns]
             )
-            if (
-                alias in plan.pushdown.materialized
-                and plan.pushdown.stats[alias].rows <= self.config.broadcast_rows
-            ):
+            if _broadcasts(plan, alias):
                 frames[alias] = F.broadcast(frames[alias])
 
         joined = frames[order[0]]
         in_chain = {order[0]}
         for alias in order[1:]:
-            conds = []
-            for a, ca, b, cb in plan.spec.join_preds:
-                if a == alias and b in in_chain:
-                    conds.append(F.col(f"{alias}__{ca}") == F.col(f"{b}__{cb}"))
-                elif b == alias and a in in_chain:
-                    conds.append(F.col(f"{a}__{ca}") == F.col(f"{alias}__{cb}"))
-            if not conds:  # disconnected fallback only
-                if alias in plan.spec.outer:
-                    raise ValueError(f"outer alias {alias} has no join edge")
-                joined = joined.crossJoin(frames[alias])
-            else:
-                cond = conds[0]
-                for c in conds[1:]:
-                    cond = cond & c
-                how = "left" if alias in plan.spec.outer else "inner"
-                joined = joined.join(frames[alias], cond, how)
+            joined = _join_step(plan.spec, joined, frames[alias], alias, in_chain)
             in_chain.add(alias)
-
-        for residual in plan.spec.post_filters:
-            joined = joined.filter(_rewrite_residual(residual, plan.spec))
-        return joined
+        return _post_filter(joined, plan.spec)
 
     def explain(
         self,
@@ -509,8 +532,8 @@ class CompassOptimizer:
                     f"  count-distinct route: {route}"
                     f" (ndv≈{info['ndv_estimate']},"
                     f" range=[{info['lo']}, {info['hi']}];"
-                    f" bitmap ≤{self.config.distinct_bitmap_max_range} bits,"
-                    f" exact ≤{self.config.distinct_exact_max_ndv} ndv,"
+                    f" bitmap ≤{DISTINCT_BITMAP_MAX_RANGE} bits,"
+                    f" exact ≤{DISTINCT_EXACT_MAX_NDV} ndv,"
                     " else hll)"
                 )
         if plan.spec.outer:
@@ -565,32 +588,34 @@ class CompassOptimizer:
 
         alias, col = measure
         f = plan.pushdown.frames[alias]
-        tag = plan.extras.get("dataset_tag")
-        key = (tag, plan.spec.tables[alias], plan.spec.filters.get(alias), col)
-        if tag is not None and key in _NDV_CACHE:
-            ndv, lo, hi = _NDV_CACHE[key]
-        else:
+
+        def stats() -> tuple[int, object, object]:
             row = f.agg(
                 F.approx_count_distinct(col).alias("ndv"),
                 F.min(col).alias("lo"),
                 F.max(col).alias("hi"),
             ).collect()[0]
-            ndv, lo, hi = int(row["ndv"]), row["lo"], row["hi"]
-            if tag is not None:
-                _NDV_CACHE[key] = (ndv, lo, hi)
+            return int(row["ndv"]), row["lo"], row["hi"]
+
+        ndv, lo, hi = cached(
+            _NDV_CACHE,
+            plan.extras.get("dataset_tag"),
+            (plan.spec.tables[alias], plan.spec.filters.get(alias), col),
+            stats,
+        )
         integral = isinstance(f.schema[col].dataType, T.IntegralType)
         rng = int(hi) - int(lo) + 1 if (integral and lo is not None) else None
-        if rng is not None and rng <= self.config.distinct_bitmap_max_range:
+        if rng is not None and rng <= DISTINCT_BITMAP_MAX_RANGE:
             route = "count_distinct_bitmap"
             params = {"vmin": int(lo), "n_words": (rng + 63) // 64}
         elif requested == "count_distinct_bitmap":
             raise ValueError(
                 f"count_distinct_bitmap requires an integral measure with "
-                f"range ≤ {self.config.distinct_bitmap_max_range} bits; "
+                f"range ≤ {DISTINCT_BITMAP_MAX_RANGE} bits; "
                 f"{alias}.{col} has range {rng} (type "
                 f"{f.schema[col].dataType.simpleString()})"
             )
-        elif ndv <= self.config.distinct_exact_max_ndv:
+        elif ndv <= DISTINCT_EXACT_MAX_NDV:
             route, params = "count_distinct", {}
         else:
             route, params = "count_distinct_hll", {}
@@ -603,42 +628,8 @@ class CompassOptimizer:
         }
         return route, params
 
-    def _key_ndv(
-        self, plan: CompassPlan, alias: str, key_cols: list[str]
-    ) -> int | None:
-        """Cached approx_count_distinct(struct(keys)) of an alias's
-        referenced-key combinations, or None when the probe doesn't apply
-        (table at/below ``collapse_skip_min_rows``, no keys, or a FILTERED
-        alias — an unfiltered table's key-NDV is a per-catalog constant,
-        one cached job per (table, keys) for the whole corpus, while
-        filtered variants would key the cache per predicate and multiply
-        planning jobs across a 113-query workload)."""
-        rows = plan.pushdown.stats[alias].rows
-        if rows <= self.config.collapse_skip_min_rows or not key_cols:
-            return None
-        if plan.spec.filters.get(alias):
-            return None
-        tag = plan.extras.get("dataset_tag")
-        key = (
-            tag,
-            plan.spec.tables[alias],
-            plan.spec.filters.get(alias),
-            tuple(key_cols),
-        )
-        if tag is not None and key in _KEY_NDV_CACHE:
-            return _KEY_NDV_CACHE[key]
-        f = plan.pushdown.frames[alias]
-        ndv = int(
-            f.agg(
-                F.approx_count_distinct(F.struct(*key_cols)).alias("k")
-            ).collect()[0]["k"]
-        )
-        if tag is not None:
-            _KEY_NDV_CACHE[key] = ndv
-        return ndv
-
     def _should_skip_collapse(
-        self, plan: CompassPlan, alias: str, key_cols: list[str]
+        self, plan: CompassPlan, alias: str, key_cols: list[str], owns_measure: bool
     ) -> bool:
         """Eager-chain seed decision: skip the per-table collapse when the
         referenced-key combinations are nearly distinct — the groupBy
@@ -648,39 +639,38 @@ class CompassOptimizer:
         into the scale-80 timeout). One cached
         approx_count_distinct(struct(keys)) job decides; correctness is
         unaffected either way — the collapse is idempotent and the first
-        post-join re-aggregation shrinks the prefix regardless."""
-        ndv = self._key_ndv(plan, alias, key_cols)
-        if ndv is None:
-            return False
+        post-join re-aggregation shrinks the prefix regardless.
+
+        The probe runs only for an unfiltered table above
+        COLLAPSE_SKIP_MIN_ROWS with keys: an unfiltered table's key-NDV is
+        a per-catalog constant, one cached job per (table, keys) for the
+        whole corpus, while filtered variants would key the cache per
+        predicate and multiply planning jobs across a 113-query workload.
+        Its result is recorded in ``plan.extras['collapse_skipped']``,
+        which :meth:`_frame_size_estimate` reads. An alias that owns a
+        measure always collapses (the groupBy seeds the measure channels),
+        so it records skip=False — its frame has exactly key-NDV rows,
+        the estimate the anti-broadcast bar needs."""
         rows = plan.pushdown.stats[alias].rows
-        skip = ndv >= self.config.collapse_skip_ndv_ratio * rows
+        if rows <= COLLAPSE_SKIP_MIN_ROWS or not key_cols or plan.spec.filters.get(alias):
+            return False
+        ndv = cached(
+            _KEY_NDV_CACHE,
+            plan.extras.get("dataset_tag"),
+            (plan.spec.tables[alias], plan.spec.filters.get(alias), tuple(key_cols)),
+            lambda: int(
+                plan.pushdown.frames[alias]
+                .agg(F.approx_count_distinct(F.struct(*key_cols)).alias("k"))
+                .collect()[0]["k"]
+            ),
+        )
+        skip = not owns_measure and ndv >= COLLAPSE_SKIP_NDV_RATIO * rows
         plan.extras.setdefault("collapse_skipped", {})[alias] = {
             "skip": skip,
             "ndv": ndv,
             "rows": rows,
         }
         return skip
-
-    def _probe_collapsed_size(
-        self, plan: CompassPlan, alias: str, key_cols: list[str]
-    ) -> None:
-        """Record the collapsed-frame size of a MEASURE-carrying alias
-        (round-11 advice fix): the own-measures branch always collapses
-        (the groupBy seeds the measure channels), so its output has
-        exactly key-NDV rows — but it never called the skip probe, so
-        ``_frame_size_estimate`` fell back to raw filtered rows and the
-        300k anti-broadcast bar could pin SHUFFLE_HASH on a frame that
-        collapses far below the bar and should broadcast. One cached NDV
-        probe records skip=False (truthful: the frame DID collapse), which
-        both fixes the estimate and leaves raw-alias prefix liveness
-        untouched."""
-        ndv = self._key_ndv(plan, alias, key_cols)
-        if ndv is not None:
-            plan.extras.setdefault("collapse_skipped", {})[alias] = {
-                "skip": False,
-                "ndv": ndv,
-                "rows": plan.pushdown.stats[alias].rows,
-            }
 
     def _frame_size_estimate(self, plan: CompassPlan, alias: str) -> float:
         """Plan-time row estimate of an alias's collapsed chain frame: the
@@ -752,7 +742,7 @@ class CompassOptimizer:
           HLL sketch — approximate, constant-size.
         - ``count_distinct_bitmap`` (the reference's
           ``CountDistinctImplType::Bitmap``): integral measures with a
-          plan-time value range ≤ ``config.distinct_bitmap_max_range``
+          plan-time value range ≤ ``DISTINCT_BITMAP_MAX_RANGE``
           carry a packed bitmap of ⌈range/64⌉ longs per key — exact like
           collect_set but FIXED-size regardless of row count, native
           ``bit_or`` end to end.
@@ -788,22 +778,15 @@ class CompassOptimizer:
         # count_distinct_auto / count_distinct_bitmap resolve to a concrete
         # carrier from plan-time measure stats (the reference's switch)
         bitmap: dict = {}
-        if single and measures and measures[0][2] in (
-            "count_distinct_auto",
-            "count_distinct_bitmap",
-        ):
+        if single and measures and measures[0][2] in _ROUTED:
             mal, mcol, _ = measures[0]
             routed_op, bitmap = self._resolve_distinct_route(
                 plan, (mal, mcol), measures[0][2]
             )
             measures = [(mal, mcol, routed_op)]
         for _, _, op in measures:
-            if op not in _MEASURE_OPS:
-                raise ValueError(f"unsupported measure_op {op!r}")
-            if not single and op in (
-                "count_distinct_auto",
-                "count_distinct_bitmap",
-            ):
+            _measure_op(op)
+            if not single and op in _ROUTED:
                 raise ValueError(
                     "auto/bitmap distinct routing is single-measure — its "
                     "plan-time stats job and EXPLAIN record are per-plan"
@@ -823,23 +806,22 @@ class CompassOptimizer:
         frames = {}
         for alias in order:
             f = plan.pushdown.frames[alias]
-            keys = [
-                F.col(c).alias(f"{alias}__{c}")
-                for c in sorted(needed[alias])
-                if c in f.columns
-            ]
-            aggs = [F.count(F.lit(1)).alias("__cnt_new")]
+            key_cols = sorted(c for c in needed[alias] if c in f.columns)
+            keys = [F.col(c).alias(f"{alias}__{c}") for c in key_cols]
             own = [
                 (i, col, op)
                 for i, (al, col, op) in enumerate(measures)
                 if al == alias
             ]
-            if own:
-                # measure columns are aggregated, never grouped — select
-                # them under private names so they can coincide with keys
-                keys = keys + [
-                    F.col(col).alias(f"__mval{i}") for i, col, _ in own
-                ]
+            if self._should_skip_collapse(plan, alias, key_cols, bool(own)):
+                # near-distinct keys: enter the chain raw at multiplicity
+                # 1 — the collapse would shuffle the whole table to shrink
+                # it by almost nothing
+                agg = f.select(*keys).withColumn(
+                    "__cnt_new", F.lit(1).cast("long")
+                )
+            else:
+                aggs = [F.count(F.lit(1)).alias("__cnt_new")]
                 for i, _, op in own:
                     if op == "count_distinct_bitmap":
                         aggs.extend(
@@ -852,45 +834,17 @@ class CompassOptimizer:
                         )
                     else:
                         aggs.append(
-                            _measure_seed(op, f"__mval{i}").alias(
-                                f"__m{i}_new"
-                            )
+                            _MEASURES[op].seed(f"__mval{i}").alias(f"__m{i}_new")
                         )
-                g = f.select(*keys)
-                gb = [c for c in g.columns if not c.startswith("__mval")]
+                # measure columns are aggregated, never grouped — select
+                # them under private names so they can coincide with keys
+                mvals = [F.col(col).alias(f"__mval{i}") for i, col, _ in own]
+                g = f.select(*keys, *mvals) if keys or mvals else f
+                gb = [f"{alias}__{c}" for c in key_cols]
                 agg = g.groupBy(*gb).agg(*aggs) if gb else g.agg(*aggs)
-                if gb:
-                    self._probe_collapsed_size(
-                        plan,
-                        alias,
-                        sorted(c for c in needed[alias] if c in f.columns),
-                    )
-            else:
-                g = f.select(*keys) if keys else f
-                key_cols = sorted(c for c in needed[alias] if c in f.columns)
-                skip = bool(keys) and self._should_skip_collapse(
-                    plan, alias, key_cols
-                )
-                if skip:
-                    # near-distinct keys: enter the chain raw at
-                    # multiplicity 1 — the collapse would shuffle the
-                    # whole table to shrink it by almost nothing
-                    agg = g.withColumn("__cnt_new", F.lit(1).cast("long"))
-                else:
-                    agg = (
-                        g.groupBy(*g.columns).agg(*aggs)
-                        if keys
-                        else g.agg(*aggs)
-                    )
-            if (
-                alias in plan.pushdown.materialized
-                and plan.pushdown.stats[alias].rows <= self.config.broadcast_rows
-            ):
+            if _broadcasts(plan, alias):
                 agg = F.broadcast(agg)
-            elif (
-                self._frame_size_estimate(plan, alias)
-                > self.config.antibroadcast_rows
-            ):
+            elif self._frame_size_estimate(plan, alias) > ANTIBROADCAST_ROWS:
                 # Anti-broadcast guard (round 9, measured on JOB 17a at
                 # fixture scale 160): a multi-million-row chain partner is
                 # narrow enough (2-3 int columns + __cnt) that AQE's
@@ -905,7 +859,7 @@ class CompassOptimizer:
                 # keys SHOULD broadcast) and lowered it 1M → 300k, which
                 # converts the 2-family tail (2a 29.7 → 7.7 s solo at
                 # scale 160) with the scale-10 corpus unregressed — see
-                # PushdownConfig.antibroadcast_rows for both measurements.
+                # ANTIBROADCAST_ROWS for both measurements.
                 agg = agg.hint("shuffle_hash")
             frames[alias] = agg
 
@@ -942,28 +896,11 @@ class CompassOptimizer:
         if seed_info and seed_info.get("skip"):
             raw_live.add(order[0])
         for alias in order[1:]:
-            conds = []
-            for a, ca, b, cb in spec.join_preds:
-                if a == alias and b in in_chain:
-                    conds.append(F.col(f"{alias}__{ca}") == F.col(f"{b}__{cb}"))
-                elif b == alias and a in in_chain:
-                    conds.append(F.col(f"{a}__{ca}") == F.col(f"{alias}__{cb}"))
-            is_outer = alias in spec.outer
             left = joined.hint("shuffle_hash") if raw_live else joined
             plan.extras.setdefault("raw_live_trace", []).append(
                 (alias, sorted(raw_live))
             )
-            if not conds:  # disconnected fallback only
-                if is_outer:
-                    raise ValueError(f"outer alias {alias} has no join edge")
-                joined = left.crossJoin(frames[alias])
-            else:
-                cond = conds[0]
-                for c in conds[1:]:
-                    cond = cond & c
-                joined = left.join(
-                    frames[alias], cond, "left" if is_outer else "inner"
-                )
+            joined = _join_step(spec, left, frames[alias], alias, in_chain)
             info = plan.extras.get("collapse_skipped", {}).get(alias)
             if info and info.get("skip"):
                 raw_live.add(alias)
@@ -976,7 +913,7 @@ class CompassOptimizer:
             # precisely SQL's aggregate-over-null-extended-rows rule
             cnt_new = (
                 F.coalesce(F.col("__cnt_new"), F.lit(1).cast("long"))
-                if is_outer
+                if alias in spec.outer
                 else F.col("__cnt_new")
             )
             for i, (mal, _, mop) in enumerate(measures):
@@ -990,10 +927,10 @@ class CompassOptimizer:
                         joined = joined.withColumn(
                             nm,
                             F.col("__cnt") * F.col(f"{nm}_new")
-                            if mop in _SCALED_OPS
+                            if _MEASURES[mop].scaled
                             else F.col(f"{nm}_new"),
                         ).drop(f"{nm}_new")
-                elif channels[i][0] in joined.columns and mop in _SCALED_OPS:
+                elif channels[i][0] in joined.columns and _MEASURES[mop].scaled:
                     # measure already in the prefix: the partner's
                     # multiplicity scales the running sum exactly as it
                     # scales the count (min/max/sets pass through joins
@@ -1030,27 +967,21 @@ class CompassOptimizer:
                 for i, (_, _, mop) in enumerate(measures):
                     for nm in channels[i]:
                         if nm in joined.columns:
-                            aggs.append(_measure_reagg(mop, nm).alias(nm))
+                            aggs.append(_MEASURES[mop].reagg(nm).alias(nm))
                 if keep:
                     joined = joined.groupBy(*sorted(keep)).agg(*aggs)
                 elif remaining:
                     joined = joined.agg(*aggs)
             _refresh_raw_live()
 
-        for residual in spec.post_filters:
-            joined = joined.filter(_rewrite_residual(residual, spec))
+        joined = _post_filter(joined, spec)
         final_aggs = []
         for i, (_, _, mop) in enumerate(measures):
-            # SQL aggregate semantics: NULL over the empty join for
-            # sum/min/max, 0 for count_distinct — like the plain plan and
-            # the oracle (no coalesce; _measure_final encodes the split)
             out = "agg_val" if single else f"agg_val{i}"
             if mop == "count_distinct_bitmap":
                 final_aggs.append(_bitmap_final(channels[i]).alias(out))
             else:
-                final_aggs.append(
-                    _measure_final(mop, channels[i][0]).alias(out)
-                )
+                final_aggs.append(_MEASURES[mop].final(channels[i][0]).alias(out))
         if group_by:
             return joined.groupBy(
                 *[F.col(f"{al}__{col}").alias(col) for al, col in group_by]
@@ -1107,36 +1038,14 @@ class CompassOptimizer:
             )
         joined = self.build_join(plan)
 
-        def raw_agg(mal: str, mcol_name: str, mop: str, out: str):
-            mcol = F.col(f"{mal}__{mcol_name}")
-            if mop in (
-                "count_distinct",
-                "count_distinct_bitmap",
-                "count_distinct_auto",
-            ):
-                # the raw join computes exact COUNT(DISTINCT) directly —
-                # carrier routing only exists inside the eager chain
-                return F.count_distinct(mcol).cast("long").alias(out)
-            if mop == "sum_distinct":
-                return F.sum_distinct(mcol).cast("double").alias(out)
-            if mop == "count_distinct_hll":
-                return (
-                    F.hll_sketch_estimate(F.hll_sketch_agg(mcol))
-                    .cast("long")
-                    .alias(out)
-                )
-            if mop == "count":
-                return F.count(mcol).cast("long").alias(out)
-            return _MEASURE_FNS[mop](mcol).alias(out)
-
-        aggs = []
         if measure is not None:
-            aggs.append(raw_agg(measure[0], measure[1], measure_op, "agg_val"))
-        elif measures:
-            aggs.extend(
-                raw_agg(mal, mcol, mop, f"agg_val{i}")
-                for i, (mal, mcol, mop) in enumerate(measures)
-            )
+            measures = [(measure[0], measure[1], measure_op)]
+        aggs = [
+            _measure_op(mop)
+            .raw(F.col(f"{mal}__{mcol}"))
+            .alias("agg_val" if measure is not None else f"agg_val{i}")
+            for i, (mal, mcol, mop) in enumerate(measures or ())
+        ]
         if group_by:
             return joined.groupBy(
                 *[F.col(f"{al}__{col}").alias(col) for al, col in group_by]

@@ -28,7 +28,7 @@ def save_templates(path: str) -> int:
     """Persist the current template cache; returns #entries saved."""
     entries = []
     counter_blocks = []
-    with _pd._template_lock():
+    with _pd._TEMPLATE_LOCK:
         items = list(_pd._TEMPLATE_CACHE.items())
     for key, (count, sketches) in items:
         dataset, table, filter_sql, colkeys = key
@@ -86,7 +86,7 @@ def load_templates(path: str) -> int:
             e["filter"],
             tuple((a, b) for a, b in e["colkeys"]),
         )
-        with _pd._template_lock():
+        with _pd._TEMPLATE_LOCK:
             _pd._TEMPLATE_CACHE[key] = (e["count"], sketches)
         n += 1
     return n

@@ -133,6 +133,28 @@ def test_distributed_build_null_keys_match_numpy(spark):
     assert np.array_equal(sk["k"].counters, twin.counters)
 
 
+def test_null_keys_leave_wide_keys_unrounded(spark):
+    """A null next to int64 keys above 2^53 must not move their buckets:
+    the same keys sketch to the same counters with and without a null, on
+    the in-process build (hint of one task) and the distributed one (one
+    row more). Keys that went through float64 would round (2^53 + 1
+    hashes with low word 0 next to a null, 1 without)."""
+    from compass_query_optimizer_spark.plans.fagms import KEYS_PER_TASK
+
+    wide = [2**53 + 1, 2**53 + 3, 2**62 + 7, -(2**60) - 1, 5]
+    seeds = {"k": seeds_for_class("eq:widekeys")}
+    with_null = spark.createDataFrame([(k,) for k in wide + [None]], "k long")
+    without = spark.createDataFrame([(k,) for k in wide], "k long")
+    twin = Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), seeds["k"])
+    numpy_update(twin, np.array(wide, dtype=np.int64))
+    for hint in (KEYS_PER_TASK, KEYS_PER_TASK + 1):
+        cnt_null, sk_null = build_sketches_arrow(with_null, seeds, nrows_hint=hint)
+        cnt, sk = build_sketches_arrow(without, seeds, nrows_hint=hint)
+        assert (cnt_null, cnt) == (len(wide) + 1, len(wide))
+        assert np.array_equal(sk_null["k"].counters, sk["k"].counters), hint
+        assert np.array_equal(sk["k"].counters, twin.counters), hint
+
+
 # ------------------------------------------------------------- salted_join
 def test_salted_join_rejects_outer(spark):
     from compass_query_optimizer_spark.operators.skew import salted_join
@@ -230,14 +252,14 @@ def test_template_cache_keyed_by_dataset_tag(spark):
         "t2": spark.range(1000).selectExpr("id % 40 AS k"),
     }
     opt.plan(sql, tables=tables)
-    with pd_mod._template_lock():
+    with pd_mod._TEMPLATE_LOCK:
         assert not pd_mod._TEMPLATE_CACHE  # untagged → bypassed
     opt.plan(sql, tables=tables, count_cache_tag="cat-A")
-    with pd_mod._template_lock():
+    with pd_mod._TEMPLATE_LOCK:
         keys_a = set(pd_mod._TEMPLATE_CACHE)
     assert keys_a and all(k[0] == "cat-A" for k in keys_a)
     opt.plan(sql, tables=tables, count_cache_tag="cat-B")
-    with pd_mod._template_lock():
+    with pd_mod._TEMPLATE_LOCK:
         keys_b = set(pd_mod._TEMPLATE_CACHE) - keys_a
     assert keys_b and all(k[0] == "cat-B" for k in keys_b)
     pd_mod.clear_template_cache()

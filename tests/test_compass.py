@@ -112,7 +112,7 @@ def test_in_process_build_matches_distributed_on_job_visits(spark, monkeypatch):
     """Every table visit of JOB 1a-8a at fixture scale 1 (planned online,
     so each visit builds) gets the same count and bit-identical counters
     from the in-process build (row hint = base count, ≤ one task) as from
-    the distributed mapInPandas build (no hint)."""
+    the distributed mapInArrow build (no hint)."""
     from compass_query_optimizer_spark.plans import pushdown
     from compass_query_optimizer_spark.plans.fagms import KEYS_PER_TASK
     from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
@@ -145,18 +145,18 @@ def test_in_process_build_matches_distributed_on_job_visits(spark, monkeypatch):
 
 def test_build_routes_on_the_one_task_bound(spark, monkeypatch):
     """A row hint of exactly one task's keys builds in-process (no
-    MapInPandas); one row more keeps the distributed pass."""
+    MapInArrow); one row more keeps the distributed pass."""
     from compass_query_optimizer_spark.plans.fagms import KEYS_PER_TASK
 
     df = spark.range(-50, 950).selectExpr("id % 97 AS k")
     seeds = {"k": seeds_for_class("eq:route")}
     DataFrame = type(df)
-    map_in_pandas = DataFrame.mapInPandas
+    map_in_arrow = DataFrame.mapInArrow
 
     def refuse(self, *args, **kwargs):
-        raise AssertionError("in-process build ran mapInPandas")
+        raise AssertionError("in-process build ran mapInArrow")
 
-    monkeypatch.setattr(DataFrame, "mapInPandas", refuse)
+    monkeypatch.setattr(DataFrame, "mapInArrow", refuse)
     cnt_in, sk_in = build_sketches_arrow(df, seeds, nrows_hint=KEYS_PER_TASK)
     cnt_empty, sk_empty = build_sketches_arrow(df.filter("k > 1000"), seeds, nrows_hint=10)
     assert cnt_empty == 0 and not sk_empty["k"].counters.any()
@@ -165,9 +165,9 @@ def test_build_routes_on_the_one_task_bound(spark, monkeypatch):
 
     def spy(self, *args, **kwargs):
         calls.append(1)
-        return map_in_pandas(self, *args, **kwargs)
+        return map_in_arrow(self, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrame, "mapInPandas", spy)
+    monkeypatch.setattr(DataFrame, "mapInArrow", spy)
     cnt_dist, sk_dist = build_sketches_arrow(df, seeds, nrows_hint=KEYS_PER_TASK + 1)
     assert calls == [1]
     assert cnt_in == cnt_dist == 1000
@@ -321,17 +321,19 @@ def test_explain_report(spark):
     assert "collect_set" in mcd
 
 
-def test_distinct_auto_route_flips_at_thresholds(spark):
+def test_distinct_auto_route_flips_at_thresholds(spark, monkeypatch):
     """count_distinct_auto resolves per the reference's plan-time switch
     (RelAlgExecutor.cpp:1350-1418 / CountDistinctDescriptor): dense ints
     within the bitmap cap -> bitmap; NDV within the exact cap -> set;
     else HLL. The SAME measure column flips route as the caps move."""
+    from compass_query_optimizer_spark.plans import optimizer
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
     from compass_query_optimizer_spark.plans.queries import GROUPED_COUNT_SQL
 
-    def route(cfg, measure):
-        opt = CompassOptimizer(spark, config=cfg)
+    def route(measure, bitmap_max_range, exact_max_ndv=4_096):
+        monkeypatch.setattr(optimizer, "DISTINCT_BITMAP_MAX_RANGE", bitmap_max_range)
+        monkeypatch.setattr(optimizer, "DISTINCT_EXACT_MAX_NDV", exact_max_ndv)
+        opt = CompassOptimizer(spark)
         plan = opt.plan(GROUPED_COUNT_SQL, SF)
         op, _ = opt._resolve_distinct_route(plan, measure, "count_distinct_auto")
         assert plan.extras["distinct_route"]["route"] == op
@@ -339,24 +341,16 @@ def test_distinct_auto_route_flips_at_thresholds(spark):
 
     m = ("c", "c_custkey")  # integral, range ~1.5k, NDV ~1.5k at sf0.001
     # wide bitmap cap: dense int fits -> bitmap
-    assert route(PushdownConfig(distinct_bitmap_max_range=1 << 20), m) == (
-        "count_distinct_bitmap"
-    )
+    assert route(m, 1 << 20) == "count_distinct_bitmap"
     # bitmap ruled out, exact cap generous -> exact collect_set
-    assert route(
-        PushdownConfig(distinct_bitmap_max_range=8, distinct_exact_max_ndv=10**9), m
-    ) == "count_distinct"
+    assert route(m, 8, 10**9) == "count_distinct"
     # both caps tiny -> the constant-size sketch carrier
-    assert route(
-        PushdownConfig(distinct_bitmap_max_range=8, distinct_exact_max_ndv=8), m
-    ) == "count_distinct_hll"
+    assert route(m, 8, 8) == "count_distinct_hll"
     # a string measure can never take the bitmap route, no matter how
     # wide the cap — auto falls through to the NDV decision (the o frame
     # is filtered to o_orderstatus='F', NDV 1, so cap 0 forces HLL)
     s = ("o", "o_orderstatus")
-    assert route(
-        PushdownConfig(distinct_bitmap_max_range=1 << 20, distinct_exact_max_ndv=0), s
-    ) == "count_distinct_hll"
+    assert route(s, 1 << 20, 0) == "count_distinct_hll"
 
 
 def test_distinct_routes_agree_on_the_answer(spark):
@@ -650,21 +644,23 @@ def test_cross_table_measures_eager_matches_raw(spark):
     assert abs(float(eager["agg_val1"]) - float(raw["agg_val1"])) < 1e-6
 
 
-def test_collapse_skip_gates_on_ndv_and_size(spark):
+def test_collapse_skip_gates_on_ndv_and_size(spark, monkeypatch):
     """The seed-collapse skip must (a) fire only above the size floor,
     (b) fire only for near-distinct keys, (c) never fire on filtered
     tables, and (d) leave the answer unchanged when forced on."""
+    from compass_query_optimizer_spark.plans import optimizer
     from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
 
     corpus = load_corpus()
     tables, counts = job_tables(spark, scale=1)
     # force the probe by dropping the size floor: cast_info's keys are
     # near-distinct at every scale, so the skip fires
-    opt = CompassOptimizer(spark, config=PushdownConfig(collapse_skip_min_rows=1))
-    plan = opt.plan(corpus["8c"], tables=tables, counts=counts)
-    skipped = opt.build_count_join(plan)  # builds lazily; probes run now
+    with monkeypatch.context() as m:
+        m.setattr(optimizer, "COLLAPSE_SKIP_MIN_ROWS", 1)
+        opt = CompassOptimizer(spark)
+        plan = opt.plan(corpus["8c"], tables=tables, counts=counts)
+        skipped = opt.build_count_join(plan)  # builds lazily; probes run now
     info = plan.extras.get("collapse_skipped", {})
     assert info.get("ci", {}).get("skip") is True
     # filtered aliases (rt, cn) must never be probed
@@ -677,7 +673,7 @@ def test_collapse_skip_gates_on_ndv_and_size(spark):
     assert forced == base > 0
 
 
-def test_raw_alias_prefix_pins_shuffle_hash_joins(spark):
+def test_raw_alias_prefix_pins_shuffle_hash_joins(spark, monkeypatch):
     """While a collapse-skipped alias's full key set still rides the
     prefix, the chain hints SHUFFLE_HASH on the prefix side — AQE's
     shuffle-bytes heuristic otherwise converts the next join to broadcast
@@ -686,17 +682,17 @@ def test_raw_alias_prefix_pins_shuffle_hash_joins(spark):
     scale the floor is dropped so the skip fires; the trace must show the
     raw alias live exactly until its keys drop out of keep, and the
     answer must match the default plan."""
+    from compass_query_optimizer_spark.plans import optimizer
     from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
 
     corpus = load_corpus()
     tables, counts = job_tables(spark, scale=1)
-    opt = CompassOptimizer(
-        spark, config=PushdownConfig(collapse_skip_min_rows=1)
-    )
-    plan = opt.plan(corpus["8c"], tables=tables, counts=counts)
-    df = opt.build_count_join(plan)
+    with monkeypatch.context() as m:
+        m.setattr(optimizer, "COLLAPSE_SKIP_MIN_ROWS", 1)
+        opt = CompassOptimizer(spark)
+        plan = opt.plan(corpus["8c"], tables=tables, counts=counts)
+        df = opt.build_count_join(plan)
     skips = {
         a: i["skip"] for a, i in plan.extras.get("collapse_skipped", {}).items()
     }
@@ -718,8 +714,8 @@ def test_antibroadcast_bar_keys_on_collapsed_estimate():
     a collapse-skipped table enters raw and counts at full size."""
     from types import SimpleNamespace
 
+    from compass_query_optimizer_spark.plans import optimizer
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
 
     est = CompassOptimizer._frame_size_estimate
     self = SimpleNamespace()
@@ -744,4 +740,4 @@ def test_antibroadcast_bar_keys_on_collapsed_estimate():
     p = plan(416_136, None)
     assert est(self, p, "x") == 416_136
     # the bar the estimate is compared against (measured default)
-    assert PushdownConfig().antibroadcast_rows == 300_000
+    assert optimizer.ANTIBROADCAST_ROWS == 300_000

@@ -78,13 +78,8 @@ def test_warm_pass_runs_the_key_ndv_probes(spark, monkeypatch):
     from compass_query_optimizer_spark.fixtures import FIXTURE_VERSION
     from compass_query_optimizer_spark.plans import optimizer
     from compass_query_optimizer_spark.plans.job_corpus import warm_corpus_templates
-    from compass_query_optimizer_spark.plans.pushdown import PushdownConfig
 
-    monkeypatch.setattr(
-        optimizer,
-        "PushdownConfig",
-        lambda: PushdownConfig(collapse_skip_min_rows=1),
-    )
+    monkeypatch.setattr(optimizer, "COLLAPSE_SKIP_MIN_ROWS", 1)
     monkeypatch.setattr(optimizer, "_KEY_NDV_CACHE", {})
     rows = warm_corpus_templates(spark, scale=1, query_ids=["8c"])
     assert [r[0] for r in rows] == ["8c"]

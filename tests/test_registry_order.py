@@ -152,15 +152,20 @@ def test_prefix_serves_the_evidence_gap():
 
 
 def test_prefix_retires_the_r7_tail():
-    """After this rotation no registered entry may sit on pre-r8 driver
-    evidence: the prefix must contain every entry whose latest evidence
-    predates round 8."""
+    """The prefix must contain every registered entry on the oldest driver
+    evidence: whichever round is the oldest latest-evidence round among
+    registered entries (round 8 since the r7 tail was retired), all of its
+    entries are sampled next."""
     latest = _latest_evidence()
     registered = set(all_queries())
-    stale = {n for n, r in latest.items() if r < 8 and n in registered}
+    oldest = min(r for n, r in latest.items() if n in registered)
+    stale = {n for n, r in latest.items() if r == oldest and n in registered}
+    assert stale
     prefix = set(list(all_queries())[:50])
     left_out = stale - prefix
-    assert not left_out, f"pre-r8-evidence entries missing from the prefix: {left_out}"
+    assert not left_out, (
+        f"round-{oldest}-evidence entries missing from the prefix: {left_out}"
+    )
 
 
 def test_every_registered_query_has_driver_evidence_or_prefix_slot():

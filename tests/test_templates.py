@@ -25,7 +25,7 @@ def test_template_roundtrip(tmp_path):
     sk = Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), seeds)
     numpy_update(sk, np.arange(5000))
     key = ("some_catalog", "some_table", None, (("k", "eq:tpl"),))
-    with pd._template_lock():
+    with pd._TEMPLATE_LOCK:
         pd._TEMPLATE_CACHE[key] = (5000, {"k": sk})
 
     path = str(tmp_path / "templates.npz")
@@ -33,7 +33,7 @@ def test_template_roundtrip(tmp_path):
 
     pd.clear_template_cache()
     assert load_templates(path) == 1
-    with pd._template_lock():
+    with pd._TEMPLATE_LOCK:
         count, sketches = pd._TEMPLATE_CACHE[key]
     assert count == 5000
     assert np.array_equal(sketches["k"].counters, sk.counters)
