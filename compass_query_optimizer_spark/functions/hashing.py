@@ -12,15 +12,11 @@ stay < 2^62, safe for checked int64 arithmetic in both engines).
 
 This deliberately avoids engine-native hashes (xxhash64, DuckDB hash()) —
 fast but not portable. At 100 TB the md5 cost is visible but stays inside
-whole-stage codegen (no Python); set SPARK_GRAFT_PORTABLE_HASH=0 to swap
-in xxhash64 (several × cheaper per row) when cross-engine oracle parity is
-not required — results stay internally consistent (same dups found), only
-the differential gate stops being md5-reproducible in DuckDB.
+whole-stage codegen (no Python), and md5 is the only hash: every result
+stays reproducible by the DuckDB differential.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,20 +24,11 @@ from pyspark.sql import functions as F
 # Mersenne prime 2^31-1: (a*x+b) % P with a,x,b < P keeps products < 2^62.
 P31 = 2_147_483_647
 
-# read once at import, like the LSH/SimHash knobs
-PORTABLE_HASH = os.environ.get("SPARK_GRAFT_PORTABLE_HASH", "1") != "0"
-
 
 def spark_portable_hash(col: Column) -> Column:
-    """48-bit non-negative integer hash of a string column (JVM-side).
-
-    Portable mode (default): md5-derived, bit-identical to
-    :func:`duck_portable_hash`. Fast mode: xxhash64 folded into the same
-    non-negative 48-bit range — same downstream arithmetic (CW hashing
-    stays < 2^62), no oracle reproducibility."""
-    if PORTABLE_HASH:
-        return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
-    return F.pmod(F.xxhash64(col), F.lit(1 << 48)).cast("long")
+    """48-bit non-negative integer hash of a string column (JVM-side):
+    md5-derived, bit-identical to :func:`duck_portable_hash`."""
+    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
 def duck_portable_hash(expr: str) -> str:

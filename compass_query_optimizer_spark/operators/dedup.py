@@ -29,7 +29,6 @@ candidates.
 from __future__ import annotations
 
 import logging
-import os
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
@@ -343,12 +342,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-# Env-tunable (read once at import; the oracle SQL is generated from the
-# same constants, so parity holds at ANY setting):
+# Parameters (the oracle SQL is generated from the same constants):
 #
-#   SPARK_GRAFT_SIMHASH_BITS    fingerprint width  (default 32; 64 max —
-#                               code lives in one BIGINT)
-#   SPARK_GRAFT_SIMHASH_BLOCKS  pigeonhole blocks  (default 4)
+#   SIMHASH_BITS    fingerprint width  (48; the code lives in one BIGINT)
+#   SIMHASH_BLOCKS  pigeonhole blocks  (4)
 #
 # Pigeonhole guarantee: hamming ≤ BLOCKS-1 ⇒ two codes agree on ≥1 of the
 # BLOCKS equal-width blocks, so recall is 100% for MAXDIST = BLOCKS-1.
@@ -359,29 +356,23 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    32    4        8           256            ~4·10^6  (too fat: the old
 #                                               default — 205k candidate
 #                                               pairs on 5k synthetic docs)
-#    48    4       12          4096            ~2.4·10^5  (default)
+#    48    4       12          4096            ~2.4·10^5  (this width)
 #
-# At 10^9+ docs raise BLOCKS only to tolerate more edit distance, accepting
-# fatter buckets. BITS caps at 48: the portable token hash is 48-bit
-# (functions/hashing.py), so bit positions past 47 would be constant-zero
-# noise that widens the code without discriminating anything.
+# At 10^9+ docs more BLOCKS would tolerate more edit distance, at the
+# price of fatter buckets. BITS caps at 48: the portable token hash is
+# 48-bit (functions/hashing.py), so bit positions past 47 would be
+# constant-zero noise that widens the code without discriminating anything.
 #
-# Block width is AUTO-SIZED from the corpus count at plan time (env knobs
-# pin it): block_bits = smallest b with expected <= SIMHASH_TARGET_BUCKET
-# docs per bucket, clamped to [4, BITS/BLOCKS]. The BLOCKS buckets then key
-# on the LOW blocks*block_bits bits of the full-width fingerprint — the
+# Block width is AUTO-SIZED from the corpus count at plan time:
+# block_bits = smallest b with expected <= SIMHASH_TARGET_BUCKET docs per
+# bucket, clamped to [4, BITS/BLOCKS]. The BLOCKS buckets then key on the
+# LOW blocks*block_bits bits of the full-width fingerprint — the
 # pigeonhole guarantee survives partial coverage: hamming(full code) <=
 # BLOCKS-1 implies <= BLOCKS-1 diffs inside the covered region too, so at
 # least one covered block still matches. Only precision (bucket fatness)
 # varies with the width, never recall.
-_ENV_SIMHASH = bool(
-    os.environ.get("SPARK_GRAFT_SIMHASH_BITS")
-    or os.environ.get("SPARK_GRAFT_SIMHASH_BLOCKS")
-)
-SIMHASH_BITS = int(os.environ.get("SPARK_GRAFT_SIMHASH_BITS", "48"))
-SIMHASH_BLOCKS = int(os.environ.get("SPARK_GRAFT_SIMHASH_BLOCKS", "4"))
-assert 1 <= SIMHASH_BLOCKS <= SIMHASH_BITS <= 48, "simhash params out of range"
-assert SIMHASH_BITS % SIMHASH_BLOCKS == 0, "blocks must divide bits evenly"
+SIMHASH_BITS = 48
+SIMHASH_BLOCKS = 4
 SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS  # fixed/maximum width
 SIMHASH_BLOCK_MASK = (1 << SIMHASH_BLOCK_BITS) - 1
 SIMHASH_MAXDIST = SIMHASH_BLOCKS - 1  # the pigeonhole-exact radius
@@ -390,11 +381,8 @@ SIMHASH_MIN_BLOCK_BITS = 4
 
 
 def simhash_block_bits(n_docs: int) -> int:
-    """Plan-time pigeonhole block width for a corpus of ``n_docs`` (env
-    knobs pin it; otherwise the shared auto_bits formula the oracle
-    mirrors via duck_auto_bits)."""
-    if _ENV_SIMHASH:
-        return SIMHASH_BLOCK_BITS
+    """Plan-time pigeonhole block width for a corpus of ``n_docs``: the
+    shared auto_bits formula the oracle mirrors via duck_auto_bits."""
     return auto_bits(
         n_docs, SIMHASH_TARGET_BUCKET, SIMHASH_MIN_BLOCK_BITS, SIMHASH_BLOCK_BITS
     )
@@ -491,15 +479,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_oracle() -> str:
     h = duck_portable_hash("word")
-    if _ENV_SIMHASH:
-        bb = str(SIMHASH_BLOCK_BITS)
-    else:
-        bb = duck_auto_bits(
-            "(SELECT COUNT(*) FROM documents)",
-            SIMHASH_TARGET_BUCKET,
-            SIMHASH_MIN_BLOCK_BITS,
-            SIMHASH_BLOCK_BITS,
-        )
+    bb = duck_auto_bits(
+        "(SELECT COUNT(*) FROM documents)",
+        SIMHASH_TARGET_BUCKET,
+        SIMHASH_MIN_BLOCK_BITS,
+        SIMHASH_BLOCK_BITS,
+    )
     return f"""
     WITH toks AS (
       SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word

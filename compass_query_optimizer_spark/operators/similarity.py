@@ -45,23 +45,16 @@ TOP_K = 10
 # derives the SAME width via duck_auto_bits over COUNT(*), so parity holds
 # at every scale; the plane matrix is prefix-stable (plane i is salted by
 # i alone), so "first `bits` planes" means the same planes on both sides.
-#
-#   SPARK_GRAFT_ANN_LSH_BITS   optional override: pin a fixed width
-_ENV_ANN_BITS = os.environ.get("SPARK_GRAFT_ANN_LSH_BITS")
 ANN_LSH_MIN_BITS = 6
 ANN_LSH_MAX_BITS = 20
 ANN_TARGET_BUCKET = 32  # expected vectors per bucket the width aims for
-N_PLANES = int(_ENV_ANN_BITS) if _ENV_ANN_BITS else ANN_LSH_MAX_BITS
-assert 1 <= N_PLANES <= 62, "code must fit a BIGINT"
 EMBED_DIM = 64
-_PLANES = plane_signs(N_PLANES, EMBED_DIM)
+_PLANES = plane_signs(ANN_LSH_MAX_BITS, EMBED_DIM)
 
 
 def ann_lsh_bits(n_rows: int) -> int:
-    """Plan-time LSH width for a corpus of ``n_rows`` vectors (env override
-    wins; otherwise the shared auto_bits formula the oracle mirrors)."""
-    if _ENV_ANN_BITS:
-        return N_PLANES
+    """Plan-time LSH width for a corpus of ``n_rows`` vectors: the shared
+    auto_bits formula the oracle mirrors."""
     return auto_bits(n_rows, ANN_TARGET_BUCKET, ANN_LSH_MIN_BITS, ANN_LSH_MAX_BITS)
 
 
@@ -216,7 +209,7 @@ def _duck_lsh_code(qv_expr: str, planes=_PLANES) -> str:
     None,  # generated below
     doc="LSH-bucketed ANN (scale path): random-hyperplane code whose width "
     "is auto-sized from the corpus count at plan time (log2-tracking, "
-    "clamped [6, 20]; SPARK_GRAFT_ANN_LSH_BITS pins it), candidates = "
+    "clamped [6, 20]), candidates = "
     "same-bucket vectors only, then exact cosine rank. Equi-join on the "
     "code → shuffle is O(corpus), never quadratic",
     tags=("similarity", "lsh"),
@@ -731,15 +724,12 @@ def _ivf_oracle() -> str:
 def _lsh_oracle() -> str:
     # full-width code masked to the auto width: the mask keeps the low
     # `bits` planes, which is exactly the Spark side's "first bits planes"
-    if _ENV_ANN_BITS:
-        bits_expr = str(N_PLANES)
-    else:
-        bits_expr = duck_auto_bits(
-            "(SELECT COUNT(*) FROM embeddings)",
-            ANN_TARGET_BUCKET,
-            ANN_LSH_MIN_BITS,
-            ANN_LSH_MAX_BITS,
-        )
+    bits_expr = duck_auto_bits(
+        "(SELECT COUNT(*) FROM embeddings)",
+        ANN_TARGET_BUCKET,
+        ANN_LSH_MIN_BITS,
+        ANN_LSH_MAX_BITS,
+    )
     code = (
         f"({_duck_lsh_code('qv')} & "
         f"((CAST(1 AS BIGINT) << ({bits_expr})) - 1))"
@@ -1950,15 +1940,12 @@ KNN_K = 3
 
 
 def _knn_graph_oracle() -> str:
-    if _ENV_ANN_BITS:
-        bits_expr = str(N_PLANES)
-    else:
-        bits_expr = duck_auto_bits(
-            "(SELECT COUNT(*) FROM embeddings)",
-            ANN_TARGET_BUCKET,
-            ANN_LSH_MIN_BITS,
-            ANN_LSH_MAX_BITS,
-        )
+    bits_expr = duck_auto_bits(
+        "(SELECT COUNT(*) FROM embeddings)",
+        ANN_TARGET_BUCKET,
+        ANN_LSH_MIN_BITS,
+        ANN_LSH_MAX_BITS,
+    )
     code = (
         f"({_duck_lsh_code('qv')} & "
         f"((CAST(1 AS BIGINT) << ({bits_expr})) - 1))"

@@ -15,7 +15,8 @@ and leaves physical details to the engine). Spark still picks
 broadcast/shuffle sides per join; CBO join reordering is disabled in
 session.py so the logical order sticks, and selective filtered tables get
 explicit broadcast hints (they are exactly the ≤10k-row inputs COMPASS
-materializes).
+splices into the query; the broadcast is that splice, built per query
+from the lazy filter, so no plan leaves cached data behind).
 """
 
 from __future__ import annotations
@@ -42,9 +43,6 @@ from compass_query_optimizer_spark.plans.search import (
 )
 
 
-# Selective (materialized) chain partners at or below this many filtered
-# rows get an explicit F.broadcast hint.
-BROADCAST_ROWS = 1_000_000
 # Absolute anti-broadcast bar (round 9 at 1M raw rows; round 10
 # re-keyed on the COLLAPSED frame estimate — the cached key-NDV when
 # the collapse probe measured one, else the filtered row count — and
@@ -210,15 +208,6 @@ def _referenced_cols(
     for al, col in residual_cols:
         needed[al].add(col)
     return needed, residual_cols
-
-
-def _broadcasts(plan: CompassPlan, alias: str) -> bool:
-    """Selective filtered tables are exactly the small inputs COMPASS
-    materializes: they ship to every task."""
-    return (
-        alias in plan.pushdown.materialized
-        and plan.pushdown.stats[alias].rows <= BROADCAST_ROWS
-    )
 
 
 def _join_step(
@@ -430,7 +419,7 @@ class CompassOptimizer:
             frames[alias] = f.select(
                 *[F.col(c).alias(f"{alias}__{c}") for c in f.columns]
             )
-            if _broadcasts(plan, alias):
+            if alias in plan.pushdown.materialized:
                 frames[alias] = F.broadcast(frames[alias])
 
         joined = frames[order[0]]
@@ -487,7 +476,7 @@ class CompassOptimizer:
             st = plan.pushdown.stats[alias]
             tbl = plan.spec.tables[alias]
             flt = plan.spec.filters.get(alias)
-            mat = "materialized+broadcast" if alias in plan.pushdown.materialized else "virtual"
+            mat = "selective+broadcast" if alias in plan.pushdown.materialized else "virtual"
             lines.append(
                 f"    {alias} ({tbl}): rows={st.rows} {mat}"
                 + (f" filter=[{flt}]" if flt else "")
@@ -842,7 +831,7 @@ class CompassOptimizer:
                 g = f.select(*keys, *mvals) if keys or mvals else f
                 gb = [f"{alias}__{c}" for c in key_cols]
                 agg = g.groupBy(*gb).agg(*aggs) if gb else g.agg(*aggs)
-            if _broadcasts(plan, alias):
+            if alias in plan.pushdown.materialized:
                 agg = F.broadcast(agg)
             elif self._frame_size_estimate(plan, alias) > ANTIBROADCAST_ROWS:
                 # Anti-broadcast guard (round 9, measured on JOB 17a at

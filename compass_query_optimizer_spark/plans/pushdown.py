@@ -10,11 +10,13 @@ For each base table of a join query, ascending by size (FilterPushDownSketch
    count spans several sketch tasks, one Arrow collect sketched on the
    driver for the rest (``fagms.build_sketches_arrow``);
 3. if survivors ≤ min(MAX_SELECTIVITY·|T|, MAX_SIZE) the filtered table is
-   considered selective: it is cached (Spark's analog of the reference
-   splicing the materialized filtered table into the DAG) and the final
-   join chain reuses the cached scan. Otherwise only the sketch is kept
-   and the filter stays a lazy predicate (the reference reverts the
-   push-down, FilterPushDownSketch.cpp:273-284);
+   considered selective and the join chain broadcasts it: Spark's
+   BroadcastExchange is the per-query splice of the reference's
+   materialized filtered table into the DAG. Otherwise only the sketch is
+   kept and the filter stays an ordinary predicate (the reference reverts
+   the push-down, FilterPushDownSketch.cpp:273-284). Either way the frame
+   is the lazy ``base.filter(...)``: push-down leaves no Spark session
+   state (nothing cached, nothing to unpersist);
 4. tables below MIN_TABLE_ROWS skip filtering and reuse template sketches
    (sketch templates: Catalog.h:579 uploadSketches, sketch-templates/).
 
@@ -23,11 +25,13 @@ Thresholds mirror COMPASS_init_variables.txt:3-5 (200 rows / 5% / 10,000).
 
 from __future__ import annotations
 
+import functools
 import threading
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.util import inheritable_thread_target
 
 from compass_query_optimizer_spark.plans.fagms import (
     Sketch,
@@ -47,8 +51,9 @@ MAX_SIZE = 10_000  # PUSH_DOWN_MAX_SIZE
 @dataclass
 class PushdownResult:
     stats: dict[str, TableStats]
-    frames: dict[str, DataFrame]  # alias -> (possibly cached) filtered frame
-    materialized: set[str] = field(default_factory=set)  # aliases kept cached
+    frames: dict[str, DataFrame]  # alias -> lazily filtered frame
+    # selective: broadcast into the chain
+    materialized: set[str] = field(default_factory=set)
 
 
 # (dataset_tag, table, filter_sql, sorted class keys) -> (count, sketches);
@@ -56,9 +61,11 @@ class PushdownResult:
 # plans, the analog of the reference's persisted sketch templates
 # (round-trip to disk via plans/templates.py).
 _TEMPLATE_CACHE: dict[tuple, tuple[int, dict[str, Sketch]]] = {}
-# guards every planner cache read through cached(): the push-down pool and
-# concurrent corpus queries plan from several threads
+# guards every planner cache read through cached(), and _IN_FLIGHT: the
+# push-down pool and concurrent corpus queries plan from several threads
 _TEMPLATE_LOCK = threading.Lock()
+# (id(cache), full key) -> future of the one miss computing that key
+_IN_FLIGHT: dict[tuple, Future] = {}
 
 
 def cached(cache: dict, dataset_tag: str | None, key: tuple, compute):
@@ -68,16 +75,36 @@ def cached(cache: dict, dataset_tag: str | None, key: tuple, compute):
     fixture version+scale, …); with no tag the cache is bypassed entirely
     — a table name alone is NOT a safe key when one process plans the same
     schema at several scales (scale-1 sketches silently reused for scale-2
-    would corrupt plan quality). ``compute`` runs outside the lock."""
+    would corrupt plan quality).
+
+    Single-flight: the first miss of a key computes it (outside the lock);
+    concurrent callers of that key wait for its result instead of running
+    the same Spark job again. If ``compute`` raises, every waiter gets the
+    exception and nothing is stored, so the next call computes again."""
     if dataset_tag is None:
         return compute()
     full = (dataset_tag, *key)
+    slot = (id(cache), full)
     with _TEMPLATE_LOCK:
         if full in cache:
             return cache[full]
-    value = compute()
+        fut = _IN_FLIGHT.get(slot)
+        owner = fut is None
+        if owner:
+            fut = _IN_FLIGHT[slot] = Future()
+    if not owner:
+        return fut.result()
+    try:
+        value = compute()
+    except BaseException as e:
+        with _TEMPLATE_LOCK:
+            del _IN_FLIGHT[slot]
+        fut.set_exception(e)
+        raise
     with _TEMPLATE_LOCK:
         cache[full] = value
+        del _IN_FLIGHT[slot]
+    fut.set_result(value)
     return value
 
 
@@ -135,13 +162,28 @@ def run_pushdown(
     # device — on a cluster, concurrent small jobs overlap their
     # scheduling latency)
     aliases = sorted(spec.tables, key=lambda a: base_counts[a])
+    # pool threads start without the caller's Spark local properties
+    # (pinned-thread mode): each task carries a copy of its job group,
+    # description and interrupt flag, so a job-group cancel and REST
+    # attribution reach the sketch builds too. One wrap per task: a wrap
+    # copies the properties once and installs that one object in every
+    # thread that runs it, where concurrent SQL executions would then
+    # overwrite each other's execution ids.
+    session = next(iter(base_tables.values())).sparkSession
+
+    def inherit(task):
+        wrap = inheritable_thread_target(session)
+        # without pinned threads (PYSPARK_PIN_THREAD=false) PySpark hands
+        # back the session instead of a wrapper: no per-thread context
+        return wrap(task) if callable(wrap) else task
+
+    tasks = [inherit(functools.partial(one_table, a)) for a in aliases]
     with ThreadPoolExecutor(max_workers=len(aliases)) as pool:
-        results = list(pool.map(one_table, aliases))
+        results = list(pool.map(lambda task: task(), tasks))
 
     for alias, count, sketches, filtered, selective in results:
         frames[alias] = filtered
         if selective:
-            frames[alias] = filtered.cache()
             materialized.add(alias)
         stats[alias] = TableStats(rows=count, sketches=sketches)
 

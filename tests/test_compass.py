@@ -8,6 +8,8 @@ size-descending fallback)."""
 from __future__ import annotations
 
 import collections
+import threading
+import time
 
 import numpy as np
 import pytest
@@ -131,7 +133,6 @@ def test_in_process_build_matches_distributed_on_job_visits(spark, monkeypatch):
     qids = [f"{i}a" for i in range(1, 9)]
     for qid in qids:
         opt.plan(corpus[qid], tables=tables, counts=counts, count_cache_tag=None)
-    spark.catalog.clearCache()
     assert len(visits) == sum(len(parse_join_query(corpus[q]).tables) for q in qids)
     for df, col_seeds, hint in visits:
         assert hint <= KEYS_PER_TASK
@@ -141,6 +142,118 @@ def test_in_process_build_matches_distributed_on_job_visits(spark, monkeypatch):
         assert sk_in.keys() == sk_dist.keys()
         for c in sk_in:
             assert np.array_equal(sk_in[c].counters, sk_dist[c].counters), c
+
+
+def test_pushdown_tasks_inherit_the_job_group(spark, monkeypatch):
+    """Every sketch build of a plan made under a job group runs in that
+    group, although the push-down pool runs it on another thread: a
+    job-group cancel (run_corpus's DNF timer) and REST attribution by
+    group reach the builds."""
+    from compass_query_optimizer_spark.plans import pushdown
+    from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
+    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
+
+    sc = spark.sparkContext
+    groups = []
+
+    def record(df, col_seeds, nrows_hint=None):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return build_sketches_arrow(df, col_seeds, nrows_hint=nrows_hint)
+
+    monkeypatch.setattr(pushdown, "build_sketches_arrow", record)
+    tables, counts = job_tables(spark, scale=1)
+    sql = load_corpus()["8a"]
+    sc.setJobGroup("g", "push-down job group", interruptOnCancel=True)
+    try:
+        CompassOptimizer(spark).plan(sql, tables=tables, counts=counts, count_cache_tag=None)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(groups) == len(parse_join_query(sql).tables)
+    assert groups == ["g"] * len(groups), groups
+
+
+def test_pushdown_runs_without_pinned_threads(spark, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(session)``
+    returns the session itself instead of a wrapper; push-down then runs
+    its tasks unwrapped and plans as before."""
+    from compass_query_optimizer_spark.plans import pushdown
+    from compass_query_optimizer_spark.plans.job_corpus import job_tables, load_corpus
+    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
+
+    tables, counts = job_tables(spark, scale=1)
+    sql = load_corpus()["1a"]
+    opt = CompassOptimizer(spark)
+    pinned = opt.plan(sql, tables=tables, counts=counts, count_cache_tag=None)
+    monkeypatch.setattr(pushdown, "inheritable_thread_target", lambda session: session)
+    unpinned = opt.plan(sql, tables=tables, counts=counts, count_cache_tag=None)
+    assert unpinned.search.order == pinned.search.order
+    assert {a: s.rows for a, s in unpinned.pushdown.stats.items()} == {
+        a: s.rows for a, s in pinned.pushdown.stats.items()
+    }
+
+
+def _two_callers(cache: dict, compute):
+    """Run ``pushdown.cached`` on one key of ``cache`` from two threads.
+    The second caller starts once the first is inside ``compute``; the
+    first ``compute`` call is held until the second caller computes too or
+    has had a second to reach the cache. Returns (per-caller result or
+    exception, number of compute calls)."""
+    from compass_query_optimizer_spark.plans import pushdown
+
+    entered, release = threading.Event(), threading.Event()
+    calls = []
+
+    def counted():
+        calls.append(1)
+        if len(calls) == 1:
+            entered.set()
+            assert release.wait(30)
+        return compute()
+
+    out = [None, None]
+
+    def caller(i):
+        try:
+            out[i] = pushdown.cached(cache, "tag", ("key",), counted)
+        except Exception as e:  # handed back for the test to inspect
+            out[i] = e
+
+    first = threading.Thread(target=caller, args=(0,))
+    first.start()
+    assert entered.wait(30)
+    second = threading.Thread(target=caller, args=(1,))
+    second.start()
+    deadline = time.monotonic() + 1.0
+    while len(calls) < 2 and time.monotonic() < deadline:
+        time.sleep(0.01)
+    release.set()
+    first.join(30)
+    second.join(30)
+    return out, len(calls)
+
+
+def test_cached_builds_each_key_once_for_concurrent_callers():
+    """Single-flight: a caller that misses a key another caller is already
+    computing waits for that result instead of computing it again."""
+    out, calls = _two_callers({}, object)
+    assert calls == 1
+    assert out[0] is out[1] and out[0] is not None
+
+
+def test_cached_hands_a_failure_to_every_waiter_and_stores_nothing():
+    from compass_query_optimizer_spark.plans import pushdown
+
+    def boom():
+        raise RuntimeError("sketch build failed")
+
+    cache: dict = {}
+    out, calls = _two_callers(cache, boom)
+    assert calls == 1
+    assert all(isinstance(e, RuntimeError) for e in out), out
+    assert cache == {}
+    # nothing stored and nothing left in flight: the next call computes
+    assert pushdown.cached(cache, "tag", ("key",), lambda: 7) == 7
+    assert cache == {("tag", "key"): 7}
 
 
 def test_build_routes_on_the_one_task_bound(spark, monkeypatch):

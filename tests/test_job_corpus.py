@@ -88,6 +88,54 @@ def test_warm_pass_runs_the_key_ndv_probes(spark, monkeypatch):
     assert "cast_info" in probed, optimizer._KEY_NDV_CACHE
 
 
+def test_warm_pass_builds_each_template_once(spark, monkeypatch):
+    """Concurrent plans that miss the same template key share one sketch
+    build: warming the whole corpus builds exactly one sketch per
+    template entry it leaves behind."""
+    from compass_query_optimizer_spark.fixtures import FIXTURE_VERSION
+    from compass_query_optimizer_spark.plans import pushdown
+    from compass_query_optimizer_spark.plans.job_corpus import warm_corpus_templates
+
+    build = pushdown.build_sketches_arrow
+    builds = []
+
+    def record(*args, **kwargs):
+        builds.append(1)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(pushdown, "build_sketches_arrow", record)
+    monkeypatch.setattr(pushdown, "_TEMPLATE_CACHE", {})
+    warm_corpus_templates(spark, scale=1)
+    tag = f"mini_imdb_v{FIXTURE_VERSION}_x1"
+    keys = [k for k in pushdown._TEMPLATE_CACHE if k[0] == tag]
+    assert len(keys) > 100
+    assert len(builds) == len(keys)
+
+
+def test_pushdown_leaves_no_session_state(spark, oracle_counts):
+    """Planning and collecting JOB 1a-8a, selective tables included,
+    caches no DataFrame and persists no RDD: a selective table is a lazy
+    filter broadcast into its own query's chain."""
+    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
+
+    # start from an empty cache manager whatever earlier tests cached
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keys())
+    tables, counts = job_tables(spark, scale=1)
+    corpus = load_corpus()
+    opt = CompassOptimizer(spark)
+    selective = 0
+    for qid in [f"{i}a" for i in range(1, 9)]:
+        plan = opt.plan(corpus[qid], tables=tables, counts=counts, count_cache_tag=None)
+        selective += len(plan.pushdown.materialized)
+        got = opt.build_count_join(plan).collect()[0]["cnt"]
+        assert got == oracle_counts[qid], qid
+    assert selective > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(jsc.getPersistentRDDs().keys()) == persisted
+
+
 def test_fallback_mode_same_answers(spark, oracle_counts):
     """Join order must never change semantics: the size-descending
     fallback order returns identical counts on a sample."""
