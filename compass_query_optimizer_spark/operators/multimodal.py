@@ -329,46 +329,6 @@ def mm_payload_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return featurize(payloads_from_documents(t["documents"])).orderBy("doc_id")
 
 
-def extract_features_arrow(batches):
-    """mapInArrow worker: the same features as :func:`extract_features`
-    computed directly on pyarrow RecordBatches — no Arrow→pandas→Arrow
-    conversion, so per-batch overhead drops to the hash loop itself. The
-    preferred boundary when payload batches are large (media bytes):
-    pandas would copy every binary cell into Python objects; pyarrow
-    buffers are zero-copy views."""
-    import hashlib
-
-    import pyarrow as pa
-
-    for batch in batches:
-        payload = batch.column(batch.schema.get_field_index("payload"))
-        lens = pa.compute.binary_length(payload).cast(pa.int32())
-        md5s = pa.array(
-            [hashlib.md5(v.as_py()).hexdigest() for v in payload], pa.string()
-        )
-        n_frames = pa.compute.cast(
-            pa.compute.divide(
-                pa.compute.add(pa.compute.cast(lens, pa.int64()), 63), 64
-            ),
-            pa.int32(),
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column(batch.schema.get_field_index("doc_id")),
-                batch.column(batch.schema.get_field_index("kind")),
-                lens,
-                md5s,
-                n_frames,
-            ],
-            names=["doc_id", "kind", "payload_len", "payload_md5", "n_frames"],
-        )
-
-
-def featurize_arrow(payloads: DataFrame) -> DataFrame:
-    """Arrow-native twin of :func:`featurize` via mapInArrow."""
-    return payloads.mapInArrow(extract_features_arrow, schema=FEATURE_SCHEMA)
-
-
 # End-to-end proof the native image decoder runs inside the pipeline:
 # each doc becomes a REAL P6 (PPM) payload whose pixel bytes are
 # repeat(md5(text), 36) — 1,152 ASCII bytes, exactly 24x16 RGB — so the

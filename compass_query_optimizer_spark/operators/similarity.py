@@ -269,9 +269,9 @@ IVF_INCR_MAX_K = 4096  # coarse-codebook cap (incremental + ivfpq auto-K)
 # A collect fetches at most cap + 1 rows, so the cap bounds the driver
 # even when a table is far over it.
 _CENT_COLLECT_CAP = 65536
-# bound on the codebook arrays a fused IVFPQ closure carries to every task
-# (coarse plus sub-codebooks, int64 and float64 copies): the clamped
-# coarse K=4096 at dim 64 holds 4 MB of it
+# bound on the codebook arrays an Arrow kernel's closure carries to every
+# task (coarse and/or sub-codebooks, int64 and float64 copies): the
+# clamped coarse K=4096 at dim 64 holds 4 MB of it
 _CLOSURE_BYTES_CAP = 64 << 20
 # float64 represents every integer below 2^53; scores are held under
 # 2^52 so each product, partial sum and the final ‖c‖² − 2x·c are exact
@@ -341,6 +341,19 @@ def _collect_centroids(cents: DataFrame) -> _Codebook:
     return _codebook([r["cid"] for r in rows], [list(r["cv"]) for r in rows])
 
 
+def _check_closure_bytes(books: list[_Codebook]) -> None:
+    """Raise when the codebook arrays a task closure would carry exceed
+    :data:`_CLOSURE_BYTES_CAP`."""
+    nbytes = sum(
+        a.nbytes for b in books for a in (b.ids, b.mat, b.mat_f, b.norm2)
+    )
+    if nbytes > _CLOSURE_BYTES_CAP:
+        raise ValueError(
+            f"codebooks hold {nbytes} bytes, over the closure bound "
+            f"{_CLOSURE_BYTES_CAP}"
+        )
+
+
 def nearest_cells(
     df: DataFrame,
     cents: DataFrame,
@@ -365,6 +378,7 @@ def nearest_cells(
     import numpy as np
 
     book = _collect_centroids(cents)
+    _check_closure_bytes([book])
     take = min(nprobe, len(book.ids))
     # chunk rows so the chunk×K score matrix stays ~32 MB per task
     chunk = max(1, (1 << 22) // max(len(book.ids), 1))
@@ -459,6 +473,7 @@ def pq_codes_arrow(
     import numpy as np
 
     books = _collect_subcodebooks(cents, cent_id_col, cent_vec_col)
+    _check_closure_bytes(books)
     n_sub = len(books)
     s_tile = np.arange(n_sub, dtype=np.int32)
 
@@ -492,19 +507,6 @@ def pq_codes_arrow(
     return df.select(*id_cols, vec_col).mapInPandas(
         encode, schema=f"{id_schema}, s int, code long"
     )
-
-
-def _check_closure_bytes(books: list[_Codebook]) -> None:
-    """Raise when the codebook arrays a task closure would carry exceed
-    :data:`_CLOSURE_BYTES_CAP`."""
-    nbytes = sum(
-        a.nbytes for b in books for a in (b.ids, b.mat, b.mat_f, b.norm2)
-    )
-    if nbytes > _CLOSURE_BYTES_CAP:
-        raise ValueError(
-            f"codebooks hold {nbytes} bytes, over the closure bound "
-            f"{_CLOSURE_BYTES_CAP}"
-        )
 
 
 def ivfpq_assign_encode_arrow(

@@ -104,10 +104,10 @@ def _exact_distinct(col):
     return F.count_distinct(col).cast("long")
 
 
-# One row per measure_op of the eager measure algebra:
+# One row per measure op of the eager measure algebra:
 #   seed   per-table collapse aggregate of the measure column
 #   reagg  chain re-aggregation of the riding channel (the shrink step)
-#   final  final aggregate -> agg_val (SQL semantics: NULL over the empty
+#   final  final aggregate -> agg_val{i} (SQL semantics: NULL over the empty
 #          join for sum/min/max/sum_distinct, 0 for the counts)
 #   raw    the same aggregate over the raw join (execute_count(eager=False))
 #   scaled class-1 rider: multiplied by the partner multiplicity at each
@@ -162,10 +162,21 @@ _MEASURES = {
 _ROUTED = ("count_distinct_auto", "count_distinct_bitmap")
 
 
-def _measure_op(op: str) -> _MeasureOp:
-    if op not in _MEASURES:
-        raise ValueError(f"unsupported measure_op {op!r}")
-    return _MEASURES[op]
+def _sole_routed(measures: list[tuple[str, str, str]]) -> tuple[str, str, str] | None:
+    """Check every op of a measure list and return its plan-time routed
+    carrier (count_distinct_auto / count_distinct_bitmap), if any. A routed
+    carrier must be the list's only measure: its stats job and EXPLAIN
+    record are per-plan."""
+    for _, _, op in measures:
+        if op not in _MEASURES:
+            raise ValueError(f"unsupported measure op {op!r}")
+    routed = [m for m in measures if m[2] in _ROUTED]
+    if routed and len(measures) > 1:
+        raise ValueError(
+            "auto/bitmap distinct routing is single-measure — its "
+            "plan-time stats job and EXPLAIN record are per-plan"
+        )
+    return routed[0] if routed else None
 
 
 def _rewrite_residual(
@@ -337,7 +348,7 @@ class CompassOptimizer:
         skips the base-cardinality jobs; ``use_fallback`` forces the
         size-descending order (MapD's default heuristic) for A/B runs.
         ``outer``: aliases joined LEFT OUTER (see JoinQuerySpec.outer) —
-        rides programmatically like group_by/measure because the parsed
+        rides programmatically like group_by/measures because the parsed
         text stays the reference's conjunctive inner shape."""
         spec = (
             parse_join_query(spec_or_sql)
@@ -435,8 +446,6 @@ class CompassOptimizer:
         physical: bool = False,
         count: bool = False,
         group_by: list[tuple[str, str]] | None = None,
-        measure: tuple[str, str] | None = None,
-        measure_op: str = "sum",
         measures: list[tuple[str, str, str]] | None = None,
     ) -> str:
         """Human-readable plan report — the engine's analog of the
@@ -450,8 +459,8 @@ class CompassOptimizer:
         built chain (the whole-stage-codegen / exchange view — the analog
         of the reference's IR dump); ``count=True`` dumps the
         eager-aggregation count plan (:meth:`build_count_join`) instead
-        of the row-producing join, with ``measure``/``measure_op``/
-        ``group_by`` selecting the measure-algebra variant so the eager
+        of the row-producing join, with ``measures``/``group_by``
+        selecting the measure-algebra variant so the eager
         SUM/MIN/MAX/COUNT-DISTINCT/AVG plans are inspectable."""
         order_syms = [
             f"⟕ {a}" if a in plan.spec.outer else a for a in plan.search.order
@@ -493,14 +502,10 @@ class CompassOptimizer:
         if count:
             # the eager-algebra report line: which variant of the
             # multiplicity chain the plan executes
-            desc = "count(*)"
-            if measure is not None:
-                desc = f"{measure_op}({measure[0]}.{measure[1]}) + count(*)"
-            elif measures:
-                desc = (
-                    " + ".join(f"{op}({al}.{col})" for al, col, op in measures)
-                    + " + count(*)  [one chain, one channel per measure]"
-                )
+            measures = measures or []
+            desc = " + ".join(
+                [f"{op}({al}.{col})" for al, col, op in measures] + ["count(*)"]
+            )
             if group_by:
                 desc += " group by " + ", ".join(
                     f"{al}.{col}" for al, col in group_by
@@ -508,14 +513,14 @@ class CompassOptimizer:
             lines.append(
                 f"  eager aggregation: {desc} via multiplicity chain"
                 " (tables collapse to (keys → cnt"
-                + (", agg)" if measure is not None else ")")
+                + (", one channel per measure)" if measures else ")")
                 + "; join rows never materialize)"
             )
-            if measure is not None and measure_op in (
-                "count_distinct_auto",
-                "count_distinct_bitmap",
-            ):
-                route, _ = self._resolve_distinct_route(plan, measure, measure_op)
+            routed = _sole_routed(measures)
+            if routed:
+                route, _ = self._resolve_distinct_route(
+                    plan, routed[:2], routed[2]
+                )
                 info = plan.extras["distinct_route"]
                 lines.append(
                     f"  count-distinct route: {route}"
@@ -534,10 +539,7 @@ class CompassOptimizer:
             )
         if physical:
             df = (
-                self.build_count_join(
-                    plan, group_by=group_by, measure=measure,
-                    measure_op=measure_op, measures=measures,
-                )
+                self.build_count_join(plan, group_by=group_by, measures=measures)
                 if count
                 else self.build_join(plan)
             )
@@ -675,8 +677,6 @@ class CompassOptimizer:
         self,
         plan: CompassPlan,
         group_by: list[tuple[str, str]] | None = None,
-        measure: tuple[str, str] | None = None,
-        measure_op: str = "sum",
         measures: list[tuple[str, str, str]] | None = None,
     ) -> DataFrame:
         """COUNT(*) of the join via eager aggregation (Yan & Larson,
@@ -703,8 +703,13 @@ class CompassOptimizer:
         many-way join still never materializes join rows. Output columns
         are the bare column names plus ``cnt``.
 
-        ``measure``: optional (alias, col) — generalizes the algebra from
-        COUNT(*) to ``measure_op``(alias.col):
+        ``measures``: optional [(alias, col, op), ...] — riding aggregates
+        that generalize the algebra from COUNT(*) to op(alias.col). Every
+        measure carries its own channel(s) through the same joins and
+        re-aggregations, so ``SELECT SUM(x), MIN(y), MAX(y), COUNT(*)
+        GROUP BY g`` over a multi-way join costs one planning pass and one
+        chain. Output columns are ``agg_val0..agg_valN`` in list order,
+        then ``cnt``. The ops:
 
         - ``sum`` (Yan & Larson's class-1): the measure table collapses
           to (keys → cnt, Σ col), every OTHER table still collapses to
@@ -712,7 +717,7 @@ class CompassOptimizer:
           ``__cnt`` — multiplied by the partner's multiplicity at each
           join, summed at each re-aggregation. SUM over the join ==
           Σ(per-key sums × Π other multiplicities) exactly. AVG follows
-          for free as agg_val / cnt.
+          for free as the sum's agg_val{i} / cnt.
         - ``min`` / ``max`` (class-2, duplicate-insensitive): the measure
           table collapses to per-key extremes; partner multiplicities are
           irrelevant, so the chain carries ``__agg`` through joins
@@ -743,43 +748,22 @@ class CompassOptimizer:
           one executor at scale.
 
         sum/min/max yield NULL over the empty join, count_distinct yields
-        0 (SQL semantics), matching the plain plan. Adds ``agg_val``
-        before ``cnt`` to the output.
-
-        ``measures``: optional [(alias, col, op), ...] — SEVERAL riding
-        measures in ONE chain pass (mutually exclusive with ``measure``).
-        Each measure carries its own channel(s) through the same joins
-        and re-aggregations, so ``SELECT SUM(x), MIN(y), MAX(y), COUNT(*)
-        GROUP BY g`` over a multi-way join costs one planning pass and
-        one chain instead of one chain per aggregate. Output columns are
-        ``agg_val0..agg_valN`` in declaration order, then ``cnt``. The
-        plan-time routed carriers (auto/bitmap) stay single-measure —
-        their stats job and EXPLAIN record are per-plan.
+        0 (SQL semantics), matching the plain plan. The plan-time routed
+        carriers (auto/bitmap) must be the list's only measure — their
+        stats job and EXPLAIN record are per-plan.
         """
         spec = plan.spec
         order = plan.search.order
 
-        if measures is not None and measure is not None:
-            raise ValueError("pass either measure or measures, not both")
-        single = measures is None
-        if single:
-            measures = [(measure[0], measure[1], measure_op)] if measure else []
+        measures = measures or []
         # count_distinct_auto / count_distinct_bitmap resolve to a concrete
         # carrier from plan-time measure stats (the reference's switch)
         bitmap: dict = {}
-        if single and measures and measures[0][2] in _ROUTED:
-            mal, mcol, _ = measures[0]
-            routed_op, bitmap = self._resolve_distinct_route(
-                plan, (mal, mcol), measures[0][2]
-            )
+        routed = _sole_routed(measures)
+        if routed:
+            mal, mcol, op = routed
+            routed_op, bitmap = self._resolve_distinct_route(plan, (mal, mcol), op)
             measures = [(mal, mcol, routed_op)]
-        for _, _, op in measures:
-            _measure_op(op)
-            if not single and op in _ROUTED:
-                raise ValueError(
-                    "auto/bitmap distinct routing is single-measure — its "
-                    "plan-time stats job and EXPLAIN record are per-plan"
-                )
         # each riding measure may span several physical columns (one per
         # bitmap word); every chain step below treats channels uniformly
         channels: list[list[str]] = [
@@ -966,7 +950,7 @@ class CompassOptimizer:
         joined = _post_filter(joined, spec)
         final_aggs = []
         for i, (_, _, mop) in enumerate(measures):
-            out = "agg_val" if single else f"agg_val{i}"
+            out = f"agg_val{i}"
             if mop == "count_distinct_bitmap":
                 final_aggs.append(_bitmap_final(channels[i]).alias(out))
             else:
@@ -990,8 +974,6 @@ class CompassOptimizer:
         count_cache_tag: str | None = None,
         eager: bool = True,
         group_by: list[tuple[str, str]] | None = None,
-        measure: tuple[str, str] | None = None,
-        measure_op: str = "sum",
         outer: set[str] | None = None,
         measures: list[tuple[str, str, str]] | None = None,
     ) -> DataFrame:
@@ -1005,9 +987,8 @@ class CompassOptimizer:
         10 it turns every raw-join DNF — counts up to the trillions (31c ≈
         5.4e12) — into ~1-second answers. ``group_by`` [(alias, col), ...]
         computes the grouped form (bare column names + ``cnt``).
-        ``measure`` (alias, col) adds ``measure_op``(alias.col) — sum,
-        min, or max — as ``agg_val`` through the same algebra (see
-        :meth:`build_count_join`)."""
+        ``measures`` [(alias, col, op), ...] adds op(alias.col) as
+        ``agg_val{i}`` on both paths (see :meth:`build_count_join`)."""
         plan = self.plan(
             spec_or_sql,
             sf_dir,
@@ -1018,22 +999,14 @@ class CompassOptimizer:
             outer=outer,
         )
         if eager:
-            return self.build_count_join(
-                plan,
-                group_by=group_by,
-                measure=measure,
-                measure_op=measure_op,
-                measures=measures,
-            )
+            return self.build_count_join(plan, group_by=group_by, measures=measures)
         joined = self.build_join(plan)
 
-        if measure is not None:
-            measures = [(measure[0], measure[1], measure_op)]
+        measures = measures or []
+        _sole_routed(measures)
         aggs = [
-            _measure_op(mop)
-            .raw(F.col(f"{mal}__{mcol}"))
-            .alias("agg_val" if measure is not None else f"agg_val{i}")
-            for i, (mal, mcol, mop) in enumerate(measures or ())
+            _MEASURES[mop].raw(F.col(f"{mal}__{mcol}")).alias(f"agg_val{i}")
+            for i, (mal, mcol, mop) in enumerate(measures)
         ]
         if group_by:
             return joined.groupBy(

@@ -170,10 +170,10 @@ def compass_sum_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
     df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL, sf_dir, measure=("l", "l_extendedprice")
+        GROUPED_COUNT_SQL, sf_dir, measures=[("l", "l_extendedprice", "sum")]
     )
     return df.select(
-        F.round(F.col("agg_val").cast("double"), 2).alias("sum_rev"), "cnt"
+        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_rev"), "cnt"
     )
 
 
@@ -195,11 +195,11 @@ def compass_grouped_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUPED_COUNT_SQL,
         sf_dir,
         group_by=[("n", "n_name")],
-        measure=("l", "l_extendedprice"),
+        measures=[("l", "l_extendedprice", "sum")],
     )
     return df.select(
         "n_name",
-        F.round(F.col("agg_val").cast("double"), 2).alias("sum_rev"),
+        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_rev"),
         "cnt",
     ).orderBy("n_name")
 
@@ -230,11 +230,11 @@ def compass_avg_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
     df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL, sf_dir, measure=("l", "l_extendedprice")
+        GROUPED_COUNT_SQL, sf_dir, measures=[("l", "l_extendedprice", "sum")]
     )
     return df.select(
         F.round(
-            (F.col("agg_val") / F.col("cnt")).cast("double"), 2
+            (F.col("agg_val0") / F.col("cnt")).cast("double"), 2
         ).alias("avg_price"),
         "cnt",
     )
@@ -282,10 +282,9 @@ def compass_count_distinct_multijoin(spark: SparkSession, sf_dir: str) -> DataFr
     df = CompassOptimizer(spark).execute_count(
         GROUPED_COUNT_SQL,
         sf_dir,
-        measure=("c", "c_nationkey"),
-        measure_op="count_distinct",
+        measures=[("c", "c_nationkey", "count_distinct")],
     )
-    return df.select(F.col("agg_val").alias("nd_nation"), "cnt")
+    return df.select(F.col("agg_val0").alias("nd_nation"), "cnt")
 
 
 @query(
@@ -306,11 +305,10 @@ def compass_grouped_count_distinct(spark: SparkSession, sf_dir: str) -> DataFram
         GROUPED_COUNT_SQL,
         sf_dir,
         group_by=[("n", "n_name")],
-        measure=("c", "c_custkey"),
-        measure_op="count_distinct",
+        measures=[("c", "c_custkey", "count_distinct")],
     )
     return df.select(
-        "n_name", F.col("agg_val").alias("nd_cust"), "cnt"
+        "n_name", F.col("agg_val0").alias("nd_cust"), "cnt"
     ).orderBy("n_name")
 
 
@@ -337,7 +335,8 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     "(~KB at any cardinality — the scale path where the exact class-3 "
     "set grows with distinct count), sketches union at re-aggregations, "
     "the final estimate is rsd-bounded. Gate = exact count (both "
-    "engines agree) + |estimate − exact| ≤ 3·rsd·exact, the "
+    "engines agree; the exact set rides the same chain as a second "
+    "measure) + |estimate − exact| ≤ 3·rsd·exact, the "
     "q11_approx_count_distinct acceptance pattern",
     tags=("compass", "join", "count_distinct", "approx", "sketch"),
 )
@@ -347,19 +346,20 @@ def compass_count_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
     rsd = 1.04 / (2**12) ** 0.5  # default lgConfigK=12
-    opt = CompassOptimizer(spark)
-    plan = opt.plan(GROUPED_COUNT_SQL, sf_dir)
-    approx = opt.build_count_join(
-        plan, measure=("c", "c_custkey"), measure_op="count_distinct_hll"
-    ).select(F.col("agg_val").alias("approx_nd"))
-    exact = opt.build_count_join(
-        plan, measure=("c", "c_custkey"), measure_op="count_distinct"
-    ).select(F.col("agg_val").alias("exact_nd"))
-    return exact.crossJoin(approx).select(
-        "exact_nd",
+    # one chain carries both carriers: the exact set and the sketch
+    df = CompassOptimizer(spark).execute_count(
+        GROUPED_COUNT_SQL,
+        sf_dir,
+        measures=[
+            ("c", "c_custkey", "count_distinct"),
+            ("c", "c_custkey", "count_distinct_hll"),
+        ],
+    )
+    return df.select(
+        F.col("agg_val0").alias("exact_nd"),
         (
-            F.abs(F.col("approx_nd") - F.col("exact_nd"))
-            <= 3 * rsd * F.col("exact_nd")
+            F.abs(F.col("agg_val1") - F.col("agg_val0"))
+            <= 3 * rsd * F.col("agg_val0")
         ).alias("within_rsd"),
     )
 
@@ -403,12 +403,14 @@ def compass_count_distinct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     rsd = 1.04 / (2**12) ** 0.5  # Datasketches HLL default lgConfigK=12
     opt = CompassOptimizer(spark)
     plan = opt.plan(GROUPED_COUNT_SQL, sf_dir)
+    # a routed carrier must be its chain's only measure, so the exact
+    # count rides a second chain over the same plan
     routed = opt.build_count_join(
-        plan, measure=("o", "o_orderkey"), measure_op="count_distinct_auto"
-    ).select(F.col("agg_val").alias("routed_nd"))
+        plan, measures=[("o", "o_orderkey", "count_distinct_auto")]
+    ).select(F.col("agg_val0").alias("routed_nd"))
     exact = opt.build_count_join(
-        plan, measure=("o", "o_orderkey"), measure_op="count_distinct"
-    ).select(F.col("agg_val").alias("exact_nd"))
+        plan, measures=[("o", "o_orderkey", "count_distinct")]
+    ).select(F.col("agg_val0").alias("exact_nd"))
     return exact.crossJoin(routed).select(
         "exact_nd",
         (
@@ -449,10 +451,9 @@ def compass_count_distinct_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame
     df = CompassOptimizer(spark).execute_count(
         GROUPED_COUNT_SQL,
         sf_dir,
-        measure=("c", "c_nationkey"),
-        measure_op="count_distinct_bitmap",
+        measures=[("c", "c_nationkey", "count_distinct_bitmap")],
     )
-    return df.select(F.col("agg_val").alias("nd_nation"), "cnt")
+    return df.select(F.col("agg_val0").alias("nd_nation"), "cnt")
 
 
 GROUPED_AUTO_DISTINCT_ORACLE = """
@@ -491,11 +492,10 @@ def compass_grouped_distinct_auto(spark: SparkSession, sf_dir: str) -> DataFrame
         GROUPED_COUNT_SQL,
         sf_dir,
         group_by=[("n", "n_name")],
-        measure=("c", "c_custkey"),
-        measure_op="count_distinct_auto",
+        measures=[("c", "c_custkey", "count_distinct_auto")],
     )
     return df.select(
-        "n_name", F.col("agg_val").cast("long").alias("nd_cust"), "cnt"
+        "n_name", F.col("agg_val0").cast("long").alias("nd_cust"), "cnt"
     ).orderBy("n_name")
 
 
@@ -530,11 +530,10 @@ def compass_sum_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = CompassOptimizer(spark).execute_count(
         GROUPED_COUNT_SQL,
         sf_dir,
-        measure=("c", "c_acctbal"),
-        measure_op="sum_distinct",
+        measures=[("c", "c_acctbal", "sum_distinct")],
     )
     return df.select(
-        F.round(F.col("agg_val").cast("double"), 2).alias("sum_bal"), "cnt"
+        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_bal"), "cnt"
     )
 
 
@@ -564,20 +563,19 @@ def compass_minmax_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
-    # plan ONCE (push-down counts + sketches + order search), then build
-    # both extreme chains from the shared plan — execute_count per op
-    # would repeat the whole planning pass
-    opt = CompassOptimizer(spark)
-    plan = opt.plan(GROUPED_COUNT_SQL, sf_dir)
-    lo = opt.build_count_join(
-        plan, measure=("l", "l_extendedprice"), measure_op="min"
-    ).select(
-        F.round(F.col("agg_val").cast("double"), 2).alias("min_price"), "cnt"
+    df = CompassOptimizer(spark).execute_count(
+        GROUPED_COUNT_SQL,
+        sf_dir,
+        measures=[
+            ("l", "l_extendedprice", "min"),
+            ("l", "l_extendedprice", "max"),
+        ],
     )
-    hi = opt.build_count_join(
-        plan, measure=("l", "l_extendedprice"), measure_op="max"
-    ).select(F.round(F.col("agg_val").cast("double"), 2).alias("max_price"))
-    return lo.crossJoin(hi).select("min_price", "max_price", "cnt")
+    return df.select(
+        F.round(F.col("agg_val0").cast("double"), 2).alias("min_price"),
+        F.round(F.col("agg_val1").cast("double"), 2).alias("max_price"),
+        "cnt",
+    )
 
 
 GROUPED_MINMAX_ORACLE = """
@@ -601,7 +599,7 @@ ORDER BY n.n_name
     "keys, per-key extremes stay multiplicity-free across re-aggregations "
     "— completes the grouped-measure symmetry (grouped COUNT / SUM / "
     "COUNT-DISTINCT / MIN-MAX all execute through the same planned chain). "
-    "One planning pass feeds both extreme chains, joined on the group key",
+    "Both extremes ride one chain, one channel each",
     tags=("compass", "join", "minmax", "grouped"),
 )
 def compass_grouped_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,28 +607,20 @@ def compass_grouped_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
-    opt = CompassOptimizer(spark)
-    plan = opt.plan(GROUPED_COUNT_SQL, sf_dir)
-    lo = opt.build_count_join(
-        plan,
+    df = CompassOptimizer(spark).execute_count(
+        GROUPED_COUNT_SQL,
+        sf_dir,
         group_by=[("n", "n_name")],
-        measure=("l", "l_extendedprice"),
-        measure_op="min",
-    ).select(
+        measures=[
+            ("l", "l_extendedprice", "min"),
+            ("l", "l_extendedprice", "max"),
+        ],
+    )
+    return df.select(
         "n_name",
-        F.round(F.col("agg_val").cast("double"), 2).alias("min_price"),
+        F.round(F.col("agg_val0").cast("double"), 2).alias("min_price"),
+        F.round(F.col("agg_val1").cast("double"), 2).alias("max_price"),
         "cnt",
-    )
-    hi = opt.build_count_join(
-        plan,
-        group_by=[("n", "n_name")],
-        measure=("l", "l_extendedprice"),
-        measure_op="max",
-    ).select(
-        "n_name", F.round(F.col("agg_val").cast("double"), 2).alias("max_price")
-    )
-    return lo.join(hi, "n_name").select(
-        "n_name", "min_price", "max_price", "cnt"
     ).orderBy("n_name")
 
 
@@ -638,7 +628,7 @@ def compass_grouped_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate push-down to outer joins; the reference executes LEFT joins as
 # levels of the same left-deep chain, RelAlgExecutor.cpp:2635-2644
 # left_deep_join_types). The planner text stays the conjunctive inner
-# shape; the outer alias rides programmatically like group_by/measure, and
+# shape; the outer alias rides programmatically like group_by/measures, and
 # its per-alias filter is ON-clause semantics (pre-join — a WHERE filter
 # on the nullable side would silently turn the join inner).
 LEFT_OUTER_SQL = """
@@ -691,11 +681,11 @@ def compass_count_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = CompassOptimizer(spark).execute_count(
         LEFT_OUTER_SQL,
         sf_dir,
-        measure=("o", "o_totalprice"),
+        measures=[("o", "o_totalprice", "sum")],
         outer={"o"},
     )
     return df.select(
-        F.round(F.col("agg_val").cast("double"), 2).alias("sum_open"), "cnt"
+        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_open"), "cnt"
     )
 
 
@@ -724,8 +714,7 @@ def compass_grouped_count_left_outer(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-# Several riding measures in ONE chain pass: compass_grouped_minmax runs
-# one chain per extreme and joins the results; the multi-measure chain
+# Several riding measures in ONE chain pass: the multi-measure chain
 # carries every aggregate's channel through the SAME joins and
 # re-aggregations, so SUM + MIN + MAX + COUNT over the 4-way join costs
 # one planning pass and one scan of each table.

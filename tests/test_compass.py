@@ -419,14 +419,14 @@ def test_explain_report(spark):
     # the measure-op variants are inspectable through the same surface
     # (round-6 verdict #3: the algebra claim must be EXPLAIN-visible)
     m = opt.explain(
-        plan, count=True, measure=("lineitem", "l_extendedprice"),
-        measure_op="sum", group_by=[("orders", "o_orderstatus")],
+        plan, count=True, measures=[("lineitem", "l_extendedprice", "sum")],
+        group_by=[("orders", "o_orderstatus")],
     )
     assert "eager aggregation: sum(lineitem.l_extendedprice) + count(*)" in m
     assert "group by orders.o_orderstatus" in m
     mcd = opt.explain(
         plan, physical=True, count=True,
-        measure=("lineitem", "l_extendedprice"), measure_op="count_distinct",
+        measures=[("lineitem", "l_extendedprice", "count_distinct")],
     )
     assert "count_distinct(lineitem.l_extendedprice)" in mcd
     # the set-valued chain really is in the physical plan (collect_set
@@ -480,9 +480,9 @@ def test_distinct_routes_agree_on_the_answer(spark):
     m = ("c", "c_nationkey")
     vals = {}
     for op in ("count_distinct", "count_distinct_bitmap", "count_distinct_hll"):
-        vals[op] = opt.build_count_join(plan, measure=m, measure_op=op).collect()[
+        vals[op] = opt.build_count_join(plan, measures=[(*m, op)]).collect()[
             0
-        ]["agg_val"]
+        ]["agg_val0"]
     assert vals["count_distinct_bitmap"] == vals["count_distinct"]
     rsd = 1.04 / (2**12) ** 0.5
     assert abs(vals["count_distinct_hll"] - vals["count_distinct"]) <= (
@@ -490,14 +490,13 @@ def test_distinct_routes_agree_on_the_answer(spark):
     )
     # grouped bitmap: per-nation distinct nationkey is exactly 1
     grouped = opt.build_count_join(
-        plan, group_by=[("n", "n_name")], measure=m,
-        measure_op="count_distinct_bitmap",
+        plan, group_by=[("n", "n_name")],
+        measures=[(*m, "count_distinct_bitmap")],
     ).collect()
-    assert len(grouped) == 25 and all(r["agg_val"] == 1 for r in grouped)
+    assert len(grouped) == 25 and all(r["agg_val0"] == 1 for r in grouped)
     with pytest.raises(ValueError, match="bitmap"):
         opt.build_count_join(
-            plan, measure=("o", "o_orderstatus"),
-            measure_op="count_distinct_bitmap",
+            plan, measures=[("o", "o_orderstatus", "count_distinct_bitmap")]
         )
 
 
@@ -510,15 +509,14 @@ def test_distinct_route_explain_surface(spark):
     opt = CompassOptimizer(spark)
     plan = opt.plan(GROUPED_COUNT_SQL, SF)
     txt = opt.explain(
-        plan, count=True, measure=("c", "c_nationkey"),
-        measure_op="count_distinct_auto",
+        plan, count=True, measures=[("c", "c_nationkey", "count_distinct_auto")]
     )
     assert "count-distinct route: count_distinct_bitmap" in txt
     assert "ndv≈" in txt and "range=[0, 24]" in txt
     # and the bitmap chain is real in the physical plan: bit_or partials
     phys = opt.explain(
-        plan, physical=True, count=True, measure=("c", "c_nationkey"),
-        measure_op="count_distinct_bitmap",
+        plan, physical=True, count=True,
+        measures=[("c", "c_nationkey", "count_distinct_bitmap")],
     )
     assert "bit_or" in phys and "collect_set" not in phys
 
@@ -531,20 +529,18 @@ def test_left_outer_eager_matches_raw_join(spark):
     from compass_query_optimizer_spark.plans.queries import LEFT_OUTER_SQL
 
     opt = CompassOptimizer(spark)
+    ms = [("o", "o_totalprice", "sum")]
     eager = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_totalprice"), outer={"o"}
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}
     ).collect()[0]
     raw = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_totalprice"), outer={"o"},
-        eager=False,
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}, eager=False
     ).collect()[0]
     assert eager["cnt"] == raw["cnt"] > 0
-    assert abs(float(eager["agg_val"]) - float(raw["agg_val"])) < 1e-6
+    assert abs(float(eager["agg_val0"]) - float(raw["agg_val0"])) < 1e-6
     # the fixture must exercise null extension: COUNT(*) of the outer join
     # strictly exceeds the matched-only inner count
-    inner = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_totalprice")
-    ).collect()[0]
+    inner = opt.execute_count(LEFT_OUTER_SQL, SF, measures=ms).collect()[0]
     assert eager["cnt"] > 0 and inner["cnt"] != eager["cnt"]
 
 
@@ -591,15 +587,15 @@ def test_left_outer_inner_measure_scales_by_coalesced_multiplicity(spark):
     from compass_query_optimizer_spark.plans.queries import LEFT_OUTER_SQL
 
     opt = CompassOptimizer(spark)
+    ms = [("c", "c_acctbal", "sum")]
     eager = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("c", "c_acctbal"), outer={"o"}
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}
     ).collect()[0]
     raw = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("c", "c_acctbal"), outer={"o"},
-        eager=False,
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}, eager=False
     ).collect()[0]
     assert eager["cnt"] == raw["cnt"] > 0
-    assert abs(float(eager["agg_val"]) - float(raw["agg_val"])) < 1e-4
+    assert abs(float(eager["agg_val0"]) - float(raw["agg_val0"])) < 1e-4
 
 
 def test_left_outer_count_distinct_skips_null_extension(spark):
@@ -610,21 +606,19 @@ def test_left_outer_count_distinct_skips_null_extension(spark):
     from compass_query_optimizer_spark.plans.queries import LEFT_OUTER_SQL
 
     opt = CompassOptimizer(spark)
+    ms = [("o", "o_orderpriority", "count_distinct")]
     eager = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_orderpriority"),
-        measure_op="count_distinct", outer={"o"},
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}
     ).collect()[0]
     raw = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_orderpriority"),
-        measure_op="count_distinct", outer={"o"}, eager=False,
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}, eager=False
     ).collect()[0]
-    assert eager["agg_val"] == raw["agg_val"] > 0
+    assert eager["agg_val0"] == raw["agg_val0"] > 0
     assert eager["cnt"] == raw["cnt"]
 
 
 def test_multi_measure_eager_matches_raw(spark):
-    """All channels of a multi-measure chain must agree with the raw join
-    — and with the single-measure chains they replace."""
+    """All channels of a multi-measure chain must agree with the raw join."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
     from compass_query_optimizer_spark.plans.queries import GROUPED_COUNT_SQL
 
@@ -643,23 +637,35 @@ def test_multi_measure_eager_matches_raw(spark):
         assert abs(
             float(eager[f"agg_val{i}"]) - float(raw[f"agg_val{i}"])
         ) < 1e-4
-    single = opt.execute_count(
-        GROUPED_COUNT_SQL, SF, measure=("l", "l_extendedprice")
-    ).collect()[0]
-    assert abs(float(eager["agg_val0"]) - float(single["agg_val"])) < 1e-4
 
 
 def test_multi_measure_rejects_routed_carriers(spark):
+    """A routed COUNT(DISTINCT) carrier answers as the list's only measure
+    and is refused next to any other: its plan-time stats job and EXPLAIN
+    record are per-plan."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
     from compass_query_optimizer_spark.plans.queries import GROUPED_COUNT_SQL
 
     opt = CompassOptimizer(spark)
-    with pytest.raises(ValueError, match="single-measure"):
-        opt.execute_count(
-            GROUPED_COUNT_SQL,
-            SF,
-            measures=[("l", "l_extendedprice", "count_distinct_auto")],
-        )
+    plan = opt.plan(GROUPED_COUNT_SQL, SF)
+    sole, exact = (
+        opt.build_count_join(plan, measures=[("c", "c_nationkey", op)])
+        .collect()[0]
+        for op in ("count_distinct_auto", "count_distinct")
+    )
+    assert sole["agg_val0"] == exact["agg_val0"] > 0
+    assert sole["cnt"] == exact["cnt"]
+    for eager in (True, False):
+        with pytest.raises(ValueError, match="single-measure"):
+            opt.execute_count(
+                GROUPED_COUNT_SQL,
+                SF,
+                eager=eager,
+                measures=[
+                    ("c", "c_nationkey", "count_distinct_auto"),
+                    ("l", "l_extendedprice", "sum"),
+                ],
+            )
 
 
 def test_multi_measure_below_left_outer(spark):
@@ -700,26 +706,22 @@ def test_count_measure_op_matches_raw_and_scales(spark):
 
     opt = CompassOptimizer(spark)
     # inner: COUNT(col) == COUNT(*) when the column is never null
-    eager = opt.execute_count(
-        GROUPED_COUNT_SQL, SF, measure=("l", "l_extendedprice"),
-        measure_op="count",
-    ).collect()[0]
+    ms = [("l", "l_extendedprice", "count")]
+    eager = opt.execute_count(GROUPED_COUNT_SQL, SF, measures=ms).collect()[0]
     raw = opt.execute_count(
-        GROUPED_COUNT_SQL, SF, measure=("l", "l_extendedprice"),
-        measure_op="count", eager=False,
+        GROUPED_COUNT_SQL, SF, measures=ms, eager=False
     ).collect()[0]
-    assert eager["agg_val"] == raw["agg_val"] == eager["cnt"] > 0
+    assert eager["agg_val0"] == raw["agg_val0"] == eager["cnt"] > 0
     # outer: COUNT(col) counts only matched rows, COUNT(*) counts all
+    ms = [("o", "o_totalprice", "count")]
     outer = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_totalprice"),
-        measure_op="count", outer={"o"},
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}
     ).collect()[0]
     outer_raw = opt.execute_count(
-        LEFT_OUTER_SQL, SF, measure=("o", "o_totalprice"),
-        measure_op="count", outer={"o"}, eager=False,
+        LEFT_OUTER_SQL, SF, measures=ms, outer={"o"}, eager=False
     ).collect()[0]
-    assert outer["agg_val"] == outer_raw["agg_val"]
-    assert outer["agg_val"] < outer["cnt"]
+    assert outer["agg_val0"] == outer_raw["agg_val0"]
+    assert outer["agg_val0"] < outer["cnt"]
 
 
 def test_explain_reports_outer_and_multi_measure(spark):
@@ -736,7 +738,7 @@ def test_explain_reports_outer_and_multi_measure(spark):
     assert "⟕ o" in rpt  # the outer alias is marked in the order line
     assert "null-extend at the chain tail" in rpt
     assert "sum(o.o_totalprice) + count(o.o_totalprice)" in rpt
-    assert "one chain, one channel per measure" in rpt
+    assert "one channel per measure" in rpt
 
 
 def test_cross_table_measures_eager_matches_raw(spark):

@@ -10,6 +10,8 @@ entry's recall — every LSH pair must be a brute-force pair, and at the
 
 from __future__ import annotations
 
+import pytest
+
 from compass_query_optimizer_spark.operators.dedup import (
     EMBEDDING_COSINE_BASELINE_ORACLE,
     dedup_embedding_cosine,
@@ -98,25 +100,37 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
-def test_connected_components_frees_superseded_rounds(spark):
-    """Every propagation round local-checkpoints a new label frame and must
+@pytest.mark.parametrize(
+    "fn, kept",
+    [
+        # only the returned round's checkpoint
+        ("connected_components", 1),
+        # the canon edge frame (the fixpoint's roots anti-join reads it)
+        # and the returned round
+        ("connected_components_star", 2),
+    ],
+    ids=["min_label", "star"],
+)
+def test_connected_components_frees_superseded_rounds(spark, fn, kept):
+    """Every round of both CC loops local-checkpoints a new frame and must
     unpersist the round it supersedes: after a multi-round run only the
-    returned frame's checkpoint may stay registered with the block
+    frames the answer still reads may stay registered with the block
     manager."""
-    from compass_query_optimizer_spark.operators.dedup import connected_components
+    from compass_query_optimizer_spark.operators import dedup
 
     def persistent() -> set:
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     before = persistent()
-    # an 8-node chain needs 7 rounds for label 1 to reach node 8
+    # an 8-node chain: min-label propagation needs 7 rounds for label 1
+    # to reach node 8, the star loop several
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_a long, doc_b long"
     )
-    got = {(r.id, r.lbl) for r in connected_components(edges).collect()}
+    got = {(r.id, r.lbl) for r in getattr(dedup, fn)(edges).collect()}
     assert got == {(i, 1) for i in range(1, 9)}
     left = persistent() - before
-    assert len(left) <= 1, left
+    assert len(left) <= kept, left
 
 
 def test_winnowing_shared_run_guarantee(spark):

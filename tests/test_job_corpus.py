@@ -26,6 +26,8 @@ from compass_query_optimizer_spark.plans.job_corpus import (
     run_corpus,
 )
 
+from .conftest import SF_DIR
+
 
 def test_corpus_loads_and_parses():
     corpus = load_corpus()
@@ -239,29 +241,29 @@ def test_eager_sum_matches_raw_join(spark):
 
     sf = "/root/testdata/sf0.001"
     opt = CompassOptimizer(spark)
-    measure = ("l", "l_extendedprice")
+    ms = [("l", "l_extendedprice", "sum")]
 
     e = opt.execute_count(
-        GROUPED_COUNT_SQL, sf, measure=measure, eager=True
+        GROUPED_COUNT_SQL, sf, measures=ms, eager=True
     ).collect()[0]
     p = opt.execute_count(
-        GROUPED_COUNT_SQL, sf, measure=measure, eager=False
+        GROUPED_COUNT_SQL, sf, measures=ms, eager=False
     ).collect()[0]
     assert e["cnt"] == p["cnt"] > 0
-    assert abs(e["agg_val"] - p["agg_val"]) <= 1e-6 * abs(p["agg_val"])
+    assert abs(e["agg_val0"] - p["agg_val0"]) <= 1e-6 * abs(p["agg_val0"])
 
     eg = {
-        r["n_name"]: (r["agg_val"], r["cnt"])
+        r["n_name"]: (r["agg_val0"], r["cnt"])
         for r in opt.execute_count(
             GROUPED_COUNT_SQL, sf, group_by=[("n", "n_name")],
-            measure=measure, eager=True,
+            measures=ms, eager=True,
         ).collect()
     }
     pg = {
-        r["n_name"]: (r["agg_val"], r["cnt"])
+        r["n_name"]: (r["agg_val0"], r["cnt"])
         for r in opt.execute_count(
             GROUPED_COUNT_SQL, sf, group_by=[("n", "n_name")],
-            measure=measure, eager=False,
+            measures=ms, eager=False,
         ).collect()
     }
     assert eg.keys() == pg.keys() and eg
@@ -271,7 +273,7 @@ def test_eager_sum_matches_raw_join(spark):
 
 
 def test_eager_sum_empty_join_is_null(spark):
-    """SQL SUM semantics over the empty join: agg_val NULL, cnt 0 —
+    """SQL SUM semantics over the empty join: agg_val0 NULL, cnt 0 —
     exactly what the plain plan and any SQL engine produce."""
     from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 
@@ -281,10 +283,9 @@ def test_eager_sum_empty_join_is_null(spark):
     WHERE l.l_orderkey = o.o_orderkey AND o.o_orderstatus = 'NO_SUCH'
     """
     row = CompassOptimizer(spark).execute_count(
-        sql, "/root/testdata/sf0.001", measure=("l", "l_extendedprice"),
-        eager=True,
+        sql, SF_DIR, measures=[("l", "l_extendedprice", "sum")], eager=True
     ).collect()[0]
-    assert row["cnt"] == 0 and row["agg_val"] is None
+    assert row["cnt"] == 0 and row["agg_val0"] is None
 
 
 def test_eager_minmax_matches_raw_join(spark):
@@ -296,29 +297,29 @@ def test_eager_minmax_matches_raw_join(spark):
 
     sf = "/root/testdata/sf0.001"
     opt = CompassOptimizer(spark)
-    measure = ("l", "l_extendedprice")
     for op in ("min", "max"):
+        ms = [("l", "l_extendedprice", op)]
         e = opt.execute_count(
-            GROUPED_COUNT_SQL, sf, measure=measure, measure_op=op, eager=True
+            GROUPED_COUNT_SQL, sf, measures=ms, eager=True
         ).collect()[0]
         p = opt.execute_count(
-            GROUPED_COUNT_SQL, sf, measure=measure, measure_op=op, eager=False
+            GROUPED_COUNT_SQL, sf, measures=ms, eager=False
         ).collect()[0]
         # extremes pass through untouched — exact equality, no tolerance
-        assert e["agg_val"] == p["agg_val"] and e["cnt"] == p["cnt"] > 0, op
+        assert e["agg_val0"] == p["agg_val0"] and e["cnt"] == p["cnt"] > 0, op
         # grouped form: per-group extremes must also be exactly equal
         eg = {
-            r["n_name"]: (r["agg_val"], r["cnt"])
+            r["n_name"]: (r["agg_val0"], r["cnt"])
             for r in opt.execute_count(
                 GROUPED_COUNT_SQL, sf, group_by=[("n", "n_name")],
-                measure=measure, measure_op=op, eager=True,
+                measures=ms, eager=True,
             ).collect()
         }
         pg = {
-            r["n_name"]: (r["agg_val"], r["cnt"])
+            r["n_name"]: (r["agg_val0"], r["cnt"])
             for r in opt.execute_count(
                 GROUPED_COUNT_SQL, sf, group_by=[("n", "n_name")],
-                measure=measure, measure_op=op, eager=False,
+                measures=ms, eager=False,
             ).collect()
         }
         assert eg == pg and eg, op
@@ -342,7 +343,7 @@ def test_eager_sum_on_job_query(spark):
     sql = load_corpus()["17a"]
     tables, counts = job_tables(spark, scale=1)
     row = CompassOptimizer(spark).execute_count(
-        sql, tables=tables, counts=counts, measure=("t", "id"),
+        sql, tables=tables, counts=counts, measures=[("t", "id", "sum")],
         count_cache_tag=f"mini_imdb_v{FIXTURE_VERSION}_x1",
     ).collect()[0]
     con = duckdb.connect()
@@ -351,5 +352,5 @@ def test_eager_sum_on_job_query(spark):
     want_sum, want_cnt = con.execute(
         sql.replace("COUNT(*)", "SUM(t.id), COUNT(*)", 1)
     ).fetchone()
-    assert int(row["agg_val"]) == int(want_sum)
+    assert int(row["agg_val0"]) == int(want_sum)
     assert int(row["cnt"]) == int(want_cnt)

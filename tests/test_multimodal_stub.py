@@ -30,23 +30,6 @@ def test_real_media_kinds_raise():
     assert decode_payload("text/utf-8", b"abc") == "abc"
 
 
-def test_featurize_arrow_matches_pandas_path(spark):
-    """The mapInArrow variant must produce byte-identical features to the
-    mapInPandas path (same schema, same rows) — it's the lower-overhead
-    boundary for large media payloads."""
-    from compass_query_optimizer_spark.operators.multimodal import (
-        featurize,
-        featurize_arrow,
-        payloads_from_documents,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = payloads_from_documents(docs)
-    a = sorted(map(tuple, featurize_arrow(p).collect()))
-    b = sorted(map(tuple, featurize(p).collect()))
-    assert a == b and len(a) == docs.count()
-
-
 # ------------------------------------------ round-6: native format decoders
 def test_ppm_decode_with_comments():
     """P6 parser: header comments, multi-whitespace, exact reshape."""

@@ -375,8 +375,9 @@ def test_ivfpq_closure_byte_bound():
 
 
 def test_ivfpq_assign_encode_checks_the_closure_bound(spark, monkeypatch):
-    """ivfpq_assign_encode_arrow runs the byte check on the coarse
-    matrix plus the sub-codebooks before it builds the mapInPandas."""
+    """Every Arrow codebook kernel (nearest_cells, pq_codes_arrow and the
+    fused ivfpq_assign_encode_arrow) runs the byte check on the codebooks
+    its closure carries before it builds the mapInPandas."""
     import pytest
 
     from compass_query_optimizer_spark.operators import similarity as sim
@@ -384,10 +385,25 @@ def test_ivfpq_assign_encode_checks_the_closure_bound(spark, monkeypatch):
     vecs = spark.range(8).selectExpr("id AS vec_id", "array(id, id) AS qv")
     cents = spark.range(2).selectExpr("id AS cid", "array(id, 0L) AS cv")
     rcents = spark.range(4).selectExpr("id % 2 AS s", "id AS rcid", "array(id) AS rcv")
-    # 2 coarse rows at dim 2 + 2×2 sub-rows at dim 1: 2·48 + 2·2·32 bytes
-    nbytes = 2 * 48 + 2 * 2 * 32
-    monkeypatch.setattr(sim, "_CLOSURE_BYTES_CAP", nbytes)
-    assert sim.ivfpq_assign_encode_arrow(vecs, cents, rcents, subdim=1).count() == 16
-    monkeypatch.setattr(sim, "_CLOSURE_BYTES_CAP", nbytes - 1)
-    with pytest.raises(ValueError, match="closure bound"):
-        sim.ivfpq_assign_encode_arrow(vecs, cents, rcents, subdim=1)
+    # 2 coarse rows at dim 2 hold 2·48 bytes, 2×2 sub-rows at dim 1 2·2·32
+    cases = [
+        (lambda: sim.nearest_cells(vecs, cents), 2 * 48, 8),
+        (
+            lambda: sim.pq_codes_arrow(
+                vecs, rcents, subdim=1, cent_id_col="rcid", cent_vec_col="rcv"
+            ),
+            2 * 2 * 32,
+            16,
+        ),
+        (
+            lambda: sim.ivfpq_assign_encode_arrow(vecs, cents, rcents, subdim=1),
+            2 * 48 + 2 * 2 * 32,
+            16,
+        ),
+    ]
+    for build, nbytes, rows in cases:
+        monkeypatch.setattr(sim, "_CLOSURE_BYTES_CAP", nbytes)
+        assert build().count() == rows
+        monkeypatch.setattr(sim, "_CLOSURE_BYTES_CAP", nbytes - 1)
+        with pytest.raises(ValueError, match="closure bound"):
+            build()

@@ -420,7 +420,7 @@ def test_bitmap_distinct_rides_as_fixed_words(spark):
     opt = CompassOptimizer(spark)
     plan_obj = opt.plan(GROUPED_COUNT_SQL, SF)
     df = opt.build_count_join(
-        plan_obj, measure=("c", "c_nationkey"), measure_op="count_distinct_auto"
+        plan_obj, measures=[("c", "c_nationkey", "count_distinct_auto")]
     )
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -439,7 +439,7 @@ def test_left_outer_eager_chain_collapses_before_null_extension(spark):
     opt = CompassOptimizer(spark)
     plan_obj = opt.plan(LEFT_OUTER_SQL, SF, outer={"o"})
     assert plan_obj.search.order[-1] == "o"
-    df = opt.build_count_join(plan_obj, measure=("o", "o_totalprice"))
+    df = opt.build_count_join(plan_obj, measures=[("o", "o_totalprice", "sum")])
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )

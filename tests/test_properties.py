@@ -218,8 +218,8 @@ def test_eager_count_equals_raw_and_duckdb(spark, case):
     ):
         e = opt.execute_count(
             sql, tables=sdfs, counts=counts, eager=True,
-            measure=(f"a{n - 1}", "k2"), measure_op=op,
-        ).collect()[0]["agg_val"]
+            measures=[(f"a{n - 1}", "k2", op)],
+        ).collect()[0]["agg_val0"]
         w = con.execute(oracle_q(op)).fetchone()[0]
         if w is None:
             # count_distinct(_auto) yields 0 on the empty join in both
