@@ -35,6 +35,13 @@ DNF id lists live only in the bench_out.json sidecar, which carries every
 field. Round 5's full 8,839-char line started mid-tail and recorded
 parsed=null despite a green run; never print the fat form again.
 
+Solo runs: ``python bench.py --only a,b [--plans DIR]`` times exactly the
+named registry entries through the same path (load gate, min of
+SPARK_GRAFT_BENCH_RUNS pass-interleaved passes, sidecar, compact line)
+and skips plan quality, both JOB blocks and calibration. ``--plans``
+writes each entry's formatted physical plan to ``DIR/<name>.txt``. Run
+it once per A/B arm for a fresh-JVM comparison.
+
 DNF readout: the zipf-skewed fixture grows some counts combinatorially
 with scale (e.g. 17a = 40M at scale 10), so a tail of queries is
 data-volume-bound and times out under ANY order — the planner signal is
@@ -207,6 +214,23 @@ def compact_line(out: dict) -> str:
     return line
 
 
+def _parse_args(argv: list[str]):
+    """``[--only a,b] [--plans DIR]``; no ``--only`` is the full run."""
+    import argparse
+
+    ap = argparse.ArgumentParser(description="headline bench + JOB A/B")
+    ap.add_argument(
+        "--only",
+        type=lambda v: [n for n in v.split(",") if n],
+        help="comma-separated registry entries to time instead of the full run",
+    )
+    ap.add_argument("--plans", help="with --only: write DIR/<name>.txt plans")
+    args = ap.parse_args(argv)
+    if args.plans and args.only is None:
+        ap.error("--plans needs --only")
+    return args
+
+
 def main() -> None:
     """Accumulate results into one dict; on the way out (normal, error, or
     SIGTERM→SystemExit) first mirror the JSON to a sidecar file, then tear
@@ -221,6 +245,7 @@ def main() -> None:
     gateway shutdown + waiting for the JVM child process to exit."""
     import signal
 
+    args = _parse_args(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     out: dict = {
@@ -232,6 +257,8 @@ def main() -> None:
         "plan_quality": None,
         "job_ab": None,
     }
+    if args.only is not None:
+        out["only"] = args.only
     # box load before/after: round 5's driver walls were 2-6x inflated by
     # concurrent load on the box — record it so contention is
     # self-diagnosing instead of reading as a code regression. Two rounds
@@ -280,7 +307,7 @@ def main() -> None:
 
     signal.signal(signal.SIGTERM, _term)
     try:
-        _run(out, sf_dir)
+        _run(out, sf_dir, args.only, args.plans)
     finally:
         out["value"] = round(sum(out["queries"].values()), 3)
         try:
@@ -390,12 +417,29 @@ def _deferred_modes_due() -> bool:
         return True
 
 
-def _run(out: dict, sf_dir: str) -> None:
+def _write_plans(spark, specs, sf_dir: str, names: list[str], plans: str) -> None:
+    """Each entry's formatted physical plan, to ``plans/<name>.txt``."""
+    os.makedirs(plans, exist_ok=True)
+    for name in names:
+        df = specs[name].build(spark, sf_dir)
+        text = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        with open(os.path.join(plans, f"{name}.txt"), "w") as f:
+            f.write(text)
+
+
+def _run(out: dict, sf_dir: str, only: list[str] | None = None,
+         plans: str | None = None) -> None:
     from compass_query_optimizer_spark.session import get_spark
     from compass_query_optimizer_spark.registry import all_queries
 
     spark = get_spark(app_name="compass-bench")
     specs = all_queries()
+    names = HEADLINE if only is None else only
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        raise SystemExit(f"unknown registry entries: {unknown}")
 
     # warm-up: JVM codegen + parquet footer reads are one-time costs that
     # would otherwise land entirely on the first timed query
@@ -408,7 +452,8 @@ def _run(out: dict, sf_dir: str) -> None:
     # state without guessing. dedup_minhash_lsh: multi-stage
     # shuffle+join, ~2 s at sf0.1, sensitive to the same contention that
     # smeared rounds 9-10.
-    _calibrate(out, spark, specs, sf_dir, "start_sec")
+    if only is None:
+        _calibrate(out, spark, specs, sf_dir, "start_sec")
 
     # min of n>=3 (round 11; was median): this box shows large same-code
     # run-to-run swings under residual load, and two rounds of medians
@@ -428,20 +473,24 @@ def _run(out: dict, sf_dir: str) -> None:
     # inside the churn window — min-of-3 can only reject smear that
     # doesn't cover all three samples. Pass separation makes early-bench
     # churn inflate only pass 1; the min recovers from passes 2-3.
-    all_samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    all_samples: dict[str, list[float]] = {name: [] for name in names}
     for pass_no in range(runs):
         t_pass = time.perf_counter()
-        for name in HEADLINE:
+        for name in names:
             t0 = time.perf_counter()
             specs[name].build(spark, sf_dir).collect()
             all_samples[name].append(time.perf_counter() - t0)
         print(f"  pass {pass_no + 1}/{runs}: "
               f"{time.perf_counter() - t_pass:.1f}s", file=sys.stderr)
-    for name in HEADLINE:
+    for name in names:
         samples = all_samples[name]
         timings[name] = round(min(samples), 3)
         print(f"  {name}: {timings[name]:.3f}s  (passes: "
               f"{', '.join(f'{s:.2f}' for s in samples)})", file=sys.stderr)
+    if only is not None:
+        if plans:
+            _write_plans(spark, specs, sf_dir, only, plans)
+        return
 
     # plan-quality metric (BASELINE.md): Σ estimated intermediate sizes of
     # the sketch-chosen order vs the size-descending fallback on the

@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from compass_query_optimizer_spark.catalog import load_tables, spread
+from compass_query_optimizer_spark.operators.text import _TOKEN_RE, _re_tokens
 from compass_query_optimizer_spark.registry import query
-
-_TOKEN_RE = "[a-z0-9]+"
 
 # repetition keep-thresholds (Gopher uses 0.2 for top-2-gram and 0.6 for
 # dup-chunk fractions; we keep those shapes with our char accounting)
@@ -46,10 +45,6 @@ DUP3_MAX_FRAC = 0.60
 EVAL_MOD = 97
 SHINGLE_N = 2
 CONTAM_MIN_RATIO = 0.3
-
-
-def _toks(col):
-    return F.regexp_extract_all(F.lower(col), F.lit(_TOKEN_RE), 0)
 
 
 def _grams(toks, n: int):
@@ -77,7 +72,7 @@ def _grams(toks, n: int):
 )
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    toks = _toks(F.col("text"))
+    toks = _re_tokens(F.col("text"))
     docs = t["documents"].select(
         "doc_id",
         toks.alias("toks"),
@@ -203,7 +198,9 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_eval = (F.col("doc_id") % EVAL_MOD) == 0
     shingled = spread(t["documents"]).select(
         "doc_id",
-        F.array_distinct(_grams(_toks(F.col("text")), SHINGLE_N)).alias("shingles"),
+        F.array_distinct(_grams(_re_tokens(F.col("text")), SHINGLE_N)).alias(
+            "shingles"
+        ),
     )
     eval_shingles = (
         shingled.filter(is_eval)
@@ -328,7 +325,7 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"])
     is_eval = (F.col("doc_id") % EVAL_MOD) == 0
-    toks = _toks(F.col("text"))
+    toks = _re_tokens(F.col("text"))
     # ONE tokenize pass, materialized (round 12, guide §8): the quality
     # flags, the dedup fingerprints, and BOTH sides of the shingle probe
     # previously tokenized the corpus in two separate scans; the per-doc

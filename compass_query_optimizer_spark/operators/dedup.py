@@ -74,10 +74,12 @@ _MH_PARAMS = cw_params(MINHASH_K, salt="minhash")
     tags=("dedup",),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # imported here: a module-level import would register text's entries
+    # ahead of this module's and reorder the registry
+    from compass_query_optimizer_spark.operators.text import _re_tokens
+
     t = load_tables(spark, sf_dir)
-    norm = F.array_join(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0), " "
-    )
+    norm = F.array_join(_re_tokens(F.col("text")), " ")
     return (
         spread(t["documents"])
         .groupBy(F.md5(norm).alias("text_key"))
@@ -1306,8 +1308,10 @@ SPAN_W = 8  # tokens per rolling window
     tags=("dedup", "spans"),
 )
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from compass_query_optimizer_spark.operators.text import _re_tokens
+
     t = load_tables(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = _re_tokens(F.col("text"))
     base = spread(t["documents"]).select("doc_id", toks.alias("toks"))
     wins = base.select(
         "doc_id",
@@ -1455,8 +1459,10 @@ _registry._REGISTRY["dedup_keep_best"].oracle = _keep_best_oracle()
     tags=("dedup", "spans", "curation"),
 )
 def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from compass_query_optimizer_spark.operators.text import _re_tokens
+
     t = load_tables(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = _re_tokens(F.col("text"))
     base = (
         spread(t["documents"])
         .select("doc_id", toks.alias("toks"))
@@ -1551,8 +1557,10 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "spans", "incremental"),
 )
 def dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from compass_query_optimizer_spark.operators.text import _re_tokens
+
     t = load_tables(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = _re_tokens(F.col("text"))
     wins = (
         spread(t["documents"])
         .select("doc_id", toks.alias("toks"))

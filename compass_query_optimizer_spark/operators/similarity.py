@@ -78,6 +78,104 @@ def _cos(qa, qb, na, nb):
     return dot / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
 
 
+# ---------------------------------------------------------------------------
+# the exact scoring layer every Arrow vector kernel scores through
+# ---------------------------------------------------------------------------
+# float64 represents every integer below 2^53; scores are held under
+# 2^52 so each product, partial sum and the final ‖c‖² − 2x·c are exact
+_F64_EXACT = 2.0**52
+# score cells (chunk rows × scored columns) per chunk: 2^22 floats ≈ 32 MB
+_SCORE_CELLS = 1 << 22
+
+
+def _chunk_rows(cols: int) -> int:
+    """Rows per chunk so a chunk×``cols`` score matrix stays within
+    :data:`_SCORE_CELLS` (at least one row)."""
+    return max(1, _SCORE_CELLS // max(cols, 1))
+
+
+def _int_matrix(col):
+    """int64[rows, dim] of a non-empty pandas column of integer arrays."""
+    import numpy as np
+
+    return np.vstack(col.to_numpy()).astype(np.int64)
+
+
+class _IntRhs(NamedTuple):
+    """The right operand of :func:`_int_dots`, prepared once per task or
+    bucket so no chunk loop copies a matrix."""
+
+    mat: Any  # int64[n, dim]
+    mat_f_t: Any  # float64 transpose of mat
+    amax: float  # max |mat|
+
+
+def _int_rhs(mat) -> _IntRhs:
+    import numpy as np
+
+    mat = np.asarray(mat, dtype=np.int64)
+    return _IntRhs(mat, mat.astype(np.float64).T, float(np.abs(mat).max(initial=0)))
+
+
+def _int_dots(x, rhs: _IntRhs):
+    """float64 dots x·rhsᵀ of an int64 chunk ``x``, with the arithmetic of
+    the JVM `_cos`: a long dot, then a double.
+
+    While dim·max|x|·max|rhs| < 2^52 every product and partial sum is an
+    integer float64 holds exactly, so one BLAS matmul returns the exact
+    dots in any summation order. Above that bound the dots come from an
+    int64 matmul cast to float64. It cannot wrap on any vector the
+    pipeline accepts: every partial sum is the dot of two sub-vectors,
+    |a·b| ≤ ‖a‖·‖b‖ ≤ max(‖a‖², ‖b‖²), and each ‖·‖² is a JVM long sum
+    (`nrm2`) that raises under ANSI before it overflows."""
+    import numpy as np
+
+    xmax = float(np.abs(x).max(initial=0))
+    if x.shape[1] * xmax * rhs.amax < _F64_EXACT:
+        return x.astype(np.float64) @ rhs.mat_f_t
+    return (x @ rhs.mat.T).astype(np.float64)
+
+
+def _cosines(dots, n2_rows, n2_cols):
+    """dots / (√na·√nb) for the squared norms of the rows and the columns
+    — the JVM `_cos` divide in the same IEEE sequence, so values are
+    bit-identical. A zero norm raises ValueError: its 0/0 NaN ranks
+    greatest in Spark SQL and DuckDB, while numpy comparisons drop it."""
+    import numpy as np
+
+    na = np.asarray(n2_rows, dtype=np.float64)
+    nb = np.asarray(n2_cols, dtype=np.float64)
+    if not (na.all() and nb.all()):
+        raise ValueError(
+            "zero-norm quantized vector: out of contract (its 0/0 cosine "
+            "is NaN, which Spark SQL and DuckDB rank greatest)"
+        )
+    return dots / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
+
+
+def _cosine_chunks(x, n2_x, m, n2_m):
+    """(lo, cos) per row chunk of int64 ``x``: the exact cosines of rows
+    lo.. against every row of int64 ``m`` (squared norms ``n2_x`` and
+    ``n2_m``), each chunk×len(m) matrix within :data:`_SCORE_CELLS`, so a
+    hot bucket or cell never builds its whole score matrix at once."""
+    rhs = _int_rhs(m)
+    step = _chunk_rows(len(m))
+    for lo in range(0, len(x), step):
+        dots = _int_dots(x[lo : lo + step], rhs)
+        yield lo, _cosines(dots, n2_x[lo : lo + step], n2_m)
+
+
+def _score_frame(cols: tuple[str, str, str], parts: list):
+    """The (long, long, double) pandas frame of a cosine kernel's
+    per-chunk (id, id, cos) parts; no parts give an empty frame."""
+    import numpy as np
+    import pandas as pd
+
+    empty = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+    cols_parts = zip(*(parts or [empty]))
+    return pd.DataFrame({c: np.concatenate(v) for c, v in zip(cols, cols_parts)})
+
+
 @query(
     "sim_topk_bruteforce",
     f"""
@@ -147,17 +245,12 @@ def _plane_dot_codes(n: DataFrame, plane_tables: list) -> DataFrame:
     plane dot = Σ ±qv[j]; bit i of table t's code = 1 iff its dot ≥ 0.
     ONE mapInPandas over (vec_id, qv) (round 11, guide §4.2) scores each
     chunk against every table's ±1 plane matrix with one matmul —
-    integer dots are exact in float64 (|dot| ≤ dim·max|qv|, ~4 decades
-    under 2^53; a per-batch guard falls back to int64 matmul above it),
-    so the ≥ 0 sign test matches the oracle's exactly."""
+    :func:`_int_dots` returns the exact integer dots (|dot| ≤
+    dim·max|qv|), so the ≥ 0 sign test matches the oracle's exactly."""
     import numpy as np
 
-    mats = [np.asarray(planes, dtype=np.int64) for planes in plane_tables]
-    mats_f = [m.astype(np.float64) for m in mats]
-    weights = [
-        (1 << np.arange(m.shape[0], dtype=np.int64)) for m in mats
-    ]
-    dim = mats[0].shape[1] if mats else 0
+    rhs = [_int_rhs(planes) for planes in plane_tables]
+    weights = [1 << np.arange(r.mat.shape[0], dtype=np.int64) for r in rhs]
 
     def codes_fn(batches):
         import numpy as np
@@ -167,15 +260,10 @@ def _plane_dot_codes(n: DataFrame, plane_tables: list) -> DataFrame:
             if len(pdf) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
-            x = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-            xmax = float(np.abs(x).max(initial=0.0))
+            x = _int_matrix(pdf["qv"])
             out_id, out_t, out_c = [], [], []
-            for l, m in enumerate(mats):
-                if dim * xmax < 2.0**52:
-                    dots = x.astype(np.float64) @ mats_f[l].T
-                else:
-                    dots = x @ m.T
-                c = ((dots >= 0) * weights[l][None, :]).sum(axis=1)
+            for l, r in enumerate(rhs):
+                c = ((_int_dots(x, r) >= 0) * weights[l][None, :]).sum(axis=1)
                 out_id.append(ids)
                 out_t.append(np.full(len(ids), l, dtype=np.int32))
                 out_c.append(c)
@@ -273,9 +361,6 @@ _CENT_COLLECT_CAP = 65536
 # task (coarse and/or sub-codebooks, int64 and float64 copies): the
 # clamped coarse K=4096 at dim 64 holds 4 MB of it
 _CLOSURE_BYTES_CAP = 64 << 20
-# float64 represents every integer below 2^53; scores are held under
-# 2^52 so each product, partial sum and the final ‖c‖² − 2x·c are exact
-_F64_EXACT = 2.0**52
 
 
 class _Codebook(NamedTuple):
@@ -328,15 +413,23 @@ def _sq_l2_scores(x, book: _Codebook):
     return book.norm2[None, :] - 2.0 * (x.astype(np.float64) @ book.mat_f.T)
 
 
+def _collect_capped(df: DataFrame, what: str) -> list:
+    """``df.collect()`` of at most :data:`_CENT_COLLECT_CAP` rows. It
+    fetches at most cap + 1 rows and raises ValueError naming ``what``
+    when the table is over the cap."""
+    rows = df.limit(_CENT_COLLECT_CAP + 1).collect()
+    if len(rows) > _CENT_COLLECT_CAP:
+        raise ValueError(
+            f"more than {_CENT_COLLECT_CAP} {what}: over the driver "
+            "collect cap"
+        )
+    return rows
+
+
 def _collect_centroids(cents: DataFrame) -> _Codebook:
     """The cid-sorted centroid codebook of a (cid, cv) table — the
     plan-time artifact the assignment kernels score against."""
-    rows = cents.select("cid", "cv").limit(_CENT_COLLECT_CAP + 1).collect()
-    if len(rows) > _CENT_COLLECT_CAP:
-        raise ValueError(
-            f"more than {_CENT_COLLECT_CAP} centroids: over the driver "
-            "collect cap"
-        )
+    rows = _collect_capped(cents.select("cid", "cv"), "centroids")
     rows.sort(key=lambda r: r["cid"])
     return _codebook([r["cid"] for r in rows], [list(r["cv"]) for r in rows])
 
@@ -380,8 +473,7 @@ def nearest_cells(
     book = _collect_centroids(cents)
     _check_closure_bytes([book])
     take = min(nprobe, len(book.ids))
-    # chunk rows so the chunk×K score matrix stays ~32 MB per task
-    chunk = max(1, (1 << 22) // max(len(book.ids), 1))
+    chunk = _chunk_rows(len(book.ids))
 
     def assign(batches):
         import numpy as np
@@ -391,7 +483,7 @@ def nearest_cells(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
-            x_all = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
+            x_all = _int_matrix(pdf["qv"])
             out_ids, out_crk, out_cid = [], [], []
             for lo in range(0, len(pdf), chunk):
                 x = x_all[lo : lo + chunk]
@@ -433,12 +525,7 @@ def _collect_subcodebooks(
     """Per-subspace id-sorted codebooks of an (s, id, vec) sub-codebook
     table, indexed by s — the plan-time artifact the Arrow PQ encoders
     score against (M·K rows total, KBs)."""
-    rows = cents.select("s", id_col, vec_col).limit(_CENT_COLLECT_CAP + 1).collect()
-    if len(rows) > _CENT_COLLECT_CAP:
-        raise ValueError(
-            f"more than {_CENT_COLLECT_CAP} sub-centroids: over the driver "
-            "collect cap"
-        )
+    rows = _collect_capped(cents.select("s", id_col, vec_col), "sub-centroids")
     by_s: dict[int, list] = {}
     for r in rows:
         by_s.setdefault(int(r["s"]), []).append((r[id_col], list(r[vec_col])))
@@ -449,6 +536,25 @@ def _collect_subcodebooks(
         lst = sorted(by_s[s])  # id-sorted: lowest-index tie-break = smallest id
         books.append(_codebook([c for c, _ in lst], [v for _, v in lst]))
     return books
+
+
+def _pq_codes(x, books: list[_Codebook], subdim: int):
+    """int64[rows, n_sub]: per subspace s, the id of the sub-centroid of
+    ``books[s]`` nearest to each row's slice s of int64 ``x`` (width
+    n_sub·subdim), ties broken on the smallest id."""
+    import numpy as np
+
+    n_sub = len(books)
+    if x.shape[1] != n_sub * subdim:
+        raise ValueError(
+            f"PQ encode: vector width {x.shape[1]} != n_sub*subdim = "
+            f"{n_sub}*{subdim} — refusing to silently truncate trailing dims"
+        )
+    codes = np.empty((len(x), n_sub), dtype=np.int64)
+    for s, book in enumerate(books):
+        xs = x[:, s * subdim : (s + 1) * subdim]
+        codes[:, s] = book.ids[_sq_l2_scores(xs, book).argmin(axis=1)]
+    return codes
 
 
 def pq_codes_arrow(
@@ -484,22 +590,11 @@ def pq_codes_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x_all = np.vstack(pdf[vec_col].to_numpy()).astype(np.int64)
-            if x_all.shape[1] != n_sub * subdim:
-                raise ValueError(
-                    f"pq_codes_arrow: vector width {x_all.shape[1]} != "
-                    f"n_sub*subdim = {n_sub}*{subdim} — refusing to "
-                    "silently truncate trailing dims"
-                )
-            rows = len(pdf)
-            codes = np.empty((rows, n_sub), dtype=np.int64)
-            for s, book in enumerate(books):
-                xs = x_all[:, s * subdim : (s + 1) * subdim]
-                codes[:, s] = book.ids[_sq_l2_scores(xs, book).argmin(axis=1)]
+            codes = _pq_codes(_int_matrix(pdf[vec_col]), books, subdim)
             out = {
                 c: np.repeat(pdf[c].to_numpy(), n_sub) for c in id_cols
             }
-            out["s"] = np.tile(s_tile, rows)
+            out["s"] = np.tile(s_tile, len(pdf))
             out["code"] = codes.ravel()
             yield pd.DataFrame(out)
 
@@ -530,11 +625,9 @@ def ivfpq_assign_encode_arrow(
     distance lambda runs through Catalyst's interpreter (the recorded
     residual-encode term of ivfpq's 4M wall).
 
-    Exactness: identical bounds and tie-breaks as nearest_cells /
-    pq_codes_arrow — both the coarse and the per-subspace scores go
-    through :func:`_sq_l2_scores`, and numpy's argmin lowest-index
-    tie-break over id-sorted codebooks equals the oracle's
-    ORDER BY d2, id."""
+    Exactness and tie-breaks are nearest_cells' and pq_codes_arrow's: the
+    coarse scores and :func:`_pq_codes` both go through
+    :func:`_sq_l2_scores` over id-sorted codebooks."""
     import numpy as np
 
     coarse = _collect_centroids(cents)
@@ -542,7 +635,7 @@ def ivfpq_assign_encode_arrow(
     _check_closure_bytes([coarse, *books])
     n_sub = len(books)
     s_tile = np.arange(n_sub, dtype=np.int32)
-    chunk = max(1, (1 << 22) // max(len(coarse.ids), 1))
+    chunk = _chunk_rows(len(coarse.ids))
 
     def assign_encode(batches):
         import numpy as np
@@ -552,24 +645,13 @@ def ivfpq_assign_encode_arrow(
             if len(pdf) == 0:
                 continue
             ids_all = pdf["vec_id"].to_numpy()
-            x_full = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-            if x_full.shape[1] != n_sub * subdim:
-                raise ValueError(
-                    f"ivfpq_assign_encode_arrow: vector width "
-                    f"{x_full.shape[1]} != n_sub*subdim = {n_sub}*{subdim}"
-                )
+            x_full = _int_matrix(pdf["qv"])
             out = []
             for lo in range(0, len(pdf), chunk):
                 x = x_full[lo : lo + chunk]
                 best = _sq_l2_scores(x, coarse).argmin(axis=1)
-                r = x - coarse.mat[best]  # int64 residuals
+                codes = _pq_codes(x - coarse.mat[best], books, subdim)  # residuals
                 rows = len(x)
-                codes = np.empty((rows, n_sub), dtype=np.int64)
-                for s, book in enumerate(books):
-                    rs = r[:, s * subdim : (s + 1) * subdim]
-                    codes[:, s] = book.ids[
-                        _sq_l2_scores(rs, book).argmin(axis=1)
-                    ]
                 out.append(
                     pd.DataFrame(
                         {
@@ -794,6 +876,16 @@ _DUP_PLANES = [
 ]
 
 
+def _bucket_cosines(pdf):
+    """(lo, cos) chunks of one (vec_id, qv, nrm2) bucket scored against
+    itself by :func:`_cosine_chunks`; a singleton has no pair to score."""
+    if len(pdf) < 2:
+        return
+    q = _int_matrix(pdf["qv"])
+    n2 = pdf["nrm2"].to_numpy()
+    yield from _cosine_chunks(q, n2, q, n2)
+
+
 def _bucket_pairs_arrow(
     members: DataFrame,
     threshold: float,
@@ -808,60 +900,21 @@ def _bucket_pairs_arrow(
     evaluates a per-pair cosine lambda through Catalyst's interpreter —
     at 1M vectors that is ~30M pair rows ≈ tens of GB shuffled to compare
     a few bytes of outcome. Here the payload is shuffled once per
-    (table, code) bucket and each bucket scores as an integer matmul:
-    dots are exact in float64 under the same 2^53 bound as nearest_cells
-    (per-bucket guard falls back to int64), and the divide is the
-    identical IEEE sequence as the JVM `_cos`, so surviving values are
-    bit-identical. Chunked so a pathological hot bucket builds a
-    chunk×B score matrix, never B×B."""
+    (table, code) bucket and each bucket scores through
+    :func:`_bucket_cosines`, whose values are bit-identical to the JVM
+    `_cos`."""
     import numpy as np
-    import pandas as pd
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = len(pdf)
-        if b < 2:
-            return pd.DataFrame(
-                {
-                    "id_a": pd.Series([], dtype="int64"),
-                    "id_b": pd.Series([], dtype="int64"),
-                    "cos_raw": pd.Series([], dtype="float64"),
-                }
-            )
+    def score(pdf):
         ids = pdf["vec_id"].to_numpy().astype(np.int64)
-        q = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-        nr = np.sqrt(pdf["nrm2"].to_numpy().astype(np.float64))
-        if not nr.all():  # 0/0 → NaN ranks differently here vs SQL/oracle
-            raise ValueError(
-                "_bucket_pairs_arrow: zero-norm quantized vector — "
-                "out of contract (numpy drops NaN cosines at >=, Spark "
-                "SQL and DuckDB rank NaN greatest)"
-            )
-        qmax = float(np.abs(q).max(initial=0.0))
-        exact64 = q.shape[1] * qmax * qmax < 2.0**52
-        qf_t = q.astype(np.float64).T if exact64 else None  # hoisted: one
-        # B×dim float copy per bucket, not one per chunk iteration
-        chunk = max(1, (1 << 22) // b)  # chunk×B floats ≈ 32 MB cap
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, b, chunk):
-            x = q[lo : lo + chunk]
-            if exact64:
-                dots = x.astype(np.float64) @ qf_t
-            else:  # exact at any magnitude
-                dots = (x @ q.T).astype(np.float64)
-            cos = dots / (nr[lo : lo + chunk, None] * nr[None, :])
+        parts = []
+        for lo, cos in _bucket_cosines(pdf):
             ii, jj = np.nonzero(
-                (cos >= threshold) & (ids[lo : lo + chunk, None] < ids[None, :])
+                (cos >= threshold)
+                & (ids[lo : lo + len(cos), None] < ids[None, :])
             )
-            out_a.append(ids[lo + ii])
-            out_b.append(ids[jj])
-            out_c.append(cos[ii, jj])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos_raw": np.concatenate(out_c),
-            }
-        )
+            parts.append((ids[lo + ii], ids[jj], cos[ii, jj]))
+        return _score_frame(("id_a", "id_b", "cos_raw"), parts)
 
     return members.groupBy(*keys).applyInPandas(
         score, schema="id_a long, id_b long, cos_raw double"
@@ -880,60 +933,21 @@ def _bucket_topk_arrow(
     Ties at the k-th boundary are ALL emitted (cos ≥ k-th value, not an
     arbitrary k-subset), so the output is a superset of the true top-k
     and the downstream exact window applies the oracle's
-    (cos DESC, neighbor_id) tie-break unchanged. cos values are
-    bit-identical to the JVM `_cos` (exact integer dots in float64 under
-    the 2^53 bound, int64 fallback guarded per bucket, same IEEE
-    divide)."""
+    (cos DESC, neighbor_id) tie-break unchanged. cos values come from
+    :func:`_bucket_cosines`, bit-identical to the JVM `_cos`."""
     import numpy as np
-    import pandas as pd
 
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = len(pdf)
-        if b < 2:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "cos_raw": pd.Series([], dtype="float64"),
-                }
-            )
+    def topk(pdf):
         ids = pdf["vec_id"].to_numpy().astype(np.int64)
-        q = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-        nr = np.sqrt(pdf["nrm2"].to_numpy().astype(np.float64))
-        if not nr.all():  # 0/0 → NaN ranks differently here vs SQL/oracle
-            raise ValueError(
-                "_bucket_topk_arrow: zero-norm quantized vector — "
-                "out of contract (numpy drops NaN cosines at >=, Spark "
-                "SQL and DuckDB rank NaN greatest)"
-            )
-        qmax = float(np.abs(q).max(initial=0.0))
-        exact64 = q.shape[1] * qmax * qmax < 2.0**52
-        qf_t = q.astype(np.float64).T if exact64 else None  # hoisted: one
-        # B×dim float copy per bucket, not one per chunk iteration
-        kk = min(k, b - 1)
-        chunk = max(1, (1 << 22) // b)  # chunk×B floats ≈ 32 MB cap
-        out_v, out_n, out_c = [], [], []
-        for lo in range(0, b, chunk):
-            x = q[lo : lo + chunk]
-            if exact64:
-                dots = x.astype(np.float64) @ qf_t
-            else:  # exact at any magnitude
-                dots = (x @ q.T).astype(np.float64)
-            cos = dots / (nr[lo : lo + chunk, None] * nr[None, :])
-            rows = len(x)
-            cos[np.arange(rows), lo + np.arange(rows)] = -np.inf  # self
+        kk = min(k, len(pdf) - 1)
+        parts = []
+        for lo, cos in _bucket_cosines(pdf):
+            rows = np.arange(len(cos))
+            cos[rows, lo + rows] = -np.inf  # self
             kth = -np.partition(-cos, kk - 1, axis=1)[:, kk - 1]
             ii, jj = np.nonzero(cos >= kth[:, None])
-            out_v.append(ids[lo + ii])
-            out_n.append(ids[jj])
-            out_c.append(cos[ii, jj])
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate(out_v),
-                "neighbor_id": np.concatenate(out_n),
-                "cos_raw": np.concatenate(out_c),
-            }
-        )
+            parts.append((ids[lo + ii], ids[jj], cos[ii, jj]))
+        return _score_frame(("vec_id", "neighbor_id", "cos_raw"), parts)
 
     return members.groupBy(key).applyInPandas(
         topk, schema="vec_id long, neighbor_id long, cos_raw double"
@@ -2371,51 +2385,34 @@ def _rerank_cells_arrow(probes: DataFrame, index_members: DataFrame) -> DataFram
     arrivals·nprobe·cell-size evaluations, the term that kept
     sim_ann_incremental superlinear after the assignment fix (~1.6e9
     pairs at 4M). Here each cell's probe matrix Q and member matrix M
-    meet in ONE float64 Q·Mᵀ: integer dots are exact under the same
-    2^53 bound as nearest_cells, and cos = dot / (√na·√nb) applies the
-    identical IEEE multiply-then-divide as the JVM `_cos`, so values are
-    bit-identical. The global top-TOP_K per arrival is a subset of the
+    meet in :func:`_cosine_chunks` — row chunks of Q·Mᵀ, bit-identical
+    to the JVM `_cos`. The global top-TOP_K per arrival is a subset of the
     union of its per-cell top-TOP_K (if TOP_K members of one cell beat a
     candidate, they beat it globally), so emitting per-cell top-TOP_K
     rows preserves the final ranking exactly while the downstream window
     sees nprobe·TOP_K rows per arrival instead of whole cells."""
     import numpy as np
-    import pandas as pd
 
-    def rerank(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {"arrival_id": [], "neighbor_id": [], "cos_raw": []}
+    def rerank(left, right):
+        parts = []
+        if len(left) and len(right):
+            aid = left["arrival_id"].to_numpy()
+            nid = right["neighbor_id"].to_numpy()
+            take = min(TOP_K, len(right))
+            chunks = _cosine_chunks(
+                _int_matrix(left["qa"]),
+                left["na"].to_numpy(),
+                _int_matrix(right["qb"]),
+                right["nb"].to_numpy(),
             )
-        q = np.vstack(left["qa"].to_numpy()).astype(np.int64)
-        m = np.vstack(right["qb"].to_numpy()).astype(np.int64)
-        na = left["na"].to_numpy().astype(np.float64)
-        nb = right["nb"].to_numpy().astype(np.float64)
-        nid = right["neighbor_id"].to_numpy()
-        qmax = float(np.abs(q).max(initial=0.0))
-        mmax = float(np.abs(m).max(initial=0.0))
-        if q.shape[1] * qmax * mmax < 2.0**52:
-            dots = q.astype(np.float64) @ m.astype(np.float64).T
-        else:  # exact at any magnitude
-            dots = (q @ m.T).astype(np.float64)
-        cos = dots / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
-        take = min(TOP_K, cos.shape[1])
-        out_a, out_n, out_c = [], [], []
-        aid = left["arrival_id"].to_numpy()
-        for i in range(cos.shape[0]):
-            # ties on cos break toward the smallest neighbor_id, exactly
-            # the window's ORDER BY cos_raw DESC, neighbor_id
-            order = np.lexsort((nid, -cos[i]))[:take]
-            out_a.append(np.full(take, aid[i]))
-            out_n.append(nid[order])
-            out_c.append(cos[i][order])
-        return pd.DataFrame(
-            {
-                "arrival_id": np.concatenate(out_a),
-                "neighbor_id": np.concatenate(out_n),
-                "cos_raw": np.concatenate(out_c),
-            }
-        )
+            for lo, cos in chunks:
+                for i, row in enumerate(cos):
+                    # ties on cos break toward the smallest neighbor_id,
+                    # exactly the window's ORDER BY cos_raw DESC, neighbor_id
+                    order = np.lexsort((nid, -row))[:take]
+                    ids_a = np.full(take, aid[lo + i])
+                    parts.append((ids_a, nid[order], row[order]))
+        return _score_frame(("arrival_id", "neighbor_id", "cos_raw"), parts)
 
     return (
         probes.groupBy("cid")

@@ -180,7 +180,7 @@ def _langid_oracle() -> str:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     txt = F.lower(F.col("text"))
-    n_tokens = F.size(F.regexp_extract_all(txt, F.lit(_TOKEN_RE), 0))
+    n_tokens = F.size(_re_tokens(F.col("text")))
     punct = F.length("text") - F.length(F.regexp_replace(txt, "[^a-z0-9 ]", ""))
     punct_ratio = punct * F.lit(1.0) / F.length("text")
     alnum_len = F.length(F.regexp_replace(txt, "[^a-z0-9]", ""))
@@ -253,7 +253,7 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
+    toks = _re_tokens(F.col("text"))
     tok_hashes = F.transform(toks, lambda s: spark_portable_hash(s) % F.lit(P31))
     # fold matches DuckDB list_reduce (no init): f(0, x0) = x0 since x0 < P
     rolling = F.aggregate(
@@ -412,11 +412,9 @@ def _pack_oracle() -> str:
 def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     txt = F.lower(F.col("text"))
-    n_tokens = F.size(F.regexp_extract_all(txt, F.lit(_TOKEN_RE), 0))
+    n_tokens = F.size(_re_tokens(F.col("text")))
     punct = F.length("text") - F.length(F.regexp_replace(txt, "[^a-z0-9 ]", ""))
-    norm_key = F.md5(
-        F.array_join(F.regexp_extract_all(txt, F.lit(_TOKEN_RE), 0), " ")
-    )
+    norm_key = F.md5(F.array_join(_re_tokens(F.col("text")), " "))
     quality = (
         t["documents"]
         .select(

@@ -211,3 +211,18 @@ def test_compact_line_keeps_sidecar_full(tmp_path, monkeypatch):
     before = json.dumps(out)
     bench.compact_line(out)
     assert json.dumps(out) == before
+
+
+def test_only_and_plans_arguments():
+    """No arguments is the full run; ``--only a,b`` names the entries to
+    time and ``--plans DIR`` rides only with it."""
+    import pytest
+
+    bench = _load_bench()
+    full = bench._parse_args([])
+    assert full.only is None and full.plans is None
+    solo = bench._parse_args(["--only", "sim_ann_lsh,emb_knn_graph,", "--plans", "d"])
+    assert solo.only == ["sim_ann_lsh", "emb_knn_graph"]
+    assert solo.plans == "d"
+    with pytest.raises(SystemExit):
+        bench._parse_args(["--plans", "d"])

@@ -7,6 +7,7 @@ serve correctly from the same persisted files (no refold)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from compass_query_optimizer_spark.catalog import load_tables
@@ -219,13 +220,15 @@ def test_pq_encode_paths_agree(spark):
     assert len(arrow) == n.count() * PQ_M
 
 
-def _planted_dups_vs_oracle(spark, tmp_path, name, seed):
+def _planted_dups_vs_oracle(spark, tmp_path, name, seed, scale=1.0):
     """(spark rows, DuckDB oracle rows) of registry entry ``name`` over a
     300-vector corpus with 30 planted near-duplicate pairs: a 1e-3
     perturbation keeps cosine ~0.9999 and identical hyperplane sign
     codes, so candidates AND the threshold cut both fire. The driver
     fixtures plant no embedding near-dups (these entries are green at 0
-    dropped rows there), so this is the entries' only value check."""
+    dropped rows there), so this is the entries' only value check.
+    ``scale`` multiplies every embedding after planting (cosines and sign
+    codes are scale-free)."""
     import duckdb
     import numpy as np
     import pyarrow.parquet as pq
@@ -236,6 +239,7 @@ def _planted_dups_vs_oracle(spark, tmp_path, name, seed):
     vecs = rng.randn(300, 64).astype(np.float32)
     for i in range(0, 60, 2):
         vecs[i + 1] = vecs[i] + rng.randn(64).astype(np.float32) * 1e-3
+    vecs *= np.float32(scale)
     path = tmp_path / "embeddings.parquet"
     pq.write_table(_embeddings_table(vecs), str(path))
 
@@ -267,6 +271,45 @@ def test_semantic_matches_oracle_on_planted_dups(spark, tmp_path):
     )
     assert got == want
     assert sum(1 for r in got if not r[2]) >= 30  # planted dups dropped
+
+
+@pytest.mark.parametrize("name", ["dedup_embedding_lsh", "emb_knn_graph"])
+def test_int64_dot_branch_matches_oracle(spark, tmp_path, name):
+    """Embeddings ×2000 put components past ~839, so dim·max|q|² passes
+    2^52 and the bucket kernels score through the int64 branch of
+    `_int_dots`, while every ‖q‖² stays far below 2^63. Rows must still
+    equal the DuckDB oracle's."""
+    import numpy as np
+
+    from compass_query_optimizer_spark.operators.dedup import QUANT
+    from compass_query_optimizer_spark.operators.similarity import _F64_EXACT
+
+    qmax = np.abs(np.random.RandomState(7).randn(300, 64)).max() * 2000 * QUANT
+    assert 64 * qmax**2 > 10 * _F64_EXACT
+    got, want = _planted_dups_vs_oracle(
+        spark, tmp_path, name, seed=7, scale=2000.0
+    )
+    assert got == want
+    assert len(got) >= 30
+
+
+def test_rerank_refuses_a_zero_norm_arrival(spark):
+    """An all-zero arrival has a 0/0 cosine that Spark SQL and DuckDB rank
+    greatest; the per-cell rerank must raise the same zero-norm
+    ValueError as the bucket kernels instead of ranking the NaN."""
+    cents = spark.createDataFrame(
+        [(0, [1, 0]), (1, [0, 1])], "cid long, cv array<long>"
+    )
+    members = spark.createDataFrame(
+        [(0, 10, [2, 1], 5), (1, 11, [1, 3], 10)],
+        "cid long, neighbor_id long, qb array<long>, nb long",
+    )
+    zero = spark.createDataFrame(
+        [(100, [0, 0], 0), (101, [1, 1], 2)],
+        "vec_id long, qv array<long>, nrm2 long",
+    )
+    with pytest.raises(Exception, match="ValueError: zero-norm"):
+        serve_arrivals(zero, cents, members).collect()
 
 
 def test_plane_codes_paths_agree(spark):
