@@ -144,11 +144,19 @@ def _round_queries(ndigits: int):
     return step
 
 
+def _sidecar_path() -> str:
+    """The sidecar file the full bench JSON goes to: SPARK_GRAFT_BENCH_OUT,
+    default ``bench_out.json``. A relative path is taken from this
+    script's directory. The stdout line names the sidecar by this same
+    path, so it points wherever the sidecar was sent."""
+    return os.environ.get("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+
+
 def _overflow(key: str):
     """Block-level step: replace a whole block by a pointer to the sidecar."""
     def step(slim: dict) -> None:
         if slim.pop(key, None) is not None:
-            slim[f"{key}_overflow"] = "bench_out.json"
+            slim[f"{key}_overflow"] = _sidecar_path()
     return step
 
 
@@ -197,7 +205,7 @@ def compact_line(out: dict) -> str:
         and not k.endswith("_dnf_ids")
     )(slim)
     _round_queries(2)(slim)
-    slim["detail"] = "bench_out.json"
+    slim["detail"] = _sidecar_path()
     line = json.dumps(slim, separators=(",", ":"))
     for step in _SHED:
         if len(line) <= STDOUT_TAIL_BUDGET:
@@ -335,14 +343,9 @@ def main() -> None:
 
 
 def _write_sidecar(line: str) -> None:
-    """Persist the bench JSON to a file so a noisy stdout can never
-    destroy the round's evidence (SPARK_GRAFT_BENCH_OUT, default
-    bench_out.json next to this script)."""
-    path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_out.json"),
-    )
+    """Persist the bench JSON to :func:`_sidecar_path` so a noisy stdout can
+    never destroy the round's evidence."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), _sidecar_path())
     try:
         with open(path, "w") as f:
             f.write(line + "\n")

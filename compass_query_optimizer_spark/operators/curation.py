@@ -334,6 +334,13 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this deletes a full tokenize pass over the corpus; the eval rows'
     # quality columns are computed unnecessarily (1/EVAL_MOD of docs) and
     # dropped by the flags filter — same rows, same values as before.
+    # The saving is paid in storage: the checkpoint keeps every doc's
+    # distinct shingle array, blocks about the size of the tokenized
+    # corpus, persisted MEMORY_AND_DISK. Nothing here unpersists them —
+    # they live as long as the returned frame does. Once the caller drops
+    # that frame, Spark's ContextCleaner frees them at the next driver-JVM
+    # GC (checked at sf0.001: one persisted RDD before, none after dropping
+    # the frame and a System.gc()), and spark.stop() frees them in any case.
     base = docs.select(
         "doc_id",
         "lang",

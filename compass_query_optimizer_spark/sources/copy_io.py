@@ -111,6 +111,36 @@ def apply_s3_params(spark: SparkSession, p: S3Params) -> list[str]:
 
 _CORRUPT = "_corrupt_record"
 
+
+def _permissive_reader(spark: SparkSession, schema: T.StructType):
+    """A reader under ``schema`` plus the corrupt-record column, in
+    PERMISSIVE mode: malformed rows land in that column instead of
+    failing the read."""
+    return (
+        spark.read.schema(
+            T.StructType(
+                list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
+            )
+        )
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", _CORRUPT)
+    )
+
+
+def _reject_contract(df: DataFrame, max_reject: int) -> tuple[DataFrame, int]:
+    """The COPY reject contract shared by every text format: count the
+    corrupt rows of one cached read and abort — releasing the cache — when
+    they exceed ``max_reject``. Returns (good rows, rejected count)."""
+    df = df.cache()  # one read serves both the reject count and the caller
+    rejected = df.filter(F.col(_CORRUPT).isNotNull()).count()
+    if rejected > max_reject:
+        df.unpersist()
+        raise ValueError(
+            f"COPY aborted: {rejected} rejected rows > max_reject={max_reject}"
+        )
+    return df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT), rejected
+
+
 # container formats needing driver-side extraction (gz/bz2 of a SINGLE file
 # are decoded by Spark's text source itself and are not listed here)
 _TAR_EXTS = (".tar", ".tar.gz", ".tgz", ".tar.bz2", ".tbz2")
@@ -199,16 +229,11 @@ def copy_from(
     if s3_params is not None:
         apply_s3_params(spark, s3_params)
     path = resolve_import_paths(path)
-    read_schema = T.StructType(
-        list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
-    )
     reader = (
-        spark.read.schema(read_schema)
+        _permissive_reader(spark, schema)
         .option("sep", p.delimiter)
         .option("header", p.has_header)
         .option("nullValue", p.null_str)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", _CORRUPT)
     )
     if p.line_delim != "\n":
         reader = reader.option("lineSep", p.line_delim)
@@ -216,15 +241,7 @@ def copy_from(
         reader = reader.option("quote", p.quote).option("escape", p.escape)
     else:
         reader = reader.option("quote", "")
-    df = reader.csv(path)
-    df = df.cache()  # one read serves both the reject count and the caller
-    rejected = df.filter(F.col(_CORRUPT).isNotNull()).count()
-    if rejected > p.max_reject:
-        df.unpersist()
-        raise ValueError(
-            f"COPY aborted: {rejected} rejected rows > max_reject={p.max_reject}"
-        )
-    return df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT), rejected
+    return _reject_contract(reader.csv(path), p.max_reject)
 
 
 def copy_to(
@@ -263,22 +280,9 @@ def copy_from_json(
     PERMISSIVE + max_reject contract as :func:`copy_from`, same archive
     and s3:// path resolution. Returns (rows, rejected_count)."""
     path = resolve_import_paths(path)
-    read_schema = T.StructType(
-        list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
+    return _reject_contract(
+        _permissive_reader(spark, schema).json(path), max_reject
     )
-    df = (
-        spark.read.schema(read_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", _CORRUPT)
-        .json(path)
-    )
-    df = df.cache()
-    rejected = df.filter(F.col(_CORRUPT).isNotNull()).count()
-    if rejected > max_reject:
-        raise ValueError(
-            f"COPY aborted: {rejected} rejected rows exceed max_reject={max_reject}"
-        )
-    return df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT), rejected
 
 
 def copy_to_json(df: DataFrame, path: str) -> None:
@@ -346,20 +350,7 @@ def copy_from_xml(
     the XML datasource natively): declared-schema + PERMISSIVE + max_reject
     contract like :func:`copy_from`, rows addressed by ``row_tag``."""
     path = resolve_import_paths(path)
-    read_schema = T.StructType(
-        list(schema.fields) + [T.StructField(_CORRUPT, T.StringType())]
+    return _reject_contract(
+        _permissive_reader(spark, schema).option("rowTag", row_tag).xml(path),
+        max_reject,
     )
-    df = (
-        spark.read.schema(read_schema)
-        .option("rowTag", row_tag)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", _CORRUPT)
-        .xml(path)
-    )
-    df = df.cache()
-    rejected = df.filter(F.col(_CORRUPT).isNotNull()).count()
-    if rejected > max_reject:
-        raise ValueError(
-            f"COPY aborted: {rejected} rejected rows exceed max_reject={max_reject}"
-        )
-    return df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT), rejected

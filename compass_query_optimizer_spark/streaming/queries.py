@@ -7,17 +7,32 @@ readStream → withWatermark → window() → writeStream (availableNow, complet
 mode into a memory sink) and returns the settled result — the oracle is the
 equivalent batch GROUP BY date_trunc, so the gate proves stream/batch
 consistency (the Dataflow-model property Structured Streaming guarantees).
+
+Every entry drains through ``_drain_to_memory`` or ``_drain_arrivals`` and
+leaves the session as it found it: no conf of its own, no temp view, no
+staging directory. Stateful operators therefore partition their state
+stores by the caller's ``spark.sql.shuffle.partitions`` — 32 under the
+engine's ``ENGINE_CONF``, which ``get_spark`` and ``configure`` apply.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from compass_query_optimizer_spark.catalog import table_path
+from compass_query_optimizer_spark.catalog import (
+    SCHEMAS,
+    _ensure_read_conf,
+    load_tables,
+    table_path,
+)
 from compass_query_optimizer_spark.registry import query
 
 
@@ -35,6 +50,92 @@ def _drain(q, timeout: int = 300) -> None:
             f"streaming drain did not settle within {timeout}s "
             f"(query {q.name or q.id})"
         )
+
+
+def _drain_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain the stream ``df`` (availableNow) into a memory sink and return
+    its settled rows.
+
+    The memory sink registers a temp view under the query name; the view
+    is dropped once the returned frame is built (the frame keeps the sink
+    itself, so it still collects), so no entry leaves a view — and the
+    sink it pins — in the session.
+    """
+    spark = df.sparkSession
+    sink = f"sink_{uuid.uuid4().hex[:12]}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        _drain(q)
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
+
+
+def _drain_arrivals(
+    arrivals: list[DataFrame], build: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Deliver ``arrivals`` one batch at a time to a file stream and drain
+    ``build(stream)`` after each into a parquet sink against ONE
+    checkpoint, so streaming state carries from one arrival to the next.
+
+    Returns the sink's rows, materialized before the scratch directory
+    (arrivals, sink, checkpoint) is removed.
+    """
+    spark = arrivals[0].sparkSession
+    root = tempfile.mkdtemp(prefix="arrivals_")
+    src_dir = os.path.join(root, "arrivals")
+    out_dir = os.path.join(root, "out")
+    ckpt = os.path.join(root, "ckpt")
+    os.makedirs(src_dir)
+    try:
+        for i, batch in enumerate(arrivals):
+            # the file stream source lists FLAT files under the path — a
+            # Spark directory-write would be invisible to it, so write to a
+            # scratch dir and move the single part file in as a plain file
+            scratch = os.path.join(root, f"scratch{i}")
+            batch.coalesce(1).write.parquet(scratch)
+            part = next(
+                f for f in os.listdir(scratch)
+                if f.startswith("part-") and f.endswith(".parquet")
+            )
+            shutil.move(
+                os.path.join(scratch, part),
+                os.path.join(src_dir, f"batch{i}.parquet"),
+            )
+            stream = spark.readStream.schema(batch.schema).parquet(src_dir)
+            q = (
+                build(stream)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            _drain(q)
+        return spark.read.parquet(out_dir).localCheckpoint()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _table_stream(
+    spark: SparkSession, sf_dir: str, name: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """readStream over one testdata table, under its catalog schema unless
+    ``schema`` overrides it. The table is a single parquet FILE and the
+    file stream source wants a directory or glob, so it is addressed as a
+    glob under ``sf_dir``."""
+    _ensure_read_conf(spark)
+    return spark.readStream.schema(schema or SCHEMAS[name]).parquet(
+        table_path(sf_dir, f"*{name}")
+    )
+
 
 _ORACLE = """
 SELECT CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) AS ws,
@@ -60,31 +161,19 @@ def _events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, "events")
     unit = None
-    ts_field = pq.read_schema(path).field("ts")
+    ts_field = pq.read_schema(table_path(sf_dir, "events")).field("ts")
     if ts_field.type.id == 18:  # pyarrow TIMESTAMP type id
         unit = ts_field.type.unit  # 's' | 'ms' | 'us' | 'ns'
     nanos_as_long = unit == "ns" or unit is None
-    raw_schema = T.StructType(
+    ts_type = T.LongType() if nanos_as_long else T.TimestampType()
+    schema = T.StructType(
         [
-            T.StructField("event_id", T.LongType()),
-            T.StructField(
-                "ts", T.LongType() if nanos_as_long else T.TimestampType()
-            ),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
+            T.StructField("ts", ts_type) if f.name == "ts" else f
+            for f in SCHEMAS["events"].fields
         ]
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # the testdata table is a single parquet FILE; the file stream source
-    # wants a directory or glob, so address it as a glob under sf_dir
-    src = spark.readStream.schema(raw_schema).parquet(
-        path.replace("events.parquet", "*events.parquet")
-    )
+    src = _table_stream(spark, sf_dir, "events", schema)
     if nanos_as_long:
         # plain TIMESTAMP (not NTZ): EventTimeWatermark requires it, and
         # the session is pinned to UTC so the instant is unchanged.
@@ -103,9 +192,6 @@ def _events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def stream_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # stateful-agg state is partitioned by the shuffle-partition count at
-    # first run; 200 default = 200 tiny state stores for this volume
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src.withWatermark("ts", "1 hour")
@@ -124,16 +210,7 @@ def stream_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = f"rollup_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(sink).orderBy("ws", "event_type")
+    return _drain_to_memory(agg, "complete").orderBy("ws", "event_type")
 
 
 _STATEFUL_ORACLE = """
@@ -157,7 +234,6 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
 
     def update_totals(key, pdfs, state: GroupState):
@@ -181,19 +257,10 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"totals_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
     # single-batch drain: the last update per user IS the total; dedup by
     # keeping the max n_events per user to stay correct under multi-batch
     # replays too
-    latest = spark.table(sink).groupBy("user_id").agg(
+    latest = _drain_to_memory(out, "update").groupBy("user_id").agg(
         F.max(F.struct("n_events", "sum_value")).alias("s")
     )
     return latest.select(
@@ -224,11 +291,8 @@ ORDER BY 1
     tags=("streaming", "join"),
 )
 def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.catalog import load_tables
-
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
-    nation = load_tables(spark, sf_dir)["nation"]
+    nation = load_tables(spark, sf_dir, register=False)["nation"]
     enriched = src.join(
         F.broadcast(nation),
         src["user_id"] % 25 == nation["n_nationkey"],
@@ -237,16 +301,7 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    sink = f"enrich_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(sink).orderBy("nation")
+    return _drain_to_memory(agg, "complete").orderBy("nation")
 
 
 _STREAM_DEDUP_ORACLE = """
@@ -270,24 +325,12 @@ ORDER BY event_type
     tags=("streaming", "dedup"),
 )
 def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # dedup state is hash-partitioned on the subset key by the shuffle
-    # partition count — the state store scales horizontally with executors
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
     deduped = src.select("event_type", "user_id").dropDuplicates(
         ["event_type", "user_id"]
     )
-    sink = f"dedup_{uuid.uuid4().hex[:12]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
     return (
-        spark.table(sink)
+        _drain_to_memory(deduped, "append")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
         .orderBy("event_type")
@@ -318,7 +361,6 @@ ORDER BY 1
     tags=("streaming", "join"),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     purchases = (
         _events_stream_source(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -338,17 +380,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_ts >= p_ts - INTERVAL 10 MINUTES AND c_ts < p_ts"
         ),
     )
-    sink = f"ssjoin_{uuid.uuid4().hex[:12]}"
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
     return (
-        spark.table(sink)
+        _drain_to_memory(pairs, "append")
         .groupBy(F.col("p_user").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .orderBy("user_id")
@@ -384,24 +417,14 @@ FROM o GROUP BY 1 ORDER BY 1
     tags=("streaming", "session"),
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
     sessions = (
         src.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    sink = f"sess_{uuid.uuid4().hex[:12]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
     return (
-        spark.table(sink)
+        _drain_to_memory(sessions, "complete")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
@@ -435,10 +458,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "approx"),
 )
 def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.catalog import load_tables
-
     rsd = 0.02
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src.withWatermark("ts", "1 hour")
@@ -446,25 +466,16 @@ def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.approx_count_distinct("user_id", rsd).alias("approx_users"))
         .select(F.col("w.start").cast("timestamp_ntz").alias("ws"), "approx_users")
     )
-    sink = f"apxd_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
+    settled = _drain_to_memory(agg, "complete")
     exact = (
-        load_tables(spark, sf_dir)["events"]
+        load_tables(spark, sf_dir, register=False)["events"]
         .groupBy(
             F.date_trunc("hour", F.col("ts")).cast("timestamp_ntz").alias("ws")
         )
         .agg(F.countDistinct("user_id").alias("exact_users"))
     )
     return (
-        spark.table(sink)
-        .join(exact, "ws")
+        settled.join(exact, "ws")
         .select(
             "ws",
             "exact_users",
@@ -498,7 +509,6 @@ def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def stream_sliding_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     src = _events_stream_source(spark, sf_dir)
     agg = (
         src.withWatermark("ts", "1 hour")
@@ -506,16 +516,7 @@ def stream_sliding_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").cast("timestamp_ntz").alias("ws"), "cnt")
     )
-    sink = f"slide_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(sink).orderBy("ws")
+    return _drain_to_memory(agg, "complete").orderBy("ws")
 
 
 # ---------------------------------------------------------------------------
@@ -580,18 +581,11 @@ LATE_SPLIT_DAYS = 2  # batch 1 = first N days of the stream
     tags=("streaming", "watermark", "late-data"),
 )
 def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from compass_query_optimizer_spark.catalog import load_tables
-
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     # explicit TimestampType (LTZ): the session pins
     # spark.sql.timestampType=TIMESTAMP_NTZ, under which the string cast
     # 'timestamp' parses to NTZ — and EventTimeWatermark rejects NTZ.
     # The session timezone is UTC, so the instant is unchanged.
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = load_tables(spark, sf_dir, register=False)["events"].select(
         "event_id", F.col("ts").cast(T.TimestampType()).alias("ts"), "event_type"
     )
     split = ev.agg(
@@ -600,73 +594,22 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     early = F.col("ts") < F.lit(split).cast("timestamp")
     held = early & (F.col("event_id") % LATE_HOLDBACK_MOD == 0)
 
-    root = tempfile.mkdtemp(prefix="late_drop_")
-    src_dir = os.path.join(root, "arrivals")
-    out_dir = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src_dir)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def drain() -> None:
-        src = spark.readStream.schema(schema).parquet(src_dir)
-        agg = (
+    def hourly_counts(src: DataFrame) -> DataFrame:
+        return (
             src.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(
-                F.col("w.start").alias("ws_raw"), "event_type", "cnt"
-            )
+            .select(F.col("w.start").alias("ws_raw"), "event_type", "cnt")
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
 
-    def stage(df, name: str) -> None:
-        # the file stream source lists FLAT files under the path — a
-        # Spark directory-write would be invisible to it, so write to a
-        # scratch dir and move the single part file in as a plain file
-        scratch = os.path.join(root, f"scratch_{name}")
-        df.coalesce(1).write.parquet(scratch, mode="overwrite")
-        part = next(
-            f for f in os.listdir(scratch)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        shutil.move(
-            os.path.join(scratch, part), os.path.join(src_dir, name)
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    try:
-        # batch 1: on-time prefix (first days minus the held-back third)
-        stage(ev.filter(early & ~held), "batch1.parquet")
-        drain()
-        # batch 2: the held-back early rows arrive LATE + all later days
-        stage(ev.filter(held | ~early), "batch2.parquet")
-        drain()
-        return (
-            spark.read.parquet(out_dir)
-            .select(
-                F.col("ws_raw").cast("timestamp_ntz").alias("ws"),
-                "event_type",
-                "cnt",
-            )
-            .orderBy("ws", "event_type")
-            .localCheckpoint()  # materialize before the staging dir dies
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # batch 1: on-time prefix (first days minus the held-back third);
+    # batch 2: the held-back early rows arrive LATE + all later days
+    out = _drain_arrivals(
+        [ev.filter(early & ~held), ev.filter(held | ~early)], hourly_counts
+    )
+    return out.select(
+        F.col("ws_raw").cast("timestamp_ntz").alias("ws"), "event_type", "cnt"
+    ).orderBy("ws", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -719,14 +662,7 @@ FROM emitted GROUP BY u ORDER BY u
     tags=("streaming", "join", "outer", "watermark"),
 )
 def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from compass_query_optimizer_spark.catalog import load_tables
-
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    ev = load_tables(spark, sf_dir)["events"].select(
+    ev = load_tables(spark, sf_dir, register=False)["events"].select(
         "event_id",
         "user_id",
         F.col("ts").cast(T.TimestampType()).alias("ts"),
@@ -737,22 +673,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]["d"]
     early = F.col("ts") < F.lit(split).cast("timestamp")
 
-    root = tempfile.mkdtemp(prefix="ss_left_")
-    src_dir = os.path.join(root, "arrivals")
-    out_dir = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src_dir)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-
-    def drain() -> None:
-        src = spark.readStream.schema(schema).parquet(src_dir)
+    def left_join(src: DataFrame) -> DataFrame:
         p = (
             src.filter(F.col("event_type") == "purchase")
             .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
@@ -763,7 +684,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
             .withWatermark("c_ts", "1 hour")
         )
-        j = p.join(
+        return p.join(
             c,
             F.expr(
                 "p_user = c_user AND "
@@ -771,46 +692,18 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "leftOuter",
         )
-        q = (
-            j.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
 
-    def stage(df, name: str) -> None:
-        scratch = os.path.join(root, f"scratch_{name}")
-        df.coalesce(1).write.parquet(scratch, mode="overwrite")
-        part = next(
-            f
-            for f in os.listdir(scratch)
-            if f.startswith("part-") and f.endswith(".parquet")
+    out = _drain_arrivals([ev.filter(early), ev.filter(~early)], left_join)
+    return (
+        out.groupBy(F.col("p_user").alias("user_id"))
+        .agg(
+            F.count("c_user").alias("n_matched"),
+            F.sum(F.when(F.col("c_user").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_unmatched"),
         )
-        shutil.move(os.path.join(scratch, part), os.path.join(src_dir, name))
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    try:
-        stage(ev.filter(early), "batch1.parquet")
-        drain()
-        stage(ev.filter(~early), "batch2.parquet")
-        drain()
-        return (
-            spark.read.parquet(out_dir)
-            .groupBy(F.col("p_user").alias("user_id"))
-            .agg(
-                F.count("c_user").alias("n_matched"),
-                F.sum(F.when(F.col("c_user").isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("n_unmatched"),
-            )
-            .orderBy("user_id")
-            .localCheckpoint()  # materialize before the staging dir dies
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -924,38 +817,14 @@ def _stream_minhash_oracle() -> str:
     tags=("streaming", "dedup", "minhash"),
 )
 def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    raw_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    src = spark.readStream.schema(raw_schema).parquet(
-        table_path(sf_dir, "documents").replace(
-            "documents.parquet", "*documents.parquet"
-        )
-    )
+    from compass_query_optimizer_spark.operators.dedup import minhash_bands
+
+    src = _table_stream(spark, sf_dir, "documents")
     idx = _row_minhash_bands(src).groupBy("band", "band_key").agg(
         F.min("doc_id").alias("min_doc")
     )
-    sink = f"mh_idx_{uuid.uuid4().hex[:12]}"
-    q = (
-        idx.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    from compass_query_optimizer_spark.catalog import load_tables
-    from compass_query_optimizer_spark.operators.dedup import minhash_bands
-
-    bands = minhash_bands(load_tables(spark, sf_dir)["documents"])
-    settled = spark.table(sink)
+    settled = _drain_to_memory(idx, "complete")
+    bands = minhash_bands(load_tables(spark, sf_dir, register=False)["documents"])
     return (
         bands.join(settled, ["band", "band_key"])
         .groupBy("doc_id")

@@ -1,7 +1,9 @@
 """The package reads no tuning knobs from the environment: the only
 variables it consults pick where Spark runs (``SPARK_MASTER``) and how
-many local cores it takes (``SPARK_GRAFT_CPUS``). Spark-free: the check
-parses the sources."""
+many local cores it takes (``SPARK_GRAFT_CPUS``). Nor does any query
+override a session conf of its own: named conf keys are written only by
+the session setup and the table loader. Spark-free: the checks parse the
+sources."""
 
 from __future__ import annotations
 
@@ -64,3 +66,44 @@ def test_package_reads_only_the_session_placement_variables():
     for path in sorted(PACKAGE.rglob("*.py")):
         keys |= env_keys(ast.parse(path.read_text(), filename=str(path)))
     assert keys == {"SPARK_GRAFT_CPUS", "SPARK_MASTER"}
+
+
+def conf_set_keys(tree: ast.AST) -> set[str]:
+    """Keys written through ``<x>.conf.set(k, v)`` or ``conf.set(k, v)``."""
+    keys = set()
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and node.args
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+        ):
+            continue
+        target = node.func.value
+        if (isinstance(target, ast.Attribute) and target.attr == "conf") or (
+            isinstance(target, ast.Name) and target.id == "conf"
+        ):
+            keys.add(_key(node.args[0]))
+    return keys
+
+
+def test_only_the_session_and_loader_set_named_confs():
+    # session and Hadoop conf writes both count; other .set calls do not
+    src = (
+        "spark.conf.set('spark.sql.shuffle.partitions', '32')\n"
+        "spark.conf.set(k, v)\n"
+        "conf.set(prefix + 'endpoint', v)\n"
+        "params.set('x', 1)\n"
+    )
+    assert conf_set_keys(ast.parse(src)) == {
+        "spark.sql.shuffle.partitions",
+        "<computed>",
+    }
+
+    setters = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        named = conf_set_keys(tree) - {"<computed>"}
+        if named:
+            setters[path.relative_to(PACKAGE).as_posix()] = named
+    assert set(setters) <= {"session.py", "catalog.py"}, setters

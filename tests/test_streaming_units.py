@@ -269,3 +269,33 @@ def test_stream_upsert_ingest_idempotent_merge(spark, tmp_path):
         for r in spark.read.parquet(sink).select("k", "v").collect()
     }
     assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
+
+
+def test_streaming_entries_leave_no_session_state(spark):
+    """A streaming entry leaves the session as it found it: the caller's
+    shuffle-partition count survives, and no memory-sink view (nor the
+    sink it pins) stays in the catalog — while the rows still equal the
+    DuckDB oracle. One memory-sink entry and one two-arrival entry cover
+    both drain helpers."""
+    from compass_query_optimizer_spark.registry import all_queries
+    from tests.conftest import SF_DIR, make_duck
+    from tests.test_oracle import _norm_rows
+
+    key = "spark.sql.shuffle.partitions"
+    caller_value = spark.conf.get(key)
+    duck = make_duck(SF_DIR)
+    spark.conf.set(key, "8")
+    try:
+        for name in ("stream_window_rollup", "stream_late_data_drop"):
+            spec = all_queries()[name]
+            tables = sorted((t.name, t.isTemporary) for t in spark.catalog.listTables())
+            sdf = spec.build(spark, SF_DIR)
+            assert spark.conf.get(key) == "8", name
+            after = sorted((t.name, t.isTemporary) for t in spark.catalog.listTables())
+            assert after == tables, name
+            res = duck.execute(spec.oracle_text())
+            dcols = [d[0] for d in res.description]
+            got = _norm_rows(list(sdf.columns), [tuple(r) for r in sdf.collect()])
+            assert got == _norm_rows(dcols, res.fetchall()), name
+    finally:
+        spark.conf.set(key, caller_value)

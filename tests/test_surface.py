@@ -347,6 +347,24 @@ def test_parquet_schema_evolution_mergeschema(spark, tmp_path):
     assert rows[1]["score"] is None and rows[2]["score"] == 9.5
 
 
+def test_copy_abort_releases_its_cache(spark, tmp_path):
+    """An aborted COPY unpersists the read it cached for the reject count
+    and aborts with the message every format shares (CSV, JSON and XML
+    run through one reject helper)."""
+    from compass_query_optimizer_spark.sources.copy_io import copy_from_json
+
+    schema = T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]
+    )
+    bad = tmp_path / "bad.jsonl"
+    bad.write_text('{"k": 1, "v": "ok"}\n{not json at all}\n')
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(ValueError, match="1 rejected rows > max_reject=0"):
+        copy_from_json(spark, str(bad), schema, max_reject=0)
+    # no new persisted RDD; an older one may be collected meanwhile
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted
+
+
 # --------------------------------------------------------------- orc / avro
 def test_copy_orc_roundtrip(spark, tmp_path):
     import pyspark.sql.types as T
