@@ -153,10 +153,12 @@ def _sidecar_path() -> str:
 
 
 def _overflow(key: str):
-    """Block-level step: replace a whole block by a pointer to the sidecar."""
+    """Block-level step: replace a whole block by ``"<key>_overflow":
+    true``. The block is in the sidecar, which ``detail`` alone names, so
+    a long sidecar path is paid once on the line, not once per block."""
     def step(slim: dict) -> None:
         if slim.pop(key, None) is not None:
-            slim[f"{key}_overflow"] = _sidecar_path()
+            slim[f"{key}_overflow"] = True
     return step
 
 

@@ -13,31 +13,27 @@ codecs absent from this container and stay behind an honest
 Scale design: mapInPandas streams Arrow batches (zero-copy into pandas),
 so per-batch Python overhead is amortized; payload bytes never shuffle —
 feature extraction happens in the scan stage, and only the (small) feature
-rows move.
+rows move. Every per-payload entry runs through one worker,
+``_map_payload_rows``, and each media kind's payload is built by one
+function (``_ppm_payloads``, ``_wav_payloads``, ``_y4m_payloads``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+import struct
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from compass_query_optimizer_spark.catalog import load_tables
 from compass_query_optimizer_spark.registry import query
-
-# payload row: opaque bytes + typed metadata (kind, encoding)
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -86,8 +82,6 @@ def _decode_netpbm(payload: bytes):
 
     Header: magic, whitespace/comment-separated width height maxval, ONE
     whitespace byte, then raw samples row-major."""
-    import numpy as np
-
     if payload[:2] not in (b"P5", b"P6"):
         raise ValueError(f"not a binary netpbm payload: {payload[:2]!r}")
     rgb = payload[:2] == b"P6"
@@ -120,10 +114,6 @@ def _decode_bmp(payload: bytes):
     per-pixel byte order is BGR (not RGB), and every row pads to a
     4-byte boundary. Returns uint8 (h, w, 3) in top-down RGB — the same
     orientation/channel contract as the netpbm decoder."""
-    import struct
-
-    import numpy as np
-
     if payload[:2] != b"BM":
         raise ValueError(f"not a BMP payload: {payload[:2]!r}")
     pixel_offset = struct.unpack_from("<I", payload, 10)[0]
@@ -152,10 +142,6 @@ def _decode_wav_pcm16(payload: bytes):
     """RIFF/WAVE PCM16 parser: walks the chunk list (fmt must precede
     data), returns (sample_rate, int16 array shaped (n_samples, channels)).
     Non-PCM encodings (format tag != 1) raise NotImplementedError."""
-    import struct
-
-    import numpy as np
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, rate, channels, bits = 12, None, None, None
@@ -190,8 +176,6 @@ def extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Arrow batch). 'Frame sampling' for the text kind = 1 frame per 64
     bytes, mirroring how a video sampler would emit one row per frame
     group."""
-    import hashlib
-
     for pdf in batches:
         lens = pdf["payload"].map(len)
         yield pd.DataFrame(
@@ -207,23 +191,76 @@ def extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+# Spark type → the pandas dtype a worker column is built with, so an empty
+# output batch still carries the declared types
+_PD_DTYPES = {
+    T.LongType: "int64",
+    T.IntegerType: "int32",
+    T.DoubleType: "float64",
+    T.BooleanType: "boolean",
+    T.StringType: "object",
+}
+
+
+def _payload_rows_worker(
+    rows_of: Callable[[str, bytes], list[tuple]], schema: T.StructType
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The mapInPandas batch function of `_map_payload_rows`: each
+    (doc_id, kind, payload) row becomes the rows ``rows_of(kind,
+    payload)`` returns, each with doc_id in front."""
+    names = schema.fieldNames()
+    dtypes = [_PD_DTYPES[type(f.dataType)] for f in schema.fields]
+
+    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (doc_id, *row)
+                for doc_id, kind, payload in zip(
+                    pdf["doc_id"], pdf["kind"], pdf["payload"]
+                )
+                for row in rows_of(kind, bytes(payload))
+            ]
+            cols = zip(*rows) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.array(c, dtype=d) for n, c, d in zip(names, cols, dtypes)}
+            )
+
+    worker.__name__ = rows_of.__name__  # the MapInPandas label in plans
+    return worker
+
+
+def _map_payload_rows(
+    payloads: DataFrame,
+    rows_of: Callable[[str, bytes], list[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """Map every (doc_id, kind, payload) row of ``payloads`` to its output
+    rows in the scan stage (one mapInPandas): ``rows_of(kind, payload)``
+    returns the row tuples without doc_id; ``schema`` is doc_id followed
+    by those columns."""
+    return payloads.mapInPandas(_payload_rows_worker(rows_of, schema), schema=schema)
+
+
+def _payload_table(docs: DataFrame, kind: str, payload: Column) -> DataFrame:
+    return docs.select("doc_id", F.lit(kind).alias("kind"), payload.alias("payload"))
+
+
+def _md5_repeat(n: int) -> Column:
+    """repeat(md5(text), n): the ASCII bytes every media payload is cut
+    from, so each oracle rebuilds them with the same string functions."""
+    return F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), n)
+
+
 def payloads_from_documents(docs: DataFrame) -> DataFrame:
     """Wrap the documents table as a multimodal payload table (utf-8 bytes
     as the opaque payload — deterministic stand-in for media bytes)."""
-    return docs.select(
-        "doc_id",
-        F.lit("text/utf-8").alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-
-
-def featurize(payloads: DataFrame) -> DataFrame:
-    return payloads.mapInPandas(extract_features, schema=FEATURE_SCHEMA)
+    return _payload_table(docs, "text/utf-8", F.encode(F.col("text"), "UTF-8"))
 
 
 FRAME_BYTES = 64  # frame group size for the deterministic text-kind sampler
 FRAME_STRIDE = 2  # sample every 2nd frame
 
+# one row per sampled frame: the text sampler's and the y4m sampler's
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -233,58 +270,33 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas frame sampler: one output row per sampled frame — the
-    row-exploding shape a video frame-sampler has (N input rows → M output
-    rows). Frames = consecutive FRAME_BYTES-byte windows, every
+def sample_frames(kind: str, payload: bytes) -> list[tuple]:
+    """Frame sampler: one row per sampled frame — the row-exploding shape
+    a video frame-sampler has (N payloads → M rows). Frames are
+    consecutive FRAME_BYTES-byte windows of the raw bytes, every
     FRAME_STRIDE-th kept."""
-    import hashlib
-
-    for pdf in batches:
-        ids, idxs, md5s = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            for k in range(0, (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES, FRAME_STRIDE):
-                ids.append(doc_id)
-                idxs.append(k)
-                md5s.append(
-                    hashlib.md5(
-                        payload[k * FRAME_BYTES : (k + 1) * FRAME_BYTES]
-                    ).hexdigest()
-                )
-        yield pd.DataFrame(
-            {"doc_id": ids, "frame_idx": pd.array(idxs, dtype="int32"), "frame_md5": md5s}
-        )
+    n = (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES
+    return [
+        (k, hashlib.md5(payload[k * FRAME_BYTES : (k + 1) * FRAME_BYTES]).hexdigest())
+        for k in range(0, n, FRAME_STRIDE)
+    ]
 
 
 def resize_image(kind: str, payload: bytes, w: int, h: int) -> bytes:
     """Nearest-neighbor image resize.
 
     REAL for uncompressed kinds: "image/ppm"/"image/pgm" decode via the
-    native netpbm parser, resample, and re-encode in the same format;
-    "image/fake" keeps the legacy raw-grayscale-square contract.
-    Compressed kinds (jpeg/png) raise until an external codec is plugged
-    in."""
-    import math
-
-    import numpy as np
-
-    if kind in ("image/ppm", "image/pgm"):
-        img = _decode_netpbm(payload)
-        sh, sw = img.shape[0], img.shape[1]
-        ys = (np.arange(h) * sh) // h
-        xs = (np.arange(w) * sw) // w
-        out = img[np.ix_(ys, xs)]
-        magic = b"P6" if img.ndim == 3 else b"P5"
-        return b"%s\n%d %d\n255\n" % (magic, w, h) + out.tobytes()
-    if kind != "image/fake":
+    native netpbm parser, resample, and re-encode in the same format.
+    Every other kind raises until an external codec is plugged in."""
+    if kind not in ("image/ppm", "image/pgm"):
         raise NotImplementedError(
             f"image decode for kind={kind!r} requires external codecs"
         )
-    side = int(math.isqrt(len(payload)))
-    img = np.frombuffer(payload[: side * side], dtype=np.uint8).reshape(side, side)
-    ys = (np.arange(h) * side) // h
-    xs = (np.arange(w) * side) // w
-    return img[np.ix_(ys, xs)].tobytes()
+    img = _decode_netpbm(payload)
+    ys = (np.arange(h) * img.shape[0]) // h
+    xs = (np.arange(w) * img.shape[1]) // w
+    magic = b"P6" if img.ndim == 3 else b"P5"
+    return b"%s\n%d %d\n255\n" % (magic, w, h) + img[np.ix_(ys, xs)].tobytes()
 
 
 @query(
@@ -302,9 +314,8 @@ def resize_image(kind: str, payload: bytes, w: int, h: int) -> bytes:
     tags=("multimodal", "pandas-udf"),
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir)
-    payloads = payloads_from_documents(t["documents"])
-    return payloads.mapInPandas(sample_frames, schema=FRAME_SCHEMA).orderBy(
+    payloads = payloads_from_documents(load_tables(spark, sf_dir)["documents"])
+    return _map_payload_rows(payloads, sample_frames, FRAME_SCHEMA).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -325,8 +336,10 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "pandas-udf"),
 )
 def mm_payload_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir)
-    return featurize(payloads_from_documents(t["documents"])).orderBy("doc_id")
+    payloads = payloads_from_documents(load_tables(spark, sf_dir)["documents"])
+    return payloads.mapInPandas(extract_features, schema=FEATURE_SCHEMA).orderBy(
+        "doc_id"
+    )
 
 
 # End-to-end proof the native image decoder runs inside the pipeline:
@@ -348,30 +361,25 @@ IMG_DECODE_SCHEMA = T.StructType(
 )
 
 
-def decode_image_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: PPM payload → (dims, decoded-pixel md5) via the
-    REAL netpbm parser — a header-parse bug, stride slip, or channel
-    reorder changes pixel_md5 and fails the oracle."""
-    import hashlib
+def _pixel_row(img: np.ndarray) -> tuple:
+    """(width, height, channels, md5 of the decoded pixel bytes)."""
+    channels = img.shape[2] if img.ndim == 3 else 1
+    return img.shape[1], img.shape[0], channels, hashlib.md5(img.tobytes()).hexdigest()
 
-    for pdf in batches:
-        out = {"doc_id": [], "width": [], "height": [], "channels": [], "pixel_md5": []}
-        for doc_id, kind, payload in zip(pdf["doc_id"], pdf["kind"], pdf["payload"]):
-            img = decode_payload(kind, payload)
-            out["doc_id"].append(doc_id)
-            out["width"].append(img.shape[1])
-            out["height"].append(img.shape[0])
-            out["channels"].append(img.shape[2] if img.ndim == 3 else 1)
-            out["pixel_md5"].append(hashlib.md5(img.tobytes()).hexdigest())
-        yield pd.DataFrame(
-            {
-                "doc_id": out["doc_id"],
-                "width": pd.array(out["width"], dtype="int32"),
-                "height": pd.array(out["height"], dtype="int32"),
-                "channels": pd.array(out["channels"], dtype="int32"),
-                "pixel_md5": out["pixel_md5"],
-            }
-        )
+
+def decode_image_features(kind: str, payload: bytes) -> list[tuple]:
+    """Image payload → (dims, decoded-pixel md5) via the REAL parser — a
+    header-parse bug, stride slip, or channel reorder changes pixel_md5
+    and fails the oracle."""
+    return [_pixel_row(decode_payload(kind, payload))]
+
+
+def _ppm_payloads(docs: DataFrame) -> DataFrame:
+    """Each doc as a 24x16 P6 payload: header + repeat(md5(text), 36)."""
+    header = F.lit(f"P6\n{IMG_W} {IMG_H}\n255\n")
+    return _payload_table(
+        docs, "image/ppm", F.encode(F.concat(header, _md5_repeat(36)), "UTF-8")
+    )
 
 
 @query(
@@ -393,17 +401,8 @@ def decode_image_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
 )
 def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    header = f"P6\n{IMG_W} {IMG_H}\n255\n"
-    payloads = docs.select(
-        "doc_id",
-        F.lit("image/ppm").alias("kind"),
-        F.encode(
-            F.concat(F.lit(header), F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 36)),
-            "UTF-8",
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(
-        decode_image_features, schema=IMG_DECODE_SCHEMA
+    return _map_payload_rows(
+        _ppm_payloads(docs), decode_image_features, IMG_DECODE_SCHEMA
     ).orderBy("doc_id")
 
 
@@ -426,8 +425,6 @@ AUDIO_DECODE_SCHEMA = T.StructType(
 
 
 def _wav_header() -> bytes:
-    import struct
-
     fmt = struct.pack("<HHIIHH", 1, 1, AUDIO_RATE, AUDIO_RATE * 2, 2, 16)
     body_size = 4 + (8 + len(fmt)) + (8 + AUDIO_DATA_BYTES)
     return (
@@ -437,29 +434,19 @@ def _wav_header() -> bytes:
     )
 
 
-def decode_audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: WAV payload → (rate, dims, sample-bytes md5)
-    via the REAL RIFF walker."""
-    import hashlib
+def _wav_payloads(docs: DataFrame) -> DataFrame:
+    """Each doc as a mono PCM16 WAV payload: constant header + 1,152
+    sample bytes of repeat(md5(text), 36)."""
+    samples = F.encode(_md5_repeat(36), "UTF-8")
+    return _payload_table(docs, "audio/wav", F.concat(F.lit(_wav_header()), samples))
 
-    for pdf in batches:
-        out = {"doc_id": [], "sample_rate": [], "n_samples": [], "channels": [], "sample_md5": []}
-        for doc_id, kind, payload in zip(pdf["doc_id"], pdf["kind"], pdf["payload"]):
-            rate, samples = decode_payload(kind, payload)
-            out["doc_id"].append(doc_id)
-            out["sample_rate"].append(rate)
-            out["n_samples"].append(samples.shape[0])
-            out["channels"].append(samples.shape[1])
-            out["sample_md5"].append(hashlib.md5(samples.tobytes()).hexdigest())
-        yield pd.DataFrame(
-            {
-                "doc_id": out["doc_id"],
-                "sample_rate": pd.array(out["sample_rate"], dtype="int32"),
-                "n_samples": pd.array(out["n_samples"], dtype="int32"),
-                "channels": pd.array(out["channels"], dtype="int32"),
-                "sample_md5": out["sample_md5"],
-            }
-        )
+
+def decode_audio_features(kind: str, payload: bytes) -> list[tuple]:
+    """WAV payload → (rate, dims, sample-bytes md5) via the REAL RIFF
+    walker."""
+    rate, samples = decode_payload(kind, payload)
+    md5 = hashlib.md5(samples.tobytes()).hexdigest()
+    return [(rate, samples.shape[0], samples.shape[1], md5)]
 
 
 @query(
@@ -481,16 +468,8 @@ def decode_audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
 )
 def mm_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select(
-        "doc_id",
-        F.lit("audio/wav").alias("kind"),
-        F.concat(
-            F.lit(_wav_header()),
-            F.encode(F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 36), "UTF-8"),
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(
-        decode_audio_features, schema=AUDIO_DECODE_SCHEMA
+    return _map_payload_rows(
+        _wav_payloads(docs), decode_audio_features, AUDIO_DECODE_SCHEMA
     ).orderBy("doc_id")
 
 
@@ -503,8 +482,6 @@ def _decode_y4m(payload: bytes):
 
     Returns (width, height, frames) with frames shaped
     (n_frames, 3, height, width) uint8."""
-    import numpy as np
-
     nl = payload.index(b"\n")
     header = payload[:nl].split(b" ")
     if header[0] != b"YUV4MPEG2":
@@ -542,36 +519,31 @@ def _decode_y4m(payload: bytes):
 VID_W, VID_H, VID_FRAMES = 8, 4, 6  # 96-byte C444 frames, 6 per doc
 VID_STRIDE = 2  # sample every 2nd frame
 
-VIDEO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_md5", T.StringType()),
+
+def _y4m_payloads(docs: DataFrame) -> DataFrame:
+    """Each doc as a C444 YUV4MPEG2 stream: stream header + VID_FRAMES
+    FRAME-delimited planes cut from repeat(md5(text), 18)."""
+    fb = VID_W * VID_H * 3
+    hexsrc = _md5_repeat(18)
+    frames = [
+        F.concat(F.lit("FRAME\n"), F.substring(hexsrc, k * fb + 1, fb))
+        for k in range(VID_FRAMES)
     ]
-)
+    header = F.lit(f"YUV4MPEG2 W{VID_W} H{VID_H} F25:1 Ip A1:1 C444\n")
+    return _payload_table(
+        docs, "video/y4m", F.encode(F.concat(header, *frames), "UTF-8")
+    )
 
 
-def sample_video_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: y4m payload → one row per SAMPLED frame (every
-    VID_STRIDE-th), md5 over the frame's raw planes — the true video
-    frame-sampling shape, N payloads → M frame rows."""
-    import hashlib
-
-    for pdf in batches:
-        ids, idxs, md5s = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, frames = _decode_y4m(bytes(payload))
-            for k in range(0, frames.shape[0], VID_STRIDE):
-                ids.append(doc_id)
-                idxs.append(k)
-                md5s.append(hashlib.md5(frames[k].tobytes()).hexdigest())
-        yield pd.DataFrame(
-            {
-                "doc_id": ids,
-                "frame_idx": pd.array(idxs, dtype="int32"),
-                "frame_md5": md5s,
-            }
-        )
+def sample_video_frames(kind: str, payload: bytes) -> list[tuple]:
+    """y4m payload → one row per SAMPLED frame (every VID_STRIDE-th), md5
+    over the frame's raw planes — the true video frame-sampling shape,
+    N payloads → M frame rows."""
+    _, _, frames = decode_payload(kind, payload)
+    return [
+        (k, hashlib.md5(frames[k].tobytes()).hexdigest())
+        for k in range(0, len(frames), VID_STRIDE)
+    ]
 
 
 @query(
@@ -595,25 +567,8 @@ def sample_video_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 )
 def mm_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    fb = VID_W * VID_H * 3
-    hexsrc = F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 18)
-    frame_parts = [
-        F.concat(F.lit("FRAME\n"), F.substring(hexsrc, k * fb + 1, fb))
-        for k in range(VID_FRAMES)
-    ]
-    payloads = docs.select(
-        "doc_id",
-        F.lit("video/y4m").alias("kind"),
-        F.encode(
-            F.concat(
-                F.lit(f"YUV4MPEG2 W{VID_W} H{VID_H} F25:1 Ip A1:1 C444\n"),
-                *frame_parts,
-            ),
-            "UTF-8",
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(
-        sample_video_frames, schema=VIDEO_FRAME_SCHEMA
+    return _map_payload_rows(
+        _y4m_payloads(docs), sample_video_frames, FRAME_SCHEMA
     ).orderBy("doc_id", "frame_idx")
 
 
@@ -638,36 +593,20 @@ SCENE_SCHEMA = T.StructType(
 )
 
 
-def detect_scene_changes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: y4m payload → one row per consecutive frame
-    pair with the planes' exact mean-absolute-difference (int sum / plane
-    size, so the double is bit-identical to the oracle's)."""
-    import numpy as np
-
-    for pdf in batches:
-        ids, idxs, mads, cuts = [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, frames = _decode_y4m(bytes(payload))
-            size = 3 * h * w
-            for k in range(1, frames.shape[0]):
-                sad = int(
-                    np.abs(
-                        frames[k].astype(np.int16) - frames[k - 1].astype(np.int16)
-                    ).sum()
-                )
-                mad = sad / size
-                ids.append(doc_id)
-                idxs.append(k)
-                mads.append(round(mad, 4))
-                cuts.append(mad > SCENE_CUT_MAD)
-        yield pd.DataFrame(
-            {
-                "doc_id": ids,
-                "frame_idx": pd.array(idxs, dtype="int32"),
-                "mad": pd.array(mads, dtype="float64"),
-                "is_cut": pd.array(cuts, dtype="boolean"),
-            }
-        )
+def detect_scene_changes(kind: str, payload: bytes) -> list[tuple]:
+    """y4m payload → one row per consecutive frame pair with the planes'
+    exact mean-absolute-difference (int sum / plane size, so the double
+    is bit-identical to the oracle's)."""
+    w, h, frames = decode_payload(kind, payload)
+    size = 3 * h * w
+    sads = [
+        int(np.abs(frames[k].astype(np.int16) - frames[k - 1].astype(np.int16)).sum())
+        for k in range(1, len(frames))
+    ]
+    return [
+        (k, round(sad / size, 4), sad / size > SCENE_CUT_MAD)
+        for k, sad in enumerate(sads, 1)
+    ]
 
 
 @query(
@@ -703,26 +642,9 @@ def detect_scene_changes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
 )
 def mm_scene_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    fb = VID_W * VID_H * 3
-    hexsrc = F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 18)
-    frame_parts = [
-        F.concat(F.lit("FRAME\n"), F.substring(hexsrc, k * fb + 1, fb))
-        for k in range(VID_FRAMES)
-    ]
-    payloads = docs.select(
-        "doc_id",
-        F.lit("video/y4m").alias("kind"),
-        F.encode(
-            F.concat(
-                F.lit(f"YUV4MPEG2 W{VID_W} H{VID_H} F25:1 Ip A1:1 C444\n"),
-                *frame_parts,
-            ),
-            "UTF-8",
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(detect_scene_changes, schema=SCENE_SCHEMA).orderBy(
-        "doc_id", "frame_idx"
-    )
+    return _map_payload_rows(
+        _y4m_payloads(docs), detect_scene_changes, SCENE_SCHEMA
+    ).orderBy("doc_id", "frame_idx")
 
 
 # ---------------------------------------------------------------------------
@@ -747,31 +669,15 @@ AUDIO_ENERGY_SCHEMA = T.StructType(
 )
 
 
-def audio_energy_windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: WAV payload → one row per 64-sample window with
-    the exact RMS (int64 sum of squares, one double sqrt)."""
-    import numpy as np
-
-    for pdf in batches:
-        ids, idxs, rmss, sils = [], [], [], []
-        for doc_id, kind, payload in zip(pdf["doc_id"], pdf["kind"], pdf["payload"]):
-            rate, samples = decode_payload(kind, bytes(payload))
-            v = samples.reshape(-1).astype(np.int64)
-            for k in range(0, v.shape[0] // AUDIO_WIN):
-                w = v[k * AUDIO_WIN : (k + 1) * AUDIO_WIN]
-                rms = float(np.sqrt(int((w * w).sum()) / AUDIO_WIN))
-                ids.append(doc_id)
-                idxs.append(k)
-                rmss.append(round(rms, 4))
-                sils.append(rms < AUDIO_SILENCE_RMS)
-        yield pd.DataFrame(
-            {
-                "doc_id": ids,
-                "win_idx": pd.array(idxs, dtype="int32"),
-                "rms": pd.array(rmss, dtype="float64"),
-                "is_silence": pd.array(sils, dtype="boolean"),
-            }
-        )
+def audio_energy_windows(kind: str, payload: bytes) -> list[tuple]:
+    """WAV payload → one row per 64-sample window with the exact RMS
+    (int64 sum of squares, one double sqrt)."""
+    _, samples = decode_payload(kind, payload)
+    v = samples.reshape(-1).astype(np.int64)
+    n = v.shape[0] // AUDIO_WIN
+    sums = (v[: n * AUDIO_WIN].reshape(n, AUDIO_WIN) ** 2).sum(axis=1)
+    rms = [float(np.sqrt(int(ss) / AUDIO_WIN)) for ss in sums]
+    return [(k, round(r, 4), r < AUDIO_SILENCE_RMS) for k, r in enumerate(rms)]
 
 
 @query(
@@ -814,16 +720,8 @@ def audio_energy_windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
 )
 def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select(
-        "doc_id",
-        F.lit("audio/wav").alias("kind"),
-        F.concat(
-            F.lit(_wav_header()),
-            F.encode(F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 36), "UTF-8"),
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(
-        audio_energy_windows, schema=AUDIO_ENERGY_SCHEMA
+    return _map_payload_rows(
+        _wav_payloads(docs), audio_energy_windows, AUDIO_ENERGY_SCHEMA
     ).orderBy("doc_id", "win_idx")
 
 
@@ -848,22 +746,19 @@ PHASH_SCHEMA = T.StructType(
 )
 
 
-def phash_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: PPM payload → 64-char aHash bit string via the
-    real netpbm decoder (channel-sum grayscale, 3x2-pixel blocks)."""
-    import numpy as np
+def _ahash(img: np.ndarray) -> tuple[str, int]:
+    """The 64-char aHash bit string of a (16, 24, 3) image (channel-sum
+    grayscale, 3x2-pixel blocks) and its exact total luminance."""
+    g = img.astype(np.int64).sum(axis=2)  # grayscale = r+g+b, exact
+    blocks = g.reshape(8, 2, 8, 3).sum(axis=(1, 3))  # (by, bx) sums
+    total = int(g.sum())
+    bits = (blocks * 64 > total).reshape(-1)  # b = by*8 + bx
+    return "".join("1" if b else "0" for b in bits), total
 
-    for pdf in batches:
-        ids, hashes = [], []
-        for doc_id, kind, payload in zip(pdf["doc_id"], pdf["kind"], pdf["payload"]):
-            img = decode_payload(kind, bytes(payload))  # (16, 24, 3) uint8
-            g = img.astype(np.int64).sum(axis=2)  # grayscale = r+g+b, exact
-            blocks = g.reshape(8, 2, 8, 3).sum(axis=(1, 3))  # (by, bx) sums
-            total = int(g.sum())
-            bits = (blocks * 64 > total).reshape(-1)  # b = by*8 + bx
-            ids.append(doc_id)
-            hashes.append("".join("1" if b else "0" for b in bits))
-        yield pd.DataFrame({"doc_id": ids, "phash": hashes})
+
+def phash_images(kind: str, payload: bytes) -> list[tuple]:
+    """Image payload → its aHash bit string via the real decoder."""
+    return [_ahash(decode_payload(kind, payload))[:1]]
 
 
 @query(
@@ -906,18 +801,7 @@ def phash_images(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 )
 def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    header = f"P6\n{IMG_W} {IMG_H}\n255\n"
-    payloads = docs.select(
-        "doc_id",
-        F.lit("image/ppm").alias("kind"),
-        F.encode(
-            F.concat(
-                F.lit(header), F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 36)
-            ),
-            "UTF-8",
-        ).alias("payload"),
-    )
-    hashed = payloads.mapInPandas(phash_images, schema=PHASH_SCHEMA)
+    hashed = _map_payload_rows(_ppm_payloads(docs), phash_images, PHASH_SCHEMA)
     return (
         hashed.groupBy("phash")
         .agg(
@@ -949,29 +833,10 @@ PHASH_QC_SCHEMA = T.StructType(
 )
 
 
-def phash_and_brightness(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: one decode yields the aHash AND the exact
-    integer total luminance (the two curation signals)."""
-    import numpy as np
-
-    for pdf in batches:
-        ids, hashes, bright = [], [], []
-        for doc_id, kind, payload in zip(pdf["doc_id"], pdf["kind"], pdf["payload"]):
-            img = decode_payload(kind, bytes(payload))
-            g = img.astype(np.int64).sum(axis=2)
-            blocks = g.reshape(8, 2, 8, 3).sum(axis=(1, 3))
-            total = int(g.sum())
-            bits = (blocks * 64 > total).reshape(-1)
-            ids.append(doc_id)
-            hashes.append("".join("1" if b else "0" for b in bits))
-            bright.append(total)
-        yield pd.DataFrame(
-            {
-                "doc_id": ids,
-                "phash": hashes,
-                "brightness": pd.array(bright, dtype="int64"),
-            }
-        )
+def phash_and_brightness(kind: str, payload: bytes) -> list[tuple]:
+    """One decode yields the aHash AND the exact integer total luminance
+    (the two curation signals)."""
+    return [_ahash(decode_payload(kind, payload))]
 
 
 @query(
@@ -1022,18 +887,7 @@ def phash_and_brightness(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
 )
 def pipeline_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    header = f"P6\n{IMG_W} {IMG_H}\n255\n"
-    payloads = docs.select(
-        "doc_id",
-        F.lit("image/ppm").alias("kind"),
-        F.encode(
-            F.concat(
-                F.lit(header), F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 36)
-            ),
-            "UTF-8",
-        ).alias("payload"),
-    )
-    sig = payloads.mapInPandas(phash_and_brightness, schema=PHASH_QC_SCHEMA)
+    sig = _map_payload_rows(_ppm_payloads(docs), phash_and_brightness, PHASH_QC_SCHEMA)
     w = Window.partitionBy("phash").orderBy("doc_id")
     keep = (
         sig.join(docs.select("doc_id", "source"), "doc_id")
@@ -1075,8 +929,6 @@ _BMP_CONTENT_LEN = BMP_W * BMP_H * 3  # 144 content bytes
 
 
 def _bmp_header() -> bytes:
-    import struct
-
     return (
         b"BM"
         + struct.pack("<IHHI", 54 + _BMP_CONTENT_LEN, 0, 0, 54)
@@ -1108,11 +960,7 @@ def _bmp_header() -> bytes:
 )
 def mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    content = F.substring(
-        F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 5),
-        1,
-        _BMP_CONTENT_LEN,
-    )
+    content = F.substring(_md5_repeat(5), 1, _BMP_CONTENT_LEN)
     # inverse permutation: BMP row r holds content row (H-1-r); each
     # pixel's 3 bytes reverse to B,G,R — generated as explicit substrings
     parts = []
@@ -1123,15 +971,10 @@ def mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             parts.append(F.substring(content, base + 2, 1))
             parts.append(F.substring(content, base + 1, 1))
             parts.append(F.substring(content, base, 1))
-    payloads = docs.select(
-        "doc_id",
-        F.lit("image/bmp").alias("kind"),
-        F.concat(
-            F.lit(_bmp_header()), F.encode(F.concat(*parts), "UTF-8")
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(
-        decode_image_features, schema=IMG_DECODE_SCHEMA
+    pixels = F.encode(F.concat(*parts), "UTF-8")
+    payloads = _payload_table(docs, "image/bmp", F.concat(F.lit(_bmp_header()), pixels))
+    return _map_payload_rows(
+        payloads, decode_image_features, IMG_DECODE_SCHEMA
     ).orderBy("doc_id")
 
 
@@ -1146,29 +989,9 @@ def mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 RS_W, RS_H = 12, 8
 
 
-def _resize_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: resize_image → re-decode → (dims, pixel md5)."""
-    import hashlib
-
-    for pdf in batches:
-        out = {"doc_id": [], "width": [], "height": [], "channels": [], "pixel_md5": []}
-        for doc_id, kind, payload in zip(pdf["doc_id"], pdf["kind"], pdf["payload"]):
-            resized = resize_image(kind, bytes(payload), RS_W, RS_H)
-            img = _decode_netpbm(resized)
-            out["doc_id"].append(doc_id)
-            out["height"].append(img.shape[0])
-            out["width"].append(img.shape[1])
-            out["channels"].append(img.shape[2] if img.ndim == 3 else 1)
-            out["pixel_md5"].append(hashlib.md5(img.tobytes()).hexdigest())
-        yield pd.DataFrame(
-            {
-                "doc_id": out["doc_id"],
-                "width": pd.array(out["width"], dtype="int32"),
-                "height": pd.array(out["height"], dtype="int32"),
-                "channels": pd.array(out["channels"], dtype="int32"),
-                "pixel_md5": out["pixel_md5"],
-            }
-        )
+def _resize_roundtrip(kind: str, payload: bytes) -> list[tuple]:
+    """resize_image → re-decode → (dims, pixel md5)."""
+    return [_pixel_row(decode_payload(kind, resize_image(kind, payload, RS_W, RS_H)))]
 
 
 @query(
@@ -1204,15 +1027,6 @@ def _resize_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
 )
 def mm_resize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
-    header = f"P6\n{IMG_W} {IMG_H}\n255\n"
-    payloads = docs.select(
-        "doc_id",
-        F.lit("image/ppm").alias("kind"),
-        F.encode(
-            F.concat(F.lit(header), F.repeat(F.md5(F.encode(F.col("text"), "UTF-8")), 36)),
-            "UTF-8",
-        ).alias("payload"),
-    )
-    return payloads.mapInPandas(
-        _resize_roundtrip, schema=IMG_DECODE_SCHEMA
+    return _map_payload_rows(
+        _ppm_payloads(docs), _resize_roundtrip, IMG_DECODE_SCHEMA
     ).orderBy("doc_id")

@@ -1356,21 +1356,7 @@ BFS_MAX_HOPS = 8
     tags=("graph", "iterative", "temporal"),
 )
 def events_graph_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_tables(spark, sf_dir)["events"]
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.date_trunc("hour", "ts").alias("h"))
-        .distinct()
-    )
-    a = p.select(F.col("user_id").alias("ua"), "h")
-    b = p.select(F.col("user_id").alias("ub"), "h")
-    edges = (
-        a.join(b, "h")
-        .filter(F.col("ua") != F.col("ub"))
-        .select("ua", "ub")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     seed = edges.agg(F.min("ua").alias("user_id")).select(
         "user_id", F.lit(0).cast("int").alias("dist")
     )

@@ -38,20 +38,25 @@ def test_sidecar_write_failure_is_nonfatal(tmp_path, monkeypatch, capsys):
 
 
 def test_compact_line_names_a_redirected_sidecar(monkeypatch):
-    """With SPARK_GRAFT_BENCH_OUT sending the sidecar elsewhere, the
-    stdout line points at that path (detail and every overflow pointer),
-    and the worst-case line still fits the stdout tail."""
+    """With SPARK_GRAFT_BENCH_OUT sending the sidecar elsewhere, `detail`
+    names that path and every shed block is a bare `*_overflow: true`
+    flag, so the path is paid once: even a 400-char path keeps the
+    worst-case line inside the stdout tail with the per-query map."""
     bench = _load_bench()
-    path = "/data/bench-runs/" + "r" * 100 + "/bench_out.json"
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", path)
-    out = _worst_case_out()
-    out["runs_stat"] = "min_of_3_pass_interleaved"
-    line = bench.compact_line(out)
-    assert len(line) <= bench.STDOUT_TAIL_BUDGET, len(line)
-    parsed = json.loads(line)
-    assert parsed["detail"] == path
-    pointers = [v for k, v in parsed.items() if k.endswith("_overflow")]
-    assert pointers and all(v == path for v in pointers)
+    for path in (
+        "/data/bench-runs/" + "r" * 100 + "/bench_out.json",
+        "/data/bench-runs/" + "r" * 368 + "/bench_out.json",
+    ):
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", path)
+        out = _worst_case_out()
+        out["runs_stat"] = "min_of_3_pass_interleaved"
+        line = bench.compact_line(out)
+        assert len(line) <= bench.STDOUT_TAIL_BUDGET, (len(path), len(line))
+        parsed = json.loads(line)
+        assert parsed["detail"] == path
+        flags = [v for k, v in parsed.items() if k.endswith("_overflow")]
+        assert flags and all(v is True for v in flags)
+        assert set(parsed["queries"]) == set(bench.HEADLINE)
 
 
 def test_headline_names_are_registered():

@@ -1,25 +1,59 @@
-"""Multimodal decode/resize stubs: deterministic fake kinds work, real
-media kinds raise until a codec is plugged in."""
+"""Multimodal decoders and the row worker: native uncompressed formats
+decode, compressed media kinds raise until a codec is plugged in, and
+`_map_payload_rows`'s batch function builds typed frames without Spark."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from compass_query_optimizer_spark.operators.multimodal import (
+    FRAME_SCHEMA,
+    _payload_rows_worker,
     decode_payload,
     resize_image,
+    sample_frames,
 )
 
 
-def test_resize_fake_image_average_pool():
-    side = 8
-    img = np.arange(side * side, dtype=np.uint8)
-    out = resize_image("image/fake", img.tobytes(), 4, 4)
-    got = np.frombuffer(out, dtype=np.uint8).reshape(4, 4)
-    # nearest sampling at stride 2 over an 8x8 ramp
-    expect = img.reshape(8, 8)[::2, ::2]
-    assert np.array_equal(got, expect)
+def _text_batch(doc_ids, texts):
+    return pd.DataFrame(
+        {
+            "doc_id": pd.array(doc_ids, dtype="int64"),
+            "kind": ["text/utf-8"] * len(texts),
+            "payload": [t.encode("utf-8") for t in texts],
+        }
+    )
+
+
+def test_payload_rows_worker_puts_doc_id_in_front():
+    """Two payloads → one row per sampled 64-byte frame, doc_id first."""
+    a, b = "x" * 200, "y" * 10  # frames 0..3 (keep 0, 2) and frame 0
+    worker = _payload_rows_worker(sample_frames, FRAME_SCHEMA)
+    (out,) = worker(iter([_text_batch([7, 9], [a, b])]))
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    assert list(out.itertuples(index=False, name=None)) == [
+        (7, 0, md5(a[:64])),
+        (7, 2, md5(a[128:192])),
+        (9, 0, md5(b)),
+    ]
+    assert worker.__name__ == "sample_frames"
+
+
+def test_payload_rows_worker_types_an_empty_batch():
+    """A payload with no rows (empty text → 0 frames) yields an empty
+    frame that still carries the schema's names and pandas dtypes."""
+    worker = _payload_rows_worker(sample_frames, FRAME_SCHEMA)
+    (out,) = worker(iter([_text_batch([3], [""])]))
+    assert out.empty
+    assert list(out.columns) == FRAME_SCHEMA.fieldNames()
+    assert [str(t) for t in out.dtypes] == ["int64", "int32", "object"]
 
 
 def test_real_media_kinds_raise():

@@ -5,6 +5,8 @@ pushing filters would still pass value checks on 60k rows."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from compass_query_optimizer_spark.registry import all_queries
@@ -279,22 +281,31 @@ def test_bloom_filter_build_side_is_bounded(spark):
 @pytest.mark.parametrize(
     "name",
     [
+        "mm_frame_sample",
+        "mm_payload_features",
         "mm_image_decode",
         "mm_audio_decode",
         "mm_video_frames",
+        "mm_scene_change",
+        "mm_audio_energy",
         "mm_phash_dedup",
         "pipeline_multimodal",
+        "mm_bmp_decode",
+        "mm_resize_roundtrip",
     ],
 )
 def test_mm_decode_payloads_stay_in_scan_stage(spark, name):
-    """Media payload bytes are built and consumed (mapInPandas decode) in
+    """Media payload bytes are built and consumed (one mapInPandas) in
     the scan stage; every exchange downstream carries only the small
     feature rows — payload bytes must never shuffle."""
     plan = formatted_plan(spark, name)
-    assert "MapInPandas" in plan
-    for line in plan.splitlines():
-        if "Exchange" in line and "payload" in line:
-            raise AssertionError(f"payload bytes cross an exchange: {line}")
+    # the formatted plan's node details: "(n) Operator" then its fields
+    nodes = [b for b in plan.split("\n\n") if re.match(r"\(\d+\) ", b)]
+    assert sum(re.match(r"\(\d+\) MapInPandas\b", b) is not None for b in nodes) == 1
+    exchanges = [b for b in nodes if re.match(r"\(\d+\) \w*Exchange\b", b)]
+    for b in exchanges:
+        if re.search(r"\bpayload#", b):
+            raise AssertionError(f"payload bytes cross an exchange:\n{b}")
 
 
 def test_pq_scoring_joins_codes_to_broadcast_tables(spark):
