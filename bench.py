@@ -153,12 +153,13 @@ def _sidecar_path() -> str:
 
 
 def _overflow(key: str):
-    """Block-level step: replace a whole block by ``"<key>_overflow":
-    true``. The block is in the sidecar, which ``detail`` alone names, so
-    a long sidecar path is paid once on the line, not once per block."""
+    """Block-level step: drop a whole block and add its key to the line's
+    one ``"overflow"`` list. The block is in the sidecar, which ``detail``
+    alone names, so a long sidecar path is paid once on the line, and
+    each shed block costs only its quoted name."""
     def step(slim: dict) -> None:
         if slim.pop(key, None) is not None:
-            slim[f"{key}_overflow"] = True
+            slim.setdefault("overflow", []).append(key)
     return step
 
 

@@ -257,7 +257,7 @@ def payloads_from_documents(docs: DataFrame) -> DataFrame:
     return _payload_table(docs, "text/utf-8", F.encode(F.col("text"), "UTF-8"))
 
 
-FRAME_BYTES = 64  # frame group size for the deterministic text-kind sampler
+FRAME_CHARS = 64  # frame size of the deterministic text-kind sampler
 FRAME_STRIDE = 2  # sample every 2nd frame
 
 # one row per sampled frame: the text sampler's and the y4m sampler's
@@ -273,12 +273,13 @@ FRAME_SCHEMA = T.StructType(
 def sample_frames(kind: str, payload: bytes) -> list[tuple]:
     """Frame sampler: one row per sampled frame — the row-exploding shape
     a video frame-sampler has (N payloads → M rows). Frames are
-    consecutive FRAME_BYTES-byte windows of the raw bytes, every
-    FRAME_STRIDE-th kept."""
-    n = (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES
+    consecutive FRAME_CHARS-character windows of the decoded text, every
+    FRAME_STRIDE-th kept, each hashed as UTF-8: SQL's substr windows, so
+    a multi-byte character is never split across two frames."""
+    text = decode_payload(kind, payload)
     return [
-        (k, hashlib.md5(payload[k * FRAME_BYTES : (k + 1) * FRAME_BYTES]).hexdigest())
-        for k in range(0, n, FRAME_STRIDE)
+        (i // FRAME_CHARS, hashlib.md5(text[i : i + FRAME_CHARS].encode()).hexdigest())
+        for i in range(0, len(text), FRAME_CHARS * FRAME_STRIDE)
     ]
 
 
@@ -303,13 +304,13 @@ def resize_image(kind: str, payload: bytes, w: int, h: int) -> bytes:
     "mm_frame_sample",
     f"""
     SELECT doc_id, CAST(s.k AS INTEGER) AS frame_idx,
-           md5(substr(text, CAST(s.k * {FRAME_BYTES} + 1 AS INTEGER), {FRAME_BYTES})) AS frame_md5
+           md5(substr(text, CAST(s.k * {FRAME_CHARS} + 1 AS INTEGER), {FRAME_CHARS})) AS frame_md5
     FROM documents,
-         UNNEST(range(0, CAST(ceil(length(text) / {FRAME_BYTES}.0) AS BIGINT), {FRAME_STRIDE})) AS s(k)
+         UNNEST(range(0, CAST(ceil(length(text) / {FRAME_CHARS}.0) AS BIGINT), {FRAME_STRIDE})) AS s(k)
     ORDER BY doc_id, frame_idx
     """,
     doc="multimodal frame sampling: mapInPandas explodes each payload into "
-    "every-2nd 64-byte frame row (the video frame-sample shape); oracle "
+    "every-2nd 64-character frame row (the video frame-sample shape); oracle "
     "rebuilds frames with substr+md5",
     tags=("multimodal", "pandas-udf"),
 )

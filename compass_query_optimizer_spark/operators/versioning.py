@@ -157,10 +157,11 @@ def docs_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "docs_scd2",
-    """
-    WITH v2 AS (
+# Three deterministic corpus snapshots (drops + revisions derived from
+# doc_id residues), each reduced to (doc_id, version, md5 fp): v1 is the
+# corpus, v2 drops doc_id % 97 and revises % 89, v3 drops % 101 of v2 and
+# revises % 83. docs_scd2 and docs_version_churn read the same chain.
+_SNAPSHOTS_CTE = """WITH v2 AS (
       SELECT doc_id,
              CASE WHEN doc_id % 89 = 0 THEN text || ' [rev2]' ELSE text END
                AS text
@@ -176,7 +177,36 @@ def docs_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, 1 AS version, md5(text) AS fp FROM documents
       UNION ALL SELECT doc_id, 2, md5(text) FROM v2
       UNION ALL SELECT doc_id, 3, md5(text) FROM v3
-    ),
+    ),"""
+
+
+def _revise(docs: DataFrame, drop: int, revise: int, tag: str) -> DataFrame:
+    """The next snapshot: drop doc_id % drop, append tag to doc_id % revise."""
+    return docs.filter(F.col("doc_id") % drop != 0).select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % revise == 0, F.concat(F.col("text"), F.lit(tag))
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+
+
+def _snapshot_versions(docs: DataFrame) -> DataFrame:
+    """(doc_id, version, fp) over the three snapshots of _SNAPSHOTS_CTE."""
+    v2 = _revise(docs, 97, 89, " [rev2]")
+    v3 = _revise(v2, 101, 83, " [rev3]")
+    s1, s2, s3 = (
+        v.select("doc_id", F.lit(i).alias("version"), F.md5("text").alias("fp"))
+        for i, v in enumerate((docs, v2, v3), start=1)
+    )
+    return s1.unionByName(s2).unionByName(s3)
+
+
+@query(
+    "docs_scd2",
+    f"""
+    {_SNAPSHOTS_CTE}
     hist AS (
       SELECT doc_id, version, fp,
              lag(fp) OVER (PARTITION BY doc_id ORDER BY version) AS prev_fp,
@@ -207,32 +237,7 @@ def docs_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    v2 = docs.filter(F.col("doc_id") % 97 != 0).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 89 == 0, F.concat(F.col("text"), F.lit(" [rev2]"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    v3 = v2.filter(F.col("doc_id") % 101 != 0).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 83 == 0, F.concat(F.col("text"), F.lit(" [rev3]"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    snaps = (
-        docs.select("doc_id", F.lit(1).alias("version"), F.md5("text").alias("fp"))
-        .unionByName(
-            v2.select("doc_id", F.lit(2).alias("version"), F.md5("text").alias("fp"))
-        )
-        .unionByName(
-            v3.select("doc_id", F.lit(3).alias("version"), F.md5("text").alias("fp"))
-        )
-    )
+    snaps = _snapshot_versions(load_tables(spark, sf_dir)["documents"])
     w = Window.partitionBy("doc_id").orderBy("version")
     hist = snaps.select(
         "doc_id",
@@ -479,24 +484,8 @@ def dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "docs_version_churn",
-    """
-    WITH v2 AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 89 = 0 THEN text || ' [rev2]' ELSE text END
-               AS text
-      FROM documents WHERE doc_id % 97 <> 0
-    ),
-    v3 AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 83 = 0 THEN text || ' [rev3]' ELSE text END
-               AS text
-      FROM v2 WHERE doc_id % 101 <> 0
-    ),
-    snaps AS (
-      SELECT doc_id, 1 AS version, md5(text) AS fp FROM documents
-      UNION ALL SELECT doc_id, 2, md5(text) FROM v2
-      UNION ALL SELECT doc_id, 3, md5(text) FROM v3
-    ),
+    f"""
+    {_SNAPSHOTS_CTE}
     hist AS (
       SELECT doc_id, fp,
              lag(fp) OVER (PARTITION BY doc_id ORDER BY version) AS prev_fp,
@@ -525,32 +514,7 @@ def dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_version_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    v2 = docs.filter(F.col("doc_id") % 97 != 0).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 89 == 0, F.concat(F.col("text"), F.lit(" [rev2]"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    v3 = v2.filter(F.col("doc_id") % 101 != 0).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 83 == 0, F.concat(F.col("text"), F.lit(" [rev3]"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    snaps = (
-        docs.select("doc_id", F.lit(1).alias("version"), F.md5("text").alias("fp"))
-        .unionByName(
-            v2.select("doc_id", F.lit(2).alias("version"), F.md5("text").alias("fp"))
-        )
-        .unionByName(
-            v3.select("doc_id", F.lit(3).alias("version"), F.md5("text").alias("fp"))
-        )
-    )
+    snaps = _snapshot_versions(load_tables(spark, sf_dir)["documents"])
     w = Window.partitionBy("doc_id").orderBy("version")
     whole = Window.partitionBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing

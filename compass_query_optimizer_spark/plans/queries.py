@@ -8,10 +8,103 @@ proves the optimizer preserves semantics while choosing its own order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
 from compass_query_optimizer_spark.registry import query
 from compass_query_optimizer_spark.workload import FLAGSHIP_SQL
+
+# The two join shapes the eager-measure entries plan and check over: the
+# 4-way inner join and the LEFT OUTER join below (its oracle form; the
+# planner parses the conjunctive LEFT_OUTER_SQL).
+_INNER_JOIN = """FROM lineitem l, orders o, customer c, nation n
+WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
+  AND c.c_nationkey = n.n_nationkey
+  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
+"""
+
+_OUTER_JOIN = """FROM customer c
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+LEFT JOIN orders o
+  ON o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
+WHERE n.n_regionkey <= 2
+"""
+
+# Grouped form: COUNT(*) GROUP BY through the same eager-aggregation chain.
+# The count-form text below is what the planner parses (join graph + filters);
+# the GROUP BY columns are passed programmatically and ride the multiplicity
+# chain like residual columns — the oracle runs the real grouped SQL. Every
+# measure entry plans this same text; the measures ride programmatically.
+GROUPED_COUNT_SQL = f"\nSELECT COUNT(*) AS cnt\n{_INNER_JOIN}"
+
+# A measure rides the chain as (alias, col, op, output name).
+Measure = tuple[str, str, str, str]
+
+
+def _measure_col(i: int, op: str, name: str) -> Column:
+    """``agg_val{i}`` as ``name``: a distinct count is an exact integer
+    (the routed carrier may answer with an HLL double, so it is cast to
+    long); every other measure rounds to 2 places like its oracle."""
+    col = F.col(f"agg_val{i}")
+    if op == "count_distinct_auto":
+        col = col.cast("long")
+    elif not op.startswith("count_distinct"):
+        col = F.round(col.cast("double"), 2)
+    return col.alias(name)
+
+
+def _chain(
+    spark: SparkSession,
+    sf_dir: str,
+    group_by: tuple[tuple[str, str], ...] = (),
+    measures: tuple[Measure, ...] = (),
+    *,
+    sql: str = GROUPED_COUNT_SQL,
+    outer: set[str] | None = None,
+) -> DataFrame:
+    """COUNT(*) of the join ``sql`` plans, through the eager chain: the
+    group columns, each measure under its output name, then ``cnt``,
+    ordered by the group columns."""
+    df = CompassOptimizer(spark).execute_count(
+        sql,
+        sf_dir,
+        group_by=list(group_by) or None,
+        measures=[m[:3] for m in measures] or None,
+        outer=outer,
+    )
+    groups = [col for _, col in group_by]
+    if measures:
+        df = df.select(
+            *groups,
+            *(_measure_col(i, op, name) for i, (_, _, op, name) in enumerate(measures)),
+            "cnt",
+        )
+    return df.orderBy(*groups) if groups else df
+
+
+_CNT = "CAST(COUNT(*) AS BIGINT) AS cnt"
+_BY_NATION = (("n", "n_name"),)
+
+
+def _oracle(*items: str, join: str = _INNER_JOIN, grouped: bool = False) -> str:
+    """Plain SQL selecting ``items`` over ``join``; ``grouped`` puts
+    ``n.n_name`` first and groups and orders by it."""
+    if grouped:
+        return (
+            f"\nSELECT n.n_name, {', '.join(items)}\n{join}"
+            "GROUP BY n.n_name\nORDER BY n.n_name\n"
+        )
+    return f"\nSELECT {', '.join(items)}\n{join}"
+
+
+# Datasketches HLL at the default lgConfigK=12 has rsd ≈ 1.04/sqrt(2^12)
+# ≈ 1.63%; 3·rsd is the q11_approx_count_distinct acceptance band.
+_HLL_RSD = 1.04 / (2**12) ** 0.5
+
+
+def _within_3rsd(estimate: str, exact: str) -> Column:
+    return F.abs(F.col(estimate) - F.col(exact)) <= 3 * _HLL_RSD * F.col(exact)
 
 
 @query(
@@ -23,9 +116,7 @@ from compass_query_optimizer_spark.workload import FLAGSHIP_SQL
     tags=("compass", "join"),
 )
 def compass_count_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    return CompassOptimizer(spark).execute_count(FLAGSHIP_SQL, sf_dir)
+    return _chain(spark, sf_dir, sql=FLAGSHIP_SQL)
 
 
 # JOB workloads reuse the same table under multiple aliases (e.g. q29 uses
@@ -65,9 +156,7 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "residual"),
 )
 def compass_residual_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    return CompassOptimizer(spark).execute_count(RESIDUAL_SQL, sf_dir)
+    return _chain(spark, sf_dir, sql=RESIDUAL_SQL)
 
 
 @query(
@@ -79,32 +168,10 @@ def compass_residual_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compass", "join", "self-join"),
 )
 def compass_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    return CompassOptimizer(spark).execute_count(SELF_JOIN_SQL, sf_dir)
+    return _chain(spark, sf_dir, sql=SELF_JOIN_SQL)
 
 
-# Grouped form: COUNT(*) GROUP BY through the same eager-aggregation chain.
-# The count-form text below is what the planner parses (join graph + filters);
-# the GROUP BY columns are passed programmatically and ride the multiplicity
-# chain like residual columns — the oracle runs the real grouped SQL.
-GROUPED_COUNT_SQL = """
-SELECT COUNT(*) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
-
-GROUPED_COUNT_ORACLE = """
-SELECT n.n_name, COUNT(*) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+GROUPED_COUNT_ORACLE = _oracle("COUNT(*) AS cnt", grouped=True)
 
 
 @query(
@@ -118,39 +185,16 @@ ORDER BY n.n_name
     tags=("compass", "join", "grouped"),
 )
 def compass_grouped_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    return (
-        CompassOptimizer(spark)
-        .execute_count(GROUPED_COUNT_SQL, sf_dir, group_by=[("n", "n_name")])
-        .orderBy("n_name")
-    )
+    return _chain(spark, sf_dir, _BY_NATION)
 
 
 # SUM through the multiplicity chain (Yan & Larson's class-1 aggregates):
 # the measure table collapses to (keys -> cnt, SUM(x)); SUM over the join
-# = Σ per-key sums × Π other tables' multiplicities. Same planner text as
-# the grouped count; the measure rides programmatically.
-SUM_ORACLE = """
-SELECT ROUND(CAST(SUM(l.l_extendedprice) AS DOUBLE), 2) AS sum_rev,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
-
-GROUPED_SUM_ORACLE = """
-SELECT n.n_name,
-       ROUND(CAST(SUM(l.l_extendedprice) AS DOUBLE), 2) AS sum_rev,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+# = Σ per-key sums × Π other tables' multiplicities.
+_SUM_REV = "ROUND(CAST(SUM(l.l_extendedprice) AS DOUBLE), 2) AS sum_rev"
+SUM_ORACLE = _oracle(_SUM_REV, _CNT)
+GROUPED_SUM_ORACLE = _oracle(_SUM_REV, _CNT, grouped=True)
+_SUM = (("l", "l_extendedprice", "sum", "sum_rev"),)
 
 
 @query(
@@ -165,16 +209,7 @@ ORDER BY n.n_name
     tags=("compass", "join", "sum"),
 )
 def compass_sum_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL, sf_dir, measures=[("l", "l_extendedprice", "sum")]
-    )
-    return df.select(
-        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_rev"), "cnt"
-    )
+    return _chain(spark, sf_dir, measures=_SUM)
 
 
 @query(
@@ -187,31 +222,12 @@ def compass_sum_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compass", "join", "sum", "grouped"),
 )
 def compass_grouped_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        group_by=[("n", "n_name")],
-        measures=[("l", "l_extendedprice", "sum")],
-    )
-    return df.select(
-        "n_name",
-        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_rev"),
-        "cnt",
-    ).orderBy("n_name")
+    return _chain(spark, sf_dir, _BY_NATION, _SUM)
 
 
-AVG_ORACLE = """
-SELECT ROUND(CAST(AVG(l.l_extendedprice) AS DOUBLE), 2) AS avg_price,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
+AVG_ORACLE = _oracle(
+    "ROUND(CAST(AVG(l.l_extendedprice) AS DOUBLE), 2) AS avg_price", _CNT
+)
 
 
 @query(
@@ -225,10 +241,6 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "avg"),
 )
 def compass_avg_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
     df = CompassOptimizer(spark).execute_count(
         GROUPED_COUNT_SQL, sf_dir, measures=[("l", "l_extendedprice", "sum")]
     )
@@ -240,26 +252,12 @@ def compass_avg_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COUNT_DISTINCT_ORACLE = """
-SELECT CAST(COUNT(DISTINCT c.c_nationkey) AS BIGINT) AS nd_nation,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
-
-GROUPED_COUNT_DISTINCT_ORACLE = """
-SELECT n.n_name,
-       CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS nd_cust,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+COUNT_DISTINCT_ORACLE = _oracle(
+    "CAST(COUNT(DISTINCT c.c_nationkey) AS BIGINT) AS nd_nation", _CNT
+)
+GROUPED_COUNT_DISTINCT_ORACLE = _oracle(
+    "CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS nd_cust", _CNT, grouped=True
+)
 
 
 @query(
@@ -275,16 +273,8 @@ ORDER BY n.n_name
     tags=("compass", "join", "count_distinct"),
 )
 def compass_count_distinct_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        measures=[("c", "c_nationkey", "count_distinct")],
-    )
-    return df.select(F.col("agg_val0").alias("nd_nation"), "cnt")
+    nd_nation = ("c", "c_nationkey", "count_distinct", "nd_nation")
+    return _chain(spark, sf_dir, measures=(nd_nation,))
 
 
 @query(
@@ -297,34 +287,17 @@ def compass_count_distinct_multijoin(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("compass", "join", "count_distinct", "grouped"),
 )
 def compass_grouped_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        group_by=[("n", "n_name")],
-        measures=[("c", "c_custkey", "count_distinct")],
-    )
-    return df.select(
-        "n_name", F.col("agg_val0").alias("nd_cust"), "cnt"
-    ).orderBy("n_name")
+    nd_cust = ("c", "c_custkey", "count_distinct", "nd_cust")
+    return _chain(spark, sf_dir, _BY_NATION, (nd_cust,))
 
 
 # HLL sketch registers are engine-specific, so (exactly like
 # q11_approx_count_distinct) the gate checks the EXACT count both engines
-# agree on plus the sketch estimate's published error bound holding.
-# Datasketches HLL at the default lgConfigK=12 has rsd ≈ 1.04/sqrt(2^12)
-# ≈ 1.63%; 3·rsd is the q11 acceptance band.
-HLL_ORACLE = """
-SELECT CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS exact_nd,
-       TRUE AS within_rsd
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
+# agree on plus the sketch estimate's published error bound holding
+# (_within_3rsd).
+HLL_ORACLE = _oracle(
+    "CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS exact_nd", "TRUE AS within_rsd"
+)
 
 
 @query(
@@ -341,11 +314,6 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "count_distinct", "approx", "sketch"),
 )
 def compass_count_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    rsd = 1.04 / (2**12) ** 0.5  # default lgConfigK=12
     # one chain carries both carriers: the exact set and the sketch
     df = CompassOptimizer(spark).execute_count(
         GROUPED_COUNT_SQL,
@@ -357,10 +325,7 @@ def compass_count_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return df.select(
         F.col("agg_val0").alias("exact_nd"),
-        (
-            F.abs(F.col("agg_val1") - F.col("agg_val0"))
-            <= 3 * rsd * F.col("agg_val0")
-        ).alias("within_rsd"),
+        _within_3rsd("agg_val1", "agg_val0").alias("within_rsd"),
     )
 
 
@@ -369,14 +334,9 @@ def compass_count_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gate uses the q11/HLL pattern — the exact count both engines agree on,
 # plus the engine's answer landing inside HLL's 3·rsd band (which the
 # exact routes satisfy with error 0).
-AUTO_DISTINCT_ORACLE = """
-SELECT CAST(COUNT(DISTINCT o.o_orderkey) AS BIGINT) AS exact_nd,
-       TRUE AS within_band
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
+AUTO_DISTINCT_ORACLE = _oracle(
+    "CAST(COUNT(DISTINCT o.o_orderkey) AS BIGINT) AS exact_nd", "TRUE AS within_band"
+)
 
 
 @query(
@@ -396,11 +356,6 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "count_distinct", "auto"),
 )
 def compass_count_distinct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    rsd = 1.04 / (2**12) ** 0.5  # Datasketches HLL default lgConfigK=12
     opt = CompassOptimizer(spark)
     plan = opt.plan(GROUPED_COUNT_SQL, sf_dir)
     # a routed carrier must be its chain's only measure, so the exact
@@ -413,26 +368,13 @@ def compass_count_distinct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("agg_val0").alias("exact_nd"))
     return exact.crossJoin(routed).select(
         "exact_nd",
-        (
-            F.abs(F.col("routed_nd") - F.col("exact_nd"))
-            <= 3 * rsd * F.col("exact_nd")
-        ).alias("within_band"),
+        _within_3rsd("routed_nd", "exact_nd").alias("within_band"),
     )
-
-
-BITMAP_DISTINCT_ORACLE = """
-SELECT CAST(COUNT(DISTINCT c.c_nationkey) AS BIGINT) AS nd_nation,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
 
 
 @query(
     "compass_count_distinct_bitmap",
-    BITMAP_DISTINCT_ORACLE,
+    COUNT_DISTINCT_ORACLE,
     doc="exact COUNT(DISTINCT) through the eager chain on the packed-"
     "bitmap carrier (the reference's CountDistinctImplType::Bitmap, "
     "QueryEngine/CountDistinct.h): c_nationkey's plan-time range (25 "
@@ -444,34 +386,13 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "count_distinct", "bitmap"),
 )
 def compass_count_distinct_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        measures=[("c", "c_nationkey", "count_distinct_bitmap")],
-    )
-    return df.select(F.col("agg_val0").alias("nd_nation"), "cnt")
-
-
-GROUPED_AUTO_DISTINCT_ORACLE = """
-SELECT n.n_name,
-       CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT) AS nd_cust,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+    nd_nation = ("c", "c_nationkey", "count_distinct_bitmap", "nd_nation")
+    return _chain(spark, sf_dir, measures=(nd_nation,))
 
 
 @query(
     "compass_grouped_distinct_auto",
-    GROUPED_AUTO_DISTINCT_ORACLE,
+    GROUPED_COUNT_DISTINCT_ORACLE,
     doc="grouped COUNT(DISTINCT c_custkey) per nation through the eager "
     "chain with plan-time carrier routing: c_custkey is integral and "
     "dense (range ≈ corpus customers), so at gate scale the auto route "
@@ -484,29 +405,13 @@ ORDER BY n.n_name
     tags=("compass", "join", "count_distinct", "auto", "grouped"),
 )
 def compass_grouped_distinct_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        group_by=[("n", "n_name")],
-        measures=[("c", "c_custkey", "count_distinct_auto")],
-    )
-    return df.select(
-        "n_name", F.col("agg_val0").cast("long").alias("nd_cust"), "cnt"
-    ).orderBy("n_name")
+    nd_cust = ("c", "c_custkey", "count_distinct_auto", "nd_cust")
+    return _chain(spark, sf_dir, _BY_NATION, (nd_cust,))
 
 
-SUM_DISTINCT_ORACLE = """
-SELECT ROUND(CAST(SUM(DISTINCT c.c_acctbal) AS DOUBLE), 2) AS sum_bal,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
+SUM_DISTINCT_ORACLE = _oracle(
+    "ROUND(CAST(SUM(DISTINCT c.c_acctbal) AS DOUBLE), 2) AS sum_bal", _CNT
+)
 
 
 @query(
@@ -523,29 +428,20 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "sum_distinct"),
 )
 def compass_sum_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        measures=[("c", "c_acctbal", "sum_distinct")],
-    )
-    return df.select(
-        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_bal"), "cnt"
-    )
+    sum_bal = ("c", "c_acctbal", "sum_distinct", "sum_bal")
+    return _chain(spark, sf_dir, measures=(sum_bal,))
 
 
-MINMAX_ORACLE = """
-SELECT ROUND(CAST(MIN(l.l_extendedprice) AS DOUBLE), 2) AS min_price,
-       ROUND(CAST(MAX(l.l_extendedprice) AS DOUBLE), 2) AS max_price,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-"""
+_MIN_MAX_PRICE = (
+    "ROUND(CAST(MIN(l.l_extendedprice) AS DOUBLE), 2) AS min_price",
+    "ROUND(CAST(MAX(l.l_extendedprice) AS DOUBLE), 2) AS max_price",
+)
+MINMAX_ORACLE = _oracle(*_MIN_MAX_PRICE, _CNT)
+GROUPED_MINMAX_ORACLE = _oracle(*_MIN_MAX_PRICE, _CNT, grouped=True)
+_MIN_MAX = (
+    ("l", "l_extendedprice", "min", "min_price"),
+    ("l", "l_extendedprice", "max", "max_price"),
+)
 
 
 @query(
@@ -559,37 +455,7 @@ WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
     tags=("compass", "join", "minmax"),
 )
 def compass_minmax_multijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        measures=[
-            ("l", "l_extendedprice", "min"),
-            ("l", "l_extendedprice", "max"),
-        ],
-    )
-    return df.select(
-        F.round(F.col("agg_val0").cast("double"), 2).alias("min_price"),
-        F.round(F.col("agg_val1").cast("double"), 2).alias("max_price"),
-        "cnt",
-    )
-
-
-GROUPED_MINMAX_ORACLE = """
-SELECT n.n_name,
-       ROUND(CAST(MIN(l.l_extendedprice) AS DOUBLE), 2) AS min_price,
-       ROUND(CAST(MAX(l.l_extendedprice) AS DOUBLE), 2) AS max_price,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+    return _chain(spark, sf_dir, measures=_MIN_MAX)
 
 
 @query(
@@ -603,25 +469,7 @@ ORDER BY n.n_name
     tags=("compass", "join", "minmax", "grouped"),
 )
 def compass_grouped_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        group_by=[("n", "n_name")],
-        measures=[
-            ("l", "l_extendedprice", "min"),
-            ("l", "l_extendedprice", "max"),
-        ],
-    )
-    return df.select(
-        "n_name",
-        F.round(F.col("agg_val0").cast("double"), 2).alias("min_price"),
-        F.round(F.col("agg_val1").cast("double"), 2).alias("max_price"),
-        "cnt",
-    ).orderBy("n_name")
+    return _chain(spark, sf_dir, _BY_NATION, _MIN_MAX)
 
 
 # LEFT OUTER through the eager chain (Yan & Larson VLDB'95 §5 extends the
@@ -638,26 +486,13 @@ WHERE c.c_nationkey = n.n_nationkey AND o.o_custkey = c.c_custkey
   AND n.n_regionkey <= 2 AND o.o_orderstatus = 'F'
 """
 
-LEFT_OUTER_ORACLE = """
-SELECT ROUND(CAST(SUM(o.o_totalprice) AS DOUBLE), 2) AS sum_open,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-LEFT JOIN orders o
-  ON o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-WHERE n.n_regionkey <= 2
-"""
+LEFT_OUTER_ORACLE = _oracle(
+    "ROUND(CAST(SUM(o.o_totalprice) AS DOUBLE), 2) AS sum_open",
+    _CNT,
+    join=_OUTER_JOIN,
+)
 
-GROUPED_LEFT_OUTER_ORACLE = """
-SELECT n.n_name, CAST(COUNT(*) AS BIGINT) AS cnt
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-LEFT JOIN orders o
-  ON o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-WHERE n.n_regionkey <= 2
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+GROUPED_LEFT_OUTER_ORACLE = _oracle(_CNT, join=_OUTER_JOIN, grouped=True)
 
 
 @query(
@@ -674,19 +509,8 @@ ORDER BY n.n_name
     tags=("compass", "join", "outer"),
 )
 def compass_count_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        LEFT_OUTER_SQL,
-        sf_dir,
-        measures=[("o", "o_totalprice", "sum")],
-        outer={"o"},
-    )
-    return df.select(
-        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_open"), "cnt"
-    )
+    sum_open = ("o", "o_totalprice", "sum", "sum_open")
+    return _chain(spark, sf_dir, measures=(sum_open,), sql=LEFT_OUTER_SQL, outer={"o"})
 
 
 @query(
@@ -700,37 +524,14 @@ def compass_count_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("compass", "join", "outer", "grouped"),
 )
 def compass_grouped_count_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    return (
-        CompassOptimizer(spark)
-        .execute_count(
-            LEFT_OUTER_SQL,
-            sf_dir,
-            group_by=[("n", "n_name")],
-            outer={"o"},
-        )
-        .orderBy("n_name")
-    )
+    return _chain(spark, sf_dir, _BY_NATION, sql=LEFT_OUTER_SQL, outer={"o"})
 
 
 # Several riding measures in ONE chain pass: the multi-measure chain
 # carries every aggregate's channel through the SAME joins and
 # re-aggregations, so SUM + MIN + MAX + COUNT over the 4-way join costs
 # one planning pass and one scan of each table.
-MULTI_MEASURE_ORACLE = """
-SELECT n.n_name,
-       ROUND(CAST(SUM(l.l_extendedprice) AS DOUBLE), 2) AS sum_rev,
-       ROUND(CAST(MIN(l.l_extendedprice) AS DOUBLE), 2) AS min_price,
-       ROUND(CAST(MAX(l.l_extendedprice) AS DOUBLE), 2) AS max_price,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+MULTI_MEASURE_ORACLE = _oracle(_SUM_REV, *_MIN_MAX_PRICE, _CNT, grouped=True)
 
 
 @query(
@@ -746,27 +547,7 @@ ORDER BY n.n_name
     tags=("compass", "join", "grouped", "multi-measure"),
 )
 def compass_multi_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        group_by=[("n", "n_name")],
-        measures=[
-            ("l", "l_extendedprice", "sum"),
-            ("l", "l_extendedprice", "min"),
-            ("l", "l_extendedprice", "max"),
-        ],
-    )
-    return df.select(
-        "n_name",
-        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_rev"),
-        F.round(F.col("agg_val1").cast("double"), 2).alias("min_price"),
-        F.round(F.col("agg_val2").cast("double"), 2).alias("max_price"),
-        "cnt",
-    ).orderBy("n_name")
+    return _chain(spark, sf_dir, _BY_NATION, _SUM + _MIN_MAX)
 
 
 # AVG below a LEFT OUTER join needs COUNT(col), not COUNT(*): the
@@ -775,19 +556,13 @@ def compass_multi_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count riding as a multiplicity-scaled sum) supplies the denominator;
 # one multi-measure chain carries SUM and COUNT(col) together and the
 # division happens on the 25-row grouped result.
-AVG_LEFT_OUTER_ORACLE = """
-SELECT n.n_name,
-       ROUND(CAST(AVG(o.o_totalprice) AS DOUBLE), 2) AS avg_open,
-       CAST(COUNT(o.o_totalprice) AS BIGINT) AS n_orders,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-LEFT JOIN orders o
-  ON o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-WHERE n.n_regionkey <= 2
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+AVG_LEFT_OUTER_ORACLE = _oracle(
+    "ROUND(CAST(AVG(o.o_totalprice) AS DOUBLE), 2) AS avg_open",
+    "CAST(COUNT(o.o_totalprice) AS BIGINT) AS n_orders",
+    _CNT,
+    join=_OUTER_JOIN,
+    grouped=True,
+)
 
 
 @query(
@@ -803,14 +578,10 @@ ORDER BY n.n_name
     tags=("compass", "join", "outer", "avg", "multi-measure"),
 )
 def compass_avg_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
     df = CompassOptimizer(spark).execute_count(
         LEFT_OUTER_SQL,
         sf_dir,
-        group_by=[("n", "n_name")],
+        group_by=list(_BY_NATION),
         measures=[
             ("o", "o_totalprice", "sum"),
             ("o", "o_totalprice", "count"),
@@ -835,18 +606,12 @@ def compass_avg_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the shared chain — the general groupjoin shape (a revenue sum and an
 # order-value floor in one report) that per-measure chains would pay two
 # planning passes for.
-CROSS_TABLE_MEASURES_ORACLE = """
-SELECT n.n_name,
-       ROUND(CAST(SUM(l.l_extendedprice) AS DOUBLE), 2) AS sum_rev,
-       ROUND(CAST(MIN(o.o_totalprice) AS DOUBLE), 2) AS min_order,
-       CAST(COUNT(*) AS BIGINT) AS cnt
-FROM lineitem l, orders o, customer c, nation n
-WHERE l.l_orderkey = o.o_orderkey AND o.o_custkey = c.c_custkey
-  AND c.c_nationkey = n.n_nationkey
-  AND o.o_orderstatus = 'F' AND l.l_returnflag = 'R'
-GROUP BY n.n_name
-ORDER BY n.n_name
-"""
+CROSS_TABLE_MEASURES_ORACLE = _oracle(
+    _SUM_REV,
+    "ROUND(CAST(MIN(o.o_totalprice) AS DOUBLE), 2) AS min_order",
+    _CNT,
+    grouped=True,
+)
 
 
 @query(
@@ -862,22 +627,5 @@ ORDER BY n.n_name
     tags=("compass", "join", "grouped", "multi-measure"),
 )
 def compass_cross_table_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from compass_query_optimizer_spark.plans.optimizer import CompassOptimizer
-
-    df = CompassOptimizer(spark).execute_count(
-        GROUPED_COUNT_SQL,
-        sf_dir,
-        group_by=[("n", "n_name")],
-        measures=[
-            ("l", "l_extendedprice", "sum"),
-            ("o", "o_totalprice", "min"),
-        ],
-    )
-    return df.select(
-        "n_name",
-        F.round(F.col("agg_val0").cast("double"), 2).alias("sum_rev"),
-        F.round(F.col("agg_val1").cast("double"), 2).alias("min_order"),
-        "cnt",
-    ).orderBy("n_name")
+    min_order = ("o", "o_totalprice", "min", "min_order")
+    return _chain(spark, sf_dir, _BY_NATION, _SUM + (min_order,))

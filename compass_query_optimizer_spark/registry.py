@@ -14,6 +14,7 @@ floating-point accumulation-order differences between engines.
 
 from __future__ import annotations
 
+import importlib
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -154,25 +155,38 @@ def query(name: str, oracle: Optional[str], doc: str = "", tags: tuple = ()):
     return wrap
 
 
-def all_queries() -> dict[str, QuerySpec]:
-    # import for registration side effects
-    import compass_query_optimizer_spark.workload  # noqa: F401
-    import compass_query_optimizer_spark.operators.dedup  # noqa: F401
-    import compass_query_optimizer_spark.operators.similarity  # noqa: F401
-    import compass_query_optimizer_spark.operators.text  # noqa: F401
-    import compass_query_optimizer_spark.operators.temporal  # noqa: F401
-    import compass_query_optimizer_spark.operators.privacy  # noqa: F401
-    import compass_query_optimizer_spark.operators.versioning  # noqa: F401
-    import compass_query_optimizer_spark.operators.curation  # noqa: F401
-    import compass_query_optimizer_spark.operators.embeddings  # noqa: F401
-    import compass_query_optimizer_spark.operators.multimodal  # noqa: F401
-    import compass_query_optimizer_spark.operators.skew  # noqa: F401
-    import compass_query_optimizer_spark.sources.bucketing  # noqa: F401
-    import compass_query_optimizer_spark.plans.queries  # noqa: F401
-    import compass_query_optimizer_spark.plans.job_corpus  # noqa: F401
-    import compass_query_optimizer_spark.functions.queries  # noqa: F401
-    import compass_query_optimizer_spark.streaming.queries  # noqa: F401
+# The modules whose import registers entries. Entries outside
+# _SAMPLE_PRIORITY follow in this module order, then in registration order
+# within each module, so the queue does not depend on which module a caller
+# happened to import first.
+_MODULES = (
+    "compass_query_optimizer_spark.workload",
+    "compass_query_optimizer_spark.operators.dedup",
+    "compass_query_optimizer_spark.operators.similarity",
+    "compass_query_optimizer_spark.operators.text",
+    "compass_query_optimizer_spark.operators.temporal",
+    "compass_query_optimizer_spark.operators.privacy",
+    "compass_query_optimizer_spark.operators.versioning",
+    "compass_query_optimizer_spark.operators.curation",
+    "compass_query_optimizer_spark.operators.embeddings",
+    "compass_query_optimizer_spark.operators.multimodal",
+    "compass_query_optimizer_spark.operators.skew",
+    "compass_query_optimizer_spark.sources.bucketing",
+    "compass_query_optimizer_spark.plans.queries",
+    "compass_query_optimizer_spark.plans.job_corpus",
+    "compass_query_optimizer_spark.functions.queries",
+    "compass_query_optimizer_spark.streaming.queries",
+)
 
+
+def all_queries() -> dict[str, QuerySpec]:
+    rank = {}
+    for i, module in enumerate(_MODULES):
+        importlib.import_module(module)  # registers its entries
+        rank[module] = i
     ordered = {n: _REGISTRY[n] for n in _SAMPLE_PRIORITY if n in _REGISTRY}
-    ordered.update((n, s) for n, s in _REGISTRY.items() if n not in ordered)
+    tail = [s for n, s in _REGISTRY.items() if n not in ordered]
+    # list.sort is stable: registration order holds within a module
+    tail.sort(key=lambda s: rank.get(s.build.__module__, len(_MODULES)))
+    ordered.update((s.name, s) for s in tail)
     return ordered

@@ -39,23 +39,30 @@ def test_sidecar_write_failure_is_nonfatal(tmp_path, monkeypatch, capsys):
 
 def test_compact_line_names_a_redirected_sidecar(monkeypatch):
     """With SPARK_GRAFT_BENCH_OUT sending the sidecar elsewhere, `detail`
-    names that path and every shed block is a bare `*_overflow: true`
-    flag, so the path is paid once: even a 400-char path keeps the
-    worst-case line inside the stdout tail with the per-query map."""
+    names that path and the shed blocks are listed by name under one
+    `overflow` key, so the path is paid once: even a 400-char path keeps
+    the worst-case line, with or without a calibration block, inside the
+    stdout tail with the per-query map."""
     bench = _load_bench()
-    for path in (
-        "/data/bench-runs/" + "r" * 100 + "/bench_out.json",
-        "/data/bench-runs/" + "r" * 368 + "/bench_out.json",
+    calibration = {"query": "dedup_minhash_lsh", "start_sec": 6.82, "end_sec": 5.73}
+    for path, with_calibration in (
+        ("/data/bench-runs/" + "r" * 100 + "/bench_out.json", False),
+        ("/data/bench-runs/" + "r" * 368 + "/bench_out.json", False),
+        ("/data/bench-runs/" + "r" * 368 + "/bench_out.json", True),
     ):
         monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", path)
         out = _worst_case_out()
         out["runs_stat"] = "min_of_3_pass_interleaved"
+        if with_calibration:
+            out["calibration"] = dict(calibration)
         line = bench.compact_line(out)
         assert len(line) <= bench.STDOUT_TAIL_BUDGET, (len(path), len(line))
         parsed = json.loads(line)
         assert parsed["detail"] == path
-        flags = [v for k, v in parsed.items() if k.endswith("_overflow")]
-        assert flags and all(v is True for v in flags)
+        assert not [k for k in parsed if k.endswith("_overflow")]
+        shed = parsed["overflow"]
+        assert shed and set(shed) <= {"job_ab40", "job_ab", "calibration", "runs_stat"}
+        assert not set(shed) & set(parsed)
         assert set(parsed["queries"]) == set(bench.HEADLINE)
 
 

@@ -30,7 +30,8 @@ def _text_batch(doc_ids, texts):
 
 
 def test_payload_rows_worker_puts_doc_id_in_front():
-    """Two payloads → one row per sampled 64-byte frame, doc_id first."""
+    """Two payloads → one row per sampled 64-character frame, doc_id
+    first."""
     a, b = "x" * 200, "y" * 10  # frames 0..3 (keep 0, 2) and frame 0
     worker = _payload_rows_worker(sample_frames, FRAME_SCHEMA)
     (out,) = worker(iter([_text_batch([7, 9], [a, b])]))

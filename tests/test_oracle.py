@@ -69,3 +69,31 @@ def test_query_matches_oracle(name, spark, duck):
         f"{name}: {len(mism)} mismatched rows; first: "
         f"spark={nsrows[mism[0]]} oracle={ndrows[mism[0]]} cols={ncols}"
     )
+
+
+def test_frame_sample_cuts_characters_not_bytes(spark, tmp_path):
+    """mm_frame_sample's oracle cuts 64-character substr windows, so the
+    worker must cut the same windows of a non-ASCII text: a 100-character
+    "é" document is one sampled frame (200 bytes would be two)."""
+    import duckdb
+    import pandas as pd
+
+    pd.DataFrame(
+        {
+            "doc_id": pd.array([1], dtype="int64"),
+            "text": ["é" * 100],
+            "lang": ["fr"],
+            "source": ["web"],
+            "n_chars": pd.array([100], dtype="int64"),
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    spec = SPECS["mm_frame_sample"]
+    sdf = spec.build(spark, str(tmp_path))
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    drows = [tuple(r) for r in con.execute(spec.oracle_text()).fetchall()]
+    assert len(drows) == 1
+    assert _norm_rows(sdf.columns, srows) == _norm_rows(sdf.columns, drows)

@@ -217,3 +217,34 @@ def test_every_builder_has_the_query_signature():
         params = list(inspect.signature(spec.build).parameters)
         assert len(params) == 2, (name, params)
         assert params[0] == "spark" and params[1] in ("sf_dir",), (name, params)
+
+
+def test_tail_order_does_not_depend_on_import_order():
+    """Entries outside _SAMPLE_PRIORITY follow the registering modules'
+    fixed order (registry._MODULES), so a caller that imported one module
+    first gets the same queue as a bare all_queries(). Each order is read
+    in a fresh interpreter, since imports are process-wide."""
+    import subprocess
+    import sys
+
+    def order(first_import: str) -> list[str]:
+        script = (
+            f"{first_import}\n"
+            "from compass_query_optimizer_spark.registry import all_queries\n"
+            "print(' '.join(all_queries()))\n"
+        )
+        root = os.path.join(os.path.dirname(__file__), "..")
+        return subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=root, capture_output=True, text=True, check=True, timeout=300,
+        ).stdout.split()
+
+    bare = order("")
+    assert order("import compass_query_optimizer_spark.operators.multimodal") == bare
+
+    from compass_query_optimizer_spark.registry import _MODULES
+
+    specs = all_queries()
+    tail = [specs[n].build.__module__ for n in bare if n not in _SAMPLE_PRIORITY]
+    ranks = [_MODULES.index(m) for m in tail]
+    assert ranks == sorted(ranks)
