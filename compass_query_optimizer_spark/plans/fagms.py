@@ -16,7 +16,10 @@ The *build* is one shuffle-free scan per table pass
 reference's kFAGMS_SKETCH aggregate (RuntimeFunctions.cpp:318-340): a
 distributed ``mapInArrow`` pass when the table's base row count spans
 several tasks, else one Arrow collect sketched on the driver by the same
-kernel. Estimation and join-order search happen driver-side in numpy.
+kernel. That collect is the table's join keys; a caller that opens
+:func:`collected_keys` around the build keeps them (the count chain seeds
+small tables from them). Estimation and join-order search happen
+driver-side in numpy.
 
 EH3 (public scheme, Rusu & Dobra "Pseudo-Random Number Generation for
 Sketch-Based Estimations", TODS 2007): for seed (s0, sv) and 32-bit key x,
@@ -27,6 +30,8 @@ is even — 3-wise independent, one AND/POPCNT chain per evaluation.
 from __future__ import annotations
 
 import hashlib
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
@@ -163,9 +168,33 @@ def estimate_multi_way(sketches: list[Sketch]) -> float:
 KEYS_PER_TASK = 100_000
 
 
+# the key-table slot a caller of collected_keys() opened on this thread
+_KEY_SLOT = threading.local()
+# boolean column of a build's input marking the rows its key table keeps
+KEEP_COL = "__keep"
+
+
+@contextmanager
+def collected_keys():
+    """Open a slot for the key table of the driver-path builds run on this
+    thread inside the ``with`` block; yields a dict whose ``"keys"`` entry
+    is that pyarrow table (int64 columns named as the join columns), left
+    unset when no build ran on the driver. The slot is a side channel so
+    :func:`build_sketches_arrow` keeps its ``(count, sketches)`` contract;
+    outside a ``with`` block the driver path keeps nothing."""
+    slot: dict = {}
+    outer = getattr(_KEY_SLOT, "slot", None)
+    _KEY_SLOT.slot = slot
+    try:
+        yield slot
+    finally:
+        _KEY_SLOT.slot = outer
+
+
 def _sketch_partition(batches, seeds_list: list[SketchSeeds]) -> tuple[int, list[Sketch]]:
     """(rows, sketch per column) of one partition's Arrow batches (record
-    batches or tables) of int64 ``_k{j}`` key columns. The batches are
+    batches or tables) whose leading columns are the int64 keys, one per
+    seed in ``seeds_list`` order. The batches are
     concatenated first: one kernel pass per column over the whole
     partition, not 73 rows × per-batch ufunc overhead. Null keys count as
     rows but never touch a counter (they never join). The keys stay int64
@@ -176,7 +205,7 @@ def _sketch_partition(batches, seeds_list: list[SketchSeeds]) -> tuple[int, list
     for batch in batches:
         n += batch.num_rows
         for j, chunk in enumerate(chunks):
-            keys = batch.column(f"_k{j}").drop_null().to_numpy()
+            keys = batch.column(j).drop_null().to_numpy()
             if len(keys):
                 chunk.append(keys)
     sketches = [Sketch(np.zeros((SKETCH_ROWS, SKETCH_BUCKETS)), s) for s in seeds_list]
@@ -209,16 +238,32 @@ def build_sketches_arrow(
     :1820-1835); it beat the JVM groupBy build it replaced ~10× at sf0.1.
     Both paths run :func:`_sketch_partition`, so null keys count as
     survivors but never touch a counter on either.
+
+    Inside :func:`collected_keys`, the driver path also leaves its
+    collected key table in the open slot. A boolean :data:`KEEP_COL`
+    column of ``df`` (NULL counting as false) marks the rows that table
+    keeps while the count and sketches still cover every row: a tiny
+    table is sketched unfiltered as a template, and the same collect
+    yields its filtered keys.
     """
     cols = list(col_seeds)
     if not cols:
         return df.count(), {}
-    proj = df.select(
-        *[F.col(c).cast("long").alias(f"_k{j}") for j, c in enumerate(cols)]
-    )
+    # each join column as int64 under its own name, plus the mask
+    keys = [F.col(c).cast("long").alias(c) for c in cols]
+    if KEEP_COL in df.columns:
+        keys.append(F.col(KEEP_COL))
+    proj = df.select(*keys)
     seeds_list = [col_seeds[c] for c in cols]
     if nrows_hint is not None and nrows_hint <= KEYS_PER_TASK:
-        count, sketches = _sketch_partition([proj.toArrow()], seeds_list)
+        table = proj.toArrow()
+        count, sketches = _sketch_partition([table], seeds_list)
+        slot = getattr(_KEY_SLOT, "slot", None)
+        if slot is not None:
+            if KEEP_COL in table.column_names:
+                keep = table.column(KEEP_COL).fill_null(False)
+                table = table.filter(keep).drop_columns([KEEP_COL])
+            slot["keys"] = table
         return count, dict(zip(cols, sketches))
     # Small-SF parquet often lands in one partition (kernel would run
     # single-threaded); cluster-scale inputs already have plenty, so we

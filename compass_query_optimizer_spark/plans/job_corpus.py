@@ -66,8 +66,17 @@ def fixture_counts(paths: dict[str, str]) -> dict[str, int]:
 
 
 def job_tables(spark: SparkSession, scale: int = 1) -> tuple[dict[str, DataFrame], dict[str, int]]:
+    """Open every fixture table with its schema read from the parquet
+    footer, like the base counts, so opening runs no Spark
+    schema-inference job (one per table otherwise)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     paths = ensure_job_fixture(scale=scale)
-    tables = {n: spark.read.parquet(p) for n, p in paths.items()}
+    tables = {
+        n: spark.read.schema(from_arrow_schema(pq.read_schema(p))).parquet(p)
+        for n, p in paths.items()
+    }
     return tables, fixture_counts(paths)
 
 

@@ -16,7 +16,12 @@ broadcast/shuffle sides per join; CBO join reordering is disabled in
 session.py so the logical order sticks, and selective filtered tables get
 explicit broadcast hints (they are exactly the ≤10k-row inputs COMPASS
 splices into the query; the broadcast is that splice, built per query
-from the lazy filter, so no plan leaves cached data behind).
+from the lazy filter, so no plan leaves cached data behind). The eager
+count chain goes one step further for a table whose filtered join keys
+the push-down already collected (≤ KEYS_PER_TASK base rows, ≤ MAX_SIZE
+survivors): its seed is counted on the driver and enters as a
+LocalRelation, with no rescan, refilter or collapse shuffle (Synapse's
+exchange removal, VLDB 2021).
 """
 
 from __future__ import annotations
@@ -25,8 +30,11 @@ import re as _re
 from collections import namedtuple
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from compass_query_optimizer_spark.catalog import load_tables
 from compass_query_optimizer_spark.plans.graph import JoinGraph, JoinQuerySpec, parse_join_query
@@ -288,6 +296,71 @@ def _bitmap_final(agg_names: list[str]):
     return F.coalesce(total, F.lit(0).cast("long"))
 
 
+def _scan_collapse(
+    f: DataFrame,
+    alias: str,
+    key_cols: list[str],
+    own: list[tuple[int, str, str]] = (),
+    bitmap: dict | None = None,
+) -> DataFrame:
+    """An alias's chain seed from its frame: (keys → __cnt_new) plus one
+    seed channel per measure it owns (``own``: (index, col, op))."""
+    aggs = [F.count(F.lit(1)).alias("__cnt_new")]
+    for i, _, op in own:
+        if op == "count_distinct_bitmap":
+            aggs.extend(
+                _bitmap_seed_aggs(
+                    bitmap["vmin"],
+                    bitmap["n_words"],
+                    mval=f"__mval{i}",
+                    prefix=f"__m{i}w",
+                )
+            )
+        else:
+            aggs.append(_MEASURES[op].seed(f"__mval{i}").alias(f"__m{i}_new"))
+    keys = [F.col(c).alias(f"{alias}__{c}") for c in key_cols]
+    # measure columns are aggregated, never grouped — select them under
+    # private names so they can coincide with keys
+    mvals = [F.col(col).alias(f"__mval{i}") for i, col, _ in own]
+    g = f.select(*keys, *mvals) if keys or mvals else f
+    gb = [f"{alias}__{c}" for c in key_cols]
+    return g.groupBy(*gb).agg(*aggs) if gb else g.agg(*aggs)
+
+
+def _spliced_seed(plan: CompassPlan, alias: str, key_cols: list[str]) -> DataFrame | None:
+    """The same (keys → __cnt_new) seed as :func:`_scan_collapse` with no
+    measure, counted on the driver from the push-down's collected keys and
+    entered as a LocalRelation: no rescan, refilter or collapse shuffle.
+    None when the push-down kept no keys for the alias or a needed column
+    is not an integral join key. Keys cast back to their source types, and
+    a null key stays its own group, as in Spark's groupBy."""
+    keys = plan.pushdown.keys.get(alias)
+    if keys is None or not key_cols:
+        return None
+    src = plan.pushdown.frames[alias].schema
+    if not all(
+        c in keys.column_names and isinstance(src[c].dataType, T.IntegralType)
+        for c in key_cols
+    ):
+        return None
+    counted = (
+        keys.group_by(key_cols)
+        .aggregate([([], "count_all")])
+        .sort_by([(c, "ascending") for c in key_cols])
+    )
+    fields = [
+        T.StructField(f"{alias}__{c}", src[c].dataType, src[c].nullable)
+        for c in key_cols
+    ]
+    table = pa.Table.from_arrays(
+        [counted.column(c).cast(to_arrow_type(src[c].dataType)) for c in key_cols]
+        + [counted.column("count_all")],
+        names=[fl.name for fl in fields] + ["__cnt_new"],
+    )
+    schema = T.StructType(fields + [T.StructField("__cnt_new", T.LongType(), False)])
+    return plan.pushdown.frames[alias].sparkSession.createDataFrame(table, schema)
+
+
 @dataclass
 class CompassPlan:
     spec: JoinQuerySpec
@@ -461,7 +534,17 @@ class CompassOptimizer:
         eager-aggregation count plan (:meth:`build_count_join`) instead
         of the row-producing join, with ``measures``/``group_by``
         selecting the measure-algebra variant so the eager
-        SUM/MIN/MAX/COUNT-DISTINCT/AVG plans are inspectable."""
+        SUM/MIN/MAX/COUNT-DISTINCT/AVG plans are inspectable.
+
+        Each table line names the chain seed's source: ``spliced(n keys)``
+        when the count chain seeds it from the push-down's n collected key
+        rows, else ``scan``. The row-producing join scans every table."""
+        count_df = (
+            self.build_count_join(plan, group_by=group_by, measures=measures)
+            if count
+            else None
+        )
+        spliced = plan.extras["spliced"] if count else {}
         order_syms = [
             f"⟕ {a}" if a in plan.spec.outer else a for a in plan.search.order
         ]
@@ -486,8 +569,9 @@ class CompassOptimizer:
             tbl = plan.spec.tables[alias]
             flt = plan.spec.filters.get(alias)
             mat = "selective+broadcast" if alias in plan.pushdown.materialized else "virtual"
+            seed = f"spliced({spliced[alias]} keys)" if alias in spliced else "scan"
             lines.append(
-                f"    {alias} ({tbl}): rows={st.rows} {mat}"
+                f"    {alias} ({tbl}): rows={st.rows} {mat} {seed}"
                 + (f" filter=[{flt}]" if flt else "")
                 + f" sketch_cols={sorted(st.sketches)}"
             )
@@ -516,14 +600,11 @@ class CompassOptimizer:
                 + (", one channel per measure)" if measures else ")")
                 + "; join rows never materialize)"
             )
-            routed = _sole_routed(measures)
-            if routed:
-                route, _ = self._resolve_distinct_route(
-                    plan, routed[:2], routed[2]
-                )
+            if _sole_routed(measures):
+                # resolved by the build_count_join above
                 info = plan.extras["distinct_route"]
                 lines.append(
-                    f"  count-distinct route: {route}"
+                    f"  count-distinct route: {info['route']}"
                     f" (ndv≈{info['ndv_estimate']},"
                     f" range=[{info['lo']}, {info['hi']}];"
                     f" bitmap ≤{DISTINCT_BITMAP_MAX_RANGE} bits,"
@@ -538,11 +619,7 @@ class CompassOptimizer:
                 " (multiplicity = coalesce(cnt, 1))"
             )
         if physical:
-            df = (
-                self.build_count_join(plan, group_by=group_by, measures=measures)
-                if count
-                else self.build_join(plan)
-            )
+            df = count_df if count else self.build_join(plan)
             lines.append("  spark physical plan:")
             lines.append(df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -575,8 +652,6 @@ class CompassOptimizer:
         EXPLAIN and the plan tests can inspect it. ``requested`` may also
         be ``count_distinct_bitmap`` directly, which fails loudly when the
         measure's range cannot fit a bitmap."""
-        from pyspark.sql import types as T
-
         alias, col = measure
         f = plan.pushdown.frames[alias]
 
@@ -696,6 +771,17 @@ class CompassOptimizer:
         exactly, including the empty-join → 0 case; the 113-query DuckDB
         differential gates this equivalence.
 
+        Seeds: a collapse-skipped alias enters raw (that decision comes
+        first). Otherwise an alias that owns no measure, whose needed
+        columns are all integral join keys and whose filtered keys the
+        push-down kept (``PushdownResult.keys``) is spliced: the driver
+        counts those keys per key combination and the seed is a
+        LocalRelation (:func:`_spliced_seed`), recorded in
+        ``plan.extras['spliced']`` as {alias: key rows}. Every other alias
+        rescans its frame through ``select → groupBy → count``
+        (:func:`_scan_collapse`). The joins, hints and re-aggregations
+        after the seeds are the same either way.
+
         ``group_by``: optional [(alias, col), ...] — the grouped form
         ``SELECT cols, COUNT(*) GROUP BY cols``. Group columns ride the
         chain like residual columns (kept through every re-aggregation)
@@ -776,6 +862,7 @@ class CompassOptimizer:
         # columns each alias must expose: join-pred endpoints + residuals
         needed, residual_cols = _referenced_cols(spec, group_by)
 
+        plan.extras["spliced"] = {}
         frames = {}
         for alias in order:
             f = plan.pushdown.frames[alias]
@@ -794,27 +881,13 @@ class CompassOptimizer:
                     "__cnt_new", F.lit(1).cast("long")
                 )
             else:
-                aggs = [F.count(F.lit(1)).alias("__cnt_new")]
-                for i, _, op in own:
-                    if op == "count_distinct_bitmap":
-                        aggs.extend(
-                            _bitmap_seed_aggs(
-                                bitmap["vmin"],
-                                bitmap["n_words"],
-                                mval=f"__mval{i}",
-                                prefix=f"__m{i}w",
-                            )
-                        )
-                    else:
-                        aggs.append(
-                            _MEASURES[op].seed(f"__mval{i}").alias(f"__m{i}_new")
-                        )
-                # measure columns are aggregated, never grouped — select
-                # them under private names so they can coincide with keys
-                mvals = [F.col(col).alias(f"__mval{i}") for i, col, _ in own]
-                g = f.select(*keys, *mvals) if keys or mvals else f
-                gb = [f"{alias}__{c}" for c in key_cols]
-                agg = g.groupBy(*gb).agg(*aggs) if gb else g.agg(*aggs)
+                # the push-down may already hold this alias's filtered
+                # keys: count them on the driver instead of rescanning
+                agg = None if own else _spliced_seed(plan, alias, key_cols)
+                if agg is not None:
+                    plan.extras["spliced"][alias] = plan.pushdown.keys[alias].num_rows
+                else:
+                    agg = _scan_collapse(f, alias, key_cols, own, bitmap)
             if alias in plan.pushdown.materialized:
                 agg = F.broadcast(agg)
             elif self._frame_size_estimate(plan, alias) > ANTIBROADCAST_ROWS:

@@ -18,7 +18,21 @@ For each base table of a join query, ascending by size (FilterPushDownSketch
    is the lazy ``base.filter(...)``: push-down leaves no Spark session
    state (nothing cached, nothing to unpersist);
 4. tables below MIN_TABLE_ROWS skip filtering and reuse template sketches
-   (sketch templates: Catalog.h:579 uploadSketches, sketch-templates/).
+   (sketch templates: Catalog.h:579 uploadSketches, sketch-templates/);
+5. a table of at most KEYS_PER_TASK base rows whose survivors number at
+   most MAX_SIZE keeps its filtered join keys on the driver
+   (``PushdownResult.keys``): the count chain seeds it from them instead
+   of rescanning, refiltering and collapsing it — the reference's splice
+   of a ≤ MAX_SIZE filtered table into the DAG (FilterPushDownSketch.cpp
+   :871-891), without its extra 5%-selectivity test, since the keys are
+   on the driver already. They are exactly the keys the driver-path build
+   collected (a tiny table's build carries its predicate as one boolean
+   column), so only a visit that built its sketch keeps them. A visit
+   answered by the template cache keeps none: collecting them there
+   would trade the collapse's shuffle job for a collect job, and measured
+   slower (SCALE.md "Spliced count seeds"). Keys never enter the
+   template cache. The driver holds at most aliases × MAX_SIZE key rows
+   per plan.
 
 Thresholds mirror COMPASS_init_variables.txt:3-5 (200 rows / 5% / 10,000).
 """
@@ -31,11 +45,14 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from compass_query_optimizer_spark.plans.fagms import (
+    KEEP_COL,
     Sketch,
     build_sketches_arrow,
+    collected_keys,
     seeds_for_class,
 )
 from compass_query_optimizer_spark.plans.graph import JoinGraph
@@ -54,6 +71,10 @@ class PushdownResult:
     frames: dict[str, DataFrame]  # alias -> lazily filtered frame
     # selective: broadcast into the chain
     materialized: set[str] = field(default_factory=set)
+    # alias -> its filtered join keys (pyarrow table, int64 columns named
+    # as the join columns), kept by a visit whose build collected them on
+    # the driver (≤ KEYS_PER_TASK base rows) when ≤ MAX_SIZE rows survive
+    keys: dict = field(default_factory=dict)
 
 
 # (dataset_tag, table, filter_sql, sorted class keys) -> (count, sketches);
@@ -126,8 +147,9 @@ def run_pushdown(
     stats: dict[str, TableStats] = {}
     frames: dict[str, DataFrame] = {}
     materialized: set[str] = set()
+    keys: dict = {}
 
-    def one_table(alias: str) -> tuple[str, int, dict[str, Sketch], DataFrame, bool]:
+    def one_table(alias: str) -> tuple[str, int, dict[str, Sketch], DataFrame, bool, object]:
         base = base_tables[alias]
         filter_sql = spec.filters.get(alias)
         join_cols = graph.join_cols(alias)
@@ -135,27 +157,38 @@ def run_pushdown(
 
         filtered = base.filter(filter_sql) if filter_sql else base
         tiny = base_counts[alias] < MIN_TABLE_ROWS
-        # tiny tables skip the filter for sketching (template behavior)
-        count, sketches = cached(
-            _TEMPLATE_CACHE,
-            dataset_tag,
-            (
-                spec.tables[alias],
-                None if tiny else filter_sql,
-                tuple(sorted((c, graph.class_key(alias, c)) for c in join_cols)),
-            ),
-            lambda: build_sketches_arrow(
-                base if tiny else filtered,
-                col_seeds,
-                nrows_hint=base_counts[alias],
-            ),
-        )
+
+        def build():
+            # tiny tables skip the filter for sketching (template behavior);
+            # their predicate rides the same collect as the key table's mask
+            if not tiny:
+                source = filtered
+            elif filter_sql:
+                source = base.withColumn(KEEP_COL, F.expr(filter_sql))
+            else:
+                source = base
+            return build_sketches_arrow(source, col_seeds, nrows_hint=base_counts[alias])
+
+        with collected_keys() as slot:
+            count, sketches = cached(
+                _TEMPLATE_CACHE,
+                dataset_tag,
+                (
+                    spec.tables[alias],
+                    None if tiny else filter_sql,
+                    tuple(sorted((c, graph.class_key(alias, c)) for c in join_cols)),
+                ),
+                build,
+            )
         selective = (
             filter_sql is not None
             and not tiny
             and count <= min(MAX_SELECTIVITY * base_counts[alias], MAX_SIZE)
         )
-        return alias, count, sketches, filtered, selective
+        # empty unless the build ran on the driver (not a template hit);
+        # a tiny table's count is its unfiltered size, < MIN_TABLE_ROWS
+        key_table = slot.get("keys") if count <= MAX_SIZE else None
+        return alias, count, sketches, filtered, selective, key_table
 
     # the per-table passes are independent Spark jobs; run them all
     # concurrently (the reference runs them ascending by size on one
@@ -181,10 +214,14 @@ def run_pushdown(
     with ThreadPoolExecutor(max_workers=len(aliases)) as pool:
         results = list(pool.map(lambda task: task(), tasks))
 
-    for alias, count, sketches, filtered, selective in results:
+    for alias, count, sketches, filtered, selective, key_table in results:
         frames[alias] = filtered
         if selective:
             materialized.add(alias)
+        if key_table is not None:
+            keys[alias] = key_table
         stats[alias] = TableStats(rows=count, sketches=sketches)
 
-    return PushdownResult(stats=stats, frames=frames, materialized=materialized)
+    return PushdownResult(
+        stats=stats, frames=frames, materialized=materialized, keys=keys
+    )
